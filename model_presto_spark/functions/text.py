@@ -9,6 +9,14 @@ that run inside whole-stage codegen on the JVM. No Python UDFs: at
 Hashing convention: 60-bit values derived from md5 (first 15 hex
 chars), which is identical in every engine — chosen over xxhash /
 murmur so DuckDB oracles can reproduce results bit-for-bit.
+
+Each expression has ONE definition. The ``*_sql`` builders return SQL
+text (arguments are SQL fragments: a column name or a nested builder
+call) that Spark parses in one py4j round trip per projection; Column
+callers wrap them as ``F.expr(builder("col"))``. The Column-API
+builders cost one round trip per expression node. Only ``h60``,
+``h60_fast`` and ``tokens`` keep both spellings, because their Column
+forms are applied to composite expressions throughout ``plans/``.
 """
 
 from __future__ import annotations
@@ -58,7 +66,7 @@ def bigrams(ts: Column) -> Column:
     """Adjacent word-bigram array from a MATERIALIZED token array.
 
     ``ts`` must be an already-projected column (same inlining caveat
-    as :func:`char_shingles`): the per-position lambda indexes it
+    as :func:`char_shingles_sql`): the per-position lambda indexes it
     twice per bigram.  Returns an empty array for <2 tokens.
     """
     idx = F.sequence(F.lit(1), F.size(ts) - 1)
@@ -73,104 +81,13 @@ def bigrams(ts: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def char_shingles(lowered: Column, k: int = 5, distinct: bool = True) -> Column:
-    """Character k-gram shingle set.
-
-    ``lowered`` MUST be a materialized (already-selected) lowercase
-    column, not an inline ``lower(text)`` expression: the per-position
-    lambda references it once per shingle, and Catalyst inlines
-    single-use projected expressions into lambdas — an inline lower()
-    would be recomputed O(len) times (O(len²) total). Referencing the
-    column here twice (length + lambda) keeps the projection
-    materialized.
-    """
-    n = F.greatest(F.length(lowered) - F.lit(k - 1), F.lit(1))
-    sh = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(lowered, i, F.lit(k))
-    )
-    return F.array_distinct(sh) if distinct else sh
-
-
-def word_ngrams(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (space-joined) from a materialized tokens
-    column (same inlining caveat as ``char_shingles``: pass an
-    attribute, not an inline ``tokens(text)`` expression)."""
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(grams)
-
-
 # Mersenne prime 2^31-1: universal-hash modulus. (h % P) * (2j+1) stays
 # under 2^36, so the arithmetic never overflows ANSI bigint in any engine.
 HASH_P = 2_147_483_647
 
 
-def hash_array(strings: Column, fast: bool = False) -> Column:
-    """One 60-bit hash per array element — the single expensive
-    hashing pass; everything downstream derives from these integers.
-    ``fast=True`` swaps md5 for native xxhash64 (see ``h60_fast``):
-    same downstream algebra, no oracle reproducibility."""
-    fn = h60_fast if fast else h60
-    return F.transform(strings, lambda s: fn(s))
-
-
-def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature from pre-hashed elements (see ``hash_array``).
-
-    Per-seed hashes are derived arithmetically — ``((h % P) * (2j+1)
-    + 7919 j) % P`` — instead of re-hashing every shingle per seed,
-    so the md5 cost is O(|shingles|), not O(num_hashes · |shingles|).
-    The signature is O(num_hashes) per document regardless of size, so
-    the downstream LSH join shuffles only signatures, never documents.
-
-    Single-pass fold: the hash array sits in ``aggregate``'s *input*
-    position (evaluated once per row no matter how Catalyst collapses
-    projections); the fold maintains all ``num_hashes`` running minima
-    at once via ``zip_with``.
-    """
-    p = F.lit(HASH_P)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.array_repeat(F.lit(HASH_P).cast("bigint"), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, seeds, lambda m, j: F.least(m, ((h % p) * (j * 2 + 1) + j * 7919) % p)
-        ),
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Array of (band_idx, band_hash) structs for LSH bucketing.
-
-    Documents agreeing on any band land in the same bucket; the
-    bucket join replaces the O(n²) pair comparison.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(
-                F.encode(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(signature, b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ),
-                    "UTF-8",
-                )
-            ).alias("bucket"),
-        ),
-    )
-
-
 def simhash60_from_hashes(hashes_sql: str) -> Column:
-    """60-bit SimHash from pre-hashed tokens (see ``hash_array``).
+    """60-bit SimHash from pre-hashed tokens (see ``hash_array_sql``).
 
     Bit b of the result is 1 iff the sum over tokens of
     (bit b of h60(token)) * 2 - 1 is positive.
@@ -198,54 +115,13 @@ def simhash60_from_hashes(hashes_sql: str) -> Column:
     )
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two distinct-element arrays.
-
-    The intersection size is bound ONCE as an ``aggregate`` input
-    (single-element array -> lambda variable) instead of appearing as
-    three textual copies inside the when/div tree: a naive
-    ``when(union > 0, inter / union)`` expands to three
-    ``array_intersect`` subtrees, and when a caller filters on the
-    result the pushed-down predicate duplicates all of them into the
-    join condition — measured SIX intersect evaluations per verified
-    pair in the q32 plan.  With the binding, each expression instance
-    evaluates the intersect exactly once (plan shows 2: once in the
-    pushed filter, once in the surviving-row projection).  Arithmetic
-    is unchanged (same casts, same when-guard), so results are
-    bit-identical.
-    """
-    sizes = (F.size(a) + F.size(b)).cast("double")
-    return F.aggregate(
-        F.array(F.size(F.array_intersect(a, b)).cast("double")),
-        F.lit(0.0),
-        lambda _, i: F.when(sizes - i > 0, i / (sizes - i)).otherwise(F.lit(0.0)),
-    )
-
-
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(text))
 
 
-# ---------------------------------------------------------------------------
-# SQL-string twins (guide §7.3 driver overhead).
-#
-# The Column builders above cost one py4j round-trip per operator node;
-# a dedup query build (q32) was measured at ~1,430 round-trips ≈ 0.4 s
-# of pure driver time. The twins below render the IDENTICAL expression
-# trees as SQL text parsed JVM-side in one round-trip per projection:
-# same operand order, same per-element casts, `CAST(x AS DOUBLE)` /
-# bare int literals exactly where the Column versions place them — so
-# hashes, signatures, buckets and similarity values are bit-identical
-# (tests/test_text_sql.py pins Column-vs-SQL equality element-wise; the
-# dedup bench queries re-verified hash-match vs the oracle at 3 SFs).
-# Arguments are SQL fragments (a backtick-quoted column name or a
-# nested twin call), not Column objects.
-# ---------------------------------------------------------------------------
-
-
 def h60_sql(s: str, seed: int | None = None) -> str:
-    """SQL twin of :func:`h60` (md5-derived 60-bit hash)."""
+    """SQL spelling of :func:`h60` (md5-derived 60-bit hash)."""
     if seed is not None:
         s = f"concat({s}, '#', '{seed}')"
     return (
@@ -255,18 +131,26 @@ def h60_sql(s: str, seed: int | None = None) -> str:
 
 
 def h60_fast_sql(s: str) -> str:
-    """SQL twin of :func:`h60_fast` (xxhash64, 60-bit masked)."""
+    """SQL spelling of :func:`h60_fast` (xxhash64, 60-bit masked)."""
     return f"(xxhash64({s}) & {(1 << 60) - 1})"
 
 
 def tokens_sql(text: str) -> str:
-    """SQL twin of :func:`tokens`."""
+    """SQL spelling of :func:`tokens`."""
     return f"filter(split(lower({text}), '\\\\s+'), t -> t != '')"
 
 
 def char_shingles_sql(lowered: str, k: int = 5, distinct: bool = True) -> str:
-    """SQL twin of :func:`char_shingles` (same materialized-column
-    caveat: pass an attribute name, not an inline lower())."""
+    """Character k-gram shingle set.
+
+    ``lowered`` MUST name a materialized (already-selected) lowercase
+    column, not an inline ``lower(text)`` expression: the per-position
+    lambda references it once per shingle, and Catalyst inlines
+    single-use projected expressions into lambdas — an inline lower()
+    would be recomputed O(len) times (O(len²) total). Referencing the
+    column here twice (length + lambda) keeps the projection
+    materialized.
+    """
     sh = (
         f"transform(sequence(1, greatest(length({lowered}) - {k - 1}, 1)), "
         f"i -> substring({lowered}, i, {k}))"
@@ -275,8 +159,9 @@ def char_shingles_sql(lowered: str, k: int = 5, distinct: bool = True) -> str:
 
 
 def word_ngrams_sql(toks: str, n: int = 3) -> str:
-    """SQL twin of :func:`word_ngrams` (same materialized-column
-    caveat)."""
+    """Distinct word n-grams (space-joined) from a materialized tokens
+    column (same inlining caveat as :func:`char_shingles_sql`: pass an
+    attribute, not an inline tokens expression)."""
     return (
         f"array_distinct(transform("
         f"sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
@@ -285,14 +170,29 @@ def word_ngrams_sql(toks: str, n: int = 3) -> str:
 
 
 def hash_array_sql(strings: str, fast: bool = False) -> str:
-    """SQL twin of :func:`hash_array`."""
+    """One 60-bit hash per array element — the single expensive
+    hashing pass; everything downstream derives from these integers.
+    ``fast=True`` swaps md5 for native xxhash64 (see ``h60_fast``):
+    same downstream algebra, no oracle reproducibility."""
     fn = h60_fast_sql if fast else h60_sql
     return f"transform({strings}, s -> {fn('s')})"
 
 
 def minhash_signature_sql(hashes: str, num_hashes: int = 16) -> str:
-    """SQL twin of :func:`minhash_signature` (same universal-hash
-    algebra, same fold shape)."""
+    """MinHash signature from pre-hashed elements (see
+    :func:`hash_array_sql`).
+
+    Per-seed hashes are derived arithmetically — ``((h % P) * (2j+1)
+    + 7919 j) % P`` — instead of re-hashing every shingle per seed,
+    so the md5 cost is O(|shingles|), not O(num_hashes · |shingles|).
+    The signature is O(num_hashes) per document regardless of size, so
+    the downstream LSH join shuffles only signatures, never documents.
+
+    Single-pass fold: the hash array sits in ``aggregate``'s *input*
+    position (evaluated once per row no matter how Catalyst collapses
+    projections); the fold maintains all ``num_hashes`` running minima
+    at once via ``zip_with``.
+    """
     return (
         f"aggregate({hashes}, "
         f"array_repeat(CAST({HASH_P} AS BIGINT), {num_hashes}), "
@@ -303,7 +203,11 @@ def minhash_signature_sql(hashes: str, num_hashes: int = 16) -> str:
 
 
 def lsh_band_keys_sql(signature: str, bands: int, rows_per_band: int) -> str:
-    """SQL twin of :func:`lsh_band_keys`."""
+    """Array of (band, bucket) structs for LSH bucketing.
+
+    Documents agreeing on any band land in the same bucket; the
+    bucket join replaces the O(n²) pair comparison.
+    """
     return (
         f"transform(sequence(0, {bands - 1}), "
         f"b -> struct(b AS band, md5(encode(concat_ws(',', "
@@ -313,30 +217,30 @@ def lsh_band_keys_sql(signature: str, bands: int, rows_per_band: int) -> str:
 
 
 def _lit_array_sql(words: tuple[str, ...]) -> str:
-    """SQL twin of :func:`_lit_array`."""
+    """Literal string array (Column.isin is unusable inside HOF lambdas)."""
     return "array(" + ", ".join(f"'{w}'" for w in words) + ")"
 
 
 def lang_score_sql(toks: str, lang: str) -> str:
-    """SQL twin of one :func:`lang_scores` counter."""
+    """Stopword-hit count of one language (language-ID heuristic)."""
     arr = _lit_array_sql(LANG_STOPWORDS[lang])
     return f"size(filter({toks}, t -> array_contains({arr}, t)))"
 
 
 def quality_features_sql(text: str, toks: str) -> dict[str, str]:
-    """SQL twin of :func:`quality_features` (same trees: the double
-    casts, the when/otherwise guards with 0.0D else branches)."""
+    """Quality-scoring features: length, word stats, ratios.
+
+    ``toks`` must name a materialized tokens column (see the
+    :func:`char_shingles_sql` inlining caveat) — it is referenced by
+    several features and would otherwise be re-tokenized per feature.
+    """
     n_tok = f"CAST(size({toks}) AS DOUBLE)"
     n_chars = f"CAST(length({text}) AS DOUBLE)"
     alpha = (
         f"CAST(length(regexp_replace(lower({text}), '[^a-z]', '')) AS DOUBLE)"
     )
     punct = f"CAST(length(regexp_replace({text}, '[^.,;:!?]', '')) AS DOUBLE)"
-    stop_en = _lit_array_sql(LANG_STOPWORDS["en"])
-    n_stop = (
-        f"CAST(size(filter({toks}, t -> array_contains({stop_en}, t))) "
-        f"AS DOUBLE)"
-    )
+    n_stop = f"CAST({lang_score_sql(toks, 'en')} AS DOUBLE)"
     guard = "CASE WHEN {c} > 0 THEN {v} ELSE 0.0D END"
     return {
         "n_chars": n_chars,
@@ -349,7 +253,19 @@ def quality_features_sql(text: str, toks: str) -> dict[str, str]:
 
 
 def jaccard_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`jaccard` (same bind-intersect-once shape)."""
+    """Exact Jaccard similarity of two distinct-element arrays.
+
+    The intersection size is bound ONCE as an ``aggregate`` input
+    (single-element array -> lambda variable) instead of appearing as
+    three textual copies inside the CASE/division tree: a naive
+    ``CASE WHEN union > 0 THEN inter / union`` expands to three
+    ``array_intersect`` subtrees, and when a caller filters on the
+    result the pushed-down predicate duplicates all of them into the
+    join condition — measured SIX intersect evaluations per verified
+    pair in the q32 plan.  With the binding, each expression instance
+    evaluates the intersect exactly once (plan shows 2: once in the
+    pushed filter, once in the surviving-row projection).
+    """
     sizes = f"CAST(size({a}) + size({b}) AS DOUBLE)"
     return (
         f"aggregate(array(CAST(size(array_intersect({a}, {b})) AS DOUBLE)), "
@@ -372,44 +288,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     )
 
 
-def quality_features(text: Column, toks: Column) -> dict[str, Column]:
-    """Quality-scoring features: length, word stats, ratios.
-
-    ``toks`` must be a materialized tokens column (see the
-    ``char_shingles`` inlining caveat) — it is referenced by several
-    features and would otherwise be re-tokenized per feature.
-    """
-    n_tok = F.size(toks).cast("double")
-    n_chars = F.length(text).cast("double")
-    alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("double")
-    punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    stop_en = _lit_array(LANG_STOPWORDS["en"])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_en, t))).cast("double")
-    mean_wlen = F.when(n_tok > 0, (alpha / n_tok)).otherwise(F.lit(0.0))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tok,
-        "alpha_ratio": F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0)),
-        "punct_ratio": F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0)),
-        "mean_word_len": mean_wlen,
-    }
-
-
-def _lit_array(words: tuple[str, ...]) -> Column:
-    """Literal string array (Column.isin is unusable inside HOF lambdas)."""
-    return F.array(*[F.lit(w) for w in words])
-
-
-def lang_scores(toks: Column) -> dict[str, Column]:
-    """Stopword-hit count per language (language-ID heuristic)."""
-    def _counter(words: tuple[str, ...]) -> Column:
-        arr = _lit_array(words)
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-    return {lang: _counter(sw) for lang, sw in LANG_STOPWORDS.items()}
-
-
 def fingerprint60(text: Column) -> Column:
     """Document fingerprint: 60-bit hash of the normalized text
     (lowercased, whitespace collapsed) — exact-dedup key."""
@@ -419,7 +297,7 @@ def fingerprint60(text: Column) -> Column:
 
 def word_ngrams_all(toks: Column, n: int = 2) -> Column:
     """ALL word n-grams (space-joined), duplicates kept — the
-    multiset ``word_ngrams`` is the distinct set of. Repetition
+    multiset ``word_ngrams_sql`` is the distinct set of. Repetition
     signals need the multiset (same inlining caveat: pass a
     materialized tokens column)."""
     cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))

@@ -1,9 +1,10 @@
 """Vector column functions (embedding similarity).
 
-All JVM-side Catalyst expressions. Folds are sequential
-left-to-right, matching DuckDB's ``list_reduce`` order, so dot
-products and norms are bit-identical across engines (both promote
-float elements to double before accumulating).
+All JVM-side Catalyst expressions, built as SQL text (one py4j round
+trip per projection; Column callers use ``F.expr(builder("col"))``).
+Folds are sequential left-to-right, matching DuckDB's ``list_reduce``
+order, so dot products and norms are bit-identical across engines
+(both promote float elements to double before accumulating).
 """
 
 from __future__ import annotations
@@ -16,51 +17,42 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two numeric arrays (SQL text; arguments are
+    column names or SQL fragments).
+
+    Per-ELEMENT double casts inside the lambdas: callers pass raw
+    float arrays (an upfront array<double> cast would be inlined by
+    CollapseProject into the fold and re-cast the whole vector per
+    element), and the per-element cast keeps products and norms in
+    double precision so near-tie top-k rank boundaries agree with a
+    double-precision oracle. ``0.0D`` is the double zero literal (a
+    bare SQL ``0.0`` parses as DECIMAL)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def norm2(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
+def norm2_sql(a: str) -> str:
+    """Euclidean norm of a numeric array (same casts as :func:`dot_sql`)."""
+    return (
+        f"SQRT(aggregate({a}, 0.0D, "
+        f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    return 1.0 - cosine_similarity(a, b)
 
 
 def cosine_similarity_sql(a: str, b: str) -> str:
-    """SQL-string twin of ``cosine_similarity`` (guide §7.3 — one
-    ``F.expr`` parse instead of ~100 py4j round-trips per call site).
-    Spells the IDENTICAL expression tree: per-element double casts via
-    ``transform`` (matching ``as_double``), sequential left-to-right
-    folds, ``0.0D`` double literals — so values stay bit-identical to
-    the Column version and the DuckDB oracle."""
-    ad = f"transform({a}, x -> CAST(x AS DOUBLE))"
-    bd = f"transform({b}, x -> CAST(x AS DOUBLE))"
-    dot_sql = (
-        f"aggregate(zip_with({ad}, {bd}, (x, y) -> x * y), "
-        f"0.0D, (acc, x) -> acc + x)"
-    )
-    na = f"SQRT(aggregate({ad}, 0.0D, (acc, x) -> acc + x * x))"
-    nb = f"SQRT(aggregate({bd}, 0.0D, (acc, x) -> acc + x * x))"
-    return f"{dot_sql} / ({na} * {nb})"
+    """Cosine similarity; zero-norm vectors give NaN (0/0)."""
+    return f"{dot_sql(a, b)} / ({norm2_sql(a)} * {norm2_sql(b)})"
 
 
-def sq_euclidean(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def sq_euclidean_sql(a: str, b: str) -> str:
+    """Squared euclidean distance (same casts as :func:`dot_sql`)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+        f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, (acc, x) -> acc + x)"
     )
 
 

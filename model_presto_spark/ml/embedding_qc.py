@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.vectors import sq_euclidean
+from model_presto_spark.functions.vectors import sq_euclidean_sql
 
 
 def label_centroids(
@@ -65,7 +65,7 @@ def embedding_outliers(
     ).join(F.broadcast(cents), "label")
     with_d = joined.select(
         id_col, "label",
-        F.sqrt(sq_euclidean(F.col("v"), F.col("centroid"))).alias("dist"),
+        F.expr(f"SQRT({sq_euclidean_sql('v', 'centroid')})").alias("dist"),
     )
     stats = with_d.groupBy("label").agg(
         F.avg("dist").alias("mu"), F.stddev_samp("dist").alias("sigma")

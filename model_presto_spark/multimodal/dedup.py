@@ -34,7 +34,7 @@ def video_dup_pairs(
     ``max_frame_freq`` drops frames shared by too many videos (test
     cards, black frames) before pair expansion — the d² skew guard."""
     from model_presto_spark.multimodal.blobs import sample_frames
-    from model_presto_spark.operators.dedup import _pairs_within
+    from model_presto_spark.operators.dedup import _pairs_within_sql
 
     frames = sample_frames(media, every_ms=every_ms).select(
         F.col("media_id").alias("id"), F.col("frame_digest").alias("d")
@@ -46,7 +46,7 @@ def video_dup_pairs(
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_frame_freq))
     )
     common = (
-        buckets.select(F.explode_outer(_pairs_within("ids")).alias("pr"))
+        buckets.select(F.explode_outer(F.expr(_pairs_within_sql("ids"))).alias("pr"))
         .groupBy(F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import tokens, word_ngrams
+from model_presto_spark.functions.text import tokens, word_ngrams_sql
 
 
 def ngram_contamination(
@@ -47,17 +47,17 @@ def ngram_contamination(
     # must not inherit a single-file scan's one partition
     corpus_grams = spread(corpus).select(
         F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__toks")
-    ).select("__id", word_ngrams(F.col("__toks"), n).alias("__grams"))
+    ).select("__id", F.expr(word_ngrams_sql("__toks", n)).alias("__grams"))
 
     # explode_outer, NOT explode: Catalyst's InferFiltersFromGenerate
     # adds a size(...)>0 pre-filter under a plain explode that
     # re-evaluates the whole tokenize->ngram expression tree per row
     # (with the tokens sub-expression inlined PER GRAM inside the
     # lambda — O(len^2); measured 5x on q60). The gram arrays here are
-    # never empty (word_ngrams pads to >=1), so outer is identical.
+    # never empty (word_ngrams_sql pads to >=1), so outer is identical.
     bench_gram_set = (
         benchmark.select(tokens(F.col(text_col)).alias("__toks"))
-        .select(F.explode_outer(word_ngrams(F.col("__toks"), n)).alias("gram"))
+        .select(F.explode_outer(F.expr(word_ngrams_sql("__toks", n))).alias("gram"))
         .distinct()
     )
 

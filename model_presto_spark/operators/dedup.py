@@ -32,58 +32,22 @@ _LOG = logging.getLogger(__name__)
 
 from model_presto_spark.io import spread
 from model_presto_spark.functions.text import (
-    char_shingles,
     char_shingles_sql,
     fingerprint60,
-    hash_array,
     hash_array_sql,
-    jaccard,
     jaccard_sql,
-    lsh_band_keys,
     lsh_band_keys_sql,
-    minhash_signature,
     minhash_signature_sql,
     simhash60_from_hashes,
     tokens,
     tokens_sql,
-    word_ngrams,
     word_ngrams_sql,
 )
 
 
-def _pairs_within(ids_col: str) -> F.Column:
+def _pairs_within_sql(ids: str) -> str:
     """All (id_a < id_b) pairs from a sorted id array — the in-bucket
     pair generator for inverted-index / LSH-bucket candidate mining."""
-    ids = F.col(ids_col)
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda a, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids), F.lit(1))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-
-
-def _chain_pairs(ids_col: str) -> F.Column:
-    """Consecutive (id_a < id_b) pairs from a sorted id array — O(d)
-    edges that connect the same membership a full O(d²) pair set
-    would, relying on transitive closure (operators/graph.py) for the
-    cluster. The mega-bucket guard: a bucket of thousands of ids
-    means thousands of near-identical documents, where enumerating
-    every pair is pure waste."""
-    ids = F.col(ids_col)
-    return F.transform(
-        F.slice(ids, 1, F.size(ids) - 1),
-        lambda a, i: F.struct(
-            a.alias("id_a"), F.element_at(ids, i + 2).alias("id_b")
-        ),
-    )
-
-
-def _pairs_within_sql(ids: str) -> str:
-    """SQL twin of :func:`_pairs_within` (guide §7.3; same tree)."""
     return (
         f"flatten(transform({ids}, (a, i) -> "
         f"transform(slice({ids}, i + 2, greatest(size({ids}), 1)), "
@@ -92,10 +56,25 @@ def _pairs_within_sql(ids: str) -> str:
 
 
 def _chain_pairs_sql(ids: str) -> str:
-    """SQL twin of :func:`_chain_pairs`."""
+    """Consecutive (id_a < id_b) pairs from a sorted id array — O(d)
+    edges that connect the same membership a full O(d²) pair set
+    would, relying on transitive closure (operators/graph.py) for the
+    cluster. The mega-bucket guard: a bucket of thousands of ids
+    means thousands of near-identical documents, where enumerating
+    every pair is pure waste."""
     return (
         f"transform(slice({ids}, 1, size({ids}) - 1), (a, i) -> "
         f"struct(a AS id_a, element_at({ids}, i + 2) AS id_b))"
+    )
+
+
+def _bucket_pairs_sql(ids: str, max_bucket_size: int) -> str:
+    """In-bucket candidate pairs: every pair up to ``max_bucket_size``
+    members, the consecutive chain above it."""
+    return (
+        f"CASE WHEN size({ids}) <= {int(max_bucket_size)} "
+        f"THEN {_pairs_within_sql(ids)} "
+        f"ELSE {_chain_pairs_sql(ids)} END"
     )
 
 
@@ -218,13 +197,12 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
     # Spread rows first: shingling + hashing are CPU-bound and must
     # not inherit a small scan's partitioning (io.spread docstring).
-    # lower(text) materialized next: char_shingles references it per
-    # position and an inline lower() would be recomputed O(len) times.
-    # String-expression build from here down (guide §7.3): the Column
-    # construction of this operator cost ~1,430 py4j round-trips per
-    # q32 build; the SQL twins parse the identical trees JVM-side
-    # (tests/test_text_sql.py pins value equality, oracle hash-match
-    # re-verified at 3 SFs for the dedup bench queries).
+    # lower(text) materialized next: char_shingles_sql references it
+    # per position and an inline lower() would be recomputed O(len)
+    # times. String-expression build from here down (guide §7.3): the
+    # Column construction of this operator cost ~1,430 py4j
+    # round-trips per q32 build (tests/test_text_sql.py pins the
+    # builders to the DuckDB oracle expressions).
     low = spread(df).selectExpr(
         f"`{id_col}` AS id", f"lower(`{text_col}`) AS lc"
     )
@@ -277,11 +255,7 @@ def minhash_lsh_pairs(
         # explode_outer: skip the inferred size>0 filter that would
         # build the O(d^2) pair array twice (buckets are filtered
         # size>1, so the pair array is never empty).
-        pair_arr = (
-            f"CASE WHEN size(ids) <= {int(max_bucket_size)} "
-            f"THEN {_pairs_within_sql('ids')} "
-            f"ELSE {_chain_pairs_sql('ids')} END"
-        )
+        pair_arr = _bucket_pairs_sql("ids", max_bucket_size)
         # spread the bucket rows before the pair expansion: the bucket
         # aggregation's shuffle output is tiny in BYTES (a few thousand
         # rows of band/bucket/id-array), so AQE coalesces its read to
@@ -305,7 +279,7 @@ def minhash_lsh_pairs(
             "id",
             "sig",
             F.explode_outer(
-                lsh_band_keys(F.col("sig"), bands, rows_per_band)
+                F.expr(lsh_band_keys_sql("sig", bands, rows_per_band))
             ).alias("bk"),
         ).select(
             F.col("bk.band").alias("band"),
@@ -456,9 +430,8 @@ def ngram_jaccard_pairs(
     # Postings carry h60(gram), not the gram string: 8-byte shuffle
     # keys for the inverted-index join (hash collisions are shared by
     # any engine using the same md5-derived hash, so counts agree).
-    # Tokens materialized first — see char_shingles inlining caveat.
-    # String-expression build (guide §7.3; identical trees to the
-    # Column forms — see minhash_lsh_pairs note).
+    # Tokens materialized first — see char_shingles_sql inlining caveat.
+    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
     toksed = spread(df).selectExpr(
         f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
     )
@@ -631,7 +604,6 @@ def embedding_dup_pairs(
     max_rows: int | None = 10_000,
     on_overflow: str = "error",
     planes: int = 12,
-    strategy: str = "blas",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
@@ -646,18 +618,13 @@ def embedding_dup_pairs(
     with recall < 1 by construction (near-identical vectors land in
     the same bucket with prob ~ (1 - theta/pi)^planes).
 
-    ``strategy='blas'`` (default) runs the exact path as a broadcast
-    block matmul: the bounded side is normalized once, broadcast as a
-    dense matrix, and every Arrow batch of the distributed side scores
-    against it with one numpy GEMM inside ``mapInPandas`` — the same
-    broadcast-probe distribution as the expression plan but with the
-    64x-per-pair inner loop in BLAS, ~10x faster wall-clock.
-    ``strategy='expr'`` keeps the pure-Catalyst HOF plan (sequential
-    fold order, bit-identical to the DuckDB oracle — useful when
-    last-ulp parity matters more than throughput).
+    The exact path is a broadcast block matmul: the bounded side is
+    normalized once, broadcast as a dense matrix, and every Arrow batch
+    of the distributed side scores against it with one numpy GEMM
+    inside ``mapInPandas`` — a broadcast-probe distribution with the
+    64x-per-pair inner loop in BLAS, ~10x faster wall-clock than a
+    Catalyst fold per pair.
     """
-    from model_presto_spark.functions.vectors import cosine_similarity
-
     if max_rows is not None:
         n = df.count()
         if n > max_rows:
@@ -671,23 +638,7 @@ def embedding_dup_pairs(
                 "operators.knn.ann_lsh_join / ivf_knn_join for top-k."
             )
 
-    if strategy == "blas":
-        return _blocked_exact_pairs(df, id_col, vec_col, threshold)
-
-    # spread the streamed side: the id_a < id_b condition makes this a
-    # broadcast nested-loop join, and the per-pair cosine work must
-    # not inherit a single-file scan's partitioning
-    a = spread(df).select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            cosine_similarity(F.col("va"), F.col("vb")).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
+    return _blocked_exact_pairs(df, id_col, vec_col, threshold)
 
 
 def _blocked_exact_pairs(
@@ -700,7 +651,7 @@ def _blocked_exact_pairs(
     side stays distributed and each Arrow batch computes a single
     ``batch @ B.T`` GEMM, emitting only (id_a < id_b, sim >= threshold)
     survivors. Zero-norm vectors score NaN and never pass the
-    threshold — same outcome as the expression plan's 0/0. At corpus
+    threshold — same outcome as a cosine fold's 0/0. At corpus
     scale (broadcast side too big) use ``on_overflow='lsh'`` or
     operators.knn.ivf_knn_join instead; this is the exact-baseline
     shape, like knn.cosine_topk's broadcast probe.
@@ -708,15 +659,17 @@ def _blocked_exact_pairs(
     import numpy as np
     import pandas as pd
 
+    id_t = dict(df.dtypes)[id_col]
+    schema = f"id_a {id_t}, id_b {id_t}, cosine_sim double"
     side = df.select(id_col, vec_col).collect()
+    if not side:
+        # np.array([]) is 1-D: the row norms below need a 2-D matrix
+        return df.sparkSession.createDataFrame([], schema)
     ids_b = np.array([r[id_col] for r in side])
     mat = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in side])
     with np.errstate(invalid="ignore", divide="ignore"):
         bn = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     bc = df.sparkSession.sparkContext.broadcast((ids_b, bn))
-
-    id_t = dict(df.dtypes)[id_col]
-    schema = f"id_a {id_t}, id_b {id_t}, cosine_sim double"
 
     def score(it):
         b_ids, b_mat = bc.value
@@ -748,7 +701,7 @@ def _lsh_dup_pairs(
 ) -> DataFrame:
     """Bucketed near-dup pair generation: hyperplane-LSH bucket
     self-join (the scale path embedding_dup_pairs routes to)."""
-    from model_presto_spark.functions.vectors import cosine_similarity
+    from model_presto_spark.functions.vectors import cosine_similarity_sql
     from model_presto_spark.operators.knn import _hyperplane_bucket_sql
 
     dim = len(df.select(vec_col).first()[0])
@@ -769,7 +722,7 @@ def _lsh_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            cosine_similarity(F.col("va"), F.col("vb")).alias("cosine_sim"),
+            F.expr(cosine_similarity_sql("va", "vb")).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -1254,8 +1207,7 @@ def ngram_containment_pairs(
             f"candidates must be 'index', 'lsh', 'lsh_ensemble', or "
             f"'auto': {candidates}"
         )
-    # String-expression build (guide §7.3; identical trees to the
-    # Column forms — see minhash_lsh_pairs note).
+    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
     toksed = spread(df).selectExpr(
         f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
     )
@@ -1389,13 +1341,13 @@ def _containment_lsh_candidates(
     (2 rows per band): the corpus-density-independent generator for
     ``ngram_containment_pairs(candidates='lsh')``."""
     rows_per_band = max(num_hashes // bands, 1)
-    sig = grams.select(
-        "id", minhash_signature(F.col("grams"), num_hashes).alias("sig")
+    sig = grams.selectExpr(
+        "id", f"{minhash_signature_sql('grams', num_hashes)} AS sig"
     )
     banded = sig.select(
         "id",
         F.explode_outer(
-            lsh_band_keys(F.col("sig"), bands, rows_per_band)
+            F.expr(lsh_band_keys_sql("sig", bands, rows_per_band))
         ).alias("bk"),
     ).select(F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"), "id")
     buckets = (
@@ -1403,9 +1355,7 @@ def _containment_lsh_candidates(
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    pair_arr = F.when(
-        F.size("ids") <= max_bucket_size, _pairs_within("ids")
-    ).otherwise(_chain_pairs("ids"))
+    pair_arr = F.expr(_bucket_pairs_sql("ids", max_bucket_size))
     # generator-side spread: see the minhash candidate stage note
     return (
         spread(buckets).select(F.explode_outer(pair_arr).alias("pr"))
@@ -1529,13 +1479,13 @@ def _containment_ensemble_candidates(
         "id",
         "bkt",
         "ng",
-        minhash_signature(F.col("grams"), num_hashes).alias("sig"),
+        F.expr(minhash_signature_sql("grams", num_hashes)).alias("sig"),
     # the num_hashes-minima fold feeds one key branch per family —
     # cut the lineage so it computes once, not per branch
     ).localCheckpoint(eager=True)
     parts = []
     for fam_i, ((b, r), gaps) in enumerate(sorted(families.items())):
-        keys = F.explode_outer(lsh_band_keys(F.col("sig"), b, r)).alias("bk")
+        keys = F.explode_outer(F.expr(lsh_band_keys_sql("sig", b, r))).alias("bk")
         posting = sig.select(
             F.lit(fam_i).alias("fam"), "id", "bkt", "ng", keys
         ).select(

@@ -56,9 +56,9 @@ TWO60 = float(1 << 60)
 
 def _bigrams_all(toks: F.Column) -> F.Column:
     """ALL bigram occurrences (no dedup — DSIR features are counts;
-    functions.text.word_ngrams dedups, which is the wrong semantics
+    functions.text.word_ngrams_sql dedups, which is the wrong semantics
     here). A 1-token document yields its lone token as the 'bigram'
-    (the same greatest(n-1, 1) convention as word_ngrams)."""
+    (the same greatest(n-1, 1) convention as word_ngrams_sql)."""
     cnt = F.greatest(F.size(toks) - F.lit(1), F.lit(1))
     return F.transform(
         F.sequence(F.lit(1), cnt),

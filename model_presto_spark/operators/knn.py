@@ -22,6 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from model_presto_spark.functions.vectors import (
+    cosine_similarity_sql,
+    dot_sql,
+    sq_euclidean_sql,
+)
+
 _METRICS = ("sqeuclidean", "cosine", "dot")
 
 
@@ -31,78 +37,16 @@ def _qt(name: str) -> str:
 
 
 def _distance_sql(qv: str, cv: str, metric: str) -> str:
-    """SQL-string twin of ``_distance`` (guide §7.3): one ``F.expr``
-    parse instead of ~170 py4j round-trips of Column-API fold
-    construction per distance tree. The strings spell the IDENTICAL
-    expression trees — per-element double casts inside the lambdas,
-    same operand order, ``0.0D`` for the double zero literal (a bare
-    SQL ``0.0`` parses as DECIMAL) — so fold arithmetic stays
-    bit-identical to the Column version and to the DuckDB oracle
-    (tests/test_knn_sql.py pins equality on all three metrics)."""
+    """Distance expression as SQL text (one ``F.expr`` parse instead of
+    ~170 py4j round trips of Column-API fold construction). Smaller is
+    nearer for every metric; the folds are ``functions.vectors``'s, so
+    values stay bit-identical to the DuckDB oracle's sequential folds."""
     if metric == "sqeuclidean":
-        return (
-            f"aggregate(zip_with({qv}, {cv}, (a, b) -> "
-            f"(CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) * "
-            f"(CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-    dot = (
-        f"aggregate(zip_with({qv}, {cv}, (a, b) -> "
-        f"CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), "
-        f"0.0D, (a, x) -> a + x)"
-    )
+        return sq_euclidean_sql(qv, cv)
     if metric == "dot":
-        return f"-({dot})"  # larger dot = nearer
+        return f"-({dot_sql(qv, cv)})"  # larger dot = nearer
     if metric == "cosine":
-        nq = (
-            f"SQRT(aggregate({qv}, 0.0D, "
-            f"(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        nc = (
-            f"SQRT(aggregate({cv}, 0.0D, "
-            f"(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        return f"1.0D - {dot} / ({nq} * {nc})"
-    raise ValueError(f"metric must be one of {_METRICS}")
-
-
-def _distance(qv, cv, metric: str):
-    # Per-ELEMENT double casts inside the lambdas: callers pass raw
-    # float arrays (an upfront array<double> cast would be inlined by
-    # CollapseProject into the fold and re-cast the whole vector per
-    # element), and the per-element cast keeps products/norms in
-    # double precision so near-tie top-k rank boundaries agree with
-    # a double-precision oracle.
-    if metric == "sqeuclidean":
-        return F.aggregate(
-            F.zip_with(
-                qv,
-                cv,
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    dot = F.aggregate(
-        F.zip_with(qv, cv, lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    if metric == "dot":
-        return -dot  # larger dot = nearer
-    if metric == "cosine":
-        nq = F.sqrt(
-            F.aggregate(
-                qv, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
-            )
-        )
-        nc = F.sqrt(
-            F.aggregate(
-                cv, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
-            )
-        )
-        return 1.0 - dot / (nq * nc)
+        return f"1.0D - {cosine_similarity_sql(qv, cv)}"
     raise ValueError(f"metric must be one of {_METRICS}")
 
 
@@ -215,7 +159,7 @@ def ivf_knn_join(
     pvec = F.col(probe_vec).cast("array<double>")
     p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
     pc = p.crossJoin(F.broadcast(cent_df))
-    cdist = _distance(F.col("__pvec"), F.col("__centroid"), "sqeuclidean")
+    cdist = F.expr(_distance_sql("__pvec", "__centroid", "sqeuclidean"))
     wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("__cell").asc())
     probe_cells = (
         pc.withColumn("__crank", F.row_number().over(wcell))
@@ -227,7 +171,7 @@ def ivf_knn_join(
     pairs = probe_cells.join(indexed, "__cell")
     if exclude_self:
         pairs = pairs.filter(F.col("__pid") != F.col("__cid"))
-    dist = _distance(F.col("__pvec"), F.col("__cvec"), metric)
+    dist = F.expr(_distance_sql("__pvec", "__cvec", metric))
     scored = pairs.select("__pid", "__cid", dist.alias("__dist")).dropDuplicates(
         ["__pid", "__cid"]
     )
@@ -353,12 +297,10 @@ def ann_lsh_join(
     pairs are scored. Recall < 1 by construction; raise ``planes``
     fan-out (multi-probe) or run multiple tables for higher recall.
     """
-    from model_presto_spark.functions.vectors import cosine_similarity_sql
     from model_presto_spark.io import spread
 
-    # String-expression build (guide §7.3) — same Catalyst trees as
-    # the former Column construction, a fraction of the py4j
-    # round-trips (the bucket folds were already SQL strings).
+    # String-expression build (guide §7.3): a fraction of the Column
+    # construction's py4j round-trips.
     p = probes.selectExpr(
         f"{_qt(probe_id)} AS __pid",
         f"{_qt(probe_vec)} AS __pvec",
@@ -467,7 +409,7 @@ def ivf_index_search(
     )
     pvec = F.col(probe_vec).cast("array<double>")
     p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
-    cdist = _distance(F.col("__pvec"), F.col("centroid"), "sqeuclidean")
+    cdist = F.expr(_distance_sql("__pvec", "centroid", "sqeuclidean"))
     wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("cell").asc())
     probe_cells = (
         p.crossJoin(F.broadcast(cent_df))
@@ -480,7 +422,7 @@ def ivf_index_search(
     pairs = cells.join(F.broadcast(probe_cells), "cell")
     if exclude_self:
         pairs = pairs.filter(F.col("__pid") != F.col("cid"))
-    dist = _distance(F.col("__pvec"), F.col("cvec"), metric)
+    dist = F.expr(_distance_sql("__pvec", "cvec", metric))
     scored = pairs.select("__pid", "cid", dist.alias("__dist")).dropDuplicates(
         ["__pid", "cid"]
     )
@@ -609,7 +551,7 @@ def ivf_index_append(
     )
     cvec = F.col(cand_vec).cast("array<double>")
     c = candidates.select(F.col(cand_id).alias("cid"), cvec.alias("cvec"))
-    d = _distance(F.col("cvec"), F.col("centroid"), "sqeuclidean")
+    d = F.expr(_distance_sql("cvec", "centroid", "sqeuclidean"))
     w = Window.partitionBy("cid").orderBy(d.asc(), F.col("cell").asc())
     assigned = (
         c.crossJoin(F.broadcast(cent_df))

@@ -191,7 +191,7 @@ def pq_knn_join(
             .filter(F.col("r") <= rerank)
             .drop("r", "__dist")
         )
-        from model_presto_spark.functions.vectors import sq_euclidean
+        from model_presto_spark.functions.vectors import sq_euclidean_sql
 
         cands = candidates.select(
             F.col(cand_id).alias("__cid"),
@@ -206,7 +206,7 @@ def pq_knn_join(
         ).select(
             "__pid",
             "__cid",
-            sq_euclidean(F.col("__pvec"), F.col("__cvec")).alias("__dist"),
+            F.expr(sq_euclidean_sql("__pvec", "__cvec")).alias("__dist"),
         )
     return (
         scored.withColumn("rank", F.row_number().over(w))

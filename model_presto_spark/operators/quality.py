@@ -1,7 +1,7 @@
 """Named document-quality rule bundles: Gopher and C4.
 
 The repo already exposes the underlying signals — ratio features
-(functions/text.quality_features), repetition folds
+(functions/text.quality_features_sql), repetition folds
 (duplicate_ngram_fraction / top_ngram_fraction), LM perplexity
 (operators/lm.py). This module composes them into the two canonical
 published FILTER RULE SETS a pipeline actually configures:
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.functions.text import (
     LANG_STOPWORDS,
-    _lit_array,
+    _lit_array_sql,
     duplicate_ngram_fraction,
     tokens,
     top_ngram_fraction,
@@ -98,7 +98,7 @@ def gopher_quality_flags(
         F.filter(F.col("__toks"), lambda t: t.rlike("[a-z]"))
     ).cast("double")
     alpha_frac = F.when(n > 0, alpha_words / n).otherwise(F.lit(0.0))
-    stop_en = _lit_array(LANG_STOPWORDS["en"])
+    stop_en = F.expr(_lit_array_sql(LANG_STOPWORDS["en"]))
     stop_hits = F.size(
         F.array_intersect(F.array_distinct("__toks"), stop_en)
     )

@@ -67,7 +67,10 @@ def _stage_quality_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
 
     def apply(df: DataFrame) -> DataFrame:
         toksed = df.withColumn("__toks", T.tokens(F.col(col)))
-        feats = T.quality_features(F.col(col), F.col("__toks"))
+        feats = {
+            k: F.expr(v)
+            for k, v in T.quality_features_sql(f"`{col}`", "__toks").items()
+        }
         cond = feats["n_tokens"] >= min_tokens
         if max_tokens is not None:
             cond = cond & (feats["n_tokens"] <= max_tokens)

@@ -1220,563 +1220,3 @@ from model_presto_spark.plans import queries_ops102 as _queries_ops102  # noqa: 
 from model_presto_spark.plans import queries_ops103 as _queries_ops103  # noqa: E402,F401
 from model_presto_spark.plans import queries_ops104 as _queries_ops104  # noqa: E402,F401
 from model_presto_spark.plans import queries_ops105 as _queries_ops105  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Adjudication-order curation.
-#
-# The correctness driver adjudicates only the first 50 entries of
-# ``queries()`` (observed in rounds 1-2: exactly the first 50 names in
-# dict order get CORRECTNESS rows). With >50 registered queries some
-# must sit past the cap.
-#
-# Policy history:
-# - Rounds 2-3 (mid-round): the tail held queries whose SURVEY S2
-#   operator IDs are ALSO evidenced by an earlier adjudicated query
-#   (per-query rationales in the git history of this block).
-# - Round-3 END rotation (current state): the head now holds every
-#   query that had NEVER received a driver CORRECTNESS row in any
-#   round (q51-q53, q65, q67-q69, q82-q84, q89-q101) plus a core of
-#   staples; everything in the tail below holds a GREEN driver row
-#   from CORRECTNESS_r01/r02 — so after this round EVERY registered
-#   query has been driver-adjudicated in some round.
-# - Round 4+: when adding queries, re-rotate so anything still
-#   without a driver row in ANY round sits inside the head-50.
-# - Round-5 session (driver round 3) added q130-q159 — all parked
-#   below (they join q110-q129 in waiting). The head was left
-#   UNTOUCHED all session: it holds the 50 oldest never-adjudicated
-#   queries and CORRECTNESS_r03 (whenever the driver snapshots) will
-#   adjudicate exactly them. NEXT SESSION: once CORRECTNESS_r03
-#   exists and covers the current head, park all 50 head members
-#   here and promote q110-q159 (exactly 50) to the head — do it at
-#   session START, since driver snapshots have been observed
-#   mid-round (CORRECTNESS_r02 reflects a mid-round-2 state).
-# - Round-6 session (driver round 3 continued; CORRECTNESS_r03 never
-#   appeared during the session) added q160-q210. They are NOT in
-#   this tail list, so they sit in the head portion at positions
-#   51-101 — past the adjudication cap, waiting. The head-50 is STILL
-#   untouched (the same 50 oldest never-adjudicated queries as the
-#   round-5 note above). Rotation queue when r03 lands:
-#   r04 head := q110-q159 (50); r05 head := q160-q209 (50);
-#   r06 head := q210-q259 (50); r07 head := q260-q309 (50);
-#   r08 head := q310-q334 + oldest re-verifications.
-# - Round-7 session #2 (driver round 3 continued; CORRECTNESS_r03
-#   still absent at session start — CORRECTNESS_r02 latest) added
-#   q211-q334. All sit past position 50 (head untouched all
-#   session); every one gated locally at BOTH sf0.01 and sf0.1
-#   before its commit, so rotation is purely about driver
-#   adjudication visibility, not correctness risk.
-# - Round-8 session (driver round 3 continued; CORRECTNESS_r03 STILL
-#   absent at session start) added q335-q398 (TPC-H completion,
-#   cost-basis algebra, causal/testing, retrieval, semantics pins).
-#   Same discipline: head untouched, every query gated at both SFs
-#   before commit; all new names queue behind q334 for rotation.
-#
-# Every query (head and tail) still runs in bench.py and in the local
-# gate (tools/check_correctness.py at sf0.01 AND sf0.1), which has no
-# cap.
-# ---------------------------------------------------------------------------
-_ADJUDICATION_TAIL = [
-    # ---- Round-3 end-of-round rotation ----------------------------------
-    # Goal: by the end of round 3 EVERY registered query has a
-    # driver-adjudicated CORRECTNESS row in some round. The 19 queries
-    # below all hold GREEN driver rows from CORRECTNESS_r01/r02;
-    # parking them frees head slots for the 19 queries that had never
-    # been driver-adjudicated (q51-q53, q65, q67-q69, q82-q84,
-    # q89-q97), which now sit in the head. Every parked query stays
-    # verified by the uncapped local/pytest oracle gates each round.
-    "q05_string_filter",
-    "q06_bitmask",
-    "q07_case_relabel",
-    "q10_outer_join_streams",
-    # q13_asof_join -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q15_mode",
-    "q18_histogram",
-    "q24_union_explode",
-    "q30_series_pad",
-    # q36_lang_id -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q37_quality -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q38_token_stats",
-    "q41_spectral",
-    "q43_monthly_composite",
-    "q47_terrain",
-    "q50_json",
-    # q56_utm -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q59_spatial_join",
-    "q61_repetition",
-    # q19 (r01/r02-green) parks to make room for q98_triangles,
-    # which has never been driver-adjudicated
-    "q19_threeway_stats",
-    # q45 (r01/r02-green) parks likewise for q99_link_prediction
-    # q45_knn_classify -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q46 (r01/r02-green) parks likewise for q100_markov_transitions
-    "q46_mask_budget",
-    # q40 (r01/r02-green) parks likewise for q101_bfs_levels
-    # q40_ann_lsh -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q33 (r01/r02-green) parks likewise for q102_frequent_itemsets
-    # q33_simhash -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # ---- Round-4 rotation: q103-q108 are new this round (never
-    # adjudicated) and must sit inside the head-50. The six queries
-    # below hold GREEN driver rows from CORRECTNESS_r01/r02, so they
-    # park; q16 stays in the head as the flagship. After this
-    # rotation the head is exactly the 49 never-adjudicated queries
-    # + q16. ------------------------------------------------------------
-    "q31_exact_dedup",
-    # q32_minhash_lsh -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q34_ngram_jaccard -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q54_embedding_dups",
-    # q55_dedup_clusters -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q60_contamination",
-    # q109/q110 push the never-adjudicated count to 51: q16 (r01/r02
-    # green) parks too.
-    "q16_tpch_q1",
-    # ---- Round-4 (driver round 4) START rotation -----------------------
-    # CORRECTNESS_r03 landed: 50/50 green on the exact r03 head
-    # (q51-q53, q63-q109 window). Per the queue plan, those 50 park
-    # here and q110-q159 (previously waiting in this tail) are
-    # REMOVED from the tail, making them the new head-50 — they are
-    # the flagship LLM-pipeline queries (semantic dedup q110,
-    # winnowing q111, bigram-LM q112, Gopher q113, C4 q114, ...)
-    # that have only local-oracle rows so far. Rotation queue ahead:
-    # r05 head := q160-q209; r06 := q210-q259; and so on.
-    "q51_rollup",
-    "q52_setops",
-    "q53_running_window",
-    "q63_sessionize",
-    "q64_range_join",
-    "q65_hash_sample",
-    "q66_chunking",
-    "q67_ingest_funnel",
-    "q68_session_conversion",
-    "q69_tpch_q3",
-    "q70_domain_mix",
-    "q71_perplexity",
-    "q72_sketches",
-    "q73_tfidf",
-    "q74_seq_packing",
-    "q75_auc",
-    "q76_pivot",
-    "q77_cube",
-    "q78_weighted_sample",
-    "q79_gap_fill",
-    "q80_profile",
-    "q81_constraints",
-    "q82_mix_epochs",
-    # q83_ranking_metrics -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q84_embedding_qc",
-    "q85_span_dedup",
-    "q86_fuzzy_linkage",
-    "q87_pagerank",
-    "q88_rolling_anomaly",
-    "q89_k_anonymity",
-    "q90_snapshot_diff",
-    "q91_bm25",
-    "q92_calibration",
-    "q93_cohort_retention",
-    "q94_ab_test",
-    "q95_cooccurrence_pmi",
-    "q96_mad_outliers",
-    "q97_cusum_drift",
-    "q98_triangles",
-    "q99_link_prediction",
-    "q100_markov_transitions",
-    "q101_bfs_levels",
-    "q102_frequent_itemsets",
-    "q103_line_boilerplate",
-    # q104_containment -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q105_dsir",
-    "q106_corpus_kl",
-    "q107_label_prop",
-    "q108_survival",
-    "q109_rrf_fusion",
-    # ---- Parked in earlier rounds (r01/r02-green or redundantly
-    # covered; per-query rationales in the git history) ------------------
-    "q25_dates",
-    "q09_left_join_coalesce",
-    "q21_topn_per_group",
-    # q17_quantiles -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q04_null_counts",
-    "q28_mod_split",
-    "q58_zip_pages",
-    "q01_scan_project",
-    "q12_dict_join",
-    "q03_filter_sum",
-    "q48_geodesic",
-    "q08_join_agg",
-    "q26_strings",
-    "q62_token_budget",
-    "q57_grid_pipeline",
-    "q42_capped_split",
-    "q29_confusion",
-    "q39_fingerprint_stats",
-    "q11_semi_anti",
-    "q02_derived_expr",
-    "q22_topk_order",
-    "q27_math",
-    # q49_asof_forward -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q44_multiclass_f1",
-    # q35_cosine_topk -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q23_knn -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    # q14_median -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q20_tumbling_day",
-    # ---- Round-5 session rotation (driver round 5) ----------------------
-    # CORRECTNESS_r04 came back 50/50 GREEN on q110-q159, so that head
-    # is parked here and q160-q209 (registration positions 51-100 until
-    # this rotation) become the new head-50 — exactly the documented
-    # r05 step of the rotation queue above. Next: r06 head := q210-q259.
-    "q110_semantic_dedup",
-    "q111_winnowing",
-    "q112_bigram_lm",
-    "q113_gopher_rules",
-    "q114_c4_rules",
-    "q115_scd2",
-    "q116_streaks",
-    "q117_sequences",
-    "q118_ordered_funnel",
-    "q119_rfm",
-    "q120_attribution",
-    "q121_benford",
-    "q122_grouped_ols",
-    "q123_covariance",
-    "q124_seasonal",
-    "q125_zipf",
-    "q126_kcore",
-    "q127_pareto",
-    "q128_association_rules",
-    "q129_lead_lag",
-    "q130_charclass_profile",
-    "q131_readability",
-    "q132_source_overlap",
-    "q133_weighted_median",
-    "q134_ewma",
-    "q135_concurrency",
-    "q136_geohash_grid",
-    "q139_vwap",
-    "q140_clamped_balance",
-    "q141_hopping_window",
-    "q137_hits",
-    # q138_label_noise -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q142_grid_dbscan",
-    "q143_entropy_gini",
-    "q144_bollinger",
-    "q145_theil_sen",
-    "q146_moments",
-    "q147_ks_test",
-    "q148_gini",
-    "q149_autocorr",
-    "q150_funnel_latency",
-    "q151_mutual_info",
-    "q152_bipartite_projection",
-    "q153_rolling_median",
-    "q154_mom_growth",
-    "q155_chi_square",
-    "q156_burstiness",
-    "q157_tfidf_cosine",
-    "q158_interval_coverage",
-    "q159_sojourn",
-    # ---- Round-6 session rotation (driver round 6) ----------------------
-    # CORRECTNESS_r05 came back 50/50 GREEN on q160-q209, so that head
-    # parks here and q210-q259 become the new head-50 — the documented
-    # r06 step of the rotation queue above. Next: r07 head := q260-q309.
-    "q160_url_canonical",
-    "q161_quantile_normalize",
-    "q162_poisson_bootstrap",
-    "q163_radius_join",
-    "q164_mann_whitney",
-    "q165_mix_temperature",
-    "q166_watermark_audit",
-    "q167_spearman",
-    "q168_kendall_tau",
-    # q169_dedup_curve -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q170_ngram_novelty",
-    "q171_winsorized_scaler",
-    "q172_bh_fdr",
-    # q173_ppjoin -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q174_twap",
-    "q175_tpch_q5",
-    "q176_tpch_q10",
-    "q177_tpch_q14",
-    "q178_tpch_q8",
-    "q179_tpch_q19",
-    "q180_window_suite",
-    "q181_grouping_sets",
-    "q182_string_suite",
-    "q183_null_semantics",
-    "q184_correlated_subqueries",
-    "q185_exact_money",
-    "q186_union_by_name",
-    "q187_psi_drift",
-    "q188_bilinear_resample",
-    "q189_interleave",
-    "q190_corpus_pipeline",
-    "q191_hierarchy_rollup",
-    "q192_growth_accounting",
-    "q193_rolling_actives",
-    "q194_bloom_join",
-    "q195_cms_heavy_hitters",
-    "q196_cidr_routing",
-    "q197_cdc_apply",
-    "q198_feature_hashing",
-    "q199_negative_sampling",
-    "q200_holt_trend",
-    # q201_mutual_nn -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q202_pii_redaction",
-    "q203_skyline",
-    "q204_consistent_hashing",
-    "q205_neyman_sampling",
-    "q206_time_travel",
-    "q207_target_encoding",
-    "q208_table_checksums",
-    "q209_delta_method",
-    # ---- Round-7 (driver round 7) START rotation -----------------------
-    # CORRECTNESS_r06 landed: 50/50 green on the exact r06 head
-    # (q210-q259). Per the documented queue, those 50 park here and
-    # q260-q309 become the head-50. Rotation queue ahead:
-    # r08 head := q310-q359; r09 := q360-q409; ... until the
-    # never-adjudicated backlog (q260-q723 at round-7 start) is gone.
-    "q210_cuped",
-    "q211_hill_tail",
-    "q212_good_turing",
-    "q213_chao1_richness",
-    "q214_tpch_q7",
-    "q215_tpch_q13",
-    "q216_tpch_q17",
-    "q217_tpch_q18",
-    "q218_tpch_q22",
-    "q219_drawdown",
-    "q220_rsi",
-    "q221_forecast_accuracy",
-    "q222_assortativity",
-    "q223_eb_source_quality",
-    "q224_unpivot_profile",
-    "q225_heaps_law",
-    "q226_woe_iv",
-    "q227_cmh_odds",
-    "q228_hexbin",
-    "q229_cohens_kappa",
-    "q230_embedding_diversity",
-    "q231_dim_energy",
-    "q232_cronbach_alpha",
-    "q233_wilson_ci",
-    "q234_sprt",
-    "q235_did",
-    "q236_rich_club",
-    "q237_segmented_trend",
-    "q238_gumbel_maxima",
-    "q239_within_estimator",
-    "q240_stationary_dist",
-    "q241_jsd_matrix",
-    "q242_markov_attribution",
-    "q243_modularity",
-    # q244_hubness -> pulled to the round-9 re-adjudication front (_ADJUDICATION_FRONT below): its results-producing code was
-    # touched in round 8/9 and needs a fresh driver row.
-    "q245_holt_winters",
-    "q246_anova_levene",
-    "q247_wasserstein",
-    "q248_mann_kendall",
-    "q249_best_split",
-    "q250_qte",
-    "q251_source_ablation_kl",
-    "q252_cross_correlation",
-    "q253_decision_stump",
-    "q254_fellegi_sunter",
-    "q255_interarrival_fit",
-    "q256_waterfill_budget",
-    "q257_interpolation_join",
-    "q258_overdispersion",
-    "q259_meta_analysis",
-    # ---- Round-8 (driver round 8) START rotation -----------------------
-    # CORRECTNESS_r07 landed: 50/50 green on the exact r07 head
-    # (q260-q309), and the round-7 judge additionally ran the FULL
-    # 723-query corpus against the DuckDB oracle (723/723). Per the
-    # documented queue, those 50 park here and q310-q359 become the
-    # head-50. Rotation queue ahead: r09 head := q360-q409;
-    # r10 := q410-q459; ... until the backlog is gone.
-    "q260_qini",
-    "q261_bass_diffusion",
-    "q262_runs_test",
-    "q263_permutation_entropy",
-    "q264_hurst",
-    "q265_periodogram",
-    "q266_apportionment",
-    "q267_token_bucket",
-    "q268_lloyd_step",
-    "q269_silhouette",
-    "q270_mahalanobis",
-    "q271_dkw_bands",
-    "q272_control_chart",
-    "q273_price_index",
-    "q274_naive_bayes",
-    "q275_hhi",
-    "q276_chain_ladder",
-    "q277_als_step",
-    "q278_ipf_raking",
-    "q279_huber_mean",
-    "q280_conformal",
-    "q281_granger",
-    "q282_engle_granger",
-    "q283_kalman",
-    "q284_seasonal_strength",
-    "q285_outlier_votes",
-    "q286_sax_word",
-    "q287_matrix_profile",
-    "q288_l_diversity",
-    "q289_ess",
-    "q290_fleiss_kappa",
-    "q291_iv_2sls",
-    "q292_power",
-    "q293_shard_balance",
-    "q294_growth_decomp",
-    "q295_rolling_origin",
-    "q296_kneser_ney",
-    "q297_span_corruption",
-    "q298_knapsack_curation",
-    "q299_group_sequential",
-    "q300_bloom_planner",
-    "q301_abc_xyz",
-    "q302_entry_exit",
-    "q303_slo_burn",
-    "q304_fd_discovery",
-    "q305_bin_planner",
-    "q306_double_charge",
-    "q307_peaks",
-    "q308_ljung_box",
-    "q309_median_polish",
-    # ---- Round-9 (driver round 9) START rotation -----------------------
-    # CORRECTNESS_r08 landed: 50/50 green on the exact r08 head
-    # (q310-q359), so those 50 park here. The new head-50 is NOT the
-    # plain queue continuation this round: rounds 8-9 rewrote the
-    # results-producing build of 23 queries (asof / knn family /
-    # minhash / ngram / simhash / quantile-moments / UTM / tokenize
-    # spreads), and the round-8 verdict required folding them back
-    # into the driver gate. Those 23 are pulled to the FRONT of the
-    # head (_ADJUDICATION_FRONT below, replacing their parked entries
-    # above); the remaining 27 slots continue the queue (q360-q386).
-    # Queue ahead: r10 head := q387-q436; r11 := q437-q486; ... until
-    # the backlog is gone.
-    "q310_shapley",
-    "q311_decayed_value",
-    "q312_gpd_tail",
-    "q313_burrows_delta",
-    "q314_dict_candidates",
-    "q315_bradley_terry",
-    "q316_causal_impact",
-    "q317_structural_holes",
-    "q318_records",
-    "q319_kendalls_w",
-    "q320_friedman",
-    "q321_ar_order",
-    "q322_capture_recapture",
-    "q323_aa_test",
-    "q324_cochran_q",
-    "q325_mcnemar",
-    "q326_partial_corr",
-    "q327_yuen_test",
-    "q328_log_rank",
-    "q329_mus_sampling",
-    "q330_price_volume_mix",
-    "q331_price_endings",
-    "q332_split_half",
-    "q333_intrinsic_dim",
-    "q334_effective_rank",
-    "q335_tpch_q2",
-    "q336_tpch_q4",
-    "q337_tpch_q9",
-    "q338_tpch_q11",
-    "q339_tpch_q12",
-    "q340_tpch_q15",
-    "q341_tpch_q16",
-    "q342_tpch_q20",
-    "q343_tpch_q21",
-    "q344_fifo_lots",
-    "q345_inventory_aging",
-    "q346_moving_avg_basis",
-    "q347_listagg",
-    "q348_time_range_frame",
-    "q349_pct_of_parent",
-    "q350_weighted_sssp",
-    "q351_dp_noisy_counts",
-    "q352_average_precision",
-    "q353_jaccard_links",
-    "q354_keep_best_dedup",
-    "q355_packing_fragmentation",
-    "q356_kwic",
-    "q357_keyword_tagging",
-    "q358_chunk_overlap",
-    "q359_position_ctr",
-]
-
-
-# Queries whose results-producing build was rewritten in rounds 8-9
-# (SQL-string expression construction, moments fusion, spreads): they
-# hold builder-side hash-match evidence at 3 SFs plus pinning tests,
-# and move to the FRONT of the adjudication head so the driver's own
-# oracle re-confirms them this round (round-8 verdict item 2). Order
-# here = head order.
-_ADJUDICATION_FRONT = [
-    "q13_asof_join",
-    "q14_median",
-    "q17_quantiles",
-    "q23_knn",
-    "q32_minhash_lsh",
-    "q33_simhash",
-    "q34_ngram_jaccard",
-    "q35_cosine_topk",
-    "q36_lang_id",
-    "q37_quality",
-    "q40_ann_lsh",
-    "q45_knn_classify",
-    "q49_asof_forward",
-    "q55_dedup_clusters",
-    "q56_utm",
-    "q83_ranking_metrics",
-    "q104_containment",
-    "q138_label_noise",
-    "q169_dedup_curve",
-    "q173_ppjoin",
-    "q201_mutual_nn",
-    "q244_hubness",
-    "q494_lsh_tuning",
-]
-
-
-def _curate_order() -> None:
-    parked = set(_ADJUDICATION_TAIL)
-    front = {
-        n: QUERIES[n]
-        for n in _ADJUDICATION_FRONT
-        if n in QUERIES and n not in parked
-    }
-    head = {
-        n: s
-        for n, s in QUERIES.items()
-        if n not in parked and n not in front
-    }
-    tail = {n: QUERIES[n] for n in _ADJUDICATION_TAIL if n in QUERIES}
-    QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(head)
-    QUERIES.update(tail)
-
-
-_curate_order()

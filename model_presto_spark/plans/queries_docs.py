@@ -46,13 +46,13 @@ def dd_shingles(t: str, k: int = 5) -> str:
 
 def dd_hash_array(strings: str) -> str:
     """One md5-derived 60-bit hash per list element (mirrors
-    functions.text.hash_array)."""
+    functions.text.hash_array_sql)."""
     return f"list_transform({strings}, s -> {dd_h60('s')})"
 
 
 def dd_minhash(hashes: str, num_hashes: int = 16) -> str:
     """Arithmetic per-seed minima over pre-hashed elements (mirrors
-    functions.text.minhash_signature — same universal-hash formula)."""
+    functions.text.minhash_signature_sql — same universal-hash formula)."""
     p = 2_147_483_647
     return (
         f"list_transform(generate_series(0, {num_hashes - 1}), "
@@ -267,8 +267,8 @@ _Q35_ORACLE = f"""
 def q35(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.knn import knn_join
 
-    # NOTE on float parity: dot/norm2/sq_euclidean promote every
-    # element to double inside the fold (functions/vectors.as_double),
+    # NOTE on float parity: the functions/vectors folds promote every
+    # element to double inside the fold lambda,
     # matching the oracle's CAST(x AS DOUBLE) products bit-for-bit, so
     # no upfront array<double> cast is needed. An upfront withColumn
     # cast is also a 3x per-row slowdown: CollapseProject inlines the
@@ -401,8 +401,8 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # same single-file-scan serialization fix as q36 (io.spread)
     # String-expression build (guide §7.3; was ~590 py4j round-trips):
-    # same trees as quality_features' Column forms, incl. the
-    # double-then-bigint n_tokens cast and the 0.0D else branches.
+    # quality_features_sql's trees, incl. the double-then-bigint
+    # n_tokens cast and the 0.0D else branches.
     toksed = spread(docs.select("doc_id", "text")).selectExpr(
         "doc_id", "text", f"{T.tokens_sql('text')} AS toks"
     )

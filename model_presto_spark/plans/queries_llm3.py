@@ -176,12 +176,12 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wmin = F.min("doc_id").over(Window.partitionBy("fp"))
     dedup = base.withColumn("__m", wmin).filter(F.col("doc_id") == F.col("__m"))
-    feats = T.quality_features(F.col("text"), F.col("toks"))
-    feat = dedup.select(
+    feats = T.quality_features_sql("text", "toks")
+    feat = dedup.selectExpr(
         "doc_id",
-        F.size("toks").alias("n_tok"),
-        feats["alpha_ratio"].alias("alpha_ratio"),
-        feats["stopword_ratio"].alias("stop_ratio"),
+        "size(toks) AS n_tok",
+        f"{feats['alpha_ratio']} AS alpha_ratio",
+        f"{feats['stopword_ratio']} AS stop_ratio",
     )
 
     len_ok = F.col("n_tok").between(_MIN_TOK, _MAX_TOK)

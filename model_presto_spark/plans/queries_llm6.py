@@ -163,7 +163,7 @@ _Q170_ORACLE = f"""
     "join back; gram postings shuffle once, bodies never.",
 )
 def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import hash_array, tokens, word_ngrams
+    from model_presto_spark.functions.text import hash_array_sql, tokens, word_ngrams_sql
 
     docs = _t(spark, sf_dir, "documents")
     toksed = docs.select(
@@ -172,9 +172,9 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = toksed.select(
         "doc_id",
         "source",
-        F.array_distinct(hash_array(word_ngrams(F.col("toks"), 3))).alias(
-            "grams"
-        ),
+        F.expr(
+            f"array_distinct({hash_array_sql(word_ngrams_sql('toks', 3))})"
+        ).alias("grams"),
     )
     # explode_outer: grams is non-empty by construction (word_ngrams
     # emits >= 1 gram) and plain explode's inferred size()>0 filter

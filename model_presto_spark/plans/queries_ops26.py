@@ -398,7 +398,7 @@ _Q314_ORACLE = f"""
     "of zstd-style dictionary training over the shingle relation.",
 )
 def q314(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import char_shingles
+    from model_presto_spark.functions.text import char_shingles_sql
 
     docs = _t(spark, sf_dir, "documents")
     low = docs.where(F.length("text") >= _Q314_K).select(
@@ -406,7 +406,7 @@ def q314(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grams = low.select(
         F.explode_outer(
-            char_shingles(F.col("lt"), k=_Q314_K, distinct=False)
+            F.expr(char_shingles_sql("lt", k=_Q314_K, distinct=False))
         ).alias("gram")
     ).where(F.col("gram").isNotNull())
     cnt = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("freq"))

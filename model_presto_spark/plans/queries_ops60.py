@@ -96,28 +96,28 @@ def q494(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from model_presto_spark.functions.text import (
-        char_shingles,
-        hash_array,
-        lsh_band_keys,
-        minhash_signature,
+        char_shingles_sql,
+        hash_array_sql,
+        lsh_band_keys_sql,
+        minhash_signature_sql,
     )
     from model_presto_spark.io import spread
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     # hash the shingles ONCE; the three band configs reuse the same
-    # signature relation (the whole point of the sweep being cheap)
+    # signature relation (the whole point of the sweep being cheap).
+    # lower(text) is projected first: the shingle lambda references
+    # it per position, and an inline lower() would be recomputed there
     sh = (
         spread(docs)
-        .select(
-            F.col("doc_id").alias("id"),
-            hash_array(char_shingles(F.lower(F.col("text")), 5)).alias("hs"),
-        )
+        .selectExpr("doc_id AS id", "lower(text) AS lc")
+        .selectExpr("id", f"{hash_array_sql(char_shingles_sql('lc', 5))} AS hs")
         # lineage cut: the shingle relation feeds the signature plus
         # both verify sides across three band configs (plan audit: 25
         # scans with persist-only lineage)
         .localCheckpoint(eager=False)
     )
-    sig = sh.select("id", minhash_signature(F.col("hs"), 16).alias("sig")).localCheckpoint(eager=False)
+    sig = sh.selectExpr("id", f"{minhash_signature_sql('hs', 16)} AS sig").localCheckpoint(eager=False)
     hs_a = sh.select(F.col("id").alias("id_a"), F.col("hs").alias("ha"))
     hs_b = sh.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
     # All three band configs ride ONE banded relation keyed by the
@@ -137,7 +137,7 @@ def q494(spark: SparkSession, sf_dir: str) -> DataFrame:
         bb = sig.select(
             F.lit(b).alias("bands"),
             "id",
-            F.explode_outer(lsh_band_keys(F.col("sig"), b, r)).alias("bk"),
+            F.explode_outer(F.expr(lsh_band_keys_sql("sig", b, r))).alias("bk"),
         ).select(
             "bands",
             F.col("bk.band").alias("band"),

@@ -1,7 +1,11 @@
-"""Shared oracle-comparison helpers (used by tests/ and tools/)."""
+"""The oracle comparator: Spark result vs DuckDB oracle, as row multisets.
+
+One definition shared by ``tests/`` and ``tools/check_correctness.py``.
+"""
 
 from __future__ import annotations
 
+import decimal
 import math
 import os
 
@@ -11,17 +15,26 @@ from model_presto_spark.io import TABLES, table_path
 
 
 def canon(v) -> str:
-    """Canonical string for one cell (order-insensitive hashing)."""
+    """Type-sensitive canonical string for one cell.
+
+    Values carry a type tag (bool, int, float, Decimal), as a hash of
+    Arrow values does: a DuckDB decimal128 SUM and a Spark BIGINT of
+    the same value are a mismatch.
+    """
     if v is None:
         return "NULL"
+    if isinstance(v, bool):
+        return "b:" + str(int(v))
+    if isinstance(v, decimal.Decimal):
+        return "dec:" + str(v)
     if isinstance(v, float):
         if math.isnan(v):
-            return "NaN"
+            return "f:NaN"
         if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
+            return "f:" + str(int(v))
+        return "f:" + repr(v)
+    if isinstance(v, int):
+        return "i:" + str(v)
     return str(v)
 
 
@@ -57,6 +70,8 @@ def compare_query(spark, con, spec, sf_dir: str) -> list[str]:
         sm = rows_to_multiset(scols, srows)
         om = rows_to_multiset(ocols, ores)
         if sm != om:
-            diffs = [(a, b) for a, b in zip(sm, om) if a != b][:3]
-            problems.append(f"values differ, first diffs: {diffs}")
+            diffs = [(a, b) for a, b in zip(sm, om) if a != b]
+            problems.append(
+                f"values differ ({len(diffs)} rows), first: {diffs[:3]}"
+            )
     return problems

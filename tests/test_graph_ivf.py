@@ -116,6 +116,18 @@ def test_embedding_dup_pairs_guard_raises(spark):
     embedding_dup_pairs(df, "vid", "vec", max_rows=200)
 
 
+def test_embedding_dup_pairs_zero_rows(spark):
+    """An empty input yields an empty pair frame, not a numpy error
+    from scoring an empty broadcast matrix."""
+    from model_presto_spark.operators.dedup import embedding_dup_pairs
+
+    df = _vec_df(spark, 3, with_dup=False).limit(0)
+    out = embedding_dup_pairs(df, "vid", "vec")
+    assert out.columns == ["id_a", "id_b", "cosine_sim"]
+    assert dict(out.dtypes)["id_a"] == "bigint"
+    assert out.collect() == []
+
+
 def test_embedding_dup_pairs_lsh_route_finds_planted_dup(spark):
     from model_presto_spark.operators.dedup import embedding_dup_pairs
 

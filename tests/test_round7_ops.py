@@ -187,7 +187,7 @@ def test_near_dedup_stage_accepts_approx_docs(spark):
 
 def test_containment_auto_empty_and_degenerate(spark):
     """Empty corpus routes safely (index, no probe error). Sub-n-token
-    docs: word_ngrams emits the whole short doc as its single gram, so
+    docs: word_ngrams_sql emits the whole short doc as its single gram, so
     IDENTICAL short docs are containment dups (C(5,2) pairs at 1.0) —
     and since a sub-n doc's gram can never equal a full n-gram of a
     longer doc, such docs are rightly EXCLUDED from the routing

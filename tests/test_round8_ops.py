@@ -67,17 +67,16 @@ def test_ensemble_screen_drops_background_candidates(spark):
         _containment_ensemble_candidates,
     )
     from model_presto_spark.functions.text import (
-        hash_array,
-        tokens,
-        word_ngrams,
+        hash_array_sql,
+        tokens_sql,
+        word_ngrams_sql,
     )
 
     docs = _skewed_corpus(spark)
-    grams = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(
-            hash_array(word_ngrams(tokens(F.col("text")), 3), fast=True)
-        ).alias("grams"),
+    grams = docs.selectExpr(
+        "doc_id AS id",
+        f"array_distinct({hash_array_sql(word_ngrams_sql(tokens_sql('text'), 3), fast=True)})"
+        " AS grams",
     )
     loose = _containment_ensemble_candidates(
         grams, 128, 2000, 0.6, screen=None

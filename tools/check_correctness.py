@@ -2,7 +2,8 @@
 
 Runs every registered query on Spark AND its oracle SQL on DuckDB
 over the same parquet tables, then compares row count, column names,
-and an order-insensitive value multiset (floats canonicalized).
+and an order-insensitive, type-sensitive value multiset — the one
+comparator in ``model_presto_spark/testing.py`` that pytest also uses.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
        python tools/check_correctness.py [sf_dir] --touched <git-range>
@@ -17,38 +18,19 @@ little is a silent wrong answer.
 
 from __future__ import annotations
 
-import math
+import os
 import sys
 import time
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def canon(v) -> str:
-    """Type-sensitive canonical form (the driver hashes Arrow values, so a
-    DuckDB decimal128 SUM vs a Spark BIGINT is a mismatch even when equal)."""
-    import decimal
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "b:" + str(int(v))
-    if isinstance(v, decimal.Decimal):
-        return "dec:" + str(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "f:NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return "f:" + str(int(v))
-        return "f:" + repr(v)
-    if isinstance(v, int):
-        return "i:" + str(v)
-    return str(v)
-
-
-def rows_to_multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(canon(r[i]) for i in order) for r in rows)
+# rows_to_multiset is re-exported: perfbench canonicalizes oracle rows with it
+from model_presto_spark.testing import (  # noqa: E402,F401
+    canon,
+    compare_query,
+    duckdb_con,
+    rows_to_multiset,
+)
 
 
 def touched_queries(git_range: str, queries) -> set[str]:
@@ -64,7 +46,6 @@ def touched_queries(git_range: str, queries) -> set[str]:
     (re-export surfaces can alias anything).
     """
     import ast
-    import os
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -191,7 +172,6 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     only = set(argv[1:])
 
-    from model_presto_spark.io import TABLES, table_path
     from model_presto_spark.plans.queries import QUERIES
     from model_presto_spark.session import get_spark
 
@@ -203,14 +183,7 @@ def main() -> int:
             return 0
 
     spark = get_spark("check-correctness")
-
-    con = duckdb.connect()
-    import os
-
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duckdb_con(sf_dir)
 
     failures = []
     for name, spec in QUERIES.items():
@@ -218,40 +191,15 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            problems = compare_query(spark, con, spec, sf_dir)
         except Exception as e:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {e}")
-            continue
-        if spec.oracle is None:
-            print(f"ok    {name}: rows-only ({len(srows)} rows) [{time.time()-t0:.1f}s]")
-            continue
-        try:
-            ores = con.execute(spec.oracle).fetchall()
-            ocols = [d[0] for d in con.description]
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {e}")
-            continue
-
-        problems = []
-        if len(srows) != len(ores):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(ores)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        if not problems:
-            sm = rows_to_multiset(scols, srows)
-            om = rows_to_multiset(ocols, ores)
-            if sm != om:
-                diffs = [(a, b) for a, b in zip(sm, om) if a != b]
-                problems.append(f"values differ ({len(diffs)} rows), first: {diffs[:2]}")
+            problems = [f"{type(e).__name__}: {e}"]
         if problems:
             failures.append(name)
             print(f"FAIL  {name}: {'; '.join(problems)}")
         else:
-            print(f"ok    {name}: {len(srows)} rows match [{time.time()-t0:.1f}s]")
+            kind = "rows-only" if spec.oracle is None else "rows match"
+            print(f"ok    {name}: {kind} [{time.time()-t0:.1f}s]")
 
     n_run = sum(1 for name in QUERIES if not only or name in only)
     print(f"\n{n_run - len(failures)}/{n_run} passed")
