@@ -10,8 +10,8 @@ dictionary, mergeable across shards, identical on any cluster size.
 Output is the sparse (id, bucket, weight) form; densify only at the
 model boundary.
 
-md5-based hashes (``h60``) keep it replayable by the DuckDB oracles;
-swap ``h60_fast`` in production for ~3-5x less hash CPU.
+md5-based hashes (``h60_sql``) keep it replayable by the DuckDB oracles;
+swap ``h60_fast_sql`` in production for ~3-5x less hash CPU.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60, tokens
+from model_presto_spark.functions.text import h60_sql, tokens_sql
 
 
 def hashed_features(
@@ -32,14 +32,14 @@ def hashed_features(
     """Signed hashed bag-of-words: (id, bucket, weight) rows, zero
     weights dropped. One explode + one groupBy(id, bucket) — the
     only shuffle is on the output key, token strings never move."""
-    tok = F.explode_outer(tokens(F.col(text_col))).alias("__tok")
+    tok = F.explode_outer(F.expr(tokens_sql(text_col))).alias("__tok")
     exploded = df.select(F.col(id_col), tok)
     bucket = F.pmod(
-        h60(F.concat(F.lit(salt + "#"), F.col("__tok"))), F.lit(dim)
+        F.expr(h60_sql(f"concat('{salt}#', __tok)")), F.lit(dim)
     ).cast("int")
     sign = F.when(
         F.pmod(
-            h60(F.concat(F.lit(salt + "s#"), F.col("__tok"))), F.lit(2)
+            F.expr(h60_sql(f"concat('{salt}s#', __tok)")), F.lit(2)
         )
         == 0,
         F.lit(1),

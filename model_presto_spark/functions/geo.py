@@ -143,41 +143,25 @@ def utm_zone(lon: Column) -> Column:
     return (F.floor((lon + 180.0) / 6.0) % 60 + 1).cast("int")
 
 
-def utm_forward(lat: Column, lon: Column) -> Column:
+def utm_forward_sql(lat: str, lon: str) -> str:
     """(lat, lon) -> struct(zone, northern, easting, northing) in the
     point's own UTM zone (southern hemisphere gets the 10,000 km false
-    northing, the EPSG:327xx convention)."""
-    zone = utm_zone(lon)
-    lon0 = (zone.cast("double") * 6.0) - 183.0
-    en = transverse_mercator(lat, lon, lon0)
-    northern = lat >= 0.0
-    northing = F.when(northern, en["northing"]).otherwise(
-        en["northing"] + UTM_FALSE_NORTHING_SOUTH
-    )
-    return F.struct(
-        zone.alias("zone"),
-        northern.alias("northern"),
-        en["easting"].alias("easting"),
-        northing.alias("northing"),
-    )
+    northing, the EPSG:327xx convention), as ONE SQL string for
+    ``F.expr``.
 
-
-def utm_forward_sql(lat: str, lon: str) -> str:
-    """``utm_forward`` as ONE generated SQL string for ``F.expr``.
-
-    Why this twin exists: building the Krüger series through the
-    Column API costs ~1,459 py4j round-trips (~0.4 ms apiece — ~0.6 s
-    of driver time per plan build, measured on q56); the identical
-    expression as a SQL string is one round-trip plus a JVM-side
-    parse.  Every operation and operand order mirrors
-    ``transverse_mercator``/``utm_forward`` exactly (literals rendered
-    with ``repr`` and a ``D`` suffix so nothing parses as DECIMAL), so
-    the computed doubles are bit-identical — pinned by
-    tests/test_utm.py::test_utm_forward_sql_bit_identical.  The SQL is
-    textually large (subexpressions inline where the Column tree
-    shares node instances), but Catalyst analysis walks the shared
-    Column DAG per path anyway — the analyzed cost is the same shape.
-    ``lat``/``lon`` are SQL fragments (column names or expressions).
+    Built as SQL because the Krüger series through the Column API
+    costs ~1,459 py4j round-trips (~0.4 ms apiece — ~0.6 s of driver
+    time per plan build, measured on q56); the SQL string is one
+    round-trip plus a JVM-side parse.  Every operation and operand
+    order mirrors ``utm_zone``/``transverse_mercator`` exactly
+    (literals rendered with ``repr`` and a ``D`` suffix so nothing
+    parses as DECIMAL), so the computed doubles are bit-identical —
+    pinned by tests/test_utm.py::test_utm_forward_sql_bit_identical.
+    The SQL is textually large (subexpressions inline where a Column
+    tree would share node instances), but Catalyst analysis walks a
+    shared Column DAG per path anyway — the analyzed cost is the same
+    shape. ``lat``/``lon`` are SQL fragments (column names or
+    expressions).
     """
     zone = f"CAST(FLOOR((({lon}) + 180.0D) / 6.0D) % 60 + 1 AS INT)"
     lon0 = f"(CAST({zone} AS DOUBLE) * 6.0D - 183.0D)"

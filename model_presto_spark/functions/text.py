@@ -14,9 +14,7 @@ Each expression has ONE definition. The ``*_sql`` builders return SQL
 text (arguments are SQL fragments: a column name or a nested builder
 call) that Spark parses in one py4j round trip per projection; Column
 callers wrap them as ``F.expr(builder("col"))``. The Column-API
-builders cost one round trip per expression node. Only ``h60``,
-``h60_fast`` and ``tokens`` keep both spellings, because their Column
-forms are applied to composite expressions throughout ``plans/``.
+builders cost one round trip per expression node.
 """
 
 from __future__ import annotations
@@ -32,34 +30,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "de", "los", "las", "un", "una", "es", "por", "para"),
     "de": ("der", "die", "das", "und", "ist", "ein", "eine", "von", "mit", "für"),
 }
-
-
-def h60(s: Column, seed: int | Column | None = None) -> Column:
-    """Deterministic 60-bit hash of a string column (md5-based).
-
-    Cross-engine reproducible: DuckDB equivalent is
-    ``CAST(('0x' || substr(md5(s || '#' || seed), 1, 15)) AS BIGINT)``.
-    """
-    if seed is not None:
-        seed_c = F.lit(str(seed)) if isinstance(seed, int) else seed.cast("string")
-        s = F.concat(s, F.lit("#"), seed_c)
-    return F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 15), 16, 10).cast("bigint")
-
-
-def h60_fast(s: Column) -> Column:
-    """60-bit hash via native ``xxhash64`` — one codegen'd JVM call
-    per element vs md5's hash + hex-substring + base-conv chain
-    (~3-5x less CPU over a 100 TB shingle stream). NOT cross-engine
-    reproducible: use ``h60`` wherever a DuckDB oracle must replay
-    the exact hashes. Masked to 60 bits so downstream modular
-    arithmetic (minhash seeds, simhash bit folds) sees the same
-    non-negative range as h60."""
-    return F.xxhash64(s).bitwiseAND(F.lit((1 << 60) - 1))
-
-
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization (lowercased), empty tokens removed."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 
 def bigrams(ts: Column) -> Column:
@@ -115,13 +85,12 @@ def simhash60_from_hashes(hashes_sql: str) -> Column:
     )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
-
-
 def h60_sql(s: str, seed: int | None = None) -> str:
-    """SQL spelling of :func:`h60` (md5-derived 60-bit hash)."""
+    """Deterministic 60-bit hash of a string expression (md5-based).
+
+    Cross-engine reproducible: DuckDB equivalent is
+    ``CAST(('0x' || substr(md5(s || '#' || seed), 1, 15)) AS BIGINT)``.
+    """
     if seed is not None:
         s = f"concat({s}, '#', '{seed}')"
     return (
@@ -131,13 +100,28 @@ def h60_sql(s: str, seed: int | None = None) -> str:
 
 
 def h60_fast_sql(s: str) -> str:
-    """SQL spelling of :func:`h60_fast` (xxhash64, 60-bit masked)."""
+    """60-bit hash via native ``xxhash64`` — one codegen'd JVM call
+    per element vs md5's hash + hex-substring + base-conv chain
+    (~3-5x less CPU over a 100 TB shingle stream). NOT cross-engine
+    reproducible: use ``h60_sql`` wherever a DuckDB oracle must replay
+    the exact hashes. Masked to 60 bits so downstream modular
+    arithmetic (minhash seeds, simhash bit folds) sees the same
+    non-negative range as h60."""
     return f"(xxhash64({s}) & {(1 << 60) - 1})"
 
 
 def tokens_sql(text: str) -> str:
-    """SQL spelling of :func:`tokens`."""
+    """Whitespace tokenization (lowercased), empty tokens removed."""
     return f"filter(split(lower({text}), '\\\\s+'), t -> t != '')"
+
+
+def fingerprint60_sql(text: str, fast: bool = False) -> str:
+    """Document fingerprint: 60-bit hash of the normalized text
+    (lowercased, trimmed, whitespace runs collapsed to one space) —
+    the exact-dedup and line-boilerplate key. ``fast=True`` hashes
+    with xxhash64 (see ``h60_fast_sql``)."""
+    norm = f"regexp_replace(trim(lower({text})), '\\\\s+', ' ')"
+    return h60_fast_sql(norm) if fast else h60_sql(norm)
 
 
 def char_shingles_sql(lowered: str, k: int = 5, distinct: bool = True) -> str:
@@ -274,25 +258,16 @@ def jaccard_sql(a: str, b: str) -> str:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
+def bpe_ish_token_count_sql(text: str) -> str:
     """BPE-ish token estimate: count of word/number/punct chunks.
 
     Splits words longer than 4 chars into ceil(len/4) subword units —
     a deterministic stand-in for a real tokenizer's piece count.
     """
-    toks = tokens(text)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("bigint"),
+    return (
+        f"aggregate({tokens_sql(text)}, CAST(0 AS BIGINT), "
+        f"(acc, t) -> acc + CAST(ceil(length(t) / 4.0D) AS BIGINT))"
     )
-
-
-def fingerprint60(text: Column) -> Column:
-    """Document fingerprint: 60-bit hash of the normalized text
-    (lowercased, whitespace collapsed) — exact-dedup key."""
-    norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    return h60(norm)
 
 
 def word_ngrams_all(toks: Column, n: int = 2) -> Column:
@@ -426,7 +401,7 @@ def charclass_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def readability_features(text: Column) -> dict[str, Column]:
+def readability_features_sql(text: str) -> dict[str, str]:
     """Flesch reading-ease via deterministic proxies: words =
     whitespace tokens, sentences = ``[.!?]+`` runs (min 1),
     syllables = ``[aeiouy]+`` vowel groups in the lowercased text.
@@ -436,23 +411,22 @@ def readability_features(text: Column) -> dict[str, Column]:
     which is what corpus-quality filtering needs. All counts are
     ``regexp_extract_all`` sizes — vectorized, no UDF.
     """
-    n_words = F.size(tokens(text)).cast("double")
-    n_sents = F.greatest(
-        F.size(F.regexp_extract_all(text, F.lit(r"[.!?]+"), F.lit(0))),
-        F.lit(1),
-    ).cast("double")
-    n_syll = F.size(
-        F.regexp_extract_all(F.lower(text), F.lit("[aeiouy]+"), F.lit(0))
-    ).cast("double")
-    flesch = F.when(
-        n_words > 0,
-        F.lit(206.835)
-        - F.lit(1.015) * (n_words / n_sents)
-        - F.lit(84.6) * (n_syll / n_words),
-    ).otherwise(F.lit(0.0))
+    n_words = f"CAST(size({tokens_sql(text)}) AS DOUBLE)"
+    n_sents = (
+        f"CAST(greatest(size(regexp_extract_all({text}, '[.!?]+', 0)), 1) "
+        f"AS DOUBLE)"
+    )
+    n_syll = (
+        f"CAST(size(regexp_extract_all(lower({text}), '[aeiouy]+', 0)) "
+        f"AS DOUBLE)"
+    )
+    flesch = (
+        f"CASE WHEN {n_words} > 0 THEN 206.835D - 1.015D * ({n_words} / "
+        f"{n_sents}) - 84.6D * ({n_syll} / {n_words}) ELSE 0.0D END"
+    )
     return {
-        "n_words": n_words.cast("bigint"),
-        "n_sentences": n_sents.cast("bigint"),
-        "n_syllables": n_syll.cast("bigint"),
+        "n_words": f"CAST({n_words} AS BIGINT)",
+        "n_sentences": f"CAST({n_sents} AS BIGINT)",
+        "n_syllables": f"CAST({n_syll} AS BIGINT)",
         "flesch": flesch,
     }

@@ -20,45 +20,60 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60
+from model_presto_spark.functions.text import h60_sql
 
 MASK_SENTINEL = 0.0  # reference zeroes masked tokens (masking.py:134-146)
 
 
-def _keep_prob_hash(key: Column, idx: Column, seed: int) -> Column:
+def _keep_prob_hash(key: str, idx: str, seed: int) -> str:
     """Uniform-ish value in [0, 100) from (key, index, seed)."""
-    return h60(
-        F.concat(key.cast("string"), F.lit("_"), idx.cast("string")), seed
-    ) % 100
+    draw = f"concat(CAST({key} AS STRING), '_', CAST({idx} AS STRING))"
+    return f"({h60_sql(draw, seed)} % 100)"
 
 
 def timestep_mask(
-    key: Column, num_timesteps: int = 12, ratio: float = 0.5, seed: int = 0
+    key: str, num_timesteps: int = 12, ratio: float = 0.5, seed: int = 0
 ) -> Column:
     """Boolean mask array (True = masked) choosing random timesteps
-    per key (reference random_timesteps, masking.py:90-103)."""
+    per key (reference random_timesteps, masking.py:90-103). ``key``
+    is an SQL fragment (a column name)."""
     pct = int(ratio * 100)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)),
-        lambda t: _keep_prob_hash(key, t, seed) < pct,
+    return F.expr(
+        f"transform(sequence(0, {num_timesteps - 1}), "
+        f"t -> {_keep_prob_hash(key, 't', seed)} < {pct})"
     )
 
 
 def chunk_timestep_mask(
-    key: Column, num_timesteps: int = 12, chunk: int = 6, seed: int = 0
+    key: str, num_timesteps: int = 12, chunk: int = 6, seed: int = 0
 ) -> Column:
     """Contiguous chunk mask: ``chunk`` consecutive timesteps starting
     at a key-derived offset (reference chunk_timesteps,
     masking.py:105-112)."""
-    start = h60(key.cast("string"), seed) % (num_timesteps - chunk + 1)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)),
-        lambda t: (t >= start) & (t < start + chunk),
+    start = (
+        f"({h60_sql(f'CAST({key} AS STRING)', seed)} "
+        f"% {num_timesteps - chunk + 1})"
+    )
+    return F.expr(
+        f"transform(sequence(0, {num_timesteps - 1}), "
+        f"t -> t >= {start} AND t < {start} + {chunk})"
     )
 
 
+def _group_flags(
+    key: str, idx: str, group_sizes: tuple[int, ...], pct: int, seed: int
+) -> str:
+    """``array(...)`` of per-band flags: band-group g draws at index
+    ``idx(g)`` and all its bands share the draw."""
+    flags = []
+    for g, size in enumerate(group_sizes):
+        draw = f"{_keep_prob_hash(key, idx.format(g=g), seed)} < {pct}"
+        flags.extend([draw] * size)
+    return f"array({', '.join(flags)})"
+
+
 def band_group_mask(
-    key: Column,
+    key: str,
     group_sizes: tuple[int, ...],
     ratio: float = 0.5,
     seed: int = 0,
@@ -67,16 +82,11 @@ def band_group_mask(
     (reference group_bands, masking.py:60-75; group index map
     s1_s2_era5_srtm.py:96-108). Returns array<boolean> of
     sum(group_sizes) entries; all bands of a group share one draw."""
-    pct = int(ratio * 100)
-    flags = []
-    for g, size in enumerate(group_sizes):
-        masked = _keep_prob_hash(key, F.lit(g), seed) < pct
-        flags.extend([masked] * size)
-    return F.array(*flags)
+    return F.expr(_group_flags(key, "{g}", group_sizes, int(ratio * 100), seed))
 
 
 def random_combinations_mask(
-    key: Column,
+    key: str,
     num_timesteps: int = 12,
     group_sizes: tuple[int, ...] = (1, 1, 1),
     ratio: float = 0.5,
@@ -92,21 +102,9 @@ def random_combinations_mask(
     SQL-mirrorable as ``generate_series(0, T*G-1)`` with the same
     ``h60(key || '_' || i)`` draw.
     """
-    pct = int(ratio * 100)
-    n_groups = len(group_sizes)
-
-    def band_flags(t: Column) -> Column:
-        flags = []
-        for g, size in enumerate(group_sizes):
-            draw = (
-                _keep_prob_hash(key, t * n_groups + F.lit(g), seed) < pct
-            )
-            flags.extend([draw] * size)
-        return F.array(*flags)
-
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)), band_flags
-    )
+    idx = f"t * {len(group_sizes)} + {{g}}"
+    flags = _group_flags(key, idx, group_sizes, int(ratio * 100), seed)
+    return F.expr(f"transform(sequence(0, {num_timesteps - 1}), t -> {flags})")
 
 
 def apply_token_mask(

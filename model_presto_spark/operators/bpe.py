@@ -44,8 +44,8 @@ _EOW = "</w>"
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the whitespace tokenization — the only
     relation BPE training ever iterates on."""
-    toks = docs.select(
-        F.explode_outer(T.tokens(F.col(text_col))).alias("w")
+    toks = docs.selectExpr(
+        f"explode_outer({T.tokens_sql(text_col)}) AS w"
     ).where(F.col("w").isNotNull())
     return toks.groupBy("w").agg(F.count("*").alias("freq"))
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import tokens, word_ngrams_sql
+from model_presto_spark.functions.text import tokens_sql, word_ngrams_sql
 
 
 def ngram_contamination(
@@ -46,7 +46,7 @@ def ngram_contamination(
     # spread: the corpus tokenize+ngram pass is the dominant CPU and
     # must not inherit a single-file scan's one partition
     corpus_grams = spread(corpus).select(
-        F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__toks")
+        F.col(id_col).alias("__id"), F.expr(tokens_sql(text_col)).alias("__toks")
     ).select("__id", F.expr(word_ngrams_sql("__toks", n)).alias("__grams"))
 
     # explode_outer, NOT explode: Catalyst's InferFiltersFromGenerate
@@ -56,7 +56,7 @@ def ngram_contamination(
     # lambda — O(len^2); measured 5x on q60). The gram arrays here are
     # never empty (word_ngrams_sql pads to >=1), so outer is identical.
     bench_gram_set = (
-        benchmark.select(tokens(F.col(text_col)).alias("__toks"))
+        benchmark.select(F.expr(tokens_sql(text_col)).alias("__toks"))
         .select(F.explode_outer(F.expr(word_ngrams_sql("__toks", n))).alias("gram"))
         .distinct()
     )

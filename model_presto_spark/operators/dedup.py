@@ -33,13 +33,14 @@ _LOG = logging.getLogger(__name__)
 from model_presto_spark.io import spread
 from model_presto_spark.functions.text import (
     char_shingles_sql,
-    fingerprint60,
+    fingerprint60_sql,
+    h60_fast_sql,
+    h60_sql,
     hash_array_sql,
     jaccard_sql,
     lsh_band_keys_sql,
     minhash_signature_sql,
     simhash60_from_hashes,
-    tokens,
     tokens_sql,
     word_ngrams_sql,
 )
@@ -84,7 +85,7 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Adds ``fingerprint`` and ``dup_count`` columns; one row per
     distinct fingerprint.
     """
-    fp = df.select(F.col(id_col), fingerprint60(F.col(text_col)).alias("fingerprint"))
+    fp = df.selectExpr(id_col, f"{fingerprint60_sql(text_col)} AS fingerprint")
     return fp.groupBy("fingerprint").agg(
         F.min(id_col).alias(id_col),
         F.count(F.lit(1)).alias("dup_count"),
@@ -821,12 +822,10 @@ def window_hashes(
     left-account them; every aggregate here counts ``whash`` and so
     ignores those rows.
     """
-    from model_presto_spark.functions.text import h60, h60_fast
-
     # spread first: the per-window md5 below (one hash per token
     # position) is the dominant CPU of every winnowing/span-dedup
     # caller and must not inherit the scan's single partition
-    toksed = spread(docs).select(id_col, tokens(F.col(text_col)).alias("toks"))
+    toksed = spread(docs).selectExpr(id_col, f"{tokens_sql(text_col)} AS toks")
     n = F.size("toks")
     idx = F.when(
         n >= k, F.sequence(F.lit(1), n - k + 1)
@@ -834,11 +833,9 @@ def window_hashes(
     win = toksed.select(
         id_col, "toks", F.explode_outer(idx).alias("i")
     )
-    wtext = F.array_join(F.slice(F.col("toks"), F.col("i"), k), " ")
-    h = h60_fast(wtext) if fast_hash else h60(wtext)
-    return win.select(
-        id_col, "i", F.when(F.col("i").isNotNull(), h).alias("whash")
-    )
+    wtext = f"array_join(slice(toks, i, {k}), ' ')"
+    h = h60_fast_sql(wtext) if fast_hash else h60_sql(wtext)
+    return win.selectExpr(id_col, "i", f"CASE WHEN i IS NOT NULL THEN {h} END AS whash")
 
 
 def span_dup_stats(
@@ -928,9 +925,9 @@ def remove_dup_spans(
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list("s")).alias("dup_starts"))
     )
-    base = docs.select(
-        id_col, tokens(F.col(text_col)).alias("toks")
-    ).join(dup_starts, id_col, "left")
+    base = docs.selectExpr(id_col, f"{tokens_sql(text_col)} AS toks").join(
+        dup_starts, id_col, "left"
+    )
     ds = F.coalesce(F.col("dup_starts"), F.array().cast("array<int>"))
     kept = F.filter(
         F.col("toks"),
@@ -1003,7 +1000,7 @@ def containment_auto_route(
     if approx_docs is not None and approx_gram_ratio is not None:
         n_docs, ratio = approx_docs, approx_gram_ratio
     else:
-        toks = F.size(tokens(F.col(text_col)))
+        toks = F.expr(f"size({tokens_sql(text_col)})")
         gcnt = toks - n + 1
         probe = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1851,19 +1848,14 @@ def source_overlap(
 
     Returns (source_a, source_b, n_shared, n_a, n_b, jaccard).
     """
-    from model_presto_spark.functions.text import fingerprint60, tokens
-
-    if prefix_tokens is None:
-        key = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    else:
-        key = F.concat_ws(
-            " ", F.slice(tokens(F.col(text_col)), 1, prefix_tokens)
-        )
+    key = text_col
+    if prefix_tokens is not None:
+        key = f"concat_ws(' ', slice({tokens_sql(text_col)}, 1, {prefix_tokens}))"
     # materialize: fp is referenced three times (both pair-join sides
     # and the size aggregation) — an un-materialized plan re-runs the
     # body tokenize/fingerprint/distinct per reference
     fp = (
-        df.select(F.col(source_col).alias("src"), fingerprint60(key).alias("fp"))
+        df.selectExpr(f"{source_col} AS src", f"{fingerprint60_sql(key)} AS fp")
         .distinct()
         .localCheckpoint(eager=False)
     )

@@ -49,21 +49,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60, h60_fast, tokens
+from model_presto_spark.functions.text import (
+    h60_fast_sql,
+    h60_sql,
+    tokens_sql,
+    word_ngrams_all,
+)
 
 TWO60 = float(1 << 60)
-
-
-def _bigrams_all(toks: F.Column) -> F.Column:
-    """ALL bigram occurrences (no dedup — DSIR features are counts;
-    functions.text.word_ngrams_sql dedups, which is the wrong semantics
-    here). A 1-token document yields its lone token as the 'bigram'
-    (the same greatest(n-1, 1) convention as word_ngrams_sql)."""
-    cnt = F.greatest(F.size(toks) - F.lit(1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-    )
 
 
 def hashed_ngram_buckets(
@@ -80,12 +73,13 @@ def hashed_ngram_buckets(
     # spread first: the tokenize + bigram-concat + per-occurrence md5
     # pass is the dominant CPU and must not inherit a small scan's
     # single partition (io.spread docstring; round-5 pathology #3)
-    toksed = spread(docs).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+    toksed = spread(docs).selectExpr(
+        f"{id_col} AS id", f"{tokens_sql(text_col)} AS toks"
     )
+    # every bigram occurrence, repeats kept: DSIR features are counts
     feats = toksed.select(
         "id",
-        F.concat(F.col("toks"), _bigrams_all(F.col("toks"))).alias("feats"),
+        F.concat(F.col("toks"), word_ngrams_all(F.col("toks"), 2)).alias("feats"),
     )
     # explode_outer: a plain explode gets an inferred size(feats)>0
     # pre-filter that re-evaluates the whole tokenize+bigram tree per
@@ -98,7 +92,7 @@ def hashed_ngram_buckets(
     g = feats.select("id", F.explode_outer("feats").alias("feat")).filter(
         F.col("feat").isNotNull()
     )
-    h = h60_fast(F.col("feat")) if fast_hash else h60(F.col("feat"))
+    h = F.expr(h60_fast_sql("feat") if fast_hash else h60_sql("feat"))
     return (
         g.select("id", F.pmod(h, F.lit(n_buckets)).alias("bucket"))
         .groupBy("id", "bucket")
@@ -187,16 +181,15 @@ def dsir_weights(
     return scored.select(F.col("id").alias(id_col), "n_feats", "log_weight")
 
 
-def gumbel_key(id_col: F.Column, seed: int = 42) -> F.Column:
+def gumbel_key(id_col: str, seed: int = 42) -> F.Column:
     """Deterministic standard-Gumbel draw keyed on (id, seed):
     g = -ln(-ln(u)), u = (h60(id#seed) + 1) / (2^60 + 1) in (0,1)."""
     # (h + 1) is computed in BIGINT before the double cast: at 2^60
     # magnitude double spacing is 256, so cast-then-add would absorb
     # the +1 differently than an engine that adds first — a real
     # cross-engine divergence at rounding boundaries (~1/128 of ids).
-    u = (
-        h60(F.concat(id_col.cast("string"), F.lit(f"#gumbel{seed}"))) + F.lit(1)
-    ).cast("double") / F.lit(TWO60 + 1.0)
+    h = h60_sql(f"concat(CAST({id_col} AS STRING), '#gumbel{seed}')")
+    u = (F.expr(h) + F.lit(1)).cast("double") / F.lit(TWO60 + 1.0)
     return -F.log(-F.log(u))
 
 
@@ -224,6 +217,6 @@ def dsir_sample(
         id_col,
         "n_feats",
         "log_weight",
-        (F.col("log_weight") + gumbel_key(F.col(id_col), seed)).alias("key"),
+        (F.col("log_weight") + gumbel_key(id_col, seed)).alias("key"),
     )
     return keyed.orderBy(F.desc("key"), F.col(id_col)).limit(k)

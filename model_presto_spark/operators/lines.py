@@ -17,7 +17,7 @@ sub-record cleaning is the corpus-scale generalization):
   (real corpora: ``\\n``) or by fixed non-overlapping token windows
   (delimiter-free text, e.g. the driver's synthetic documents).
 - Each line is normalized (lowercase, collapse whitespace) and
-  reduced to a 60-bit md5-derived hash (functions/text.h60) — only
+  reduced to a 60-bit hash (functions/text.fingerprint60_sql) — only
   8-byte keys ever shuffle, never line text.
 - Document frequency per line hash = COUNT(DISTINCT doc) — computed
   as two cascaded aggregations (exact, map-side combinable), not
@@ -37,7 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60, h60_fast, tokens
+from model_presto_spark.functions.text import fingerprint60_sql, tokens_sql
 
 
 def segment_by_delimiter(
@@ -71,7 +71,7 @@ def segment_by_width(
     from model_presto_spark.io import spread
 
     # spread: tokenize + window segmentation is pre-shuffle CPU
-    toksed = spread(docs).select(id_col, tokens(F.col(text_col)).alias("toks"))
+    toksed = spread(docs).selectExpr(id_col, f"{tokens_sql(text_col)} AS toks")
     n = F.size("toks")
     # Empty docs are dropped by an EXPLICIT cheap filter so the
     # explode can be _outer: a plain explode would get an inferred
@@ -91,10 +91,6 @@ def segment_by_width(
     )
 
 
-def _norm_line(line: F.Column) -> F.Column:
-    return F.regexp_replace(F.trim(F.lower(line)), r"\s+", " ")
-
-
 def line_doc_freq(
     lines: DataFrame, id_col: str = "doc_id", fast_hash: bool = False
 ) -> DataFrame:
@@ -104,9 +100,7 @@ def line_doc_freq(
     first (lhash, id) groupBy collapses within-doc repeats map-side,
     so the second sees one row per (line, doc) pair.
     """
-    h = h60_fast(_norm_line(F.col("line"))) if fast_hash else h60(
-        _norm_line(F.col("line"))
-    )
+    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
     per_doc = lines.select(F.col(id_col).alias("id"), h.alias("lhash")).groupBy(
         "lhash", "id"
     ).agg(F.count(F.lit(1)).alias("_c"))
@@ -135,9 +129,7 @@ def line_dedup_stats(
         if delimiter is not None
         else segment_by_width(docs, id_col, text_col, width)
     )
-    h = h60_fast(_norm_line(F.col("line"))) if fast_hash else h60(
-        _norm_line(F.col("line"))
-    )
+    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
     hashed = lines.select(F.col(id_col).alias("id"), h.alias("lhash"))
     # feeds the doc-freq aggregate AND the join back — persist so the
     # tokenize+hash pass over the corpus runs once
@@ -189,9 +181,7 @@ def remove_frequent_lines(
         if delimiter is not None
         else segment_by_width(docs, id_col, text_col, width)
     )
-    h = h60_fast(_norm_line(F.col("line"))) if fast_hash else h60(
-        _norm_line(F.col("line"))
-    )
+    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
     hashed = lines.select(
         F.col(id_col).alias("id"), "line_no", "line", h.alias("lhash")
     ).persist(StorageLevel.MEMORY_AND_DISK)

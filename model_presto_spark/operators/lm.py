@@ -55,7 +55,7 @@ def doc_token_counts(
     # spread: tokenize+explode is the pre-shuffle CPU of every LM
     # family query and must not inherit a 1-partition scan
     toks = spread(docs).select(
-        id_col, F.explode_outer(T.tokens(F.col(text_col))).alias("token")
+        id_col, F.explode_outer(F.expr(T.tokens_sql(text_col))).alias("token")
     ).where(F.col("token").isNotNull())
     return toks.groupBy(id_col, "token").agg(F.count("*").alias("cnt"))
 
@@ -206,7 +206,7 @@ def bm25_scores(
     )
     qterms = queries.select(
         query_id_col,
-        F.explode_outer(T.tokens(F.col(query_text_col))).alias("token"),
+        F.explode_outer(F.expr(T.tokens_sql(query_text_col))).alias("token"),
     ).where(F.col("token").isNotNull()).distinct()
     tf = F.col("cnt").cast("double")
     idf = F.log(
@@ -300,7 +300,7 @@ def bigram_positions(
     from model_presto_spark.io import spread
 
     # spread: same pre-shuffle tokenize guard as doc_token_counts
-    toksed = spread(docs).select(id_col, T.tokens(F.col(text_col)).alias("toks"))
+    toksed = spread(docs).select(id_col, F.expr(T.tokens_sql(text_col)).alias("toks"))
     n = F.size("toks")
     idx = F.when(n >= 2, F.sequence(F.lit(2), n)).otherwise(
         F.array().cast("array<int>")

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60
+from model_presto_spark.functions.text import h60_sql
 
 _SCALE = 1_000_000
 
@@ -77,9 +77,7 @@ def apply_mix(
 ) -> DataFrame:
     """Keep each row iff its deterministic hash coin is under its
     source's keep_rate. The plan side is broadcast (#sources rows)."""
-    coin = h60(
-        F.concat(F.lit(salt + "#"), F.col(id_col).cast("string"))
-    ) % _SCALE
+    coin = F.expr(h60_sql(f"concat('{salt}#', CAST({id_col} AS STRING))")) % _SCALE
     thresh = F.floor(F.col("keep_rate") * _SCALE)
     return (
         df.join(F.broadcast(plan.select(source_col, "keep_rate")), source_col)
@@ -102,9 +100,7 @@ def apply_mix_epochs(
     (1-based copy index) lets downstream shuffling re-salt per copy
     so repeated documents don't co-locate. With rates <= 1 this
     degrades exactly to apply_mix (0 or 1 copies)."""
-    coin = h60(
-        F.concat(F.lit(salt + "#"), F.col(id_col).cast("string"))
-    ) % _SCALE
+    coin = F.expr(h60_sql(f"concat('{salt}#', CAST({id_col} AS STRING))")) % _SCALE
     rate = F.col("keep_rate")
     frac_thresh = F.floor((rate - F.floor(rate)) * _SCALE)
     n_copies = (F.floor(rate) + (coin < frac_thresh).cast("int")).cast("int")

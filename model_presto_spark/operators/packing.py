@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60
+from model_presto_spark.functions.text import h60_sql
 
 
 def prefix_sum(
@@ -89,7 +89,7 @@ def pack_sequences(
     uniform (the last bin alone may be short)."""
     ranked = df.where(F.col(len_col) > 0).withColumn(
         "_rank",
-        h60(F.concat(F.lit(salt + "#"), F.col(key_col).cast("string"))),
+        F.expr(h60_sql(f"concat('{salt}#', CAST({key_col} AS STRING))")),
     )
     cum = prefix_sum(ranked, ["_rank", key_col], len_col, "tok_end")
     lo = F.col("tok_end") - F.col(len_col)  # exclusive start offset

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60
+from model_presto_spark.functions.text import h60_sql
 
 
 def negative_pairs(
@@ -57,12 +57,9 @@ def negative_pairs(
         ).alias("j"),
     )
     raw = F.pmod(
-        h60(
-            F.concat(
-                F.lit(salt + "#"),
-                F.col("anchor_id").cast("string"),
-                F.lit("#"),
-                F.col("j").cast("string"),
+        F.expr(
+            h60_sql(
+                f"concat('{salt}#', CAST(anchor_id AS STRING), '#', CAST(j AS STRING))"
             )
         ),
         F.col("__n"),

@@ -82,14 +82,15 @@ def diff_snapshots(
     shuffle ships 16 bytes per row, never bodies. Output:
     (key, change), change in 'added'|'removed'|'changed'|'unchanged'.
     """
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     def fp(df: DataFrame) -> DataFrame:
         cols = fingerprint_cols or [c for c in df.columns if c != key]
         if fast_hash:
             h = F.xxhash64(*[F.col(c) for c in cols])
         else:
-            h = h60(F.concat_ws("\x1f", *[F.col(c) for c in cols]))
+            args = ", ".join(f"`{c}`" for c in cols)
+            h = F.expr(h60_sql(f"concat_ws('\\u001f', {args})"))
         return df.select(key, h.alias("fp"))
 
     o = fp(old).withColumnRenamed("fp", "fp_old")

@@ -170,6 +170,10 @@ def psi_drift(
     ).collect()[0]["qs"]
 
     def bucket(c):
+        if qs is None:
+            # no reference values, so no boundaries: like the SQL
+            # spelling's NULL quantiles, no value lands in a bucket
+            return F.lit(None).cast("int")
         b = F.lit(1)
         for q in qs:
             b = b + (c > F.lit(float(q))).cast("int")
@@ -245,7 +249,7 @@ def token_divergence(
     a groupBy(group). The |V|-sized relations are the only shuffles.
     Returns (group, n_tokens, n_types, kl_nats, cross_entropy_nats).
     """
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     # explode_outer: plain explode gets an inferred size>0 pre-filter
     # that re-tokenizes every document a second time; outer emits one
@@ -256,7 +260,7 @@ def token_divergence(
     # spread: tokenize+explode is pre-shuffle CPU (1-partition scans)
     tok = spread(docs).select(
         F.col(group_col).alias("grp"),
-        F.explode_outer(tokens(F.col(text_col))).alias("t"),
+        F.explode_outer(F.expr(tokens_sql(text_col))).alias("t"),
     ).filter(F.col("t").isNotNull())
     gc = tok.groupBy("grp", "t").agg(F.count(F.lit(1)).alias("c_g"))
     from pyspark import StorageLevel

@@ -31,7 +31,7 @@ from model_presto_spark.functions.text import (
     LANG_STOPWORDS,
     _lit_array_sql,
     duplicate_ngram_fraction,
-    tokens,
+    tokens_sql,
     top_ngram_fraction,
     word_ngrams_all,
 )
@@ -72,7 +72,7 @@ def gopher_quality_flags(
     base = spread(docs).select(
         id_col,
         F.col(text_col).alias("__t"),
-        tokens(F.col(text_col)).alias("__toks"),
+        F.expr(tokens_sql(text_col)).alias("__toks"),
     )
     n = F.size("__toks").cast("double")
     # mean word length over token characters (whitespace excluded)

@@ -265,10 +265,10 @@ def hash_rank_sample(
     ``hash < threshold`` (same hash) to cut the sort input when k is
     a tiny fraction of each stratum.
     """
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     hashed = df.withColumn(
-        "__hk", h60(F.concat(F.lit(salt + "#"), F.col(key_col).cast("string")))
+        "__hk", F.expr(h60_sql(f"concat('{salt}#', CAST({key_col} AS STRING))"))
     )
     if strata_cols:
         w = Window.partitionBy(*strata_cols).orderBy("__hk", key_col)
@@ -302,10 +302,10 @@ def weighted_hash_sample(
     shuffle; the exponential-race key is what makes weighted
     reservoir sampling mergeable at 100 TB (per-partition top-k then
     global top-k works on the same key — A-Res is associative)."""
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     u = (
-        h60(F.concat(F.lit(salt + "#"), F.col(key_col).cast("string")))
+        F.expr(h60_sql(f"concat('{salt}#', CAST({key_col} AS STRING))"))
         + F.lit(0.5)
     ) / F.lit(float(2**60))
     keyed = df.withColumn(

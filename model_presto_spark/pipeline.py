@@ -66,7 +66,7 @@ def _stage_quality_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
     min_stopword = cfg.get("min_stopword")
 
     def apply(df: DataFrame) -> DataFrame:
-        toksed = df.withColumn("__toks", T.tokens(F.col(col)))
+        toksed = df.withColumn("__toks", F.expr(T.tokens_sql(f"`{col}`")))
         feats = {
             k: F.expr(v)
             for k, v in T.quality_features_sql(f"`{col}`", "__toks").items()
@@ -223,7 +223,7 @@ def _stage_token_budget(cfg: dict) -> Callable[[DataFrame], DataFrame]:
         )
 
         return token_budget_truncate(
-            df, source_col, id_col, T.token_count(F.col(col)), budget,
+            df, source_col, id_col, F.size(F.expr(T.tokens_sql(f"`{col}`"))), budget,
             cum_col="__cum",
         ).drop("__cum")
 
@@ -243,7 +243,7 @@ def _stage_domain_mix(cfg: dict) -> Callable[[DataFrame], DataFrame]:
             df,
             source_col,
             weight=F.lit(1.0),
-            token_count=T.token_count(F.col(col)),
+            token_count=F.size(F.expr(T.tokens_sql(f"`{col}`"))),
             budget_tokens=budget,
         )
         return apply_mix(df, plan, source_col, id_col)

@@ -24,6 +24,7 @@ Cross-engine float conventions (learned the hard way):
 
 from __future__ import annotations
 
+import decimal
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -76,6 +77,17 @@ R6_SQL = "ROUND({x} + 5e-12, 6)"
 
 def r6(c):
     return F.round(c + F.lit(5e-12), 6)
+
+
+def r6_py(x: float) -> float:
+    """``r6`` for a value computed on the driver: Spark's ROUND is
+    HALF_UP on the exact binary expansion of the double, which is what
+    ``Decimal(float).quantize`` does, bit for bit."""
+    return float(
+        decimal.Decimal(x + 5e-12).quantize(
+            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -486,12 +486,12 @@ _Q125_ORACLE = """
 def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.operators.stats import grouped_ols
 
     docs = _t(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode_outer(tokens(F.col("text"))).alias("token"))
+        docs.select(F.explode_outer(F.expr(tokens_sql("text"))).alias("token"))
         .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))

@@ -378,11 +378,11 @@ _Q157_ORACLE = f"""
     "q73's TF-IDF weighting.".format(_Q157_MAX_DF),
 )
 def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode_outer(tokens(F.col("text"))).alias("term")
+    tok = docs.selectExpr(
+        "doc_id", f"explode_outer({tokens_sql('text')}) AS term"
     ).filter(F.col("term").isNotNull())
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("double").alias("tf")

@@ -298,13 +298,13 @@ _Q162_ORACLE = f"""
     "means feed the percentile CI driver-side (24 scalars).",
 )
 def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     orders = _t(spark, sf_dir, "orders")
     hashed = orders.select(
         "o_totalprice",
         (
-            h60(F.concat(F.lit("boot#"), F.col("o_orderkey").cast("string")))
+            F.expr(h60_sql("concat('boot#', CAST(o_orderkey AS STRING))"))
             % F.lit(_Q162_MP).cast("bigint")
         ).alias("hx"),
     )

@@ -446,8 +446,8 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select(
             "lang",
-            T.token_count(F.col("text")).alias("n_ws"),
-            T.bpe_ish_token_count(F.col("text")).alias("n_bpe"),
+            F.size(F.expr(T.tokens_sql("text"))).alias("n_ws"),
+            F.expr(T.bpe_ish_token_count_sql("text")).alias("n_bpe"),
         )
         .groupBy("lang")
         .agg(
@@ -475,7 +475,7 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    fp = T.fingerprint60(F.col("text"))
+    fp = F.expr(T.fingerprint60_sql("text"))
     return docs.select("source", fp.alias("fp")).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("fp").alias("n_unique"),

@@ -252,7 +252,7 @@ def _q56_oracle() -> str:
     _q56_oracle(),
     doc="General CRS reprojection (F22): UTM forward per-point zone, "
     "Krüger series in pure column arithmetic (functions/geo.py "
-    "utm_forward) vs the same series spelled with exp/ln in DuckDB.",
+    "utm_forward_sql) vs the same series spelled with exp/ln in DuckDB.",
 )
 def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions.geo import utm_forward_sql
@@ -265,9 +265,8 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(
         (F.col("lat") >= -80.0) & (F.col("lat") <= 84.0) & (F.col("c_custkey") < 600)
     )
-    # SQL-string twin of utm_forward: one py4j round-trip + JVM parse
-    # instead of ~1,459 round-trips of Column construction (~0.6 s per
-    # plan build) — bit-identical, pinned in tests/test_utm.py.
+    # one py4j round-trip + JVM parse instead of ~1,459 round-trips of
+    # Column construction (~0.6 s per plan build)
     u = F.expr(utm_forward_sql("lat", "lon"))
     return pts.select(u.alias("u"), "c_custkey").select(
         "c_custkey",

@@ -116,7 +116,7 @@ _Q61_ORACLE = f"""
 def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions.text import (
         duplicate_ngram_fraction,
-        tokens,
+        tokens_sql,
         top_ngram_fraction,
         word_ngrams_all,
     )
@@ -128,7 +128,7 @@ def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-bound and must not inherit the single-file scan's one
     # partition (the round-5 pathology #3; documents is 1 partition
     # at sf0.1)
-    toks = spread(docs).select("doc_id", tokens(F.col("text")).alias("__toks"))
+    toks = spread(docs).select("doc_id", F.expr(tokens_sql("text")).alias("__toks"))
     grams = toks.select(
         "doc_id", word_ngrams_all(F.col("__toks"), 2).alias("__grams")
     )
@@ -172,12 +172,12 @@ _Q62_ORACLE = f"""
     "streaming cross-checks equals this on identical input.",
 )
 def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import token_count
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.operators.splits import token_budget_truncate
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
+        "doc_id", "source", F.size(F.expr(tokens_sql("text"))).alias("n_tokens")
     )
     kept = token_budget_truncate(toks, "source", "doc_id", F.col("n_tokens"), 2000)
     return kept.select(

@@ -64,7 +64,7 @@ _Q66_ORACLE = f"""
 )
 def q66(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toksed = docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
+    toksed = docs.select("doc_id", F.expr(T.tokens_sql("text")).alias("toks"))
     n = F.size("toks")
     n_chunks = F.greatest(
         F.lit(1),
@@ -161,14 +161,14 @@ _Q67_ORACLE = f"""
 )
 def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toksed = docs.select(
-        "doc_id", "text", T.tokens(F.col("text")).alias("toks")
-    )
+    toksed = docs.selectExpr("doc_id", "text", f"{T.tokens_sql('text')} AS toks")
     base = toksed.select(
         "doc_id",
         "text",
         "toks",
-        T.h60(F.array_join(F.slice("toks", 1, _PREFIX_TOKS), " ")).alias("fp"),
+        F.expr(T.h60_sql(f"array_join(slice(toks, 1, {_PREFIX_TOKS}), ' ')")).alias(
+            "fp"
+        ),
     )
     # min-id representative per fingerprint: window-min beats a
     # groupBy+join re-attach (one shuffle, no second scan)
@@ -258,9 +258,7 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.mixing import apply_mix, mix_plan
 
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
-    )
+    tok = docs.selectExpr("source", "doc_id", f"size({T.tokens_sql('text')}) AS n_tok")
     w = F.when(
         F.expr("CAST(substring(source, 4) AS INT)") % 2 == 0, F.lit(2.0)
     ).otherwise(F.lit(1.0))
@@ -451,9 +449,7 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.packing import pack_sequences
 
     docs = _t(spark, sf_dir, "documents")
-    lens = docs.select(
-        "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
-    )
+    lens = docs.selectExpr("doc_id", f"size({T.tokens_sql('text')}) AS n_tok")
     packed = pack_sequences(lens, "n_tok", _Q74_L)
     return packed.groupBy("bin_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -566,9 +562,7 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.mixing import apply_mix_epochs, mix_plan
 
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
-    )
+    tok = docs.selectExpr("source", "doc_id", f"size({T.tokens_sql('text')}) AS n_tok")
     w = F.when(
         F.expr("CAST(substring(source, 4) AS INT)") % 2 == 0, F.lit(2.0)
     ).otherwise(F.lit(1.0))

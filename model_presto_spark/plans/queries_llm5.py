@@ -608,7 +608,7 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     dtc = doc_token_counts(docs)
     qt = (
         qdf.select(
-            "query_id", F.explode(T.tokens(F.col("qtext"))).alias("token")
+            "query_id", F.explode(F.expr(T.tokens_sql("qtext"))).alias("token")
         )
         .distinct()
     )
@@ -1035,12 +1035,12 @@ def _q114_oracle() -> str:
     "before flag comparison.",
 )
 def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.operators.quality import c4_quality_flags
 
     docs = _t(spark, sf_dir, "documents")
     lw = _C4_LW
-    toksed = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    toksed = docs.select("doc_id", F.expr(tokens_sql("text")).alias("toks"))
     n = F.size("toks")
     built = toksed.where(n > 0).select(
         "doc_id",

@@ -163,12 +163,14 @@ _Q170_ORACLE = f"""
     "join back; gram postings shuffle once, bodies never.",
 )
 def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import hash_array_sql, tokens, word_ngrams_sql
+    from model_presto_spark.functions.text import (
+        hash_array_sql,
+        tokens_sql,
+        word_ngrams_sql,
+    )
 
     docs = _t(spark, sf_dir, "documents")
-    toksed = docs.select(
-        "doc_id", "source", tokens(F.col("text")).alias("toks")
-    )
+    toksed = docs.selectExpr("doc_id", "source", f"{tokens_sql('text')} AS toks")
     g = toksed.select(
         "doc_id",
         "source",

@@ -4,8 +4,8 @@ context extraction, dictionary tagging, and chunk-overlap chain
 detection.
 
 All token work rides the shared whitespace-token convention
-(functions.text.tokens == DD_TOKENS) and the md5 60-bit fingerprint
-(h60 == DD_H60), so every query restates exactly in DuckDB.
+(functions.text.tokens_sql == DD_TOKENS) and the md5 60-bit fingerprint
+(h60_sql == DD_H60), so every query restates exactly in DuckDB.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ _Q354_ORACLE = f"""
 )
 def q354(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    fp = T.h60(F.array_join(F.slice(T.tokens(F.col("text")), 1, 12), " "))
+    fp = F.expr(T.h60_sql(f"array_join(slice({T.tokens_sql('text')}, 1, 12), ' ')"))
     w = Window.partitionBy("fp").orderBy(F.col("n_chars").desc(), "doc_id")
     ranked = docs.select(
         "doc_id", "source", "n_chars", fp.alias("fp")
@@ -131,7 +131,7 @@ def q355(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.packing import pack_sequences
 
     docs = _t(spark, sf_dir, "documents")
-    lens = docs.select("doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok"))
+    lens = docs.select("doc_id", F.size(F.expr(T.tokens_sql("text"))).alias("n_tok"))
     packed = pack_sequences(lens, "n_tok", _Q355_L)
     seg = F.col("n_tokens_in_bin")
     return (
@@ -235,7 +235,7 @@ _Q357_ORACLE = f"""
 def q357(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", F.array_distinct(T.tokens(F.col("text"))).alias("tk")
+        "lang", F.array_distinct(F.expr(T.tokens_sql("text"))).alias("tk")
     )
     return (
         toks.select("lang", F.explode_outer("tk").alias("keyword"))
@@ -296,7 +296,7 @@ _Q358_ORACLE = f"""
 )
 def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("tk")).filter(
+    toks = docs.select("doc_id", F.expr(T.tokens_sql("text")).alias("tk")).filter(
         F.size("tk") >= 40
     )
     c1 = toks.select(
@@ -309,8 +309,8 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = chunks.select(
         "doc_id",
         "chunk_id",
-        T.h60(F.array_join(F.slice("ck", 1, 8), " ")).alias("head_fp"),
-        T.h60(F.array_join(F.slice("ck", 17, 8), " ")).alias("tail_fp"),
+        F.expr(T.h60_sql("array_join(slice(ck, 1, 8), ' ')")).alias("head_fp"),
+        F.expr(T.h60_sql("array_join(slice(ck, 17, 8), ' ')")).alias("tail_fp"),
     )
     a = fps.select(
         F.col("doc_id").alias("a_doc"),

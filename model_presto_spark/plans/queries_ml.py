@@ -182,7 +182,7 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-tree form; results are identity-equal (set-compared at
     # sf0.01).
     rc = random_combinations_mask(
-        F.col("c_custkey"), 12, group_sizes=(1, 1, 1), ratio=0.5, seed=0
+        "c_custkey", 12, group_sizes=(1, 1, 1), ratio=0.5, seed=0
     )
     return (
         cust.select(F.flatten(rc).alias("d"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.plans.queries import R6_SQL, _t, r6, register
+from model_presto_spark.plans.queries import R6_SQL, _t, r6, r6_py, register
 
 _R6 = R6_SQL
 
@@ -170,6 +170,9 @@ def q242(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     trans_states = sorted({s for s, _ in probs})
     out_rows = []
+    schema = "channel string, p_full double, p_removed double, removal_effect double"
+    if "START" not in trans_states:  # no journeys: no START row to report
+        return spark.createDataFrame(out_rows, schema)
     p_by_scen: dict[str, float] = {}
     for scenario in ("none",) + _Q242_CHANNELS:
         v_cur = {s: 0.0 for s in trans_states}
@@ -187,28 +190,10 @@ def q242(spark: SparkSession, sf_dir: str) -> DataFrame:
         p_by_scen[scenario] = v_cur["START"]
     pf = p_by_scen["none"]
 
-    def _r6(x: float) -> float:
-        # Faithful emulation of F.round(x + 5e-12, 6): Spark rounds
-        # the EXACT binary expansion of the double via BigDecimal
-        # HALF_UP; Python's Decimal(float) + quantize is the same
-        # operation bit for bit.
-        import decimal
-
-        return float(
-            decimal.Decimal(x + 5e-12).quantize(
-                decimal.Decimal("0.000001"),
-                rounding=decimal.ROUND_HALF_UP,
-            )
-        )
-
     for ch in sorted(_Q242_CHANNELS):
         pr = p_by_scen[ch]
-        out_rows.append((ch, _r6(pf), _r6(pr), _r6(1.0 - pr / pf)))
-    return spark.createDataFrame(
-        out_rows,
-        "channel string, p_full double, p_removed double, "
-        "removal_effect double",
-    ).orderBy("channel")
+        out_rows.append((ch, r6_py(pf), r6_py(pr), r6_py(1.0 - pr / pf)))
+    return spark.createDataFrame(out_rows, schema).orderBy("channel")
 
 
 # ---------------------------------------------------------------------------

@@ -79,13 +79,11 @@ _Q256_ORACLE = """
     "sources keep everything; the cap binds only the big ones.",
 )
 def q256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     src = (
-        docs.select(
-            "source", F.size(tokens(F.col("text"))).alias("n_tok")
-        )
+        docs.selectExpr("source", f"size({tokens_sql('text')}) AS n_tok")
         .groupBy("source")
         .agg(F.sum("n_tok").cast("bigint").alias("n_s"))
     )

@@ -387,13 +387,13 @@ _Q274_ORACLE = """
     "classifier, Spark-shaped.",
 )
 def q274(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         "source",
-        F.explode_outer(tokens(F.col("text"))).alias("w"),
+        F.explode_outer(F.expr(tokens_sql("text"))).alias("w"),
     ).where(F.col("w").isNotNull())
     dw = tok.groupBy("doc_id", "source", "w").agg(
         F.count(F.lit(1)).alias("c")

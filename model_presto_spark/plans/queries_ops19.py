@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.plans.queries import R6_SQL, _t, r6, register
+from model_presto_spark.plans.queries import R6_SQL, _t, r6, r6_py, register
 
 _R6 = R6_SQL
 
@@ -374,18 +374,8 @@ def q278(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in types:
                 cur[(t, v)] = cur[(t, v)] * (n / 2.0) / cs
 
-    def _r6(x: float) -> float:
-        import decimal
-
-        return float(
-            decimal.Decimal(x + 5e-12).quantize(
-                decimal.Decimal("0.000001"),
-                rounding=decimal.ROUND_HALF_UP,
-            )
-        )
-
     out = [
-        (t, int(v), _r6(cur[(t, v)]), _r6(cur[(t, v)] / cells[(t, v)]))
+        (t, int(v), r6_py(cur[(t, v)]), r6_py(cur[(t, v)] / cells[(t, v)]))
         for t in types
         for v in variants
     ]

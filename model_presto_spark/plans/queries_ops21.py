@@ -661,12 +661,12 @@ _Q290_ORACLE = """
     "multi-rater generalization of q229.",
 )
 def q290(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     n_pos = (
         F.when(F.col("n_chars") > 600, 1).otherwise(0)
-        + F.when(F.size(tokens(F.col("text"))) > 95, 1).otherwise(0)
+        + F.when(F.size(F.expr(tokens_sql("text"))) > 95, 1).otherwise(0)
         + F.when(F.lower(F.col("text")).like("% the %"), 1).otherwise(0)
     )
     item = docs.select(n_pos.alias("n_pos")).select(

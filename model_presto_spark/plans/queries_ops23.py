@@ -78,11 +78,11 @@ _Q296_ORACLE = f"""
     "n-gram smoothing that actually works, as a relational plan.",
 )
 def q296(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import bigrams, tokens
+    from model_presto_spark.functions.text import bigrams, tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     big = (
-        docs.select(tokens(F.col("text")).alias("ts"))
+        docs.select(F.expr(tokens_sql("text")).alias("ts"))
         .select(F.explode_outer(bigrams(F.col("ts"))).alias("bg"))
         .where(F.col("bg").isNotNull())
         .select(
@@ -177,11 +177,11 @@ _Q297_ORACLE = f"""
     "batch-shape calculator for denoising pretraining pipelines.",
 )
 def q297(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(
-        F.size(tokens(F.col("text"))).cast("bigint").alias("n_tok")
+        F.size(F.expr(tokens_sql("text"))).cast("bigint").alias("n_tok")
     ).where(F.col("n_tok") >= _Q297_SPAN)
     n_spans = F.greatest(
         F.expr(
@@ -277,15 +277,15 @@ _Q298_ORACLE = """
     "value captured per tier.",
 )
 def q298(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.size(F.array_distinct(tokens(F.col("text"))))
+        F.size(F.array_distinct(F.expr(tokens_sql("text"))))
         .cast("bigint")
         .alias("val"),
-        F.size(tokens(F.col("text"))).cast("bigint").alias("cost"),
+        F.size(F.expr(tokens_sql("text"))).cast("bigint").alias("cost"),
     )
     tot = d.agg(
         F.floor(0.3 * F.sum("cost")).cast("bigint").alias("budget")

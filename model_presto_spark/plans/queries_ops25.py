@@ -482,13 +482,13 @@ _Q310_ORACLE = f"""
     "weights (1/3, 1/6).  Data valuation without sampling.",
 )
 def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     tok = (
         docs.where(F.col("source").isin(*_Q310_SRCS))
         .select(
-            "source", F.explode_outer(tokens(F.col("text"))).alias("w")
+            "source", F.explode_outer(F.expr(tokens_sql("text"))).alias("w")
         )
         .where(F.col("w").isNotNull())
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.plans.queries import R6_SQL, _t, r6, register
+from model_presto_spark.plans.queries import R6_SQL, _t, r6, r6_py, register
 
 _R6 = R6_SQL
 
@@ -127,22 +127,13 @@ def q315(spark: SparkSession, sf_dir: str) -> DataFrame:
                 den += n_ij.get((i, j), 0) / (p[i] + p[j])
             p_new[i] = w_i[i] / den
         p = p_new
+    schema = "event_type string, wins bigint, bt_strength double"
+    if not items:  # no games: no strengths (the oracle's empty join)
+        return spark.createDataFrame([], schema)
     mp = sum(p[i] for i in items) / len(items)
 
-    def _r6(x: float) -> float:
-        import decimal
-
-        return float(
-            decimal.Decimal(x + 5e-12).quantize(
-                decimal.Decimal("0.000001"),
-                rounding=decimal.ROUND_HALF_UP,
-            )
-        )
-
-    out = [(i, int(w_i[i]), _r6(p[i] / mp)) for i in items]
-    return spark.createDataFrame(
-        out, "event_type string, wins bigint, bt_strength double"
-    ).orderBy("event_type")
+    out = [(i, int(w_i[i]), r6_py(p[i] / mp)) for i in items]
+    return spark.createDataFrame(out, schema).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------

@@ -83,11 +83,11 @@ _Q319_ORACLE = f"""
     "check.",
 )
 def q319(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode_outer(tokens(F.col("text"))).alias("w")
+    tok = docs.selectExpr(
+        "source", f"explode_outer({tokens_sql('text')}) AS w"
     ).where(F.col("w").isNotNull())
     wc = tok.groupBy("source", "w").agg(
         F.count(F.lit(1)).alias("c")

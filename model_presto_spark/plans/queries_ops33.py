@@ -116,11 +116,11 @@ _Q360_ORACLE = """
     "q210).",
 )
 def q360(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     uu = (
-        h60(F.concat(F.lit("trt#"), F.col("event_id").cast("string")))
+        F.expr(h60_sql("concat('trt#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     )
     thr = F.when(F.col("event_type").isin("click", "view"), 0.7).otherwise(0.3)

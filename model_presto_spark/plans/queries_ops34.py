@@ -141,7 +141,7 @@ _Q365_ORACLE = f"""
     "shuffle, no RNG state, cluster-size invariant.",
 )
 def q365(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     from model_presto_spark.io import spread
 
@@ -153,13 +153,8 @@ def q365(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", F.round(F.col("value") * 100).cast("bigint").alias("y")
     )
     reps = spark.range(_Q365_B).select(F.col("id").alias("b"))
-    u = h60(
-        F.concat(
-            F.lit("boot#"),
-            F.col("b").cast("string"),
-            F.lit("#"),
-            F.col("event_id").cast("string"),
-        )
+    u = F.expr(
+        h60_sql("concat('boot#', CAST(b AS STRING), '#', CAST(event_id AS STRING))")
     ) / F.lit(_H60_MAX)
     k = (
         F.when(u < float(_POIS[0]), 0)

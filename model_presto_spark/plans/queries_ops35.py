@@ -267,8 +267,8 @@ def q371(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode_outer(T.tokens(F.col("text"))).alias("token")
+    toks = docs.selectExpr(
+        "doc_id", f"explode_outer({T.tokens_sql('text')}) AS token"
     ).filter(F.col("token").isNotNull())
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dlen = tf.groupBy(F.col("doc_id").alias("d_doc")).agg(

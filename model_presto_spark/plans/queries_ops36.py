@@ -96,15 +96,15 @@ def _hav_km(lat1, lon1, lat2, lon2):
     "trajectories engine-identical.",
 )
 def q374(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     lat = (
-        h60(F.concat(F.lit("lat#"), F.col("event_id").cast("string")))
+        F.expr(h60_sql("concat('lat#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     ) * 10 + 40
     lon = (
-        h60(F.concat(F.lit("lon#"), F.col("event_id").cast("string")))
+        F.expr(h60_sql("concat('lon#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     ) * 10 - 5
     pts = ev.select(
@@ -450,8 +450,8 @@ def q378(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     docs = _t(spark, sf_dir, "documents")
-    tf = docs.select(
-        "source", F.explode_outer(T.tokens(F.col("text"))).alias("tok")
+    tf = docs.selectExpr(
+        "source", f"explode_outer({T.tokens_sql('text')}) AS tok"
     ).filter(F.col("tok").isNotNull())
     cnt = tf.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     tot = cnt.groupBy(F.col("source").alias("t_src")).agg(

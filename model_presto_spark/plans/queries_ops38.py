@@ -232,8 +232,8 @@ def q386(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     docs = _t(spark, sf_dir, "documents")
-    cnt = docs.select(
-        F.explode_outer(T.tokens(F.col("text"))).alias("tok")
+    cnt = docs.selectExpr(
+        f"explode_outer({T.tokens_sql('text')}) AS tok"
     ).filter(F.col("tok").isNotNull()).groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy(F.col("c").desc(), "tok")
     ranked = cnt.select(
@@ -287,12 +287,12 @@ _Q387_ORACLE = """
     "uncertainty every single-number metric report omits.",
 )
 def q387(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("cv#"), F.col("event_id").cast("string"))) % 5
+            F.expr(h60_sql("concat('cv#', CAST(event_id AS STRING))")) % 5
         ).alias("fold"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),

@@ -176,12 +176,12 @@ _Q391_ORACLE = f"""
     "uniform.  The more-data-or-better-model diagnostic.",
 )
 def q391(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("lc#"), F.col("event_id").cast("string")))
+            F.expr(h60_sql("concat('lc#', CAST(event_id AS STRING))"))
             / F.lit(_H60_MAX)
         ).alias("u"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),

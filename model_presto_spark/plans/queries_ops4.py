@@ -242,7 +242,7 @@ _Q190_ORACLE = f"""
     "by q31/q37/q62 — this pins their ordering and data flow.",
 )
 def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import token_count
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.pipeline import CorpusPipeline
 
     docs = _t(spark, sf_dir, "documents")
@@ -256,9 +256,7 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     clean = pipe.run(docs)
-    toks = clean.select(
-        "source", "doc_id", token_count(F.col("text")).alias("n_tok")
-    )
+    toks = clean.selectExpr("source", "doc_id", f"size({tokens_sql('text')}) AS n_tok")
     from pyspark.sql import Window
 
     w = (

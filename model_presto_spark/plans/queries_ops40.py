@@ -313,9 +313,7 @@ def q398(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     docs = _t(spark, sf_dir, "documents")
-    t = docs.select(
-        "source", F.size(T.tokens(F.col("text"))).alias("n_tok")
-    )
+    t = docs.selectExpr("source", f"size({T.tokens_sql('text')}) AS n_tok")
     lost = F.greatest(F.col("n_tok") - _Q398_LEN, F.lit(0))
     return (
         t.groupBy("source")

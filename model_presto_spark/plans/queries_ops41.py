@@ -55,14 +55,14 @@ _Q399_ORACLE = """
     "~1/sqrt(n) scale the method promises.",
 )
 def q399(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("y"),
         (
-            h60(F.concat(F.lit("aqp#"), F.col("event_id").cast("string")))
+            F.expr(h60_sql("concat('aqp#', CAST(event_id AS STRING))"))
             / F.lit(_H60_MAX)
         ).alias("u"),
     )
@@ -225,7 +225,7 @@ _Q401_ORACLE = f"""
     "matters.",
 )
 def q401(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     docs = _t(spark, sf_dir, "documents")
     fp = F.substring(F.md5(F.encode(F.col("text"), "UTF-8")), 1, 16)
@@ -235,8 +235,7 @@ def q401(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys.crossJoin(F.broadcast(hidx))
         .select(
             (
-                h60(F.concat(F.col("k"), F.lit("#"), F.col("i").cast("string")))
-                % _Q401_M
+                F.expr(h60_sql("concat(k, '#', CAST(i AS STRING))")) % _Q401_M
             ).alias("bit")
         )
         .distinct()
@@ -250,8 +249,7 @@ def q401(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "truth",
         (
-            h60(F.concat(F.col("k"), F.lit("#"), F.col("i").cast("string")))
-            % _Q401_M
+            F.expr(h60_sql("concat(k, '#', CAST(i AS STRING))")) % _Q401_M
         ).alias("pbit"),
     )
     # group per DOC (not per fingerprint): exact-duplicate texts share

@@ -62,15 +62,15 @@ _Q404_ORACLE = """
     "time path constraint plain reachability ignores.",
 )
 def q404(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     pts = ev.select(
         "user_id",
-        (h60(F.concat(F.lit("lat#"), F.col("event_id").cast("string"))) % 16)
+        (F.expr(h60_sql("concat('lat#', CAST(event_id AS STRING))")) % 16)
         .alias("cx"),
-        (h60(F.concat(F.lit("lon#"), F.col("event_id").cast("string"))) % 16)
+        (F.expr(h60_sql("concat('lon#', CAST(event_id AS STRING))")) % 16)
         .alias("cy"),
         F.floor(us / 3600000000.0).cast("bigint").alias("tw"),
     )
@@ -176,7 +176,7 @@ _Q405_ORACLE = f"""
     "primitive on the CC/BFS iterative shape.",
 )
 def q405(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     o = _t(spark, sf_dir, "orders")
     e = (
@@ -191,13 +191,8 @@ def q405(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def coin(tag: str) -> F.Column:
         return (
-            h60(
-                F.concat(
-                    F.lit(tag),
-                    F.col("u").cast("string"),
-                    F.lit(">"),
-                    F.col("v").cast("string"),
-                )
+            F.expr(
+                h60_sql(f"concat('{tag}', CAST(u AS STRING), '>', CAST(v AS STRING))")
             )
             / F.lit(1152921504606846976.0)
         ) < _Q405_P
@@ -458,9 +453,9 @@ def q408(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = orig.unionByName(copy1).unionByName(copy2)
     clustered = corpus.select(
         "family",
-        T.h60(F.array_join(F.slice(T.tokens(F.col("text")), 1, 12), " ")).alias(
-            "cluster"
-        ),
+        F.expr(
+            T.h60_sql(f"array_join(slice({T.tokens_sql('text')}, 1, 12), ' ')")
+        ).alias("cluster"),
     )
     cont = clustered.groupBy("cluster", "family").agg(
         F.count(F.lit(1)).alias("n_ct")

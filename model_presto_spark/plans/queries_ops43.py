@@ -168,11 +168,13 @@ def q410(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     s = _t(spark, sf_dir, "supplier")
-    spaced = F.replace(F.col("s_name"), F.lit("#"), F.lit(" "))
+    spaced_sql = "replace(s_name, '#', ' ')"
+    spaced = F.expr(spaced_sql)
+    spaced_toks = F.expr(T.tokens_sql(spaced_sql))
     corrupted = s.select(
         F.col("s_suppkey").alias("true_key"),
         F.col("s_nationkey").alias("rec_nat"),
-        F.array_join(F.reverse(T.tokens(spaced)), " ").alias("rec_name"),
+        F.array_join(F.reverse(spaced_toks), " ").alias("rec_name"),
     )
     cand = corrupted.join(
         F.broadcast(s), F.col("rec_nat") == F.col("s_nationkey")
@@ -181,8 +183,8 @@ def q410(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_suppkey").alias("cand_key"),
         F.levenshtein(F.col("rec_name"), F.lower(spaced)).alias("lev_raw"),
         F.levenshtein(
-            F.array_join(F.array_sort(T.tokens(F.col("rec_name"))), " "),
-            F.array_join(F.array_sort(T.tokens(spaced)), " "),
+            F.array_join(F.array_sort(F.expr(T.tokens_sql("rec_name"))), " "),
+            F.array_join(F.array_sort(spaced_toks), " "),
         ).alias("lev_sorted"),
     )
     wr = Window.partitionBy("true_key").orderBy("lev_raw", "cand_key")
@@ -265,12 +267,12 @@ _Q411_ORACLE = """
     "approximation contracts).",
 )
 def q411(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("mg#"), F.col("event_id").cast("string"))) % 2
+            F.expr(h60_sql("concat('mg#', CAST(event_id AS STRING))")) % 2
         ).alias("part"),
         F.round(F.col("value") * 100).cast("bigint").alias("x"),
         F.length("props").cast("bigint").alias("y"),
@@ -401,7 +403,7 @@ _Q412_ORACLE = f"""
     "the collapsed 30-row daily relation.",
 )
 def q412(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     daily0 = (
@@ -425,11 +427,11 @@ def q412(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks = seeds.crossJoin(F.broadcast(nmax)).select(
         "s",
         (
-            h60(F.concat(F.lit("ra#"), F.col("s").cast("string"))) % F.col("nn")
+            F.expr(h60_sql("concat('ra#', CAST(s AS STRING))")) % F.col("nn")
             + 1
         ).alias("r1"),
         (
-            h60(F.concat(F.lit("rb#"), F.col("s").cast("string"))) % F.col("nn")
+            F.expr(h60_sql("concat('rb#', CAST(s AS STRING))")) % F.col("nn")
             + 1
         ).alias("r2"),
     )

@@ -223,14 +223,14 @@ _Q196_ORACLE = f"""
     "distinct-user counts, unrouted kept.",
 )
 def q196(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
     from model_presto_spark.operators.net import lpm_join
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.pmod(
-            h60(F.concat(F.lit("ip#"), F.col("user_id").cast("string"))),
+            F.expr(h60_sql("concat('ip#', CAST(user_id AS STRING))")),
             F.lit(4294967296),
         ).alias("ip"),
     )

@@ -473,10 +473,10 @@ def _spark_ring_pick(vhs: list[int], shards: list[str], h):
     "— the property the ring exists for).",
 )
 def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = h60(F.concat(F.lit("doc#"), F.col("doc_id").cast("string")))
+    h = F.expr(h60_sql("concat('doc#', CAST(doc_id AS STRING))"))
     assigned = docs.select(
         _spark_ring_pick(_Q204_VH8, _Q204_SH8, h).alias("shard8"),
         _spark_ring_pick(_Q204_VH9, _Q204_SH9, h).alias("shard9"),
@@ -553,7 +553,7 @@ _Q205_ORACLE = f"""
 def q205(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     docs = _t(spark, sf_dir, "documents")
     stats = docs.groupBy("source").agg(
@@ -591,7 +591,7 @@ def q205(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rk = F.row_number().over(
         Window.partitionBy("source").orderBy(
-            h60(F.concat(F.lit("ney#"), F.col("doc_id").cast("string"))),
+            F.expr(h60_sql("concat('ney#', CAST(doc_id AS STRING))")),
             F.col("doc_id"),
         )
     )

@@ -63,7 +63,7 @@ _Q209_ORACLE = f"""
     "variants assigned by the deterministic md5 coin.",
 )
 def q209(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
@@ -71,7 +71,7 @@ def q209(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("y"),
     )
     variant = F.pmod(
-        h60(F.concat(F.lit("ab#"), F.col("user_id").cast("string"))),
+        F.expr(h60_sql("concat('ab#', CAST(user_id AS STRING))")),
         F.lit(2),
     ).alias("variant")
     n = F.count(F.lit(1))
@@ -163,7 +163,7 @@ _Q210_ORACLE = f"""
     "at an unchanged treatment-effect estimate.",
 )
 def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
 
     ev = _t(spark, sf_dir, "events")
     pre = F.col("ts").cast("date") < F.lit("2024-01-16").cast("date")
@@ -183,7 +183,7 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.pmod(
-                h60(F.concat(F.lit("ab#"), F.col("user_id").cast("string"))),
+                F.expr(h60_sql("concat('ab#', CAST(user_id AS STRING))")),
                 F.lit(2),
             ).alias("variant"),
             "x",
@@ -342,11 +342,11 @@ _Q212_ORACLE = """
     "any corpus size.",
 )
 def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import bigrams, tokens
+    from model_presto_spark.functions.text import bigrams, tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     tc = (
-        docs.select(tokens(F.col("text")).alias("ts"))
+        docs.select(F.expr(tokens_sql("text")).alias("ts"))
         .select(F.explode_outer(bigrams(F.col("ts"))).alias("t"))
         .where(F.col("t").isNotNull())
         .groupBy("t")
@@ -434,11 +434,11 @@ _Q213_ORACLE = """
     "seen yet.",
 )
 def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import bigrams, tokens
+    from model_presto_spark.functions.text import bigrams, tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     tc = (
-        docs.select("source", tokens(F.col("text")).alias("ts"))
+        docs.select("source", F.expr(tokens_sql("text")).alias("ts"))
         .select(
             "source", F.explode_outer(bigrams(F.col("ts"))).alias("t")
         )

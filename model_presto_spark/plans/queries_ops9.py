@@ -74,11 +74,11 @@ _Q225_ORACLE = """
     "only the per-doc relation.  Integer counts end to end.",
 )
 def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import bigrams, tokens
+    from model_presto_spark.functions.text import bigrams, tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     big = (
-        docs.select("doc_id", tokens(F.col("text")).alias("ts"))
+        docs.select("doc_id", F.expr(tokens_sql("text")).alias("ts"))
         .select("doc_id", F.explode_outer(bigrams(F.col("ts"))).alias("t"))
         .where(F.col("t").isNotNull())
     )
@@ -449,12 +449,12 @@ _Q229_ORACLE = f"""
     "counts.  The filter-redundancy check for curation rules.",
 )
 def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
 
     docs = _t(spark, sf_dir, "documents")
     ra = F.when(F.col("n_chars") > _Q229_CHARS, 1).otherwise(0)
     rb = F.when(
-        F.size(tokens(F.col("text"))) > _Q229_WORDS, 1
+        F.size(F.expr(tokens_sql("text"))) > _Q229_WORDS, 1
     ).otherwise(0)
     r = docs.select(ra.alias("ra"), rb.alias("rb"))
     tab = r.agg(

@@ -146,6 +146,10 @@ def q147(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     totals = u.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb")).first()
+    if totals.na is None:  # no R/A rows: the oracle's one all-NULL row
+        return spark.createDataFrame(
+            [(None, None, None)], "n_a bigint, n_b bigint, ks_d double"
+        )
     na, nb = int(totals.na), int(totals.nb)
     w = Window.orderBy(F.col("v").asc()).rowsBetween(
         Window.unboundedPreceding, 0

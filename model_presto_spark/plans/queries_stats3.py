@@ -220,13 +220,13 @@ _Q166_ORACLE = f"""
     "watermark), not a global single reducer.",
 )
 def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60
+    from model_presto_spark.functions.text import h60_sql
     from model_presto_spark.operators.temporal import _epoch_us
 
     ev = _t(spark, sf_dir, "events")
     ev_us = _epoch_us("ts")
     arr_us = ev_us + (
-        h60(F.concat(F.lit("late#"), F.col("event_id").cast("string"))) % 3600
+        F.expr(h60_sql("concat('late#', CAST(event_id AS STRING))")) % 3600
     ) * F.lit(1_000_000).cast("bigint")
     arr = ev.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),

@@ -110,14 +110,12 @@ _Q131_ORACLE = f"""
     "readability gate of corpus quality filtering.",
 )
 def q131(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import readability_features
+    from model_presto_spark.functions.text import readability_features_sql
 
     docs = _t(spark, sf_dir, "documents")
-    rf = readability_features(F.col("text"))
-    per = docs.select(
-        "source",
-        rf["n_words"].alias("w"),
-        rf["flesch"].alias("flesch"),
+    rf = readability_features_sql("text")
+    per = docs.selectExpr(
+        "source", f"{rf['n_words']} AS w", f"{rf['flesch']} AS flesch"
     )
     return per.groupBy("source").agg(
         F.sum("w").alias("total_words"),

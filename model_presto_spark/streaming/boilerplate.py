@@ -41,11 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from model_presto_spark.operators.lines import (
-    _norm_line,
-    segment_by_delimiter,
-    segment_by_width,
-)
+from model_presto_spark.functions.text import fingerprint60_sql
+from model_presto_spark.operators.lines import segment_by_delimiter, segment_by_width
 
 
 def _hashed_lines(
@@ -56,14 +53,12 @@ def _hashed_lines(
     width: int,
     fast_hash: bool,
 ) -> DataFrame:
-    from model_presto_spark.functions.text import h60, h60_fast
-
     lines = (
         segment_by_delimiter(batch, id_col, text_col, delimiter)
         if delimiter is not None
         else segment_by_width(batch, id_col, text_col, width)
     )
-    h = (h60_fast if fast_hash else h60)(_norm_line(F.col("line")))
+    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
     return lines.select(
         F.col(id_col).alias("id"), "line_no", "line", h.alias("lhash")
     )

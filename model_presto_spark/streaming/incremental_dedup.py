@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from model_presto_spark.functions.text import fingerprint60
+from model_presto_spark.functions.text import fingerprint60_sql
 
 
 def dedup_batch_against_store(
@@ -52,7 +52,7 @@ def dedup_batch_against_store(
     arrivals, keep the min-id representative per in-batch fingerprint,
     then anti-join fingerprints already in the store. Returns the
     surviving rows with their ``fingerprint`` column attached."""
-    fp = batch.withColumn("fingerprint", fingerprint60(F.col(text_col)))
+    fp = batch.withColumn("fingerprint", F.expr(fingerprint60_sql(text_col)))
     # in-batch dedup: min-id wins (deterministic under replay)
     from pyspark.sql import Window
 

@@ -14,7 +14,7 @@ def test_batch_core_in_batch_and_store_dedup(spark):
     from model_presto_spark.streaming.incremental_dedup import (
         dedup_batch_against_store,
     )
-    from model_presto_spark.functions.text import fingerprint60
+    from model_presto_spark.functions.text import fingerprint60_sql
 
     batch = _wave(
         spark,
@@ -25,8 +25,8 @@ def test_batch_core_in_batch_and_store_dedup(spark):
             (4, "seen before"),     # already in store
         ],
     )
-    store = _wave(spark, [(99, "seen before")]).select(
-        fingerprint60(F.col("text")).alias("fingerprint")
+    store = _wave(spark, [(99, "seen before")]).selectExpr(
+        f"{fingerprint60_sql('text')} AS fingerprint"
     )
     out = dedup_batch_against_store(batch, store, "doc_id", "text")
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
@@ -132,12 +132,10 @@ def test_boilerplate_batch_core_running_frequency(spark):
         ],
     )
     # ledger says "cookie banner" was already seen in 3 docs
-    from model_presto_spark.functions.text import h60_fast
+    from model_presto_spark.functions.text import h60_fast_sql
     ledger = spark.createDataFrame(
         [("cookie banner", 3)], "line string, doc_freq long"
-    ).select(
-        h60_fast(F.col("line")).alias("lhash"), "doc_freq"
-    )
+    ).selectExpr(f"{h60_fast_sql('line')} AS lhash", "doc_freq")
     scrubbed, deltas = scrub_batch_against_ledger(
         batch, ledger, min_doc_freq=5
     )

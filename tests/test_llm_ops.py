@@ -50,7 +50,7 @@ def test_contamination_broadcast_plan(docs):
 def test_repetition_signals(spark):
     from model_presto_spark.functions.text import (
         duplicate_ngram_fraction,
-        tokens,
+        tokens_sql,
         top_ngram_fraction,
         word_ngrams_all,
     )
@@ -65,7 +65,7 @@ def test_repetition_signals(spark):
         "doc_id bigint, text string",
     )
     # materialize tokens first (inlining caveat): two selects
-    toks = df.select("doc_id", tokens(F.col("text")).alias("t"))
+    toks = df.select("doc_id", F.expr(tokens_sql("text")).alias("t"))
     g = toks.select("doc_id", word_ngrams_all(F.col("t"), 2).alias("g"))
     out = {
         r.doc_id: r
@@ -99,12 +99,12 @@ def test_top_ngram_fraction_matches_exploded_definition(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     from model_presto_spark.functions.text import (
-        tokens,
+        tokens_sql,
         top_ngram_fraction,
         word_ngrams_all,
     )
 
-    toks = df.select("doc_id", tokens(F.col("text")).alias("t"))
+    toks = df.select("doc_id", F.expr(tokens_sql("text")).alias("t"))
     g = toks.select("doc_id", word_ngrams_all(F.col("t"), 2).alias("g"))
     fold = {
         r.doc_id: r.top

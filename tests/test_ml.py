@@ -81,10 +81,10 @@ def test_add_embeddings_udf(spark):
 
 def test_timestep_mask_deterministic(spark):
     df = spark.range(50).select(F.col("id"))
-    m1 = df.select(M.timestep_mask(F.col("id"), 12, 0.5, seed=7).alias("m")).collect()
-    m2 = df.select(M.timestep_mask(F.col("id"), 12, 0.5, seed=7).alias("m")).collect()
+    m1 = df.select(M.timestep_mask("id", 12, 0.5, seed=7).alias("m")).collect()
+    m2 = df.select(M.timestep_mask("id", 12, 0.5, seed=7).alias("m")).collect()
     assert m1 == m2
-    m3 = df.select(M.timestep_mask(F.col("id"), 12, 0.5, seed=8).alias("m")).collect()
+    m3 = df.select(M.timestep_mask("id", 12, 0.5, seed=8).alias("m")).collect()
     assert m1 != m3
     # ratio roughly holds over many draws
     total = sum(sum(r.m) for r in m1)
@@ -94,7 +94,7 @@ def test_timestep_mask_deterministic(spark):
 def test_chunk_mask_contiguous(spark):
     df = spark.range(20)
     rows = df.select(
-        M.chunk_timestep_mask(F.col("id"), 12, 6, seed=3).alias("m")
+        M.chunk_timestep_mask("id", 12, 6, seed=3).alias("m")
     ).collect()
     for r in rows:
         assert sum(r.m) == 6
@@ -105,7 +105,7 @@ def test_chunk_mask_contiguous(spark):
 def test_band_group_mask_groups_together(spark):
     df = spark.range(30)
     rows = df.select(
-        M.band_group_mask(F.col("id"), (3, 2, 4), 0.5, seed=1).alias("m")
+        M.band_group_mask("id", (3, 2, 4), 0.5, seed=1).alias("m")
     ).collect()
     for r in rows:
         g1, g2, g3 = r.m[0:3], r.m[3:5], r.m[5:9]
@@ -121,10 +121,10 @@ def test_rc_stream_extends_timestep_stream(spark):
     its draw-key format, this must fail before the q46 oracle does."""
     df = spark.range(40)
     rows = df.select(
-        M.timestep_mask(F.col("id"), 12, 0.5, seed=0).alias("ts"),
+        M.timestep_mask("id", 12, 0.5, seed=0).alias("ts"),
         F.flatten(
             M.random_combinations_mask(
-                F.col("id"), 12, group_sizes=(1, 1, 1), ratio=0.5, seed=0
+                "id", 12, group_sizes=(1, 1, 1), ratio=0.5, seed=0
             )
         ).alias("rc"),
     ).collect()
@@ -220,7 +220,7 @@ def test_random_combinations_mask_group_sharing(spark):
 
     df = spark.range(50).select(F.col("id").alias("k"))
     m = random_combinations_mask(
-        F.col("k"), num_timesteps=6, group_sizes=(2, 3), ratio=0.5, seed=1
+        "k", num_timesteps=6, group_sizes=(2, 3), ratio=0.5, seed=1
     )
     rows = df.select(m.alias("m")).collect()
     again = df.select(m.alias("m")).collect()
@@ -288,7 +288,7 @@ def test_add_reconstruction_error_udf(spark):
     from model_presto_spark.ml.masking import timestep_mask
 
     df = _series_df(spark, n=6).withColumn(
-        "mask", timestep_mask(F.col("pid").cast("string"), ratio=0.4, seed=11)
+        "mask", timestep_mask("CAST(pid AS STRING)", ratio=0.4, seed=11)
     )
     out = (
         add_reconstruction_error(df, "ts", "month", "mask")

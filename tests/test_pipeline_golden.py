@@ -106,7 +106,7 @@ def test_full_chain_mask_and_encode(spark):
         "pixel_id",
         "month",
         apply_series_mask(
-            F.col("series"), timestep_mask(F.col("pixel_id"), 12, 0.5, seed=1)
+            F.col("series"), timestep_mask("pixel_id", 12, 0.5, seed=1)
         ).alias("series"),
     )
     out = add_embeddings(masked, "series", "month")

@@ -71,7 +71,7 @@ def test_token_divergence_no_double_tokenize(spark):
     df = _docs(spark).withColumn("grp", F.col("doc_id") % 2)
     plan = _plan(token_divergence(df, group_col="grp"))
     flat = plan.lower().replace(" ", "")
-    # tokens() lowers to a regex split; the split expression must not
+    # tokens_sql lowers to a regex split; the split expression must not
     # appear inside a size(...) pre-filter
     assert "(size(split(" not in flat
 
@@ -242,3 +242,19 @@ def test_dedup_verify_joins_spread_the_pair_stream(spark):
         ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8),
     ):
         assert "RoundRobinPartitioning" in _plan(df)
+
+
+def test_one_definition_per_expression():
+    """No ``functions`` module defines both a builder ``X`` and its
+    SQL spelling ``X_sql``: each expression has one definition."""
+    import ast
+    import pathlib
+
+    import model_presto_spark.functions as pkg
+
+    twins = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        defs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        twins += [f"{path.name}:{d}" for d in defs if f"{d}_sql" in defs]
+    assert not twins, twins

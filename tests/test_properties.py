@@ -47,7 +47,7 @@ def test_mask_budget_bounds(spark, n, ratio, seed):
 
     df = spark.range(n)
     out = df.select(
-        mask_budget(timestep_mask(F.col("id"), 12, ratio, seed)).alias("b")
+        mask_budget(timestep_mask("id", 12, ratio, seed)).alias("b")
     ).collect()
     assert all(0 <= r.b <= 12 for r in out)
     if ratio == 0.0:

@@ -34,17 +34,17 @@ def test_charclass_empty_text_has_zero_ratios(spark):
 
 
 def test_readability_counts(spark):
-    from model_presto_spark.functions.text import readability_features
+    from model_presto_spark.functions.text import readability_features_sql
 
     # 4 words, 2 sentence runs ("." and "!?"), syllable groups:
     # "the"->e(1), "cat"->a(1), "ran"->a(1), "away"->a,ay(2) = 5
     df = spark.createDataFrame([("The cat ran. away!?",)], "text string")
-    rf = readability_features(F.col("text"))
-    row = df.select(
-        rf["n_words"].alias("w"),
-        rf["n_sentences"].alias("s"),
-        rf["n_syllables"].alias("y"),
-        rf["flesch"].alias("f"),
+    rf = readability_features_sql("text")
+    row = df.selectExpr(
+        f"{rf['n_words']} AS w",
+        f"{rf['n_sentences']} AS s",
+        f"{rf['n_syllables']} AS y",
+        f"{rf['flesch']} AS f",
     ).first()
     assert (row.w, row.s, row.y) == (4, 2, 5)
     expected = 206.835 - 1.015 * (4 / 2) - 84.6 * (5 / 4)
@@ -52,11 +52,11 @@ def test_readability_counts(spark):
 
 
 def test_readability_min_one_sentence(spark):
-    from model_presto_spark.functions.text import readability_features
+    from model_presto_spark.functions.text import readability_features_sql
 
     df = spark.createDataFrame([("no terminator here",)], "text string")
-    rf = readability_features(F.col("text"))
-    assert df.select(rf["n_sentences"].alias("s")).first().s == 1
+    rf = readability_features_sql("text")
+    assert df.selectExpr(f"{rf['n_sentences']} AS s").first().s == 1
 
 
 def test_source_overlap_jaccard(spark):
@@ -80,6 +80,23 @@ def test_source_overlap_jaccard(spark):
     # |A|=2, |B|=3, shared=1 -> jaccard = 1/4
     assert (r.n_shared, r.n_a, r.n_b) == (1, 2, 3)
     assert abs(r.jaccard - 0.25) < 1e-12
+
+
+def test_source_overlap_fingerprints_once(spark):
+    """The overlap key is exact_dedup's fingerprint. Spark's trim strips
+    only spaces, so a tab-padded body keeps edge spaces after one
+    normalization and must not match its unpadded twin."""
+    from model_presto_spark.operators.dedup import exact_dedup, source_overlap
+
+    rows = [
+        ("a", 1, "\tHello  World\n"),
+        ("b", 2, "hello world"),
+        ("c", 3, "\thello world\n"),
+    ]
+    df = spark.createDataFrame(rows, "source string, doc_id int, text string")
+    out = source_overlap(df, "source", "text").collect()
+    assert [(r.source_a, r.source_b, r.n_shared) for r in out] == [("a", "c", 1)]
+    assert exact_dedup(df, "doc_id", "text").count() == 2
 
 
 def test_source_overlap_prefix_tokens(spark):

@@ -73,7 +73,7 @@ def test_streaming_budget_equals_batch_analog(spark, tmp_path):
     """The stateful streaming sampler and the q62 window-cumsum batch
     analog implement the SAME prefix-truncation semantics: identical
     kept rows on identical input."""
-    from model_presto_spark.functions.text import token_count
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.plans.queries_llm2 import q62
 
     sf = "/root/testdata/sf0.001"
@@ -84,7 +84,7 @@ def test_streaming_budget_equals_batch_analog(spark, tmp_path):
     from model_presto_spark.io import load_table
 
     docs = load_table(spark, sf, "documents").select(
-        "source", "doc_id", token_count(F.col("text")).alias("n_tokens")
+        "source", "doc_id", F.size(F.expr(tokens_sql("text"))).alias("n_tokens")
     )
     landing = str(tmp_path / "landing")
     docs.coalesce(1).write.parquet(landing)

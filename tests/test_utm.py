@@ -79,13 +79,13 @@ def test_forward_matches_snyder(spark, grid):
 
 
 def test_utm_forward_inverse_roundtrip(spark, grid):
-    from model_presto_spark.functions.geo import utm_forward, utm_inverse
+    from model_presto_spark.functions.geo import utm_forward_sql, utm_inverse
 
     lon0 = 9.0
     df = spark.createDataFrame(
         [(la, lon0 + off) for la, off in grid], "lat double, lon double"
     )
-    utm = utm_forward(F.col("lat"), F.col("lon"))
+    utm = F.expr(utm_forward_sql("lat", "lon"))
     back = df.select("lat", "lon", utm.alias("u")).select(
         "lat",
         "lon",
@@ -103,12 +103,12 @@ def test_utm_forward_inverse_roundtrip(spark, grid):
 
 
 def test_utm_zone_and_false_northing(spark):
-    from model_presto_spark.functions.geo import utm_forward
+    from model_presto_spark.functions.geo import utm_forward_sql
 
     df = spark.createDataFrame(
         [(-33.9, 18.4), (40.7, -74.0), (35.7, 139.7)], "lat double, lon double"
     )
-    rows = df.select(utm_forward(F.col("lat"), F.col("lon")).alias("u")).collect()
+    rows = df.selectExpr(f"{utm_forward_sql('lat', 'lon')} AS u").collect()
     cape, nyc, tokyo = [r.u for r in rows]
     assert cape.zone == 34 and not cape.northern
     assert cape.northing > 6_000_000  # south: false northing applied
@@ -187,11 +187,35 @@ def test_polygon_centroid_orientation_invariant(spark):
     assert got[1] == (pytest.approx(2.0), pytest.approx(1.0))
 
 
+def _utm_forward_columns(lat, lon):
+    """Column-API reference for utm_forward_sql, composed from the
+    library's utm_zone and transverse_mercator."""
+    from model_presto_spark.functions.geo import (
+        UTM_FALSE_NORTHING_SOUTH,
+        transverse_mercator,
+        utm_zone,
+    )
+
+    zone = utm_zone(lon)
+    en = transverse_mercator(lat, lon, (zone.cast("double") * 6.0) - 183.0)
+    northern = lat >= 0.0
+    northing = F.when(northern, en["northing"]).otherwise(
+        en["northing"] + UTM_FALSE_NORTHING_SOUTH
+    )
+    return F.struct(
+        zone.alias("zone"),
+        northern.alias("northern"),
+        en["easting"].alias("easting"),
+        northing.alias("northing"),
+    )
+
+
 def test_utm_forward_sql_bit_identical(spark):
-    """The SQL-string twin (one py4j round-trip per plan build) must
-    compute the EXACT same doubles as the Column-API utm_forward —
-    same ops, same operand order, D-suffixed literals."""
-    from model_presto_spark.functions.geo import utm_forward, utm_forward_sql
+    """The SQL-string UTM projection (one py4j round-trip per plan
+    build) must compute the EXACT same doubles as the Column-API
+    composition of utm_zone and transverse_mercator — same ops, same
+    operand order, D-suffixed literals."""
+    from model_presto_spark.functions.geo import utm_forward_sql
 
     pts = [
         (float(la), float(lo))
@@ -200,7 +224,7 @@ def test_utm_forward_sql_bit_identical(spark):
     ]
     df = spark.createDataFrame(pts, "lat double, lon double")
     both = df.select(
-        utm_forward(F.col("lat"), F.col("lon")).alias("a"),
+        _utm_forward_columns(F.col("lat"), F.col("lon")).alias("a"),
         F.expr(utm_forward_sql("lat", "lon")).alias("b"),
     ).collect()
     for r in both:

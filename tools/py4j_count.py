@@ -2,10 +2,9 @@
 
 The driver-side cost of a query is build (Python constructs the plan
 via py4j calls) + analysis + execution. This tool isolates build: it
-patches py4j's send_command at the connection layer (both the classic
-GatewayConnection and the default ClientServerConnection paths) and
-counts commands issued while ``spec.fn(spark, sf_dir)`` runs, without
-executing the plan.
+counts the py4j commands issued while ``spec.fn(spark, sf_dir)`` runs,
+without executing the plan, with the benchmark's connection-layer
+counter (``perfbench.trace.Py4jCounter``).
 
 Usage:
     python tools/py4j_count.py q13_asof_join q49_asof_forward
@@ -21,6 +20,7 @@ what the bench's steady-state runs see.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -30,27 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from model_presto_spark.plans.queries import QUERIES  # noqa: E402
 from model_presto_spark.session import get_spark  # noqa: E402
+from perfbench.trace import Py4jCounter  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-_COUNT = {"n": 0}
-
-
-def _patch() -> None:
-    import py4j.clientserver as cs
-    import py4j.java_gateway as jg
-
-    def wrap(orig):
-        def send_command(self, command, *a, **kw):
-            _COUNT["n"] += 1
-            return orig(self, command, *a, **kw)
-
-        return send_command
-
-    cs.ClientServerConnection.send_command = wrap(
-        cs.ClientServerConnection.send_command
-    )
-    jg.GatewayConnection.send_command = wrap(jg.GatewayConnection.send_command)
 
 
 def main() -> None:
@@ -60,22 +42,27 @@ def main() -> None:
         sys.exit(2)
     spark = get_spark("py4j-count")
     spark.sparkContext.setLogLevel("ERROR")
-    _patch()
+    counter = Py4jCounter()
     for name in names:
         spec = QUERIES.get(name)
         if spec is None:
             print(json.dumps({"query": name, "error": "unknown"}))
             continue
         spec.fn(spark, SF_DIR)  # warm build: memo misses, imports
-        _COUNT["n"] = 0
+        # cyclic-GC passes send JVM-object deletes at arbitrary points:
+        # flush them first and hold them off so the count is repeatable
+        gc.collect()
+        gc.disable()
+        counter.n = 0
         t0 = time.perf_counter()
         spec.fn(spark, SF_DIR)
         dt = time.perf_counter() - t0
+        gc.enable()
         print(
             json.dumps(
                 {
                     "query": name,
-                    "py4j_round_trips": _COUNT["n"],
+                    "py4j_round_trips": counter.n,
                     "build_sec": round(dt, 4),
                 }
             )

@@ -225,7 +225,7 @@ def run_suite(spark, sf_dir: str) -> dict[str, float]:
 
     # round-3 ops: distributed-prefix-sum packing, unigram-LM
     # perplexity, PQ encode + ADC top-k
-    from model_presto_spark.functions.text import tokens
+    from model_presto_spark.functions.text import tokens_sql
     from model_presto_spark.operators.lm import perplexity_scores
     from model_presto_spark.operators.packing import pack_sequences
     from model_presto_spark.operators.pq import (
@@ -235,7 +235,7 @@ def run_suite(spark, sf_dir: str) -> dict[str, float]:
     )
 
     t0 = time.time()
-    lens = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tok"))
+    lens = docs.select("doc_id", F.size(F.expr(tokens_sql("text"))).alias("n_tok"))
     n_bins = (
         pack_sequences(lens, "n_tok", 512).select("bin_id").distinct().count()
     )
@@ -621,7 +621,7 @@ def run_suite(spark, sf_dir: str) -> dict[str, float]:
     from model_presto_spark.operators.cms import cms_build, cms_estimate
 
     tok_stream = docs.select(
-        "doc_id", F.explode_outer(tokens(F.col("text"))).alias("tok")
+        "doc_id", F.explode_outer(F.expr(tokens_sql("text"))).alias("tok")
     )
     t0 = time.time()
     build = docs.where(F.col("doc_id") % 25 == 0).select("doc_id")
