@@ -85,6 +85,10 @@ def simhash60_from_hashes(hashes_sql: str) -> Column:
     )
 
 
+# 2^60: one past the largest h60 value, so h60 / H60_MAX is in [0, 1).
+H60_MAX = float(1 << 60)
+
+
 def h60_sql(s: str, seed: int | None = None) -> str:
     """Deterministic 60-bit hash of a string expression (md5-based).
 

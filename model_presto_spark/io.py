@@ -111,38 +111,46 @@ def write_orc(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").orc(path)
 
 
-def spread(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition to cluster parallelism.
+# Single-child nodes that keep the scan's partitioning (no shuffle).
+_NARROW_NODES = frozenset(
+    ("Project", "Filter", "SubqueryAlias", "Sample", "Generate", "ResolvedHint")
+)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to cluster parallelism, unless the scan
+    under ``df`` is already that wide.
 
     CPU-bound operators (shingling, per-element hashing, vector math)
-    must not inherit the scan's partitioning: a small file count — or
-    one giant unsplittable file — serializes the whole stage onto a
-    few cores. One cheap shuffle of the raw rows buys full-cluster
+    must not inherit a narrow partitioning: a few-file scan, or an
+    AQE-coalesced shuffle, serializes the whole stage onto a few
+    cores. One cheap shuffle of the raw rows buys full-cluster
     parallelism for everything downstream.
 
-    Scale knob: set ``spark.model_presto.spread.mode`` to ``never``
-    on deployments whose scans are already wide (a 100 TB table is
-    tens of thousands of file splits — re-shuffling raw text there is
-    pure cost) and every spread() becomes an exact no-op. The default
-    ``always`` is right for few-file inputs (this repo's testdata is
-    one file per table). Why not auto-detect: both partition-count
+    The rule: if ``df`` is a chain of ``_NARROW_NODES`` over a file
+    scan listing at least ``defaultParallelism`` files (a 100 TB table
+    is tens of thousands), the stage is already wide and a re-shuffle
+    is pure cost, so ``df`` comes back unchanged. Every other shape
+    (few files, any shuffle in the chain, local relations, RDDs)
+    repartitions. Deciding costs a few py4j round trips and no
+    planning: DataFrames are analyzed on construction, and the file
+    index cached its listing when the table was opened. The partition
     probes (``df.rdd.getNumPartitions()``, ``df.inputFiles()``)
-    compile the physical plan — measured 130-170 ms per call, far
-    more than the decision is worth in a helper called several times
-    per query.
+    compile the physical plan, at 76-170 ms per call.
     """
-    mode = df.sparkSession.conf.get("spark.model_presto.spread.mode", "always")
-    if mode not in ("always", "never"):
-        # a typo ('Never', 'off') must not silently fall through to
-        # the full-repartition default on a wide-scan deployment —
-        # that is the exact cost the knob exists to avoid
-        raise ValueError(
-            f"spark.model_presto.spread.mode must be 'always' or "
-            f"'never': {mode!r}"
-        )
-    if mode == "never":
-        return df
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
+    node = df._jdf.queryExecution().analyzed()
+    name = node.nodeName()
+    while name in _NARROW_NODES:
+        node = node.child()
+        name = node.nodeName()
+    if name == "LogicalRelation":
+        rel = node.relation()
+        if (
+            rel.getClass().getSimpleName() == "HadoopFsRelation"
+            and len(rel.location().inputFiles()) >= n
+        ):
+            return df
     return df.repartition(n)
 
 

@@ -50,13 +50,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from model_presto_spark.functions.text import (
+    H60_MAX,
     h60_fast_sql,
     h60_sql,
     tokens_sql,
     word_ngrams_all,
 )
-
-TWO60 = float(1 << 60)
 
 
 def hashed_ngram_buckets(
@@ -189,7 +188,7 @@ def gumbel_key(id_col: str, seed: int = 42) -> F.Column:
     # the +1 differently than an engine that adds first — a real
     # cross-engine divergence at rounding boundaries (~1/128 of ids).
     h = h60_sql(f"concat(CAST({id_col} AS STRING), '#gumbel{seed}')")
-    u = (F.expr(h) + F.lit(1)).cast("double") / F.lit(TWO60 + 1.0)
+    u = (F.expr(h) + F.lit(1)).cast("double") / F.lit(H60_MAX + 1.0)
     return -F.log(-F.log(u))
 
 

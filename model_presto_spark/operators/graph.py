@@ -25,26 +25,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Pointer squarings per connected_components round: each one is one
+# more self-join of the materialized label table and, from 2 on, at
+# least quarters the remaining chain depth per round. 2 is the sweet
+# spot when round scheduling overhead dominates (small/medium graphs).
+_JUMP_SQUARINGS = 2
+
 
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    jump_squarings: int = 2,
 ) -> DataFrame:
     """(src, dst) edge list -> (id, component) with component = min
     node id reachable. Nodes appearing only as isolated edges map to
     their own pair-minimum; nodes absent from ``pairs`` are absent
     from the output (callers left-join and coalesce to self).
-
-    ``jump_squarings`` controls how many times the label pointer is
-    squared *within one round's plan* (each squaring is one more
-    self-join of the materialized label table, and at least quarters
-    the remaining chain depth when >= 2). Higher values trade shuffle
-    volume per round for fewer rounds; 2 is the sweet spot when round
-    scheduling overhead dominates (small/medium graphs), 1 recovers
-    the classic one-jump iteration for very large label tables.
     """
     # Materialize the directed edge list BEFORE symmetrizing: the
     # union below references ``edges`` twice, and Spark has no
@@ -147,14 +144,14 @@ def connected_components(
             .agg(F.min("cu").alias("comp"))
         )
         # pointer jump with in-plan path doubling: comp <- comp(comp),
-        # squared ``jump_squarings`` times in ONE plan. Labels always
+        # squared _JUMP_SQUARINGS times in ONE plan. Labels always
         # point at a node present in ``labels`` (min-so-far node ids),
         # so every inner join is total. Each squaring self-joins the
         # previous jump plan, so one round follows 2^k pointer hops —
         # the label table is localCheckpoint-materialized, so the
         # 2^k-way join re-reads cached rows, not lineage.
         jump = labels
-        for _ in range(max(1, jump_squarings)):
+        for _ in range(_JUMP_SQUARINGS):
             jump = jump.join(
                 jump.select(
                     F.col("id").alias("comp"), F.col("comp").alias("comp2")

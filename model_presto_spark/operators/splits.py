@@ -302,12 +302,12 @@ def weighted_hash_sample(
     shuffle; the exponential-race key is what makes weighted
     reservoir sampling mergeable at 100 TB (per-partition top-k then
     global top-k works on the same key — A-Res is associative)."""
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     u = (
         F.expr(h60_sql(f"concat('{salt}#', CAST({key_col} AS STRING))"))
         + F.lit(0.5)
-    ) / F.lit(float(2**60))
+    ) / F.lit(H60_MAX)
     keyed = df.withColumn(
         "__wk", -F.log(u) / F.col(weight_col).cast("double")
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import R6_SQL, _t, r6, r6_py, register
+from model_presto_spark.plans.queries_docs import _DD_DOT, _DD_NORM
 
 _R6 = R6_SQL
 
@@ -306,18 +307,6 @@ def q243(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q244_CAP = 450
 _Q244_K = 5
 _Q244_TOP = 15
-
-_DD_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(generate_series(1, 64), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-_DD_NORM = (
-    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
-    "(acc, x) -> acc + x))"
-)
 
 _Q244_ORACLE = f"""
     WITH v AS (

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = float(1 << 60)
 
 
 # ---------------------------------------------------------------------------
@@ -200,11 +199,11 @@ _Q351_ORACLE = """
     "noise is O(1) per released cell, never per row.",
 )
 def q351(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     docs = _t(spark, sf_dir, "documents")
     cnt = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    uu = (F.expr(h60_sql("concat(source, '#dp1')")) + 0.5) / F.lit(_H60_MAX)
+    uu = (F.expr(h60_sql("concat(source, '#dp1')")) + 0.5) / F.lit(H60_MAX)
     noise = -1.0 * F.signum(uu - 0.5) * F.log(1 - 2 * F.abs(uu - 0.5))
     return cnt.select(
         "source",

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = 1152921504606846976.0  # 2^60
 
 
 # ---------------------------------------------------------------------------
@@ -116,12 +115,12 @@ _Q360_ORACLE = """
     "q210).",
 )
 def q360(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     ev = _t(spark, sf_dir, "events")
     uu = (
         F.expr(h60_sql("concat('trt#', CAST(event_id AS STRING))"))
-        / F.lit(_H60_MAX)
+        / F.lit(H60_MAX)
     )
     thr = F.when(F.col("event_type").isin("click", "view"), 0.7).otherwise(0.3)
     base = ev.select(

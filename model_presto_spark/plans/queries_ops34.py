@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = 1152921504606846976.0
 
 
 # ---------------------------------------------------------------------------
@@ -141,7 +140,7 @@ _Q365_ORACLE = f"""
     "shuffle, no RNG state, cluster-size invariant.",
 )
 def q365(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     from model_presto_spark.io import spread
 
@@ -155,7 +154,7 @@ def q365(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = spark.range(_Q365_B).select(F.col("id").alias("b"))
     u = F.expr(
         h60_sql("concat('boot#', CAST(b AS STRING), '#', CAST(event_id AS STRING))")
-    ) / F.lit(_H60_MAX)
+    ) / F.lit(H60_MAX)
     k = (
         F.when(u < float(_POIS[0]), 0)
         .when(u < float(_POIS[1]), 1)

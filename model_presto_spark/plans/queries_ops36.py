@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from model_presto_spark.plans.queries import _t, r6, register
 from model_presto_spark.plans.queries_docs import DD_TOKENS
 
-_H60_MAX = 1152921504606846976.0
 _TOK = DD_TOKENS.format(t="text")
 
 
@@ -96,16 +95,16 @@ def _hav_km(lat1, lon1, lat2, lon2):
     "trajectories engine-identical.",
 )
 def q374(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     ev = _t(spark, sf_dir, "events")
     lat = (
         F.expr(h60_sql("concat('lat#', CAST(event_id AS STRING))"))
-        / F.lit(_H60_MAX)
+        / F.lit(H60_MAX)
     ) * 10 + 40
     lon = (
         F.expr(h60_sql("concat('lon#', CAST(event_id AS STRING))"))
-        / F.lit(_H60_MAX)
+        / F.lit(H60_MAX)
     ) * 10 - 5
     pts = ev.select(
         "user_id", "ts", "event_id", lat.alias("lat"), lon.alias("lon")

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from model_presto_spark.plans.queries import _t, r6, register
 from model_presto_spark.plans.queries_docs import DD_TOKENS
 
-_H60_MAX = 1152921504606846976.0
 _TOK = DD_TOKENS.format(t="text")
 
 

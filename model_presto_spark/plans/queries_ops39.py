@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = 1152921504606846976.0
 
 
 # ---------------------------------------------------------------------------
@@ -176,13 +175,13 @@ _Q391_ORACLE = f"""
     "uniform.  The more-data-or-better-model diagnostic.",
 )
 def q391(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
             F.expr(h60_sql("concat('lc#', CAST(event_id AS STRING))"))
-            / F.lit(_H60_MAX)
+            / F.lit(H60_MAX)
         ).alias("u"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = 1152921504606846976.0
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +54,7 @@ _Q399_ORACLE = """
     "~1/sqrt(n) scale the method promises.",
 )
 def q399(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.text import h60_sql
+    from model_presto_spark.functions.text import H60_MAX, h60_sql
 
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
@@ -63,7 +62,7 @@ def q399(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("y"),
         (
             F.expr(h60_sql("concat('aqp#', CAST(event_id AS STRING))"))
-            / F.lit(_H60_MAX)
+            / F.lit(H60_MAX)
         ).alias("u"),
     )
     est = (

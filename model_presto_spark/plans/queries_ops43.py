@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import _t, r6, register
 
-_H60_MAX = 1152921504606846976.0
 
 # Standard-normal quantiles at i/20, i = 1..19 (plan literals)
 _Z20 = [

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from model_presto_spark.plans.queries import R6_SQL, _t, r6, register
+from model_presto_spark.plans.queries_docs import _DD_DOT, _DD_NORM
 
 _R6 = R6_SQL
 
@@ -144,18 +145,6 @@ def q200(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bilingual lexicon induction). Built entirely from the existing
 # knn_join operator run in both directions on the bounded subset;
 # the mutual check is one self-join on the (a, b) edge.
-_DD_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(generate_series(1, 64), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-_DD_NORM = (
-    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
-    "(acc, x) -> acc + x))"
-)
-
 _Q201_ORACLE = f"""
     WITH sub AS (
       SELECT vec_id, embedding FROM embeddings WHERE vec_id < 250

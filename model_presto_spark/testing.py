@@ -44,12 +44,39 @@ def rows_to_multiset(cols: list[str], rows) -> list[str]:
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over the catalog; a table stored as a directory of
+    part files is read through its ``*.parquet`` glob."""
     con = duckdb.connect()
     for t in TABLES:
         p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        if os.path.isdir(p):
+            p = os.path.join(p, "*.parquet")
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
+
+
+def write_wide_catalog(sf_dir: str, out_dir: str, n_files: int) -> None:
+    """Copy every catalog table of ``sf_dir`` into ``out_dir`` as a
+    directory of ``n_files`` parquet part files: the same rows in the
+    same order and schema, in the many-file layout of a large table.
+    Tables with fewer rows than ``n_files`` get empty parts."""
+    import pyarrow.parquet as pq
+
+    for t in TABLES:
+        src = table_path(sf_dir, t)
+        if not os.path.exists(src):
+            continue
+        table = pq.read_table(src)
+        dst = table_path(out_dir, t)
+        os.makedirs(dst, exist_ok=True)
+        for i in range(n_files):
+            lo = i * table.num_rows // n_files
+            hi = (i + 1) * table.num_rows // n_files
+            pq.write_table(
+                table.slice(lo, hi - lo), os.path.join(dst, f"part-{i:05d}.parquet")
+            )
 
 
 def compare_query(spark, con, spec, sf_dir: str) -> list[str]:

@@ -52,3 +52,35 @@ def test_write_partitioned_prunes(spark, tmp_path):
         (F.col("month") == 1) & (F.col("day") == 7)
     ).count()
     assert got == want > 0
+
+
+def test_spread_decides_from_scan_layout(spark, sf_dir, tmp_path):
+    """spread() keeps a narrow chain over a scan of at least
+    defaultParallelism files as it is, and repartitions every other
+    shape to defaultParallelism."""
+    from model_presto_spark.io import load_table, spread
+    from model_presto_spark.testing import write_wide_catalog
+
+    dp = spark.sparkContext.defaultParallelism
+
+    def docs_in(n_files):
+        d = str(tmp_path / f"files{n_files}")
+        write_wide_catalog(sf_dir, d, n_files)
+        return load_table(spark, d, "documents")
+
+    wide = docs_in(2 * dp)
+    chain = wide.select("doc_id", "text", "lang").where("doc_id % 3 = 0")
+    assert spread(chain) is chain
+
+    spread_shapes = {
+        "single-file scan": load_table(spark, sf_dir, "documents"),
+        "group output": wide.groupBy("lang").count(),
+        "join output": wide.join(wide.select("doc_id"), "doc_id"),
+        "local input": spark.createDataFrame([(1, "a")], "id long, t string"),
+    }
+    if dp > 1:
+        spread_shapes["fewer files than dp"] = docs_in(dp - 1).select("text")
+    for shape, df in spread_shapes.items():
+        out = spread(df)
+        assert out is not df, shape
+        assert out.rdd.getNumPartitions() == dp, shape

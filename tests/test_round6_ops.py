@@ -264,27 +264,6 @@ def test_twap_equals_mean_on_regular_grid(spark):
     assert out[0].n_intervals == 3
 
 
-def test_spread_mode_knob(spark, sf_dir):
-    """spark.model_presto.spread.mode=never makes spread() an exact
-    no-op (the wide-scan deployment knob); the default repartitions
-    to cluster parallelism."""
-    from model_presto_spark.io import load_table, spread
-
-    docs = load_table(spark, sf_dir, "documents")
-    assert spread(docs) is not docs
-    assert (
-        spread(docs).rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
-    spark.conf.set("spark.model_presto.spread.mode", "never")
-    try:
-        assert spread(docs) is docs
-    finally:
-        spark.conf.unset("spark.model_presto.spread.mode")
-    # explicit num_partitions still honored in default mode
-    assert spread(docs, 7).rdd.getNumPartitions() == 7
-
-
 def test_dedup_auto_min_docs_boundary(spark):
     """The auto heuristic flips exactly at auto_min_docs: n-1 docs
     stay on the exact path (pair-identical to the pinned call), n

@@ -11,7 +11,6 @@ measured high-recall band.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -210,18 +209,6 @@ def test_containment_auto_empty_and_degenerate(spark):
         short, "doc_id", "text", threshold=0.6
     ).collect()
     assert len(rows) == 10 and all(r.containment == 1.0 for r in rows)
-
-
-def test_spread_mode_typo_raises(spark):
-    from model_presto_spark.io import spread
-
-    docs = spark.createDataFrame([(1, "a")], "id long, t string")
-    spark.conf.set("spark.model_presto.spread.mode", "Never")
-    try:
-        with pytest.raises(ValueError):
-            spread(docs)
-    finally:
-        spark.conf.set("spark.model_presto.spread.mode", "always")
 
 
 def test_knn_distance_double_precision(spark):

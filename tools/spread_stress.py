@@ -1,26 +1,29 @@
-"""At-scale A/B evidence for the spread() family (round-9 deliverable).
+"""At-scale A/B evidence for ``io.spread()``.
 
-Round 7/8 added ``spread()`` (round-robin repartition to cluster
-parallelism, io.py) in front of the CPU folds of knn_join,
-ann_lsh_join and the dedup/tokenize passes, with the reasoning: a
-few-file scan serializes per-row HOF work onto a few cores, and one
-skinny shuffle buys full-width parallelism. The knob
-``spark.model_presto.spread.mode=never`` no-ops it for deployments
-whose scans are already wide. This tool produces the measured
-evidence for both halves of that claim:
+``spread()`` sits in front of the CPU folds of knn_join, ann_lsh_join
+and the dedup/tokenize passes. It round-robin repartitions to cluster
+parallelism unless its input is a narrow chain over a scan that
+already lists at least defaultParallelism files. This tool times
+three arms, each patched in wherever ``spread`` is bound:
 
-- NARROW layout (1 parquet file — this repo's testdata shape, and the
-  shape of any small-dimension scan at cluster scale): spread=always
-  vs never on knn_join (64-d sqeuclidean + cosine, q45/q35-style),
-  knn_join 2-d (q23-style, the known local pessimization), and
-  ann_lsh_join (8x64 hyperplane fold, q40-style).
-- WIDE layout (32 parquet files — a stand-in for the tens of
-  thousands of splits a 100 TB table scan has): same A/B; spread is
-  expected neutral-to-negative, which is why the knob exists.
+- ``head``: ``io.spread`` as it is;
+- ``forced``: always ``df.repartition(defaultParallelism)``;
+- ``identity``: always ``df`` unchanged.
 
-Candidate-set sizes scale the fold work (n_cand x n_probe x dim
-mults) past the shuffle cost so the sf0.1 "too small to amortize"
-objection is answered at the top size.
+over two layouts of the same embeddings:
+
+- NARROW (1 parquet file — this repo's testdata shape, and the shape
+  of any small-dimension scan at cluster scale): head should match
+  forced, and forced/identity shows the win of the shuffle;
+- WIDE (32 parquet files — a stand-in for the tens of thousands of
+  splits a 100 TB table scan has): head should match identity, since
+  the shuffle is pure cost there.
+
+Ops: knn_join (64-d sqeuclidean + cosine, q45/q35-style), knn_join
+2-d (q23-style) and ann_lsh_join (8x64 hyperplane fold, q40-style).
+
+Each timing is the best of three runs per arm, the arms interleaved
+after one warm-up run.
 
 Usage: python tools/spread_stress.py [out_json]
 """
@@ -29,17 +32,19 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-SCRATCH = "/tmp/spread_stress_r9"
+from tools.spread_traffic import bind_spread  # noqa: E402
+
+SCRATCH = os.path.join(tempfile.gettempdir(), "spread_stress")
 DIM = 64
-SIZES = {"s20k": 20_000, "s100k": 100_000}
+SIZES = {"s20k": 20_000, "s50k": 50_000}
 N_PROBES = 20
 
 
@@ -56,19 +61,33 @@ def gen_embeddings(spark, n: int, path_narrow: str, path_wide: str) -> None:
     df.repartition(32).write.mode("overwrite").parquet(path_wide)
 
 
-def timed(fn, runs: int = 2) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+def forced(df):
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def identity(df):
+    return df
+
+
+def best_times(arms: dict, run, runs: int = 3) -> dict[str, float]:
+    """Best wall time of ``run()`` under each spread arm. One untimed
+    warm-up run first, then the arms take turns in a rotating order,
+    so JIT warm-up and host drift fall on every arm alike."""
+    run()
+    names = list(arms)
+    best = dict.fromkeys(names, float("inf"))
+    for r in range(runs):
+        for name in names[r:] + names[:r]:
+            bind_spread(arms[name])
+            t0 = time.perf_counter()
+            run()
+            best[name] = min(best[name], time.perf_counter() - t0)
+    return {name: round(t, 3) for name, t in best.items()}
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r15.json"
-    from pyspark.sql import functions as F
-
+    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r16.json"
+    from model_presto_spark.io import spread
     from model_presto_spark.operators.knn import ann_lsh_join, knn_join
     from model_presto_spark.session import get_spark
 
@@ -107,29 +126,31 @@ def main() -> None:
         out.write.format("noop").mode("overwrite").save()
 
     ops = ["knn64_sqeuclidean", "knn64_cosine", "knn2", "ann_lsh"]
+    arms = {"head": spread, "forced": forced, "identity": identity}
     results: dict = {"sizes": SIZES, "dim": DIM, "n_probes": N_PROBES,
+                     "default_parallelism": spark.sparkContext.defaultParallelism,
                      "timings": {}}
     for tag in SIZES:
         for layout, path in layouts[tag].items():
-            for mode in ("always", "never"):
-                spark.conf.set("spark.model_presto.spread.mode", mode)
-                for op in ops:
-                    # ann over 100k x 100k same-bucket pairs is a
-                    # genuine O(n^2/2^planes) rerank — cap ann at 20k
-                    if op == "ann_lsh" and tag != "s20k":
-                        continue
-                    key = f"{tag}.{layout}.{op}.{mode}"
-                    spark.sparkContext.setJobDescription(key)
-                    results["timings"][key] = timed(lambda: run_op(op, path))
-                    print(key, results["timings"][key], flush=True)
-    spark.conf.set("spark.model_presto.spread.mode", "always")
+            for op in ops:
+                # ann over the top size's same-bucket pairs is a
+                # genuine O(n^2/2^planes) rerank — cap ann at 20k
+                if op == "ann_lsh" and tag != "s20k":
+                    continue
+                key = f"{tag}.{layout}.{op}"
+                spark.sparkContext.setJobDescription(key)
+                for arm, sec in best_times(arms, lambda: run_op(op, path)).items():
+                    results["timings"][f"{key}.{arm}"] = sec
+                    print(f"{key}.{arm}", sec, flush=True)
+    bind_spread(spread)
 
     t = results["timings"]
-    results["ratios_always_over_never"] = {
-        k[: -len(".always")]: round(t[k] / t[k[: -len(".always")] + ".never"], 3)
-        for k in t
-        if k.endswith(".always")
-    }
+    for num, den in (("head", "identity"), ("head", "forced"), ("forced", "identity")):
+        results[f"ratios_{num}_over_{den}"] = {
+            k[: -len(num) - 1]: round(t[k] / t[k[: -len(num) - 1] + "." + den], 3)
+            for k in t
+            if k.endswith("." + num)
+        }
     with open(out_json, "w") as f:
         json.dump(results, f, indent=1)
     print("wrote", out_json)
