@@ -140,10 +140,7 @@ from model_presto_spark.operators.graph import (
     pagerank,
     triangle_stats,
 )
-from model_presto_spark.operators.linkage import (
-    blocked_fuzzy_join,
-    linkage_clusters,
-)
+from model_presto_spark.operators.linkage import blocked_fuzzy_join
 from model_presto_spark.operators.lm import bm25_scores
 from model_presto_spark.operators.privacy import (
     diff_snapshots,
@@ -235,7 +232,6 @@ __all__ = [
     "label_propagation",
     "kcore_peel",
     "line_dedup_stats",
-    "linkage_clusters",
     "mad_outliers",
     "minhash_lsh_pairs",
     "mix_plan",

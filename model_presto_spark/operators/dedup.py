@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import logging
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -100,7 +101,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    reuse: bool = True,
     fast_hash: bool = False,
     max_bucket_size: int = 2000,
     signature_screen: float | None | str = "auto",
@@ -158,13 +158,14 @@ def minhash_lsh_pairs(
     candidate sampling), but both are verified by exact Jaccard over
     the same shingle-hash space, so precision is unaffected.
 
-    ``max_bucket_size`` caps in-bucket pair enumeration: a bucket of
-    d ids normally yields C(d,2) candidates, so one mega-bucket (d in
-    the thousands — i.e. thousands of near-identical docs sharing a
-    band signature) turns the candidate stage into an O(d²) hot task.
-    Buckets above the cap emit the d-1 consecutive-id chain pairs
-    instead; the transitive closure (graph.dedup_clusters) recovers
-    the full cluster from the chain. Direct pair RECALL within a
+    ``max_bucket_size`` caps in-bucket pair enumeration by bucket
+    MEMBERS: a bucket of d ids normally yields C(d,2) candidates, so
+    one mega-bucket (d in the thousands — i.e. thousands of
+    near-identical docs sharing a band signature) turns the candidate
+    stage into an O(d²) hot task. Buckets with d > max_bucket_size
+    emit the d-1 consecutive-id chain pairs instead; the transitive
+    closure (graph.dedup_clusters) recovers the full cluster from the
+    chain. Direct pair RECALL within a
     mega-bucket is intentionally partial — the pairs contract is
     preserved exactly for every bucket under the cap.
     """
@@ -218,15 +219,11 @@ def minhash_lsh_pairs(
         f"{hash_array_sql(char_shingles_sql('lc', shingle_k), fast=fast_hash)}"
         f" AS hs",
     )
-    if reuse:
-        # The hash-set table feeds three DAG branches (signature +
-        # both sides of the verify join); Spark has no cross-branch
-        # CSE, so without a persist the shingle+md5 pass runs 3x.
-        # MEMORY_AND_DISK: ~8 bytes/shingle, spills cleanly at scale.
-        # Pass reuse=False to trade recompute for zero cache footprint.
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # The hash-set table feeds three DAG branches (signature + both
+    # sides of the verify join); Spark has no cross-branch CSE, so
+    # without a persist the shingle+md5 pass runs 3x.
+    # MEMORY_AND_DISK: ~8 bytes/shingle, spills cleanly at scale.
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     # The 16 seed-minima fold in one pass over the hash array.
     sig = sh.selectExpr(
         "id", f"{minhash_signature_sql('hs', num_hashes)} AS sig"
@@ -383,7 +380,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.3,
     max_doc_freq: int = 1000,
-    reuse: bool = True,
     fast_hash: bool = False,
     candidates: str = "auto",
 ) -> DataFrame:
@@ -442,12 +438,9 @@ def ngram_jaccard_pairs(
         f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
-    if reuse:
-        # Feeds the posting explode plus the size lookup; see the
-        # equivalent persist note in minhash_lsh_pairs.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # Feeds the posting explode plus the size lookup; see the
+    # equivalent persist note in minhash_lsh_pairs.
+    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = grams.select("id", F.size("grams").alias("n_grams"))
     posting = grams.select("id", F.explode("grams").alias("gram"))
     if candidates == "bucket":
@@ -504,9 +497,8 @@ def ngram_jaccard_pairs(
             "n_grams",
         )
     )
-    if reuse:
-        # feeds prefix postings and both verify sides
-        edoc = edoc.localCheckpoint(eager=False)
+    # feeds prefix postings and both verify sides
+    edoc = edoc.localCheckpoint(eager=False)
     # required overlap w.r.t. this doc: smallest integer >= t*n —
     # floor(t*n - eps)+1, not ceil (same float-edge reasoning as
     # ngram_containment_pairs).
@@ -862,8 +854,6 @@ def span_dup_stats(
     )
     # pc feeds two branches (global totals + the join back); without a
     # persist the tokenize+hash pass over the corpus runs twice
-    from pyspark import StorageLevel
-
     pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
     glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
     d = (
@@ -914,8 +904,6 @@ def remove_dup_spans(
         F.count("*").alias("cnt"), F.collect_list("i").alias("starts")
     )
     # two consumers (totals + dup-start extraction) — see span_dup_stats
-    from pyspark import StorageLevel
-
     pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
     glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
     dup_starts = (
@@ -1062,7 +1050,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int = 1000,
-    reuse: bool = True,
     fast_hash: bool = False,
     candidates: str = "auto",
     num_hashes: int = 128,
@@ -1156,12 +1143,13 @@ def ngram_containment_pairs(
       doc-inside-doc families): recall ≈ 0.98–1.0 at ρ≈0.33,
       ≈ 0.40–0.44 at ρ≈0.1 — the lsh mode trades away exactly the
       extreme containment case, so pin ``candidates="index"`` when
-      hunting deep doc-inside-doc pairs regardless of corpus size. ``max_bucket_size`` caps mega-bucket pair
-      expansion with consecutive-chain pairs (same guard as
-      ``minhash_lsh_pairs``). tools/stress_bench.py measures the
-      lsh-vs-index recall on its planted corpus alongside the
-      scaling exponent, so the trade is recorded per round, not
-      asserted.
+      hunting deep doc-inside-doc pairs regardless of corpus size.
+      ``max_bucket_size`` caps bucket MEMBERS as in
+      ``minhash_lsh_pairs``: a bucket of d > max_bucket_size docs
+      emits its d-1 consecutive-chain pairs instead of C(d,2).
+      tools/stress_bench.py measures the lsh-vs-index recall on its
+      planted corpus alongside the scaling exponent, so the trade is
+      recorded per round, not asserted.
     - ``"lsh_ensemble"`` (skewed-corpus scale path): length-bucketed
       asymmetric banding (LSH Ensemble — Zhu, Nargesian, Miller,
       VLDB 2016) — docs land in log2-size buckets and each bucket
@@ -1184,7 +1172,9 @@ def ngram_containment_pairs(
       — that regime stays the index path's. ``auto`` routes here
       when the corpus is BOTH skewed (could hold a ρ<floor pair)
       and at least ``ensemble_min_docs`` — too large for the index
-      path's Σ df² floor.
+      path's Σ df² floor. In this mode ``max_bucket_size`` caps a
+      bucket's POTENTIAL PAIRS: it falls back to its consecutive
+      chain when C(d,2) > max_bucket_size (the 'lsh' mode caps d).
 
     Output: (id_a, id_b, n_common, containment), id_a < id_b.
     """
@@ -1214,14 +1204,11 @@ def ngram_containment_pairs(
         f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
-    if reuse:
-        # grams feeds posting + sizes (and the LSH signature in lsh
-        # mode) — Spark has no cross-branch CSE, so without a persist
-        # the tokenize+ngram+hash pass (the dominant linear cost)
-        # runs once per branch.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # grams feeds posting + sizes (and the LSH signature in lsh mode)
+    # — Spark has no cross-branch CSE, so without a persist the
+    # tokenize+ngram+hash pass (the dominant linear cost) runs once
+    # per branch.
+    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = grams.select("id", F.size("grams").alias("n_grams"))
     posting = grams.select("id", F.explode("grams").alias("gram"))
     # document frequency via ONE shuffle on the gram hash; keep only
@@ -1249,9 +1236,8 @@ def ngram_containment_pairs(
             "n_grams",
         )
     )
-    if reuse:
-        # feeds prefix postings, full postings, and both verify sides
-        edoc = edoc.localCheckpoint(eager=False)
+    # feeds prefix postings, full postings, and both verify sides
+    edoc = edoc.localCheckpoint(eager=False)
     if candidates == "lsh":
         cand = _containment_lsh_candidates(
             grams, num_hashes, bands, max_bucket_size
@@ -1431,9 +1417,12 @@ def _containment_ensemble_candidates(
       computes via zip_with, with ZERO signature payload shipped.
     - pair volume per bucket is capped by ``max_bucket_size`` with
       the consecutive-chain fallback (same cluster-recovery
-      semantics as every other generator; the potential-pair count
-      is computed in long — 32-bit products wrap negative on ~46k-
-      member buckets and would bypass the cap).
+      semantics as every other generator). Here the cap bounds
+      POTENTIAL PAIRS, not members: a bucket falls back to the chain
+      when C(d,2) > max_bucket_size, where minhash and the 'lsh'
+      mode fall back when d > max_bucket_size. The potential-pair
+      count is computed in long — 32-bit products wrap negative on
+      ~46k-member buckets and would bypass the cap.
 
     ``screen`` (the round-8 scale guard): the round-7 unscreened
     generator measured s10→s30 exponent 1.35 / 205 s at 150k docs —
@@ -1662,8 +1651,6 @@ def semantic_dedup(
 
     Output: (id, bucket, cos_centroid ROUNDED 6dp, is_semantic_dup).
     """
-    from pyspark import StorageLevel
-
     from model_presto_spark.functions.vectors import as_double
     from model_presto_spark.operators.knn import _hyperplane_bucket_sql
 
@@ -1792,8 +1779,6 @@ def winnow_shared_stats(
     Output: (id, n_fp, shared_fp, shared_fraction) for every doc.
     """
     fp = winnow_fingerprints(docs, k, w, text_col, id_col, fast_hash)
-    from pyspark import StorageLevel
-
     per_doc = fp.groupBy(id_col, "whash").agg(
         F.count(F.lit(1)).alias("cnt")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1887,7 +1872,6 @@ def ppjoin_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    reuse: bool = True,
     fast_hash: bool = False,
 ) -> DataFrame:
     """Prefix-filtered exact n-gram Jaccard self-join (the PPJoin
@@ -1920,7 +1904,6 @@ def ppjoin_pairs(
         n=n,
         threshold=threshold,
         max_doc_freq=1 << 62,
-        reuse=reuse,
         fast_hash=fast_hash,
         candidates="prefix",
     )

@@ -14,10 +14,13 @@ O(log diameter) — a 1M-node path graph converges in ~20 rounds where
 plain neighbor propagation would need 1M.
 
 Spark-first: edges and labels are plain DataFrames; each iteration
-is a join + groupBy (no vertex-centric framework needed). The driver
-loop checks a one-row convergence aggregate per round — scalar only,
-never the data. Iterations localCheckpoint to truncate lineage, the
-standard guard against plan blowup in iterative Spark.
+is a join + groupBy (no vertex-centric framework needed). Labels only
+decrease, so the round's groupBy also keeps each node's previous
+label and the round's one action counts the labels that went down;
+the driver loop reads that one scalar, never the data, and stops at
+zero (the same test for every id type). Iterations localCheckpoint
+to truncate lineage, the standard guard against plan blowup in
+iterative Spark.
 """
 
 from __future__ import annotations
@@ -41,7 +44,9 @@ def connected_components(
     """(src, dst) edge list -> (id, component) with component = min
     node id reachable. Nodes appearing only as isolated edges map to
     their own pair-minimum; nodes absent from ``pairs`` are absent
-    from the output (callers left-join and coalesce to self).
+    from the output (callers left-join and coalesce to self). Raises
+    RuntimeError when round ``max_iter`` still lowers a label, rather
+    than return unconverged labels.
     """
     # Materialize the directed edge list BEFORE symmetrizing: the
     # union below references ``edges`` twice, and Spark has no
@@ -73,65 +78,20 @@ def connected_components(
     )
 
     # label(n) starts as min(n, min neighbor). The table is
-    # checkpointed because every round references it ~5x (propagation
-    # sides, union, jump self-joins) and a bare plan would recompute
-    # the groupBy per reference in round 1; materializing it also
-    # materializes the lazy ``sym`` checkpoint above.
-    labels_plan = (
+    # checkpointed EAGERLY because every round references it ~5x
+    # (propagation sides, union, jump self-joins) within one job, and
+    # a lazy checkpoint only deduplicates compute across jobs, not
+    # within one; materializing it also materializes the lazy ``sym``
+    # checkpoint above.
+    labels = (
         sym.groupBy("u")
         .agg(F.min("v").alias("mv"))
         .select(
             F.col("u").alias("id"), F.least(F.col("u"), F.col("mv")).alias("comp")
         )
+        .localCheckpoint(eager=True)
     )
 
-    # convergence probe: labels are min-so-far node ids, so each comp
-    # can only DECREASE round over round and the id set is invariant —
-    # for numeric ids, sum(comp) strictly decreases iff any label
-    # changed, making one scalar aggregate over the just-checkpointed
-    # table a complete change detector (decimal(38,0): no overflow at
-    # any node count). Non-numeric ids (string/binary hashes) have no
-    # cheap monotone scalar — those fall back to a join diff against
-    # the previous (checkpointed, so cheap) labels.
-    numeric_ids = any(
-        f.name == "comp" and f.dataType.typeName()
-        in ("byte", "short", "integer", "long", "float", "double", "decimal")
-        for f in labels_plan.schema.fields
-    )
-    # Numeric-id path: LAZY checkpoint — the seed probe right below is
-    # the materializing action, folding what used to be two jobs
-    # (eager checkpoint, then the scalar agg) into one. Non-numeric
-    # ids have no seed probe, so they keep the eager materialization
-    # (a lazy checkpoint only deduplicates across jobs, and round 1
-    # references the label table 5x within ONE job).
-    labels = labels_plan.localCheckpoint(eager=not numeric_ids)
-
-    def _comp_sum(lab: DataFrame):
-        return lab.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    def _changed(new: DataFrame, old: DataFrame) -> bool:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-            > 0
-        )
-
-    # Seed the convergence probe from the INITIAL labels: one scalar
-    # agg over the just-checkpointed table (~one empty-shuffle job).
-    # Graphs whose init labels are already the fixpoint — star edge
-    # lists (q55-style blocking keys emit hub->member stars, diameter
-    # 2, and min(n, min neighbor) is the hub immediately) — then exit
-    # after ONE confirmation round instead of two full rounds; the
-    # non-numeric-id path below always had this (its round-1 diff is
-    # against the init labels), the sum probe just never did. General
-    # graphs keep the same round count and pay only the seed agg
-    # (measured: q55 CC stage 2.10 -> 1.30 s best-of-3 at sf0.1).
-    prev_sum = _comp_sum(labels) if numeric_ids else None
     for _ in range(max_iter):
         # propagate: every node's component <- min over its neighbors'
         # components (self label re-enters via the union below, so one
@@ -158,28 +118,35 @@ def connected_components(
                 ),
                 "comp",
             ).select("id", F.col("comp2").alias("comp"))
-        # lazy checkpoint + the convergence probe as the materializing
-        # action: one job per round (eager checkpoint + separate probe
-        # was two). The probe reads the checkpointed partitions, so the
-        # next round's joins re-read cached rows, not lineage.
+        # convergence test, any id type: labels only ever DECREASE, so
+        # the union tags each node's current label as ``old`` (null on
+        # the prop/jump sides, which min ignores) and the round's one
+        # materializing action counts the labels that went down (a
+        # separate probe would be one more action per round); the
+        # count reads the checkpointed partitions, so the next round's
+        # joins re-read cached rows, not lineage. Round 1 compares against the
+        # initial labels, so a graph whose initial labels are already
+        # the fixpoint (star edge lists: q55-style blocking keys emit
+        # hub->member stars) stops after one round.
         new_labels = (
-            labels.unionByName(prop)
-            .unionByName(jump)
+            labels.select("id", "comp", F.col("comp").alias("old"))
+            .unionByName(prop, allowMissingColumns=True)
+            .unionByName(jump, allowMissingColumns=True)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.min("old").alias("old"))
             .localCheckpoint(eager=False)  # truncate iterative lineage
         )
-        if numeric_ids:
-            labels = new_labels
-            cur_sum = _comp_sum(labels)
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            done = not _changed(new_labels, labels)
-            labels = new_labels
-            if done:
-                break
+        labels = new_labels.select("id", "comp")
+        lowered = new_labels.agg(
+            F.count_if(F.col("comp") < F.col("old"))
+        ).collect()[0][0]
+        if lowered == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changed in round "
+            f"max_iter={max_iter}; raise max_iter"
+        )
     return labels
 
 

@@ -76,17 +76,6 @@ def blocked_fuzzy_join(
     )
 
 
-def linkage_clusters(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Transitive closure of match pairs into entity clusters —
-    delegates to the pointer-jumping connected components
-    (operators/graph.py), the O(log n) scale path."""
-    from model_presto_spark.operators.graph import connected_components
-
-    return connected_components(pairs.select(id_a, id_b), id_a, id_b)
-
-
 def multi_pass_fuzzy_join(
     left: DataFrame,
     right: DataFrame,

@@ -57,7 +57,8 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The oracle closes the same chain edges transitively with a recursive
 # reachability CTE (enumerate reachable nodes, label each node with the
 # minimum reachable id) — O(cluster_size^2) per cluster, fine at oracle
-# scale; the Spark side is the O(log n)-round large/small-star CC.
+# scale; the Spark side is the O(log n)-round CC (min-label
+# propagation with pointer jumping, operators/graph.py).
 #
 # Edge key: a coarse blocking key (first normalized word). The exact
 # fingerprint has zero collisions in the synthetic corpus, which would
@@ -95,9 +96,9 @@ _Q55_ORACLE = """
     "q55_dedup_clusters",
     _Q55_ORACLE,
     doc="Transitive dedup cluster sizes over blocking-key chain edges: "
-    "Spark runs large/small-star connected components "
-    "(operators/graph.py); the oracle closes the same edges with a "
-    "DuckDB recursive reachability CTE.",
+    "Spark runs min-label-propagation connected components with "
+    "pointer jumping (operators/graph.py); the oracle closes the same "
+    "edges with a DuckDB recursive reachability CTE.",
 )
 def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.operators.graph import dedup_clusters
@@ -115,9 +116,9 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocking-key edges as STARS (min id -> every other id): each doc
     # has exactly one blocking key, so the key group IS the transitive
     # cluster and a star has the same components as the oracle's chain
-    # — but diameter 2 instead of O(cluster size), so the CC pointer
-    # jump converges in its first probe round instead of
-    # log(longest-chain) rounds. Measured (sf0.1, this star
+    # — but diameter 2 instead of O(cluster size), so the CC initial
+    # labels are already the fixpoint and the loop stops after its
+    # first round instead of log(longest-chain) rounds. Measured (sf0.1, this star
     # version): 1.93s best-of-3 idle box (r05 session local bench),
     # 1.78s judge idle re-measure of r04 HEAD, 3.60s in BENCH_r04
     # itself — the driver's bench box was contended, so artifact

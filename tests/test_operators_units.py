@@ -1,5 +1,5 @@
 """Operator unit tests with hand-computed goldens (SURVEY §5.1) for
-the band-math, split, and time-series layers."""
+the band-math, split, time-series and connected-components layers."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from model_presto_spark.functions import bands as B
 from model_presto_spark.operators import splits as S
 from model_presto_spark.operators import timeseries as TS
+from model_presto_spark.operators.graph import connected_components
 
 
 # --- bands ------------------------------------------------------------------
@@ -202,3 +203,32 @@ def test_patch_pool(spark):
     }
     assert out[(0, 0)] == 2.0
     assert out[(1, 0)] == 10.0
+
+
+# --- connected components ---------------------------------------------------
+
+
+def _cc_pairs(spark, id_type):
+    """40-node chain, a 5-clique and an isolated pair, with the edges
+    of the chain pointing both ways; string ids are zero-padded so
+    their order is the numeric one."""
+    edges = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(39)]
+    edges += [(a, b) for a in range(100, 105) for b in range(a + 1, 105)]
+    edges += [(201, 200)]
+    if id_type == "string":
+        edges = [(f"{a:04d}", f"{b:04d}") for a, b in edges]
+    return spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_id_types(spark, id_type):
+    out = connected_components(_cc_pairs(spark, id_type)).collect()
+    expect = {i: 0 for i in range(40)}
+    expect.update({i: 100 for i in range(100, 105)})
+    expect.update({200: 200, 201: 200})
+    assert {int(r.id): int(r.comp) for r in out} == expect
+
+
+def test_connected_components_raises_at_round_cap(spark):
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(_cc_pairs(spark, "long"), max_iter=1)
