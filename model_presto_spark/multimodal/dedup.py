@@ -170,6 +170,8 @@ def image_dup_pairs(
             f"pigeonhole guarantee needs bands > max_hamming "
             f"(got {bands} <= {max_hamming})"
         )
+    from model_presto_spark.operators.dedup import _pairs_within_sql
+
     hashed = image_phash(media)
     width = 64 // bands
     mask = (1 << width) - 1
@@ -197,31 +199,13 @@ def image_dup_pairs(
         )
         .filter(F.size("ms") > 1)
     )
-    ms = F.col("ms")
-    pairs = F.flatten(
-        F.transform(
-            ms,
-            lambda a, i: F.filter(
-                F.transform(
-                    F.slice(ms, i + 2, F.greatest(F.size(ms), F.lit(1))),
-                    lambda b: F.struct(
-                        a["id"].alias("id_a"),
-                        b["id"].alias("id_b"),
-                        F.bit_count(
-                            a["phash"].bitwiseXOR(b["phash"])
-                        ).alias("hamming"),
-                    ),
-                ),
-                lambda p: p["hamming"] <= F.lit(max_hamming),
-            ),
-        )
+    hamming = "bit_count({a}.phash ^ {b}.phash)"
+    pairs = _pairs_within_sql(
+        "ms", ".id", (f"{hamming} AS hamming",),
+        where=f"{hamming} <= {int(max_hamming)}",
     )
     return (
-        buckets.select(F.explode_outer(pairs).alias("pr"))
-        .select(
-            F.col("pr.id_a").alias("id_a"),
-            F.col("pr.id_b").alias("id_b"),
-            F.col("pr.hamming").alias("hamming"),
-        )
+        buckets.selectExpr(f"explode_outer({pairs}) AS pr")
+        .selectExpr("pr.id_a AS id_a", "pr.id_b AS id_b", "pr.hamming AS hamming")
         .distinct()
     )

@@ -1,18 +1,31 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all shuffle-frugal by construction:
+Exact dedup is one hash-groupBy on a normalized 60-bit fingerprint:
+one shuffle of (key, id) pairs, never document bodies. Every
+near-duplicate generator (MinHash LSH, n-gram Jaccard, shingle
+containment, and the image/video twins in multimodal/dedup.py) is
+built from one candidate core of plain relational steps, each
+defined once as SQL text:
 
-- **Exact**: hash-groupBy on a normalized fingerprint. One shuffle of
-  (60-bit key, id) pairs, never document bodies.
-- **MinHash + LSH**: shingle → O(num_hashes) signature per doc →
-  band keys → bucket equi-join for candidates → exact Jaccard verify
-  on the candidates only. The bucket join is the scale path: no
-  O(n²) pair enumeration; skewed buckets are split by AQE.
-- **SimHash**: 60-bit signature; near-dup candidates share a band of
-  the signature (Hamming-style blocking).
-- **n-gram Jaccard**: inverted-index join (explode n-grams → postings
-  → pairs within a posting), with a document-frequency cutoff so
-  stop-grams don't explode the join.
+- **Band stage** (``_band_candidates``): MinHash signature → exploded
+  band keys → groupBy(band, bucket) into a sorted member array →
+  in-bucket pairs → dropDuplicates. Members are bare ids, or
+  (id, sig) structs when a signature screen drops pairs whose
+  Jaccard estimate is too low inside the bucket row. Used by
+  ``minhash_lsh_pairs`` and containment ``candidates="lsh"``.
+- **Pair expansion** (``_pairs_within_sql``, ``_chain_pairs_sql``):
+  every (id_a < id_b) pair of a bucket, or the consecutive chain for
+  a mega-bucket, with optional struct fields and a per-pair
+  predicate. Each caller keeps its own cap rule.
+- **n-gram index** (``_ngram_index``, ``_rare_first_docs``): hashed
+  distinct grams, sizes and postings; per-doc eligible grams in
+  global rare-first order for the prefix-filter generators, whose
+  candidates share one exact verify join (``_verify_join``).
+
+No generator enumerates O(n²) pairs: candidates come from bucket or
+posting co-membership and are verified exactly, so precision never
+depends on the generator. SimHash signatures, span dedup (Lee et
+al.), winnowing and SemDeDup round out the families.
 
 Reference: the reference system has no dedup (its records are keyed
 by construction); these operators extend the engine for the
@@ -47,36 +60,136 @@ from model_presto_spark.functions.text import (
 )
 
 
-def _pairs_within_sql(ids: str) -> str:
-    """All (id_a < id_b) pairs from a sorted id array — the in-bucket
-    pair generator for inverted-index / LSH-bucket candidate mining."""
+def _pair_struct_sql(a: str, b: str, key: str, extra: tuple[str, ...]) -> str:
+    fields = [f"{a}{key} AS id_a", f"{b}{key} AS id_b"]
+    fields += [f.format(a=a, b=b) for f in extra]
+    return f"struct({', '.join(fields)})"
+
+
+def _pairs_within_sql(
+    ids: str, key: str = "", extra: tuple[str, ...] = (), where: str | None = None
+) -> str:
+    """All (id_a < id_b) pairs from a sorted member array — the in-bucket
+    pair generator for inverted-index / LSH-bucket candidate mining.
+
+    Members are bare ids, or structs whose ``key`` field (``".id"``)
+    is the id and sorts first. ``extra`` adds pair-struct fields and
+    ``where`` keeps only the pairs it holds for; both are SQL over the
+    members ``{a}`` and ``{b}``. The predicate runs before the struct
+    is built, so a rejected pair builds nothing: a bucket's random
+    collisions stay codegen CPU inside the bucket row and never
+    become rows."""
+    bs = f"slice({ids}, i + 2, greatest(size({ids}), 1))"
+    if where is not None:
+        bs = f"filter({bs}, b -> {where.format(a='a', b='b')})"
     return (
         f"flatten(transform({ids}, (a, i) -> "
-        f"transform(slice({ids}, i + 2, greatest(size({ids}), 1)), "
-        f"b -> struct(a AS id_a, b AS id_b))))"
+        f"transform({bs}, b -> {_pair_struct_sql('a', 'b', key, extra)})))"
     )
 
 
-def _chain_pairs_sql(ids: str) -> str:
-    """Consecutive (id_a < id_b) pairs from a sorted id array — O(d)
+def _chain_pairs_sql(ids: str, key: str = "", extra: tuple[str, ...] = ()) -> str:
+    """Consecutive (id_a < id_b) pairs from a sorted member array — O(d)
     edges that connect the same membership a full O(d²) pair set
     would, relying on transitive closure (operators/graph.py) for the
     cluster. The mega-bucket guard: a bucket of thousands of ids
     means thousands of near-identical documents, where enumerating
-    every pair is pure waste."""
+    every pair is pure waste. ``key``/``extra`` as in
+    ``_pairs_within_sql``; chain pairs take no predicate (they exist
+    for cluster recovery)."""
+    b = f"element_at({ids}, i + 2)"
     return (
         f"transform(slice({ids}, 1, size({ids}) - 1), (a, i) -> "
-        f"struct(a AS id_a, element_at({ids}, i + 2) AS id_b))"
+        f"{_pair_struct_sql('a', b, key, extra)})"
     )
 
 
-def _bucket_pairs_sql(ids: str, max_bucket_size: int) -> str:
-    """In-bucket candidate pairs: every pair up to ``max_bucket_size``
-    members, the consecutive chain above it."""
+def _bucket_pairs_sql(
+    ids: str, max_bucket_size: int, key: str = "", where: str | None = None
+) -> str:
+    """In-bucket candidate pairs: every pair (that ``where`` keeps) up
+    to ``max_bucket_size`` members, the consecutive chain above it."""
     return (
         f"CASE WHEN size({ids}) <= {int(max_bucket_size)} "
-        f"THEN {_pairs_within_sql(ids)} "
-        f"ELSE {_chain_pairs_sql(ids)} END"
+        f"THEN {_pairs_within_sql(ids, key, where=where)} "
+        f"ELSE {_chain_pairs_sql(ids, key)} END"
+    )
+
+
+def _band_candidates(
+    sig: DataFrame,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int,
+    screen: float | None = None,
+) -> DataFrame:
+    """The band stage: (id_a, id_b) pairs of documents whose MinHash
+    signatures (``sig``: id, sig) agree on every row of some band.
+
+    The stage shuffles only (band, bucket, member) — never document
+    bodies. Pairs are generated by grouping members per bucket rather
+    than a self-join: a self-join would recompute the whole signature
+    subtree for both sides (Spark does no cross-branch CSE) and
+    shuffle it twice; groupBy computes signatures once and shuffles
+    once. Bucket membership is tiny, so collect_list is safe; a
+    pathological mega-bucket means a massive near-dup cluster and
+    surfaces in AQE skew stats, not OOM. ``max_bucket_size`` caps
+    members: a larger bucket emits its consecutive chain.
+
+    Members are bare ids when ``screen`` is None. Otherwise they are
+    (id, sig) structs and a pair survives only when its signatures
+    agree on at least ``screen * num_hashes`` positions — the Jaccard
+    estimate, checked inside the bucket row.
+    """
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands must be between 1 and num_hashes={num_hashes}: {bands}"
+        )
+    rows_per_band = num_hashes // bands
+    cols = ["id"] if screen is None else ["id", "sig"]
+    # explode_outer: a plain explode gets an inferred size(...)>0
+    # pre-filter that re-evaluates the generator's whole expression
+    # tree a second time per row (here the band keys and the minhash
+    # fold; at the pair expansion below the O(d^2) pair array). Both
+    # arrays are never empty: band arrays by construction, pair
+    # arrays because buckets are filtered size>1.
+    banded = sig.selectExpr(
+        *cols,
+        f"explode_outer({lsh_band_keys_sql('sig', bands, rows_per_band)}) AS bk",
+    ).selectExpr("bk.band AS band", "bk.bucket AS bucket", *cols)
+    # a struct sorts field-lexicographically; id first => id order
+    member = "id" if screen is None else "struct(id, sig)"
+    buckets = (
+        banded.groupBy("band", "bucket")
+        .agg(F.expr(f"array_sort(collect_list({member})) AS ids"))
+        .where("size(ids) > 1")
+    )
+    if screen is None:
+        pair_arr = _bucket_pairs_sql("ids", max_bucket_size)
+    else:
+        k_min = float(screen) * num_hashes - 1e-9
+        matches = (
+            "aggregate(zip_with({a}.sig, {b}.sig, "
+            "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, v) -> acc + v)"
+        )
+        pair_arr = _bucket_pairs_sql(
+            "ids",
+            max_bucket_size,
+            key=".id",
+            where=f"CAST({matches} AS DOUBLE) >= CAST({k_min!r} AS DOUBLE)",
+        )
+    # spread the bucket rows before the pair expansion: the bucket
+    # aggregation's shuffle output is tiny in BYTES (a few thousand
+    # rows of band/bucket/id-array), so AQE coalesces its read to
+    # ~1 partition — and the C(d,2) Generate plus the dedup
+    # partial-aggregate downstream would run on that one core (the
+    # generator-side twin of the r07 verify-stream collapse). One
+    # skinny shuffle of the bucket rows buys full-width expansion.
+    return (
+        spread(buckets)
+        .selectExpr(f"explode_outer({pair_arr}) AS pr")
+        .selectExpr("pr.id_a AS id_a", "pr.id_b AS id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -105,7 +218,6 @@ def minhash_lsh_pairs(
     max_bucket_size: int = 2000,
     signature_screen: float | None | str = "auto",
     auto_min_docs: int = 20000,
-    approx_docs: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash LSH, verified with
     exact Jaccard over shingle sets.
@@ -123,9 +235,6 @@ def minhash_lsh_pairs(
     land on the sublinear path. Pass ``signature_screen=None``
     explicitly where exact candidate semantics are contractual
     (the q32/q169 oracles), or a float to pin the screen level.
-    ``approx_docs`` is a caller-supplied corpus-size hint that skips
-    the probe job (pipelines often already know the count); routing
-    is identical either way.
 
     ``signature_screen`` as a float (explicit scale knob): estimate
     Jaccard from the ALREADY-computed MinHash signatures (fraction of
@@ -175,14 +284,12 @@ def minhash_lsh_pairs(
                 f"signature_screen must be 'auto', None, or a float: "
                 f"{signature_screen!r}"
             )
-        # ``approx_docs`` (caller-supplied size hint, e.g. from a
-        # pipeline that already counted) skips the probe job entirely;
-        # otherwise one cheap count-only job — no text materialization,
-        # and at corpus scale its cost is noise next to the n²
-        # candidate flood it prevents. Note the probe re-runs the
-        # upstream lineage; pass the hint (or persist upstream) when
-        # ``df`` is an expensive derived relation.
-        n_docs = approx_docs if approx_docs is not None else df.count()
+        # One cheap count-only job — no text materialization, and at
+        # corpus scale its cost is noise next to the n² candidate
+        # flood it prevents. The probe re-runs the upstream lineage;
+        # persist upstream when ``df`` is an expensive derived
+        # relation.
+        n_docs = df.count()
         if n_docs >= auto_min_docs:
             signature_screen = max(0.0, threshold - 0.25)
             _LOG.info(
@@ -196,7 +303,6 @@ def minhash_lsh_pairs(
             )
         else:
             signature_screen = None
-    rows_per_band = num_hashes // bands
     # Spread rows first: shingling + hashing are CPU-bound and must
     # not inherit a small scan's partitioning (io.spread docstring).
     # lower(text) materialized next: char_shingles_sql references it
@@ -228,118 +334,9 @@ def minhash_lsh_pairs(
     sig = sh.selectExpr(
         "id", f"{minhash_signature_sql('hs', num_hashes)} AS sig"
     )
-    # The band stage shuffles only (band, bucket, id) — never shingle
-    # bodies. Pairs are generated by grouping ids per bucket rather
-    # than a self-join: a self-join would recompute the whole
-    # signature subtree for both sides (Spark does no cross-branch
-    # CSE) and shuffle it twice; groupBy computes signatures once and
-    # shuffles once. Bucket membership is tiny (ids only), so
-    # collect_list is safe; a pathological mega-bucket means a massive
-    # near-dup cluster and surfaces in AQE skew stats, not OOM.
-    # explode_outer: a plain explode gets an inferred size(...)>0
-    # pre-filter that re-evaluates band keys + the 16-seed minhash
-    # fold a second time per row; band arrays are never empty.
-    if signature_screen is None:
-        banded = sig.selectExpr(
-            "id",
-            f"explode_outer({lsh_band_keys_sql('sig', bands, rows_per_band)})"
-            f" AS bk",
-        ).selectExpr("bk.band AS band", "bk.bucket AS bucket", "id")
-        buckets = (
-            banded.groupBy("band", "bucket")
-            .agg(F.expr("array_sort(collect_list(id)) AS ids"))
-            .where("size(ids) > 1")
-        )
-        # explode_outer: skip the inferred size>0 filter that would
-        # build the O(d^2) pair array twice (buckets are filtered
-        # size>1, so the pair array is never empty).
-        pair_arr = _bucket_pairs_sql("ids", max_bucket_size)
-        # spread the bucket rows before the pair expansion: the bucket
-        # aggregation's shuffle output is tiny in BYTES (a few thousand
-        # rows of band/bucket/id-array), so AQE coalesces its read to
-        # ~1 partition — and the C(d,2) Generate plus the dedup
-        # partial-aggregate downstream would run on that one core (the
-        # generator-side twin of the r07 verify-stream collapse). One
-        # skinny shuffle of the bucket rows buys full-width expansion.
-        cand = (
-            spread(buckets)
-            .selectExpr(f"explode_outer({pair_arr}) AS pr")
-            .selectExpr("pr.id_a AS id_a", "pr.id_b AS id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        # Screened path: buckets carry (id, sig) structs and the
-        # C(d,2) expansion filters on the signature estimate INSIDE
-        # the bucket row — pure codegen CPU, no row materialization
-        # for the random-collision flood. Mega-buckets still emit
-        # chain pairs (cluster recovery via CC, same cap semantics).
-        banded = sig.select(
-            "id",
-            "sig",
-            F.explode_outer(
-                F.expr(lsh_band_keys_sql("sig", bands, rows_per_band))
-            ).alias("bk"),
-        ).select(
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
-            "id",
-            "sig",
-        )
-        buckets = (
-            banded.groupBy("band", "bucket")
-            .agg(
-                # struct sorts field-lexicographic; id first => id order
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("id"), F.col("sig")))
-                ).alias("ms")
-            )
-            .filter(F.size("ms") > 1)
-        )
-        ms = F.col("ms")
-        k_min = F.lit(float(signature_screen) * num_hashes - 1e-9)
-        match_pairs = F.flatten(
-            F.transform(
-                ms,
-                lambda a, i: F.filter(
-                    F.transform(
-                        F.slice(ms, i + 2, F.greatest(F.size(ms), F.lit(1))),
-                        lambda b: F.struct(
-                            a["id"].alias("id_a"),
-                            b["id"].alias("id_b"),
-                            F.aggregate(
-                                F.zip_with(
-                                    a["sig"],
-                                    b["sig"],
-                                    lambda x, y: F.when(x == y, 1).otherwise(0),
-                                ),
-                                F.lit(0),
-                                lambda acc, v: acc + v,
-                            ).alias("m"),
-                        ),
-                    ),
-                    lambda p: p["m"].cast("double") >= k_min,
-                ),
-            )
-        )
-        chain = F.transform(
-            F.slice(ms, 1, F.size(ms) - 1),
-            lambda a, i: F.struct(
-                a["id"].alias("id_a"),
-                F.element_at(ms, i + 2)["id"].alias("id_b"),
-                F.lit(num_hashes).alias("m"),
-            ),
-        )
-        pair_arr = F.when(F.size(ms) <= max_bucket_size, match_pairs).otherwise(
-            chain
-        )
-        # same generator-side spread as the unscreened path — the
-        # in-bucket signature-screen comparisons are exactly the CPU
-        # work that must not run on an AQE-coalesced single partition
-        cand = (
-            spread(buckets).select(F.explode_outer(pair_arr).alias("pr"))
-            .select(F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    cand = _band_candidates(
+        sig, num_hashes, bands, max_bucket_size, screen=signature_screen
+    )
     # Fetch shingle-hash sets back only for surviving candidate pairs.
     sh_a = sh.toDF("id_a", "sh_a")
     sh_b = sh.toDF("id_b", "sh_b")
@@ -370,6 +367,109 @@ def simhash_signatures(
     )
     return hashed.select(
         F.col(id_col), simhash60_from_hashes("hashes").alias("simhash")
+    )
+
+
+def _ngram_index(
+    df: DataFrame, id_col: str, text_col: str, n: int, fast_hash: bool
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The inverted index both n-gram generators start from: per-doc
+    distinct hashed word n-grams ``grams`` (id, grams), their count
+    ``sizes`` (id, n_grams) and the postings (id, gram)."""
+    # Postings carry h60(gram), not the gram string: 8-byte shuffle
+    # keys for the inverted-index join (hash collisions are shared by
+    # any engine using the same md5-derived hash, so counts agree).
+    # Tokens materialized first — see char_shingles_sql inlining caveat.
+    toksed = spread(df).selectExpr(
+        f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
+    )
+    grams = toksed.selectExpr(
+        "id",
+        f"array_distinct("
+        f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
+        f" AS grams",
+    )
+    # grams feeds posting + sizes (and the LSH signature in the
+    # containment lsh modes) — persisted for the same reason as the
+    # shingle-hash set in minhash_lsh_pairs: the tokenize+ngram+hash
+    # pass (the dominant linear cost) would otherwise run per branch.
+    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    sizes = grams.selectExpr("id", "size(grams) AS n_grams")
+    posting = grams.selectExpr("id", "explode(grams) AS gram")
+    return grams, sizes, posting
+
+
+def _rare_first_docs(
+    posting: DataFrame, sizes: DataFrame, max_doc_freq: int
+) -> DataFrame:
+    """Per doc: its pair-eligible grams in global rare-first (df, gram)
+    order (``eg``) plus its TOTAL distinct-gram count (``n_grams`` —
+    the Jaccard and containment denominators include stop/unique
+    grams). Lazily checkpointed: it feeds the prefix postings and
+    both verify sides."""
+    # document frequency via ONE shuffle on the gram hash; keep only
+    # pair-eligible grams (df=1 can never be shared, df>max_doc_freq
+    # is the stop-gram cutoff)
+    wg = Window.partitionBy("gram")
+    elig = posting.withColumn("df", F.count(F.lit(1)).over(wg)).where(
+        f"df >= 2 AND df <= {int(max_doc_freq)}"
+    )
+    edoc = (
+        elig.groupBy("id")
+        .agg(F.expr("sort_array(collect_list(struct(df, gram))) AS eg"))
+        .join(sizes, "id")
+        .selectExpr("id", "transform(eg, s -> s.gram) AS eg", "n_grams")
+    )
+    return edoc.localCheckpoint(eager=False)
+
+
+def _required_overlap_sql(threshold: float) -> str:
+    """The overlap a doc of ``n_grams`` grams needs: the smallest
+    integer >= t*n. floor(t*n - eps)+1 instead of ceil(t*n): when t*n
+    floats just ABOVE an exact integer (0.6*35 = 21.000000000000004),
+    ceil would demand one extra shared gram and shorten the prefix
+    below the lemma's bound — a missed-pair correctness bug, not a
+    perf detail."""
+    return (
+        f"CAST(FLOOR(CAST({float(threshold)!r} AS DOUBLE) * "
+        f"CAST(n_grams AS DOUBLE) - CAST(1e-09 AS DOUBLE)) AS INT) + 1"
+    )
+
+
+def _verify_join(cand: DataFrame, edoc: DataFrame) -> DataFrame:
+    """Candidate pairs (id_a, id_b) joined to both docs' eligible gram
+    arrays and total counts (g_a, n_a, g_b, n_b) for exact scoring."""
+    ga, gb = (
+        edoc.selectExpr(f"id AS id_{s}", f"eg AS g_{s}", f"n_grams AS n_{s}")
+        for s in "ab"
+    )
+    # spread the pair stream before the verify joins: its shuffle
+    # output is small in BYTES (two ids/row) so AQE coalesces it to a
+    # few partitions, and the per-pair array_intersect work downstream
+    # would run on those few cores (the q494 pathology, measured 6x
+    # there) — one skinny re-shuffle buys full-width verify. Regime
+    # note: this guard targets the BROADCAST regime (gram sides small
+    # enough for AQE to convert — where the pair stream's partitioning
+    # IS the verify stage's). When both joins stay sort-merge, the
+    # join's own hashpartitioning(id_a) exchange supersedes the
+    # RoundRobin one (the spread is then a redundant-but-cheap skinny
+    # shuffle) and AQE sizes the verify stage from the FAT gram-side
+    # shuffle bytes, which keeps it wide without our help — so both
+    # regimes end up parallel; the spread exists for the one AQE
+    # would otherwise collapse.
+    return spread(cand).join(ga, "id_a").join(gb, "id_b")
+
+
+def _bound_common_sql(score: str) -> str:
+    """A verified pair's ``score`` over its shared-gram count ``i``.
+    n_common = size(array_intersect(g_a, g_b)) is bound ONCE as an
+    aggregate input: a plain projection over it carries one
+    array_intersect subtree per use, and the threshold filter's
+    pushdown copies them into the join condition (see
+    functions.text.jaccard_sql — measured 6 intersect evals/pair)."""
+    return (
+        "aggregate(array(size(array_intersect(g_a, g_b))), "
+        f"CAST(0.0 AS DOUBLE), (acc, i) -> {score})"
     )
 
 
@@ -424,25 +524,7 @@ def ngram_jaccard_pairs(
         candidates = "prefix" if threshold >= 0.5 else "bucket"
     if candidates not in ("bucket", "prefix"):
         raise ValueError(f"candidates must be bucket|prefix|auto: {candidates}")
-    # Postings carry h60(gram), not the gram string: 8-byte shuffle
-    # keys for the inverted-index join (hash collisions are shared by
-    # any engine using the same md5-derived hash, so counts agree).
-    # Tokens materialized first — see char_shingles_sql inlining caveat.
-    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
-    toksed = spread(df).selectExpr(
-        f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
-    )
-    grams = toksed.selectExpr(
-        "id",
-        f"array_distinct("
-        f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
-        f" AS grams",
-    )
-    # Feeds the posting explode plus the size lookup; see the
-    # equivalent persist note in minhash_lsh_pairs.
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = grams.select("id", F.size("grams").alias("n_grams"))
-    posting = grams.select("id", F.explode("grams").alias("gram"))
+    grams, sizes, posting = _ngram_index(df, id_col, text_col, n, fast_hash)
     if candidates == "bucket":
         # One shuffle: group ids per gram (the inverted index). The
         # document-frequency cutoff drops stop-grams before any pair
@@ -453,12 +535,8 @@ def ngram_jaccard_pairs(
             .where(f"size(ids) > 1 AND size(ids) <= {int(max_doc_freq)}")
         )
         common = (
-            # explode_outer: same inferred-filter double-compute guard
-            # as the minhash candidate stage. spread: the C(df,2) pair
-            # Generate and the co-occurrence count's partial aggregate
-            # must not run on the AQE-coalesced (tiny-bytes) read of
-            # the inverted-index shuffle — see the minhash candidate
-            # stage note.
+            # explode_outer and the spread: as in the band stage
+            # (_band_candidates)
             spread(buckets)
             .selectExpr(f"explode_outer({_pairs_within_sql('ids')}) AS pr")
             .groupBy(
@@ -479,36 +557,8 @@ def ngram_jaccard_pairs(
             )
             .where(f"jaccard_sim >= CAST({threshold!r} AS DOUBLE)")
         )
-    wg = Window.partitionBy("gram")
-    elig = posting.withColumn("df", F.count(F.lit(1)).over(wg)).filter(
-        (F.col("df") >= 2) & (F.col("df") <= max_doc_freq)
-    )
-    edoc = (
-        elig.groupBy("id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("gram")))
-            ).alias("eg")
-        )
-        .join(sizes, "id")
-        .select(
-            "id",
-            F.transform("eg", lambda s: s["gram"]).alias("eg"),
-            "n_grams",
-        )
-    )
-    # feeds prefix postings and both verify sides
-    edoc = edoc.localCheckpoint(eager=False)
-    # required overlap w.r.t. this doc: smallest integer >= t*n —
-    # floor(t*n - eps)+1, not ceil (same float-edge reasoning as
-    # ngram_containment_pairs).
-    req = (
-        F.floor(
-            F.lit(float(threshold)) * F.col("n_grams").cast("double")
-            - F.lit(1e-9)
-        ).cast("int")
-        + 1
-    )
+    edoc = _rare_first_docs(posting, sizes, max_doc_freq)
+    req = F.expr(_required_overlap_sql(threshold))
     pre_len = F.size("eg") - req + 1
     pre = edoc.select(
         F.col("id").alias("id_x"),
@@ -546,46 +596,11 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    ga = edoc.select(
-        F.col("id").alias("id_a"), F.col("eg").alias("g_a"),
-        F.col("n_grams").alias("n_a"),
-    )
-    gb = edoc.select(
-        F.col("id").alias("id_b"), F.col("eg").alias("g_b"),
-        F.col("n_grams").alias("n_b"),
-    )
-    n_common = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
-    # spread the pair stream before the verify joins: its shuffle
-    # output is small in BYTES (two ids/row) so AQE coalesces it to a
-    # few partitions, and the per-pair array_intersect work downstream
-    # would run on those few cores (the q494 pathology, measured 6x
-    # there) — one skinny re-shuffle buys full-width verify. Regime
-    # note: this guard targets the BROADCAST regime (gram sides small
-    # enough for AQE to convert — where the pair stream's partitioning
-    # IS the verify stage's). When both joins stay sort-merge, the
-    # join's own hashpartitioning(id_a) exchange supersedes the
-    # RoundRobin one (the spread is then a redundant-but-cheap skinny
-    # shuffle) and AQE sizes the verify stage from the FAT gram-side
-    # shuffle bytes, which keeps it wide without our help — so both
-    # regimes end up parallel; the spread exists for the one AQE
-    # would otherwise collapse.
-    # n_common bound ONCE as an aggregate input: a plain
-    # inter/(na+nb-inter) projection carries two array_intersect
-    # subtrees, and the threshold filter's pushdown copies them into
-    # the join condition (see functions.text.jaccard — measured 6
-    # intersect evals/pair there). Same int-subtract-then-cast
-    # arithmetic as before, so results are bit-identical.
-    jac = F.aggregate(
-        F.array(n_common),
-        F.lit(0.0),
-        lambda _, i: i.cast("double")
-        / (F.col("n_a") + F.col("n_b") - i).cast("double"),
-    )
+    jac = _bound_common_sql("CAST(i AS DOUBLE) / CAST(n_a + n_b - i AS DOUBLE)")
     return (
-        spread(cand).join(ga, "id_a")
-        .join(gb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard_sim"))
-        .filter(F.col("jaccard_sim") >= threshold)
+        _verify_join(cand, edoc)
+        .selectExpr("id_a", "id_b", f"{jac} AS jaccard_sim")
+        .where(f"jaccard_sim >= CAST({threshold!r} AS DOUBLE)")
     )
 
 
@@ -766,9 +781,6 @@ def dedup_corpus(
             fast_hash=fast_hash, **kwargs,
         )
     elif method == "ngram":
-        # ngram_jaccard_pairs routes by threshold, not corpus size —
-        # it has no probe job, so the size hint is irrelevant there
-        kwargs.pop("approx_docs", None)
         pairs = ngram_jaccard_pairs(
             df, id_col, text_col, threshold=threshold,
             fast_hash=fast_hash, **kwargs,
@@ -936,10 +948,8 @@ def containment_auto_route(
     text_col: str,
     n: int = 3,
     auto_min_docs: int = 20000,
-    approx_docs: int | None = None,
     skew_ratio_floor: float = 0.30,
     ensemble_min_docs: int = 100_000,
-    approx_gram_ratio: float | None = None,
 ) -> str:
     """Routing decision for ``ngram_containment_pairs(candidates=
     "auto")``: returns ``"index"``, ``"lsh"``, or ``"lsh_ensemble"``.
@@ -976,28 +986,18 @@ def containment_auto_route(
     routing decision logs an INFO line with the measured ratio.
 
     Cost: one agg job (count + conditional min + max of the token
-    count); zero jobs when ``approx_docs`` already rules the corpus
-    under ``auto_min_docs``, or when BOTH ``approx_docs`` and
-    ``approx_gram_ratio`` (caller-supplied min/max gram-count ratio
-    bound) are given. The probe re-runs the upstream lineage — pass
-    the hints or persist upstream when ``df`` is an expensive
-    derived relation.
+    count). The probe re-runs the upstream lineage — persist upstream
+    when ``df`` is an expensive derived relation.
     """
-    if approx_docs is not None and approx_docs < auto_min_docs:
-        return "index"  # size hint: no probe job at all
-    if approx_docs is not None and approx_gram_ratio is not None:
-        n_docs, ratio = approx_docs, approx_gram_ratio
-    else:
-        toks = F.expr(f"size({tokens_sql(text_col)})")
-        gcnt = toks - n + 1
-        probe = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(toks >= n, gcnt)).alias("lo"),
-            F.max(F.when(toks >= n, gcnt)).alias("hi"),
-        ).first()
-        n_docs = approx_docs if approx_docs is not None else probe["n"]
-        lo, hi = probe["lo"], probe["hi"]
-        ratio = (lo / hi) if lo and hi else 1.0
+    toks = F.expr(f"size({tokens_sql(text_col)})")
+    gcnt = toks - n + 1
+    probe = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.when(toks >= n, gcnt)).alias("lo"),
+        F.max(F.when(toks >= n, gcnt)).alias("hi"),
+    ).first()
+    n_docs, lo, hi = probe["n"], probe["lo"], probe["hi"]
+    ratio = (lo / hi) if lo and hi else 1.0
     if n_docs < auto_min_docs:
         return "index"
     if ratio < skew_ratio_floor:
@@ -1056,11 +1056,9 @@ def ngram_containment_pairs(
     bands: int = 64,
     max_bucket_size: int = 2000,
     auto_min_docs: int = 20000,
-    approx_docs: int | None = None,
     skew_ratio_floor: float = 0.30,
     max_gap: int = 4,
     ensemble_min_docs: int = 100_000,
-    approx_gram_ratio: float | None = None,
     ensemble_screen: float | None | str = "auto",
 ) -> DataFrame:
     """Shingle-CONTAINMENT near-dup pairs (Broder's second measure).
@@ -1079,8 +1077,7 @@ def ngram_containment_pairs(
     arrays), so PRECISION is exact in both modes. ``candidates``
     picks the generator; the DEFAULT ``"auto"`` routes by corpus
     size AND length skew via ``containment_auto_route`` (ONE probe
-    job; skipped entirely when ``approx_docs`` says the corpus is
-    under ``auto_min_docs``):
+    job):
 
     - under ``auto_min_docs`` docs → ``"index"`` (exact recall is
       free at that size);
@@ -1184,64 +1181,21 @@ def ngram_containment_pairs(
             text_col,
             n=n,
             auto_min_docs=auto_min_docs,
-            approx_docs=approx_docs,
             skew_ratio_floor=skew_ratio_floor,
             ensemble_min_docs=ensemble_min_docs,
-            approx_gram_ratio=approx_gram_ratio,
         )
     if candidates not in ("index", "lsh", "lsh_ensemble"):
         raise ValueError(
             f"candidates must be 'index', 'lsh', 'lsh_ensemble', or "
             f"'auto': {candidates}"
         )
-    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
-    toksed = spread(df).selectExpr(
-        f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
-    )
-    grams = toksed.selectExpr(
-        "id",
-        f"array_distinct("
-        f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
-        f" AS grams",
-    )
-    # grams feeds posting + sizes (and the LSH signature in lsh mode)
-    # — Spark has no cross-branch CSE, so without a persist the
-    # tokenize+ngram+hash pass (the dominant linear cost) runs once
-    # per branch.
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = grams.select("id", F.size("grams").alias("n_grams"))
-    posting = grams.select("id", F.explode("grams").alias("gram"))
-    # document frequency via ONE shuffle on the gram hash; keep only
-    # pair-eligible grams (df=1 can never be shared, df>max_doc_freq
-    # is the stop-gram cutoff — same semantics as the bucket filter
-    # the previous version applied).
-    wg = Window.partitionBy("gram")
-    elig = posting.withColumn("df", F.count(F.lit(1)).over(wg)).filter(
-        (F.col("df") >= 2) & (F.col("df") <= max_doc_freq)
-    )
-    # per doc: eligible grams in global rare-first (df, gram) order,
-    # plus the doc's TOTAL distinct-gram count (the containment
-    # denominator includes stop/unique grams).
-    edoc = (
-        elig.groupBy("id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("gram")))
-            ).alias("eg")
-        )
-        .join(sizes, "id")
-        .select(
-            "id",
-            F.transform("eg", lambda s: s["gram"]).alias("eg"),
-            "n_grams",
-        )
-    )
-    # feeds prefix postings, full postings, and both verify sides
-    edoc = edoc.localCheckpoint(eager=False)
+    grams, sizes, posting = _ngram_index(df, id_col, text_col, n, fast_hash)
+    edoc = _rare_first_docs(posting, sizes, max_doc_freq)
     if candidates == "lsh":
-        cand = _containment_lsh_candidates(
-            grams, num_hashes, bands, max_bucket_size
+        sig = grams.selectExpr(
+            "id", f"{minhash_signature_sql('grams', num_hashes)} AS sig"
         )
+        cand = _band_candidates(sig, num_hashes, bands, max_bucket_size)
         return _containment_verify(cand, edoc, threshold)
     if candidates == "lsh_ensemble":
         if isinstance(ensemble_screen, str):
@@ -1260,18 +1214,7 @@ def ngram_containment_pairs(
             screen=ensemble_screen,
         )
         return _containment_verify(cand, edoc, threshold)
-    # required overlap c = smallest integer >= t*n. floor(t*n - eps)+1
-    # instead of ceil(t*n): when t*n floats just ABOVE an exact
-    # integer (0.6*35 = 21.000000000000004), ceil would demand one
-    # extra shared gram and shorten the prefix below the lemma's
-    # bound — a missed-pair correctness bug, not a perf detail.
-    req = (
-        F.floor(
-            F.lit(float(threshold)) * F.col("n_grams").cast("double")
-            - F.lit(1e-9)
-        ).cast("int")
-        + 1
-    )
+    req = F.expr(_required_overlap_sql(threshold))
     pre_len = F.size("eg") - req + 1
     # Candidate generation with positional filtering (PPJoin's second
     # filter, adapted to containment): every qualifying pair has a
@@ -1315,36 +1258,6 @@ def ngram_containment_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     return _containment_verify(cand, edoc, threshold)
-
-
-def _containment_lsh_candidates(
-    grams: DataFrame, num_hashes: int, bands: int, max_bucket_size: int
-) -> DataFrame:
-    """MinHash-banded candidate pairs over per-doc gram-hash arrays
-    (2 rows per band): the corpus-density-independent generator for
-    ``ngram_containment_pairs(candidates='lsh')``."""
-    rows_per_band = max(num_hashes // bands, 1)
-    sig = grams.selectExpr(
-        "id", f"{minhash_signature_sql('grams', num_hashes)} AS sig"
-    )
-    banded = sig.select(
-        "id",
-        F.explode_outer(
-            F.expr(lsh_band_keys_sql("sig", bands, rows_per_band))
-        ).alias("bk"),
-    ).select(F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"), "id")
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    pair_arr = F.expr(_bucket_pairs_sql("ids", max_bucket_size))
-    # generator-side spread: see the minhash candidate stage note
-    return (
-        spread(buckets).select(F.explode_outer(pair_arr).alias("pr"))
-        .select(F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
 
 
 def _ensemble_band_plan(
@@ -1451,95 +1364,68 @@ def _containment_ensemble_candidates(
     families: dict[tuple[int, int], list[int]] = {}
     for g, b, r in plan:
         families.setdefault((b, r), []).append(g)
-    sized = grams.filter(F.size("grams") > 0).select(
+    sig = grams.where("size(grams) > 0").selectExpr(
         "id",
-        "grams",
-        F.size("grams").alias("ng"),
-        F.floor(
-            F.log2(F.size("grams").cast("double")) + F.lit(1e-12)
-        )
-        .cast("int")
-        .alias("bkt"),
-    )
-    sig = sized.select(
-        "id",
-        "bkt",
-        "ng",
-        F.expr(minhash_signature_sql("grams", num_hashes)).alias("sig"),
+        "CAST(FLOOR(log2(CAST(size(grams) AS DOUBLE)) + CAST(1e-12 AS DOUBLE)) "
+        "AS INT) AS bkt",
+        "size(grams) AS ng",
+        f"{minhash_signature_sql('grams', num_hashes)} AS sig",
     # the num_hashes-minima fold feeds one key branch per family —
     # cut the lineage so it computes once, not per branch
     ).localCheckpoint(eager=True)
+    # potential-pair upper bound C(d,2) in LONG (overflow guard)
+    d = "CAST(size(ms) AS BIGINT)"
     parts = []
     for fam_i, ((b, r), gaps) in enumerate(sorted(families.items())):
-        keys = F.explode_outer(F.expr(lsh_band_keys_sql("sig", b, r))).alias("bk")
-        posting = sig.select(
-            F.lit(fam_i).alias("fam"), "id", "bkt", "ng", keys
-        ).select(
+        posting = sig.selectExpr(
+            f"{fam_i} AS fam",
+            "id",
+            "bkt",
+            "ng",
+            f"explode_outer({lsh_band_keys_sql('sig', b, r)}) AS bk",
+        ).selectExpr(
             "fam",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
+            "bk.band AS band",
+            "bk.bucket AS bucket",
             # id leads so array_sort yields id order (ids unique)
-            F.struct("id", "bkt", "ng").alias("m"),
+            "struct(id, bkt, ng) AS m",
         )
         groups = (
             posting.groupBy("fam", "band", "bucket")
-            .agg(F.array_sort(F.collect_list("m")).alias("ms"))
-            .filter(F.size("ms") > 1)
+            .agg(F.expr("array_sort(collect_list(m)) AS ms"))
+            .where("size(ms) > 1")
         )
-        ms = F.col("ms")
-        gap_lits = F.array(*[F.lit(g) for g in gaps])
         # screenable: r=1 observes every signature position, so the
         # per-pair band-collision count IS the match count m
-        scr = F.lit(r == 1)
-
-        def viable(a, b_):
-            # Column.isin is unusable inside HOF lambdas (pyspark
-            # parses extra args as lambda vars) — literal array +
-            # array_contains instead
-            return F.array_contains(gap_lits, F.abs(a["bkt"] - b_["bkt"]))
-
-        pair_struct = lambda a, b_, chain: F.struct(  # noqa: E731
-            a["id"].alias("id_a"),
-            b_["id"].alias("id_b"),
-            a["ng"].alias("ng_a"),
-            b_["ng"].alias("ng_b"),
-            F.lit(chain).alias("chain"),
-            scr.alias("scr"),
+        scr = "true" if r == 1 else "false"
+        fields = ("{a}.ng AS ng_a", "{b}.ng AS ng_b")
+        viable = (
+            f"array_contains(array({', '.join(map(str, gaps))}), "
+            "abs({a}.bkt - {b}.bkt))"
         )
-        pairs = F.flatten(
-            F.transform(
-                F.slice(ms, 1, F.greatest(F.size(ms) - 1, F.lit(0))),
-                lambda a, i: F.transform(
-                    F.filter(
-                        F.slice(ms, i + 2, F.greatest(F.size(ms), F.lit(1))),
-                        lambda b_: viable(a, b_),
-                    ),
-                    lambda b_: pair_struct(a, b_, False),
-                ),
-            )
+        pairs = _pairs_within_sql(
+            "ms", ".id", (*fields, "false AS chain", f"{scr} AS scr"), viable
         )
-        chain = F.transform(
-            F.slice(ms, 1, F.size(ms) - 1),
-            lambda a, i: pair_struct(a, F.element_at(ms, i + 2), True),
+        chain = _chain_pairs_sql(
+            "ms", ".id", (*fields, "true AS chain", f"{scr} AS scr")
         )
-        # potential-pair upper bound C(d,2) in LONG (overflow guard);
         # oversized buckets emit the d-1 consecutive-chain pairs —
         # O(d) rows, cluster recovered by CC downstream
-        d = F.size(ms).cast("long")
-        pair_arr = F.when(
-            d * (d - F.lit(1)) / 2 > max_bucket_size, chain
-        ).otherwise(pairs)
+        pair_arr = (
+            f"CASE WHEN {d} * ({d} - 1) / 2 > {int(max_bucket_size)} "
+            f"THEN {chain} ELSE {pairs} END"
+        )
         parts.append(
-            # generator-side spread: the in-bucket gap-viability scan
-            # and pair-struct expansion must not run on the AQE-
-            # coalesced (tiny-bytes) read of the posting shuffle —
-            # see the minhash candidate stage note
-            spread(groups).select(F.explode_outer(pair_arr).alias("pr"))
+            # the generator-side spread of the band stage: the gap
+            # scan and pair expansion must not run on the AQE-coalesced
+            # read of the posting shuffle
+            spread(groups)
+            .selectExpr(f"explode_outer({pair_arr}) AS pr")
             # a bucket whose members all sit at non-covered gaps
             # (e.g. equal bkt inside an r=1 family) yields an EMPTY
             # pair array and explode_outer emits one null row for it
-            .filter(F.col("pr").isNotNull())
-            .select("pr.*")
+            .where("pr IS NOT NULL")
+            .selectExpr("pr.*")
         )
     allp = parts[0]
     for p in parts[1:]:
@@ -1549,69 +1435,36 @@ def _containment_ensemble_candidates(
     # and within a family a pair collides at most once per band —
     # so count(*) == m and the output needs no further dedup.
     agg = allp.groupBy("id_a", "id_b", "ng_a", "ng_b").agg(
-        F.count(F.lit(1)).alias("m"),
-        F.max("chain").alias("chain"),
-        F.max("scr").alias("scr"),
+        F.expr("count(1) AS m"), F.expr("max(chain) AS chain"),
+        F.expr("max(scr) AS scr"),
     )
     if screen is not None:
-        md = F.col("m").cast("double")
-        tot = (F.col("ng_a") + F.col("ng_b")).cast("double")
-        mn = F.least("ng_a", "ng_b").cast("double")
-        agg = agg.filter(
-            F.col("chain")
-            | ~F.col("scr")
-            | (
-                md * tot
-                >= F.lit(float(screen)) * (F.lit(num_hashes) + md) * mn
-            )
+        agg = agg.where(
+            "chain OR NOT scr OR CAST(m AS DOUBLE) * CAST(ng_a + ng_b AS DOUBLE)"
+            f" >= CAST({float(screen)!r} AS DOUBLE) * ({int(num_hashes)} + "
+            "CAST(m AS DOUBLE)) * CAST(least(ng_a, ng_b) AS DOUBLE)"
         )
     return agg.select("id_a", "id_b")
-
 
 
 def _containment_verify(
     cand: DataFrame, edoc: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact containment scoring of candidate pairs against the
-    per-doc eligible gram arrays — shared by both candidate modes,
-    so precision is exact regardless of the generator."""
-    ga = edoc.select(
-        F.col("id").alias("id_a"),
-        F.col("eg").alias("g_a"),
-        F.col("n_grams").alias("n_a"),
-    )
-    gb = edoc.select(
-        F.col("id").alias("id_b"),
-        F.col("eg").alias("g_b"),
-        F.col("n_grams").alias("n_b"),
-    )
-    n_common = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
-    # spread: same skinny-pair-stream AQE-collapse guard as the
-    # jaccard verify above (the q494 pathology) — and the same regime
-    # note: it delivers in the broadcast-join regime; under sort-merge
-    # the join's hashpartitioning supersedes it and the fat gram-side
-    # shuffle bytes keep AQE's stage width honest on their own.
-    # containment bound once per expression instance (aggregate-input
-    # binding — see ngram_jaccard_pairs' verify): the threshold
-    # filter's pushdown otherwise copies the full intersect tree into
-    # the join condition. The n_common output column shares the same
-    # unconditional array_intersect subtree, which codegen CSE dedups
-    # within the projection. Arithmetic unchanged.
-    cont = F.aggregate(
-        F.array(n_common),
-        F.lit(0.0),
-        lambda _, i: i.cast("double") / F.least("n_a", "n_b").cast("double"),
-    )
+    per-doc eligible gram arrays — shared by every candidate mode,
+    so precision is exact regardless of the generator. The n_common
+    output column shares the score's unconditional array_intersect
+    subtree, which codegen CSE dedups within the projection."""
+    cont = _bound_common_sql("CAST(i AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE)")
     return (
-        spread(cand).join(ga, "id_a")
-        .join(gb, "id_b")
-        .select(
+        _verify_join(cand, edoc)
+        .selectExpr(
             "id_a",
             "id_b",
-            n_common.cast("bigint").alias("n_common"),
-            cont.alias("containment"),
+            "CAST(size(array_intersect(g_a, g_b)) AS BIGINT) AS n_common",
+            f"{cont} AS containment",
         )
-        .filter(F.col("containment") >= threshold)
+        .where(f"containment >= CAST({threshold!r} AS DOUBLE)")
     )
 
 

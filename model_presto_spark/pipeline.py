@@ -114,10 +114,7 @@ def _stage_near_dedup(cfg: dict) -> Callable[[DataFrame], DataFrame]:
     kwargs = {
         k: v
         for k, v in cfg.items()
-        # approx_docs: corpus-size hint forwarded to the minhash
-        # auto-routing so pipelines that already know their count
-        # (e.g. from a prior report()) skip the operator's probe job
-        if k in ("method", "threshold", "fast_hash", "approx_docs")
+        if k in ("method", "threshold", "fast_hash")
     }
 
     # dedup_corpus(method='exact') returns the fingerprint relation,
@@ -359,8 +356,7 @@ _STAGES: dict[str, tuple[Callable[[dict], Callable], set[str]]] = {
     "exact_dedup": (_stage_exact_dedup, {"id_col", "text_col"}),
     "near_dedup": (
         _stage_near_dedup,
-        {"id_col", "text_col", "method", "threshold", "fast_hash",
-         "approx_docs"},
+        {"id_col", "text_col", "method", "threshold", "fast_hash"},
     ),
     "span_dedup_filter": (
         _stage_span_dedup_filter,

@@ -232,3 +232,56 @@ def test_connected_components_id_types(spark, id_type):
 def test_connected_components_raises_at_round_cap(spark):
     with pytest.raises(RuntimeError, match="max_iter=1"):
         connected_components(_cc_pairs(spark, "long"), max_iter=1)
+
+
+# --- dedup band stage -------------------------------------------------------
+
+
+def _near_dup_docs(spark):
+    """Filler documents plus planted near-copies of three of them."""
+    words = [f"w{j}" for j in range(400)]
+    rows = [(i, " ".join(words[i * 10:i * 10 + 25])) for i in range(30)]
+    for k, src in enumerate((3, 11, 20)):
+        text = rows[src][1].split()
+        text[k + 5] = "changed"
+        rows.append((100 + k, " ".join(text)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_band_stage_validates_bands(spark):
+    """bands must lie in [1, num_hashes]: more bands than hashes used
+    to give empty bands whose keys every document shares."""
+    from model_presto_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_containment_pairs,
+    )
+
+    docs = _near_dup_docs(spark)
+    for bands in (0, 8):
+        with pytest.raises(ValueError, match="bands"):
+            minhash_lsh_pairs(
+                docs, "doc_id", "text", num_hashes=4, bands=bands,
+                signature_screen=None,
+            )
+    with pytest.raises(ValueError, match="bands"):
+        ngram_containment_pairs(
+            docs, "doc_id", "text", candidates="lsh", num_hashes=16, bands=32
+        )
+
+
+def test_minhash_zero_screen_matches_unscreened(spark):
+    """A screen of 0 keeps every bucket pair, so the (id, sig) struct
+    members must yield exactly the pairs and scores of bare ids."""
+    from model_presto_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = _near_dup_docs(spark)
+
+    def pairs(screen):
+        out = minhash_lsh_pairs(
+            docs, "doc_id", "text", threshold=0.5, signature_screen=screen
+        ).collect()
+        return {(r.id_a, r.id_b): r.jaccard_sim for r in out}
+
+    unscreened = pairs(None)
+    assert {(3, 100), (11, 101), (20, 102)} <= set(unscreened)
+    assert pairs(0.0) == unscreened

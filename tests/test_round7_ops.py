@@ -1,5 +1,4 @@
-"""Round-7 additions: skew-aware containment auto-routing and the
-approx_docs probe-skip hint.
+"""Round-7 additions: skew-aware containment auto-routing.
 
 The round-6 stress record measured the containment-LSH generator's
 recall collapsing to 0.40-0.44 on doc-inside-doc (rho~0.1) pairs.
@@ -82,47 +81,6 @@ def test_containment_route_ignores_gramless_docs(spark):
     assert containment_auto_route(docs, "text", auto_min_docs=10) == "lsh"
 
 
-def test_approx_docs_hint_skips_probe_and_matches(spark):
-    """approx_docs below auto_min_docs pins the exact paths with zero
-    probe jobs; results identical to the probed decision."""
-    from model_presto_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_containment_pairs,
-    )
-
-    rows = _uniform_rows(30) + [
-        (800, "the quick brown fox jumps over the lazy dog tonight"),
-        (801, "the quick brown fox jumps over the lazy dog tonight!"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    hinted = sorted(
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5, approx_docs=32
-        ).collect()
-    )
-    probed = sorted(
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5
-        ).collect()
-    )
-    assert hinted == probed and (800, 801) in hinted
-    ct_hint = sorted(
-        (r.id_a, r.id_b)
-        for r in ngram_containment_pairs(
-            docs, "doc_id", "text", threshold=0.6, approx_docs=32
-        ).collect()
-    )
-    ct_probe = sorted(
-        (r.id_a, r.id_b)
-        for r in ngram_containment_pairs(
-            docs, "doc_id", "text", threshold=0.6
-        ).collect()
-    )
-    assert ct_hint == ct_probe
-
-
 def test_containment_lsh_ensemble_mode(spark):
     """The opt-in LSH-Ensemble generator (length-bucketed per-gap
     banding): candidates are a subset of the exact index path's pairs
@@ -168,9 +126,11 @@ def test_containment_lsh_ensemble_mode(spark):
     assert (900, 901) in ens and (900, 902) in ens
 
 
-def test_near_dedup_stage_accepts_approx_docs(spark):
-    """Pipeline near_dedup stage forwards the size hint (and the ngram
-    method tolerates it by dropping it)."""
+def test_near_dedup_stage_runs_both_methods(spark):
+    """Pipeline near_dedup stage runs the minhash and ngram methods;
+    the removed corpus-size hint is an unknown key."""
+    import pytest
+
     from model_presto_spark.pipeline import CorpusPipeline
 
     docs = spark.createDataFrame(
@@ -178,10 +138,11 @@ def test_near_dedup_stage_accepts_approx_docs(spark):
     )
     for method in ("minhash", "ngram"):
         pipe = CorpusPipeline(
-            [{"op": "near_dedup", "method": method, "threshold": 0.8,
-              "approx_docs": 20}]
+            [{"op": "near_dedup", "method": method, "threshold": 0.8}]
         )
         assert pipe.run(docs).count() > 0
+    with pytest.raises(ValueError, match="approx_docs"):
+        CorpusPipeline([{"op": "near_dedup", "approx_docs": 20}])
 
 
 def test_containment_auto_empty_and_degenerate(spark):

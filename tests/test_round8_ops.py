@@ -93,42 +93,40 @@ def test_ensemble_screen_drops_background_candidates(spark):
     assert loose >= tight
 
 
+# _skewed_corpus: 42 docs; gram counts 118 (the container) and 10
+# (the slice and every filler), so the probe's min/max ratio is 10/118
+_SKEWED_DOCS, _SKEWED_RATIO = 42, 10 / 118
+
+
 def test_auto_route_three_way(spark):
-    """Hint-driven routing: small -> index; skewed+mid -> index;
-    skewed+huge -> lsh_ensemble; benign+huge -> lsh. Zero probe jobs
-    when both hints are supplied (verified by passing a df whose
-    evaluation would throw)."""
+    """Probe-driven routing on a small skewed corpus: small -> index;
+    skewed+mid -> index; skewed+huge -> lsh_ensemble; benign+huge ->
+    lsh (the size cutoffs scaled down to the corpus)."""
     from model_presto_spark.operators.dedup import containment_auto_route
 
     docs = _skewed_corpus(spark)
-    assert containment_auto_route(docs, "text", approx_docs=10) == "index"
+    assert (
+        containment_auto_route(docs, "text", auto_min_docs=_SKEWED_DOCS + 1)
+        == "index"
+    )
     assert (
         containment_auto_route(
-            docs, "text", approx_docs=50_000, approx_gram_ratio=0.05
+            docs, "text", auto_min_docs=10, ensemble_min_docs=1000
         )
         == "index"
     )
     assert (
         containment_auto_route(
-            docs, "text", approx_docs=200_000, approx_gram_ratio=0.05
+            docs, "text", auto_min_docs=10, ensemble_min_docs=20
         )
         == "lsh_ensemble"
     )
     assert (
         containment_auto_route(
-            docs, "text", approx_docs=200_000, approx_gram_ratio=0.5
+            docs, "text", auto_min_docs=10, ensemble_min_docs=20,
+            skew_ratio_floor=0.05,
         )
         == "lsh"
-    )
-    # both hints present -> the df is never touched (no probe job)
-    poisoned = docs.select(
-        "doc_id", F.assert_true(F.lit(False)).alias("text")
-    )
-    assert (
-        containment_auto_route(
-            poisoned, "text", approx_docs=200_000, approx_gram_ratio=0.05
-        )
-        == "lsh_ensemble"
     )
 
 
@@ -152,22 +150,25 @@ def test_auto_route_probes_gram_counts_not_char_length(spark):
     assert containment_auto_route(uni, "text", auto_min_docs=10) == "lsh"
 
 
-def test_auto_route_default_call_routes_skew_huge_to_ensemble(spark):
-    """ngram_containment_pairs plumbs ensemble_min_docs /
-    approx_gram_ratio through to the route — the default call on a
-    (hinted) skewed+huge corpus runs the ensemble generator and still
-    finds the deep plant."""
+def test_auto_route_default_call_routes_skew_huge_to_ensemble(spark, caplog):
+    """ngram_containment_pairs plumbs auto_min_docs / ensemble_min_docs
+    through to the route — the default call on a skewed corpus over
+    both cutoffs runs the ensemble generator and still finds the deep
+    plant."""
+    import logging
+
     from model_presto_spark.operators.dedup import ngram_containment_pairs
 
     docs = _skewed_corpus(spark)
-    got = {
-        (r.id_a, r.id_b)
-        for r in ngram_containment_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.6, max_doc_freq=500,
-            fast_hash=True, auto_min_docs=10, ensemble_min_docs=20,
-            approx_docs=42, approx_gram_ratio=0.05,
-        ).collect()
-    }
+    with caplog.at_level(logging.INFO, "model_presto_spark.operators.dedup"):
+        got = {
+            (r.id_a, r.id_b)
+            for r in ngram_containment_pairs(
+                docs, "doc_id", "text", n=3, threshold=0.6, max_doc_freq=500,
+                fast_hash=True, auto_min_docs=10, ensemble_min_docs=20,
+            ).collect()
+        }
+    assert "screened lsh_ensemble path" in caplog.text
     assert (0, 1) in got
 
 
@@ -183,65 +184,53 @@ def test_ensemble_screen_validates(spark):
 
 
 def test_auto_route_decision_property(spark):
-    """Property sweep of the hinted decision space: for every
-    (approx_docs, approx_gram_ratio, floors) combination the route
-    matches the documented three-way rule, with exact boundary
+    """Property sweep of the decision rule over the cutoffs, on the
+    probed skewed corpus (42 docs, gram-count ratio 10/118): the
+    route matches the documented three-way rule, with exact boundary
     semantics (ratio == floor is NOT skewed; docs == ensemble_min_docs
-    IS huge) — and never runs a Spark job (poisoned df)."""
+    IS huge)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from model_presto_spark.operators.dedup import containment_auto_route
 
-    poisoned = _skewed_corpus(spark).select(
-        "doc_id", F.assert_true(F.lit(False)).alias("text")
-    )
+    docs = _skewed_corpus(spark).cache()
+    n_docs, ratio = _SKEWED_DOCS, _SKEWED_RATIO
 
-    @settings(max_examples=300, deadline=None)
-    @given(
-        n_docs=st.integers(min_value=0, max_value=10_000_000),
-        ratio=st.floats(min_value=0.0, max_value=1.0,
-                        allow_nan=False, allow_infinity=False),
-        auto_min=st.integers(min_value=1, max_value=100_000),
-        floor=st.floats(min_value=0.01, max_value=0.99,
-                        allow_nan=False, allow_infinity=False),
-        ens_min=st.integers(min_value=1, max_value=1_000_000),
-    )
-    def check(n_docs, ratio, auto_min, floor, ens_min):
-        got = containment_auto_route(
-            poisoned, "text",
+    def want(auto_min, floor, ens_min):
+        if n_docs < auto_min:
+            return "index"
+        if ratio < floor:
+            return "lsh_ensemble" if n_docs >= ens_min else "index"
+        return "lsh"
+
+    def route(auto_min, floor, ens_min):
+        return containment_auto_route(
+            docs, "text",
             auto_min_docs=auto_min,
-            approx_docs=n_docs,
             skew_ratio_floor=floor,
             ensemble_min_docs=ens_min,
-            approx_gram_ratio=ratio,
         )
-        if n_docs < auto_min:
-            want = "index"
-        elif ratio < floor:
-            want = "lsh_ensemble" if n_docs >= ens_min else "index"
-        else:
-            want = "lsh"
-        assert got == want, (n_docs, ratio, auto_min, floor, ens_min)
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        auto_min=st.integers(min_value=1, max_value=2 * n_docs),
+        floor=st.floats(min_value=0.01, max_value=0.99,
+                        allow_nan=False, allow_infinity=False),
+        ens_min=st.integers(min_value=1, max_value=2 * n_docs),
+    )
+    def check(auto_min, floor, ens_min):
+        assert route(auto_min, floor, ens_min) == want(
+            auto_min, floor, ens_min
+        ), (auto_min, floor, ens_min)
 
     check()
 
     # pinned boundary cases (hypothesis floats rarely land exactly)
-    assert containment_auto_route(
-        poisoned, "text", auto_min_docs=10, approx_docs=100,
-        skew_ratio_floor=0.30, ensemble_min_docs=1000,
-        approx_gram_ratio=0.30,
-    ) == "lsh"  # ratio == floor: provably inside the band, not skewed
-    assert containment_auto_route(
-        poisoned, "text", auto_min_docs=10, approx_docs=1000,
-        skew_ratio_floor=0.30, ensemble_min_docs=1000,
-        approx_gram_ratio=0.29,
-    ) == "lsh_ensemble"  # docs == ensemble_min_docs: huge
-    assert containment_auto_route(
-        poisoned, "text", auto_min_docs=100, approx_docs=99,
-        skew_ratio_floor=0.30, ensemble_min_docs=50,
-        approx_gram_ratio=0.01,
-    ) == "index"  # under auto_min wins over everything (probe-free exit)
+    assert route(10, ratio, 1000) == "lsh"  # ratio == floor: not skewed
+    assert route(10, 0.30, n_docs) == "lsh_ensemble"  # docs == ens_min
+    assert route(n_docs + 1, 0.30, 1) == "index"  # under auto_min wins
+    docs.unpersist()
 
 
 def test_ensemble_mega_bucket_guard(spark):

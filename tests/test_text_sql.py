@@ -218,3 +218,38 @@ def test_pair_expansion_twins(spark):
     assert pairs(_chain_pairs_sql("ids")) == chain
     # buckets above the cap emit the chain instead of every pair
     assert pairs(_bucket_pairs_sql("ids", 2)) == {0: chain[0], 1: within[1], 2: []}
+
+    # struct members: the id accessor, extra pair fields and the
+    # per-pair predicate, against the same itertools reference
+    buckets = [
+        [(1, 5), (2, 5), (3, 9), (4, 6), (6, 5)],
+        [(10, 1), (20, 2)],
+        [(7, 0)],
+    ]
+    sdf = spark.createDataFrame(
+        [(i, [{"id": m, "w": w} for m, w in ms]) for i, ms in enumerate(buckets)],
+        "id INT, ms ARRAY<STRUCT<id: BIGINT, w: INT>>",
+    )
+    extra = ("{a}.w + {b}.w AS s", "{b}.id - {a}.id AS gap")
+    near = "abs({a}.w - {b}.w) <= 1"
+
+    def struct_pairs(sql_expr, fields=("id_a", "id_b", "s", "gap")):
+        return {
+            i: [tuple(p[f] for f in fields) for p in v]
+            for i, v in _spark_vals(sdf, sql_expr).items()
+        }
+
+    def row(a, b):
+        return (a[0], b[0], a[1] + b[1], b[0] - a[0])
+
+    s_within = {
+        i: [row(a, b) for a, b in itertools.combinations(ms, 2) if abs(a[1] - b[1]) <= 1]
+        for i, ms in enumerate(buckets)
+    }
+    s_chain = {i: [row(a, b) for a, b in zip(ms, ms[1:])] for i, ms in enumerate(buckets)}
+    assert 0 < len(s_within[0]) < 10  # the predicate drops some pairs
+    assert struct_pairs(_pairs_within_sql("ms", ".id", extra, near)) == s_within
+    assert struct_pairs(_chain_pairs_sql("ms", ".id", extra)) == s_chain
+    assert struct_pairs(
+        _bucket_pairs_sql("ms", 2, ".id", near), ("id_a", "id_b")
+    ) == {0: [r[:2] for r in s_chain[0]], 1: [r[:2] for r in s_within[1]], 2: []}
