@@ -56,18 +56,13 @@ def sq_euclidean_sql(a: str, b: str) -> str:
     )
 
 
-def sq_euclidean_int(a: Column, b: Column) -> Column:
+def sq_euclidean_int_sql(a: str, b: str) -> str:
     """Squared euclidean over integer-quantized vectors (integer math
     in the fold; one cast at the end). Elements widen to int before
     the difference — tinyint-tinyint can reach ±254 and would throw
     under ANSI arithmetic."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("int") - y.cast("int"))
-            * (x.cast("int") - y.cast("int")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    ).cast("double")
+    return (
+        f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"(CAST(x AS INT) - CAST(y AS INT)) * (CAST(x AS INT) - CAST(y AS INT))), "
+        f"CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)"
+    )

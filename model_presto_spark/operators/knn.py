@@ -11,20 +11,25 @@ Spark-first design:
   distributed; per-probe work is a map-side broadcast join, so this
   scales to arbitrarily large candidate tables as long as the probe
   set fits in a broadcast (the reference's eval sets always do).
-- Scale path for large probe sets: LSH bucketing (see
-  ``model_presto_spark.operators.dedup`` for the MinHash machinery;
-  random-hyperplane LSH for cosine) to turn the cross product into a
-  bucket-equi-join. Exposed via ``ann_lsh_join``.
+- One search core: every search of the family — exact, LSH
+  (``ann_lsh_join``), IVF (``ivf_knn_join``, ``ivf_index_search``),
+  int8 (``quantized_knn_join``) and PQ (``operators.pq``) — scores its
+  candidates its own way into (probe, candidate, score) rows and ends
+  in the one ``_top_k`` window; the IVF paths share one coarse
+  quantizer (``_coarse_cells``), one centroid table
+  (``_write_centroids``/``_read_centroids``) and one nearest-cell step
+  (``_nearest_cells``, itself a ``_top_k`` over centroids).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from model_presto_spark.functions.vectors import (
     cosine_similarity_sql,
     dot_sql,
+    sq_euclidean_int_sql,
     sq_euclidean_sql,
 )
 
@@ -48,6 +53,97 @@ def _distance_sql(qv: str, cv: str, metric: str) -> str:
     if metric == "cosine":
         return f"1.0D - {cosine_similarity_sql(qv, cv)}"
     raise ValueError(f"metric must be one of {_METRICS}")
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    probe_id: str,
+    cand_id: str,
+    order: str = "__dist ASC",
+    value: str = "__dist AS dist",
+) -> DataFrame:
+    """Each probe's first ``k`` rows of a scored (__pid, __cid, ...)
+    frame by ``order``, ties broken by ascending candidate id:
+    (probe_id, cand_id, value, rank)."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY __pid "
+            f"ORDER BY {order}, __cid ASC) AS rank",
+        )
+        .where(f"rank <= {int(k)}")
+        .selectExpr(
+            f"__pid AS {_qt(probe_id)}",
+            f"__cid AS {_qt(cand_id)}",
+            value,
+            "rank",
+        )
+    )
+
+
+def _coarse_cells(
+    candidates: DataFrame, cand_id: str, cand_vec: str, n_lists: int, seed: int
+) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
+    """Fit the KMeans coarse quantizer and assign every candidate its
+    cell: ((cid, cvec, cell) frame, [(cell, centroid)]). Assignment is
+    the model's own ``transform``, whose distance computation breaks
+    near-ties its own way."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    cvec = F.col(cand_vec).cast("array<double>")
+    cands = candidates.select(
+        F.col(cand_id).alias("cid"), cvec.alias("cvec"),
+        array_to_vector(cvec).alias("__feat"),
+    )
+    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat", predictionCol="cell")
+    model = km.fit(cands.select("__feat"))
+    cents = [
+        (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
+    ]
+    return model.transform(cands).select("cid", "cvec", "cell"), cents
+
+
+def _centroid_frame(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    return spark.createDataFrame(cents, "cell int, centroid array<double>")
+
+
+def _write_centroids(spark, path: str, cents: list[tuple[int, list[float]]]) -> None:
+    _centroid_frame(spark, cents).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
+
+
+def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
+    return [
+        (int(r.cell), [float(x) for x in r.centroid])
+        for r in spark.read.parquet(f"{path}/centroids").collect()
+    ]
+
+
+def _nearest_cells(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents: list[tuple[int, list[float]]],
+    n: int,
+) -> DataFrame:
+    """(__pid, cell, __pvec) for each row's ``n`` nearest cells: a top-k
+    by squared L2 over the broadcast centroid table (centroids are
+    tiny), ties to the lower cell id."""
+    rows = df.selectExpr(
+        f"{_qt(id_col)} AS __pid",
+        f"CAST({_qt(vec_col)} AS ARRAY<DOUBLE>) AS __pvec",
+    )
+    table = F.broadcast(_centroid_frame(df.sparkSession, cents))
+    scored = rows.crossJoin(table).selectExpr(
+        "__pid",
+        "__pvec",
+        "cell AS __cid",
+        f"{_distance_sql('__pvec', 'centroid', 'sqeuclidean')} AS __dist",
+    )
+    return _top_k(scored, n, "__pid", "cell", value="__pvec").drop("rank")
 
 
 def knn_join(
@@ -93,20 +189,7 @@ def knn_join(
         "__cid",
         f"{_distance_sql('__pvec', '__cvec', metric)} AS __dist",
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY __pid "
-            "ORDER BY __dist ASC, __cid ASC) AS rank",
-        )
-        .where(f"rank <= {int(k)}")
-        .selectExpr(
-            f"__pid AS {_qt(probe_id)}",
-            f"__cid AS {_qt(cand_id)}",
-            "__dist AS dist",
-            "rank",
-        )
-    )
+    return _top_k(scored, k, probe_id, cand_id)
 
 
 def ivf_knn_join(
@@ -135,57 +218,19 @@ def ivf_knn_join(
     cell-restricted scoring are plain joins + window — the pattern of
     every IVF system, expressed relationally.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cvec = F.col(cand_vec).cast("array<double>")
-    cands = candidates.select(
-        F.col(cand_id).alias("__cid"), cvec.alias("__cvec"),
-        array_to_vector(cvec).alias("__feat"),
-    )
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat", predictionCol="__cell")
-    model = km.fit(cands.select("__feat"))
-    indexed = model.transform(cands).select("__cid", "__cvec", "__cell")
-
-    # probe -> its n_probe nearest centroids (centroids are tiny:
-    # embed as a literal table, crossJoin + rank)
-    cents = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    spark = probes.sparkSession
-    cent_df = spark.createDataFrame(
-        cents, "__cell int, __centroid array<double>"
-    )
-    pvec = F.col(probe_vec).cast("array<double>")
-    p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
-    pc = p.crossJoin(F.broadcast(cent_df))
-    cdist = F.expr(_distance_sql("__pvec", "__centroid", "sqeuclidean"))
-    wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("__cell").asc())
-    probe_cells = (
-        pc.withColumn("__crank", F.row_number().over(wcell))
-        .filter(F.col("__crank") <= n_probe)
-        .select("__pid", "__pvec", "__cell")
-    )
+    indexed, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed)
+    probe_cells = _nearest_cells(probes, probe_id, probe_vec, cents, n_probe)
 
     # score only same-cell pairs (equi-join on cell id)
-    pairs = probe_cells.join(indexed, "__cell")
+    pairs = probe_cells.join(indexed, "cell")
     if exclude_self:
-        pairs = pairs.filter(F.col("__pid") != F.col("__cid"))
-    dist = F.expr(_distance_sql("__pvec", "__cvec", metric))
-    scored = pairs.select("__pid", "__cid", dist.alias("__dist")).dropDuplicates(
-        ["__pid", "__cid"]
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("__dist").asc(), F.col("__cid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__pid").alias(probe_id),
-            F.col("__cid").alias(cand_id),
-            F.col("__dist").alias("dist"),
-            "rank",
-        )
-    )
+        pairs = pairs.where("__pid != cid")
+    scored = pairs.selectExpr(
+        "__pid",
+        "cid AS __cid",
+        f"{_distance_sql('__pvec', 'cvec', metric)} AS __dist",
+    ).dropDuplicates(["__pid", "__cid"])
+    return _top_k(scored, k, probe_id, cand_id)
 
 
 def knn_classify(
@@ -324,19 +369,9 @@ def ann_lsh_join(
         "__cid",
         f"{cosine_similarity_sql('__pvec', '__cvec')} AS __sim",
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY __pid "
-            "ORDER BY __sim DESC, __cid ASC) AS rank",
-        )
-        .where(f"rank <= {int(k)}")
-        .selectExpr(
-            f"__pid AS {_qt(probe_id)}",
-            f"__cid AS {_qt(cand_id)}",
-            "__sim AS cosine_sim",
-            "rank",
-        )
+    return _top_k(
+        scored, k, probe_id, cand_id,
+        order="__sim DESC", value="__sim AS cosine_sim",
     )
 
 
@@ -359,27 +394,9 @@ def build_ivf_index(
     the on-disk shape every IVF system uses, expressed as a hive
     layout.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cvec = F.col(cand_vec).cast("array<double>")
-    cands = candidates.select(
-        F.col(cand_id).alias("cid"), cvec.alias("cvec"),
-        array_to_vector(cvec).alias("__feat"),
-    )
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat", predictionCol="cell")
-    model = km.fit(cands.select("__feat"))
-    indexed = model.transform(cands).select("cid", "cvec", "cell")
+    indexed, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed)
     indexed.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
-
-    spark = candidates.sparkSession
-    cents = [
-        (int(i), [float(x) for x in c])
-        for i, c in enumerate(model.clusterCenters())
-    ]
-    spark.createDataFrame(cents, "cell int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(candidates.sparkSession, path, cents)
 
 
 def ivf_index_search(
@@ -402,43 +419,20 @@ def ivf_index_search(
     from the scan at runtime (tests assert the dynamicpruning
     expression is in the plan).
     """
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cent_df = spark.createDataFrame(
-        [(int(r.cell), [float(x) for x in r.centroid]) for r in cent_rows],
-        "cell int, centroid array<double>",
-    )
-    pvec = F.col(probe_vec).cast("array<double>")
-    p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
-    cdist = F.expr(_distance_sql("__pvec", "centroid", "sqeuclidean"))
-    wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("cell").asc())
-    probe_cells = (
-        p.crossJoin(F.broadcast(cent_df))
-        .withColumn("__crank", F.row_number().over(wcell))
-        .filter(F.col("__crank") <= n_probe)
-        .select("__pid", "__pvec", "cell")
+    probe_cells = _nearest_cells(
+        probes, probe_id, probe_vec, _read_centroids(spark, path), n_probe
     )
 
     cells = spark.read.parquet(f"{path}/cells")
     pairs = cells.join(F.broadcast(probe_cells), "cell")
     if exclude_self:
-        pairs = pairs.filter(F.col("__pid") != F.col("cid"))
-    dist = F.expr(_distance_sql("__pvec", "cvec", metric))
-    scored = pairs.select("__pid", "cid", dist.alias("__dist")).dropDuplicates(
-        ["__pid", "cid"]
-    )
-    w = Window.partitionBy("__pid").orderBy(
-        F.col("__dist").asc(), F.col("cid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__pid").alias(probe_id),
-            "cid",
-            F.col("__dist").alias("dist"),
-            "rank",
-        )
-    )
+        pairs = pairs.where("__pid != cid")
+    scored = pairs.selectExpr(
+        "__pid",
+        "cid AS __cid",
+        f"{_distance_sql('__pvec', 'cvec', metric)} AS __dist",
+    ).dropDuplicates(["__pid", "__cid"])
+    return _top_k(scored, k, probe_id, "cid")
 
 
 def _max_abs(df: DataFrame, vec_col: str) -> float:
@@ -452,6 +446,15 @@ def _max_abs(df: DataFrame, vec_col: str) -> float:
     return float(m or 0.0)
 
 
+def _int8_sql(vec: str, scale: float) -> str:
+    """Symmetric int8 code of a vector at ``scale``: round(x / scale)
+    per element (``D``: the scale stays a double literal)."""
+    return (
+        f"transform(CAST({vec} AS ARRAY<DOUBLE>), "
+        f"x -> CAST(round(x / {scale!r}D) AS TINYINT))"
+    )
+
+
 def quantize_vectors(
     df: DataFrame, vec_col: str, out_col: str = "qvec"
 ) -> tuple[DataFrame, float]:
@@ -461,16 +464,11 @@ def quantize_vectors(
     vector encodes as ``round(x / scale)`` int8 — 1/8th the shuffle
     and storage bytes of float64 arrays, which is what a 100 TB ANN
     index actually ships around. Returns (df + out_col, scale);
-    ``scale² * sq_euclidean_int(qa, qb)`` approximates the float
+    ``scale² * sq_euclidean_int_sql(qa, qb)`` approximates the float
     distance, preserving neighbor ranking to quantization error.
     """
     scale = (_max_abs(df, vec_col) or 1.0) / 127.0
-    vec = F.col(vec_col).cast("array<double>")
-    q = df.withColumn(
-        out_col,
-        F.transform(vec, lambda x: F.round(x / F.lit(scale)).cast("tinyint")),
-    )
-    return q, scale
+    return df.withColumn(out_col, F.expr(_int8_sql(_qt(vec_col), scale))), scale
 
 
 def quantized_knn_join(
@@ -489,44 +487,26 @@ def quantized_knn_join(
     only — recall vs float is bounded by the quantization step
     (tested >0.9); re-rank the top-k with float vectors when exact
     order matters."""
-    from model_presto_spark.functions.vectors import sq_euclidean_int
-
     # shared scale keeps the metric consistent across both sides:
     # two scalar max-|x| jobs, then one quantization pass per side
     scale = max(
         _max_abs(probes, probe_vec), _max_abs(candidates, cand_vec)
     ) / 127.0 or 1.0 / 127.0
-
-    def _q(df, id_c, vec_c, out):
-        return df.select(
-            F.col(id_c).alias(out[0]),
-            F.transform(
-                F.col(vec_c).cast("array<double>"),
-                lambda x: F.round(x / F.lit(scale)).cast("tinyint"),
-            ).alias(out[1]),
-        )
-
-    requant_p = _q(probes, probe_id, probe_vec, ("__pid", "__qp"))
-    requant_c = _q(candidates, cand_id, cand_vec, ("__cid", "__qc"))
-
-    pairs = requant_c.crossJoin(F.broadcast(requant_p))
+    p = probes.selectExpr(
+        f"{_qt(probe_id)} AS __pid", f"{_int8_sql(_qt(probe_vec), scale)} AS __qp"
+    )
+    c = candidates.selectExpr(
+        f"{_qt(cand_id)} AS __cid", f"{_int8_sql(_qt(cand_vec), scale)} AS __qc"
+    )
+    pairs = c.crossJoin(F.broadcast(p))
     if exclude_self:
-        pairs = pairs.filter(F.col("__pid") != F.col("__cid"))
-    dist = sq_euclidean_int(F.col("__qp"), F.col("__qc")) * F.lit(scale * scale)
-    w = Window.partitionBy("__pid").orderBy(
-        F.col("__dist").asc(), F.col("__cid").asc()
+        pairs = pairs.where("__pid != __cid")
+    scored = pairs.selectExpr(
+        "__pid",
+        "__cid",
+        f"{sq_euclidean_int_sql('__qp', '__qc')} * {scale * scale!r}D AS __dist",
     )
-    return (
-        pairs.select("__pid", "__cid", dist.alias("__dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__pid").alias(probe_id),
-            F.col("__cid").alias(cand_id),
-            F.col("__dist").alias("dist"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k, probe_id, cand_id)
 
 
 def ivf_index_append(
@@ -544,19 +524,7 @@ def ivf_index_append(
     embedding distribution is — rebuild with build_ivf_index when
     drift (e.g. psi_drift on distances) says so. Searches see the
     appended vectors immediately (same layout, same pruning)."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cent_df = spark.createDataFrame(
-        [(int(r["cell"]), [float(x) for x in r["centroid"]]) for r in cent_rows],
-        "cell int, centroid array<double>",
-    )
-    cvec = F.col(cand_vec).cast("array<double>")
-    c = candidates.select(F.col(cand_id).alias("cid"), cvec.alias("cvec"))
-    d = F.expr(_distance_sql("cvec", "centroid", "sqeuclidean"))
-    w = Window.partitionBy("cid").orderBy(d.asc(), F.col("cell").asc())
-    assigned = (
-        c.crossJoin(F.broadcast(cent_df))
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select("cid", "cvec", "cell")
-    )
+    assigned = _nearest_cells(
+        candidates, cand_id, cand_vec, _read_centroids(spark, path), 1
+    ).selectExpr("__pid AS cid", "__pvec AS cvec", "cell")
     assigned.write.partitionBy("cell").mode("append").parquet(f"{path}/cells")

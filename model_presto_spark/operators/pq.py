@@ -12,21 +12,26 @@ distance is ``m`` table lookups + adds — no float arithmetic per
 pair. This is the layout a 100 TB vector corpus actually ships
 through a shuffle: the codes relation is ~1% of the float relation.
 
-Spark mapping:
-- codebooks train with seeded Lloyd's iterations on a driver-side
-  sample (bounded, standard practice — production PQ systems train
-  on 10^4-10^5 samples regardless of corpus size) and ride to
-  executors inside the task closure (a few KB);
-- ``pq_encode`` is one vectorized mapInPandas pass (argmin over
-  n_codes per subspace, numpy-batched);
-- ``pq_knn_join`` broadcasts the probe set (same bounded-probe
-  contract as knn.knn_join), scores candidates partition-locally
-  with the LUTs, keeps each partition's top-k, and resolves the
-  global top-k with one tiny window over ~k x #partitions rows per
-  probe — candidates are never globally sorted.
-- optional exact re-rank of a ``rerank``-sized shortlist restores
-  near-exact recall while touching float vectors for only the
-  shortlist.
+Spark mapping — one numpy core, used on the driver and in the
+executors' mapInPandas passes alike:
+- ``_train_books``: seeded k-means++/Lloyd's codebooks on a
+  driver-side sample (bounded, standard practice — production PQ
+  systems train on 10^4-10^5 samples regardless of corpus size) of
+  raw vectors (``train_pq_codebooks``) or IVF residuals
+  (``build_ivfpq_index``); the books ride to executors inside the
+  task closure (a few KB);
+- ``_encode``: argmin over n_codes per subspace, numpy-batched
+  (``pq_encode``, the residual encode of ``build_ivfpq_index``);
+- ``_luts``: one m x n_codes table of exact subspace distances per
+  probe (or per probe residual and cell);
+- ``_adc_scan``: each Arrow batch's partition-local top-k per probe.
+  The global top-k is the one window of the knn search core
+  (``knn._top_k``) over ~k x #partitions rows per probe — candidates
+  are never globally sorted. ``pq_knn_join`` broadcasts the probe
+  set (same bounded-probe contract as knn.knn_join); an optional
+  exact re-rank of a ``rerank``-sized shortlist restores near-exact
+  recall while touching float vectors for only the shortlist.
+Ids keep the type they have in the input.
 
 Reference anchor: embedding similarity surface of SURVEY §2
 (brute-force Q35, LSH Q40, IVF t:test_graph_ivf); PQ is the public
@@ -39,28 +44,25 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from model_presto_spark.functions.vectors import sq_euclidean_sql
+from model_presto_spark.operators.knn import (
+    _coarse_cells,
+    _read_centroids,
+    _top_k,
+    _write_centroids,
+)
 
-def train_pq_codebooks(
-    df: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    n_codes: int = 16,
-    sample_limit: int = 20000,
-    iters: int = 20,
-    seed: int = 42,
+
+def _train_books(
+    X: np.ndarray, m: int, n_codes: int, iters: int, seed: int
 ) -> np.ndarray:
-    """Fit per-subspace codebooks -> ndarray (m, n_codes, dim/m).
-
-    Trains on up to ``sample_limit`` vectors pulled to the driver
-    (pre-sample with splits.hash_rank_sample for a uniform subset of
-    a huge corpus). Seeded k-means++ init + Lloyd's iterations;
+    """Per-subspace codebooks of the sample matrix ``X`` -> ndarray
+    (m, n_codes, dim/m). Seeded k-means++ init + Lloyd's iterations;
     empty clusters reseed to the farthest point, so all n_codes
     entries stay live."""
-    rows = df.select(vec_col).limit(sample_limit).collect()
-    X = np.asarray([r[0] for r in rows], dtype=np.float64)
     n, dim = X.shape
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -91,6 +93,70 @@ def train_pq_codebooks(
     return books
 
 
+def _luts(P: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, dim) vectors -> (n, m, n_codes) ADC lookup tables: exact
+    squared distances of each subvector to every codeword."""
+    m, n_codes, dsub = books.shape
+    luts = np.empty((len(P), m, n_codes))
+    for s in range(m):
+        luts[:, s, :] = (
+            (P[:, None, s * dsub : (s + 1) * dsub] - books[s][None]) ** 2
+        ).sum(-1)
+    return luts
+
+
+def _encode(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, dim) vectors -> (n, m) int8 codes: each subspace's nearest
+    codeword."""
+    return _luts(X, books).argmin(-1).astype(np.int8)
+
+
+def _adc_scan(
+    entries, codes: pd.Series, cids: pd.Series, top: int, exclude_self: bool
+) -> pd.DataFrame:
+    """Each (pid, lut) entry's ``top`` nearest candidates of one batch
+    of (cids, codes) by asymmetric distance (m table lookups + adds
+    per candidate): (__pid, __cid, __dist). ``exclude_self`` scores a
+    candidate with the probe's own id infinite, and infinite
+    distances never survive."""
+    codes = np.asarray(list(codes), dtype=np.intp)
+    cids = cids.values
+    sub = np.arange(codes.shape[1])
+    out_p, out_c, out_d = [], [], []
+    for pid, lut in entries:
+        dists = lut[sub[:, None], codes.T].sum(0)
+        if exclude_self:
+            dists = np.where(cids == pid, np.inf, dists)
+        t = min(top, len(dists))
+        idx = np.argpartition(dists, t - 1)[:t]
+        idx = idx[np.isfinite(dists[idx])]
+        out_p.extend([pid] * len(idx))
+        out_c.extend(cids[idx])
+        out_d.extend(dists[idx])
+    return pd.DataFrame({"__pid": out_p, "__cid": out_c, "__dist": out_d})
+
+
+def train_pq_codebooks(
+    df: DataFrame,
+    vec_col: str,
+    m: int = 8,
+    n_codes: int = 16,
+    sample_limit: int = 20000,
+    iters: int = 20,
+    seed: int = 42,
+) -> np.ndarray:
+    """Fit per-subspace codebooks -> ndarray (m, n_codes, dim/m).
+
+    Trains on up to ``sample_limit`` vectors pulled to the driver
+    (pre-sample with splits.hash_rank_sample for a uniform subset of
+    a huge corpus). Seeded k-means++ init + Lloyd's iterations;
+    empty clusters reseed to the farthest point, so all n_codes
+    entries stay live."""
+    rows = df.select(vec_col).limit(sample_limit).collect()
+    X = np.asarray([r[0] for r in rows], dtype=np.float64)
+    return _train_books(X, m, n_codes, iters, seed)
+
+
 def pq_encode(
     df: DataFrame,
     id_col: str,
@@ -100,7 +166,6 @@ def pq_encode(
 ) -> DataFrame:
     """vector -> m-byte PQ code (array<tinyint>), vectorized batch
     argmin per subspace."""
-    m, n_codes, dsub = codebooks.shape
     books = codebooks.copy()
 
     def go(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,17 +173,13 @@ def pq_encode(
             if not len(pdf):
                 continue
             X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            codes = np.empty((len(X), m), dtype=np.int8)
-            for s in range(m):
-                Xs = X[:, s * dsub : (s + 1) * dsub]
-                d = ((Xs[:, None, :] - books[s][None]) ** 2).sum(-1)
-                codes[:, s] = d.argmin(1)
             yield pd.DataFrame(
-                {id_col: pdf[id_col].values, out_col: list(codes)}
+                {id_col: pdf[id_col].values, out_col: list(_encode(X, books))}
             )
 
+    id_t = dict(df.dtypes)[id_col]
     return df.select(id_col, vec_col).mapInPandas(
-        go, f"{id_col} bigint, {out_col} array<tinyint>"
+        go, f"{id_col} {id_t}, {out_col} array<tinyint>"
     )
 
 
@@ -144,62 +205,40 @@ def pq_knn_join(
     float vectors), the PQ shortlist of that size is re-scored with
     exact distances before the final top-k — the standard
     two-stage ADC + re-rank pipeline."""
-    m, n_codes, dsub = codebooks.shape
+    if rerank and candidates is None:
+        raise ValueError(
+            "pq_knn_join: rerank > 0 re-scores the shortlist with float "
+            "vectors; pass candidates carrying them"
+        )
     books = codebooks.copy()
     probe_rows = probes.select(probe_id, probe_vec).collect()
     P = np.asarray([r[1] for r in probe_rows], dtype=np.float64)
-    pids = np.asarray([r[0] for r in probe_rows], dtype=np.int64)
-    # one LUT per probe: exact subspace distances to every codeword
-    luts = np.empty((len(P), m, n_codes))
-    for s in range(m):
-        Ps = P[:, s * dsub : (s + 1) * dsub]
-        luts[:, s, :] = ((Ps[:, None, :] - books[s][None]) ** 2).sum(-1)
+    pids = [r[0] for r in probe_rows]
+    entries = list(zip(pids, _luts(P, books)))
     shortlist = max(k, rerank)
 
     def go(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.asarray(list(pdf[codes_col]), dtype=np.int64)
-            cids = pdf[cand_id].values
-            out_p, out_c, out_d = [], [], []
-            sub = np.arange(m)
-            for i in range(len(P)):
-                dists = luts[i][sub[:, None], codes.T].sum(0)
-                if exclude_self:
-                    dists = np.where(cids == pids[i], np.inf, dists)
-                top = min(shortlist, len(dists))
-                idx = np.argpartition(dists, top - 1)[:top]
-                idx = idx[np.isfinite(dists[idx])]
-                top = len(idx)
-                out_p.extend([pids[i]] * top)
-                out_c.extend(cids[idx])
-                out_d.extend(dists[idx])
-            yield pd.DataFrame(
-                {"__pid": out_p, "__cid": out_c, "__dist": out_d}
-            )
+            if len(pdf):
+                yield _adc_scan(
+                    entries, pdf[codes_col], pdf[cand_id], shortlist,
+                    exclude_self,
+                )
 
+    pid_t = dict(probes.dtypes)[probe_id]
+    cid_t = dict(encoded.dtypes)[cand_id]
     scored = encoded.select(cand_id, codes_col).mapInPandas(
-        go, "__pid bigint, __cid bigint, __dist double"
+        go, f"__pid {pid_t}, __cid {cid_t}, __dist double"
     )
-    w = Window.partitionBy("__pid").orderBy(
-        F.col("__dist").asc(), F.col("__cid").asc()
-    )
-    if rerank and candidates is not None:
-        short = (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= rerank)
-            .drop("r", "__dist")
-        )
-        from model_presto_spark.functions.vectors import sq_euclidean_sql
-
+    if rerank:
+        short = _top_k(scored, rerank, "__pid", "__cid").select("__pid", "__cid")
         cands = candidates.select(
             F.col(cand_id).alias("__cid"),
             F.col(cand_vec).cast("array<double>").alias("__cvec"),
         )
         pdf_ = probes.sparkSession.createDataFrame(
-            [(int(p), [float(x) for x in v]) for p, v in zip(pids, P)],
-            "__pid bigint, __pvec array<double>",
+            [(p, [float(x) for x in v]) for p, v in zip(pids, P)],
+            f"__pid {pid_t}, __pvec array<double>",
         )
         scored = short.join(cands, "__cid").join(
             F.broadcast(pdf_), "__pid"
@@ -208,16 +247,7 @@ def pq_knn_join(
             "__cid",
             F.expr(sq_euclidean_sql("__pvec", "__cvec")).alias("__dist"),
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__pid").alias(probe_id),
-            F.col("__cid").alias(cand_id),
-            F.col("__dist").alias("dist"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k, probe_id, cand_id)
 
 
 def build_ivfpq_index(
@@ -241,62 +271,35 @@ def build_ivfpq_index(
 
     Index bytes ~ n_vectors * (8 + m): a 100 TB float corpus becomes
     a ~1 TB index that still answers top-k with exact-shape ADC."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     spark = candidates.sparkSession
-    cvec = F.col(cand_vec).cast("array<double>")
-    cands = candidates.select(
-        F.col(cand_id).alias("cid"), cvec.alias("cvec"),
-        array_to_vector(cvec).alias("__feat"),
-    )
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat",
-                predictionCol="cell")
-    model = km.fit(cands.select("__feat"))
-    assigned = model.transform(cands).select("cid", "cvec", "cell")
-    cents = {int(i): np.asarray(c, dtype=np.float64)
-             for i, c in enumerate(model.clusterCenters())}
+    assigned, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed)
+    C = np.asarray([c for _, c in cents])  # row = cell id
     # residuals are computed in numpy inside the sample pull and the
     # encode pass (never a per-row Python UDF)
     books_src = assigned.limit(sample_limit).collect()
     X = np.asarray([r["cvec"] for r in books_src], dtype=np.float64)
-    R = X - np.stack([cents[int(r["cell"])] for r in books_src])
-    dim = X.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    books = _train_books_from_matrix(R, m, n_codes, seed)
+    R = X - C[[r["cell"] for r in books_src]]
+    books = _train_books(R, m, n_codes, iters=20, seed=seed)
 
     def enc(it):
         for pdf in it:
             if not len(pdf):
                 continue
             Xb = np.asarray(list(pdf["cvec"]), dtype=np.float64)
-            Cb = np.stack([cents[int(c)] for c in pdf["cell"]])
-            Rb = Xb - Cb
-            dsub = dim // m
-            codes = np.empty((len(Rb), m), dtype=np.int8)
-            for s in range(m):
-                d = (
-                    (Rb[:, None, s * dsub:(s + 1) * dsub]
-                     - books[s][None]) ** 2
-                ).sum(-1)
-                codes[:, s] = d.argmin(1)
             yield pd.DataFrame({
                 "cid": pdf["cid"].values,
                 "cell": pdf["cell"].values,
-                "codes": list(codes),
+                "codes": list(_encode(Xb - C[pdf["cell"].values], books)),
             })
 
+    cid_t = dict(assigned.dtypes)["cid"]
     encoded = assigned.mapInPandas(
-        enc, "cid bigint, cell int, codes array<tinyint>"
+        enc, f"cid {cid_t}, cell int, codes array<tinyint>"
     )
     encoded.write.partitionBy("cell").mode("overwrite").parquet(
         f"{path}/cells"
     )
-    spark.createDataFrame(
-        [(c, v.tolist()) for c, v in cents.items()],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, cents)
     spark.createDataFrame(
         [
             (s, j, books[s][j].tolist())
@@ -305,39 +308,6 @@ def build_ivfpq_index(
         ],
         "s int, code int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def _train_books_from_matrix(
-    R: np.ndarray, m: int, n_codes: int, seed: int, iters: int = 20
-) -> np.ndarray:
-    """Lloyd's per subspace over an in-memory residual sample (same
-    procedure as train_pq_codebooks, matrix input)."""
-    n, dim = R.shape
-    dsub = dim // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, n_codes, dsub))
-    for s in range(m):
-        Xs = R[:, s * dsub:(s + 1) * dsub]
-        cents = [Xs[rng.integers(n)]]
-        for _ in range(n_codes - 1):
-            d2 = np.min(
-                ((Xs[:, None, :] - np.asarray(cents)[None]) ** 2).sum(-1),
-                axis=1,
-            )
-            probs = d2 / max(d2.sum(), 1e-12)
-            cents.append(Xs[rng.choice(n, p=probs)])
-        C = np.asarray(cents)
-        for _ in range(iters):
-            assign = ((Xs[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
-            for c in range(n_codes):
-                mask = assign == c
-                if mask.any():
-                    C[c] = Xs[mask].mean(0)
-                else:
-                    far = ((Xs - C[assign]) ** 2).sum(-1).argmax()
-                    C[c] = Xs[far]
-        books[s] = C
-    return books
 
 
 def ivfpq_search(
@@ -357,8 +327,7 @@ def ivfpq_search(
     and scoring is residual-space ADC — per (probe, cell) one
     m x n_codes LUT, m byte-lookups per candidate. Output
     (probe_id, cid, dist, rank)."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = {int(r["cell"]): np.asarray(r["centroid"]) for r in cent_rows}
+    cents = dict(_read_centroids(spark, path))
     book_rows = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["s"] for r in book_rows)
     n_codes = 1 + max(r["code"] for r in book_rows)
@@ -368,73 +337,31 @@ def ivfpq_search(
         books[r["s"], r["code"]] = r["centroid"]
 
     probe_rows = probes.select(probe_id, probe_vec).collect()
-    P = np.asarray([r[1] for r in probe_rows], dtype=np.float64)
-    pids = np.asarray([r[0] for r in probe_rows], dtype=np.int64)
     # per probe: n_probe nearest cells + one residual LUT per cell
     cell_ids = sorted(cents)
-    C = np.stack([cents[c] for c in cell_ids])
-    luts: dict[int, list[tuple[int, np.ndarray]]] = {}
-    probed_cells: set[int] = set()
-    for i in range(len(P)):
-        d = ((C - P[i]) ** 2).sum(-1)
-        near = np.argsort(d)[:n_probe]
-        entries = []
-        for j in near:
-            cell = cell_ids[int(j)]
-            probed_cells.add(cell)
-            r = P[i] - cents[cell]
-            lut = np.stack([
-                ((r[s * dsub:(s + 1) * dsub] - books[s]) ** 2).sum(-1)
-                for s in range(m)
-            ])
-            entries.append((cell, lut))
-        luts[int(pids[i])] = entries
+    C = np.asarray([cents[c] for c in cell_ids])
+    by_cell: dict[int, list] = {}
+    for pid, vec in probe_rows:
+        p = np.asarray(vec, dtype=np.float64)
+        for j in np.argsort(((C - p) ** 2).sum(-1))[:n_probe]:
+            by_cell.setdefault(cell_ids[j], []).append(
+                (pid, _luts((p - C[j])[None], books)[0])
+            )
 
     cells = spark.read.parquet(f"{path}/cells").where(
-        F.col("cell").isin([int(c) for c in probed_cells])
+        F.col("cell").isin(sorted(by_cell))
     )
-    by_cell: dict[int, list[tuple[int, np.ndarray]]] = {}
-    for pid, entries in luts.items():
-        for cell, lut in entries:
-            by_cell.setdefault(cell, []).append((pid, lut))
-    sub = np.arange(m)
 
     def go(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not len(pdf):
-                continue
-            out_p, out_c, out_d = [], [], []
             for cell, grp in pdf.groupby("cell"):
-                plist = by_cell.get(int(cell))
-                if not plist:
-                    continue
-                codes = np.asarray(list(grp["codes"]), dtype=np.int64)
-                cids = grp["cid"].values
-                for pid, lut in plist:
-                    dists = lut[sub[:, None], codes.T].sum(0)
-                    if exclude_self:
-                        dists = np.where(cids == pid, np.inf, dists)
-                    top = min(k, len(dists))
-                    idx = np.argpartition(dists, top - 1)[:top]
-                    idx = idx[np.isfinite(dists[idx])]
-                    out_p.extend([pid] * len(idx))
-                    out_c.extend(cids[idx])
-                    out_d.extend(dists[idx])
-            yield pd.DataFrame(
-                {"__pid": out_p, "__cid": out_c, "__dist": out_d}
-            )
+                entries = by_cell.get(int(cell))
+                if entries:
+                    yield _adc_scan(
+                        entries, grp["codes"], grp["cid"], k, exclude_self
+                    )
 
-    scored = cells.mapInPandas(go, "__pid bigint, __cid bigint, __dist double")
-    w = Window.partitionBy("__pid").orderBy(
-        F.col("__dist").asc(), F.col("__cid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__pid").alias(probe_id),
-            F.col("__cid").alias("cid"),
-            F.col("__dist").alias("dist"),
-            "rank",
-        )
-    )
+    pid_t = dict(probes.dtypes)[probe_id]
+    cid_t = dict(cells.dtypes)["cid"]
+    scored = cells.mapInPandas(go, f"__pid {pid_t}, __cid {cid_t}, __dist double")
+    return _top_k(scored, k, probe_id, "cid")

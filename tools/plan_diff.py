@@ -13,11 +13,15 @@ tables in ``SF_DIR`` and writes one section per plan:
 - ``query <name> localCheckpoint <k>``: the k-th relation the build
   passed to ``DataFrame.localCheckpoint`` (wrapped from outside, as
   ``tools/build_jobs.py`` does), before it was cut from the lineage;
-- ``build <name>`` and ``build <name> rows``: the dedup candidate
-  builds no query runs (screened minhash, containment ``lsh`` and
-  ``lsh_ensemble``, ``image_dup_pairs``) on fixed small inputs, with
-  their sorted result rows, so a plan that moves can be shown to keep
-  its rows.
+- ``build <name>`` and ``build <name> rows``: the builds no query
+  runs, on fixed small inputs, with their sorted result rows, so a
+  plan that moves can be shown to keep its rows: the dedup candidate
+  builds (screened minhash, containment ``lsh`` and ``lsh_ensemble``,
+  ``image_dup_pairs``) and the vector searches (``ivf_knn_join``,
+  ``ivf_index_search`` after ``build_ivf_index``,
+  ``quantized_knn_join``, ``pq_knn_join`` with re-rank,
+  ``ivfpq_search`` after ``build_ivfpq_index``; the indexes go to a
+  temporary directory).
 
 Plans are normalized so two runs of the same code compare equal:
 expression ids, lambda-variable names, ``_common_expr_N`` aliases,
@@ -40,6 +44,7 @@ import difflib
 import os
 import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -118,14 +123,63 @@ def _media(spark):
     ])
 
 
-def _builds(spark) -> dict:
+def _vectors(spark):
+    """Seeded 16-d vectors around four centers."""
+    import random
+
+    rng = random.Random(7)
+    centers = [[rng.uniform(-10, 10) for _ in range(16)] for _ in range(4)]
+    rows = [
+        (i, [x + rng.gauss(0, 1) for x in centers[i % 4]]) for i in range(80)
+    ]
+    return spark.createDataFrame(rows, "vid long, vec array<double>")
+
+
+def _builds(spark, tmp: str) -> dict:
     from model_presto_spark.multimodal.dedup import image_dup_pairs
     from model_presto_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_containment_pairs,
     )
+    from model_presto_spark.operators.knn import (
+        build_ivf_index,
+        ivf_index_search,
+        ivf_knn_join,
+        quantized_knn_join,
+    )
+    from model_presto_spark.operators.pq import (
+        build_ivfpq_index,
+        ivfpq_search,
+        pq_encode,
+        pq_knn_join,
+        train_pq_codebooks,
+    )
 
     docs = _docs(spark)
+    vecs = _vectors(spark)
+    probes = vecs.where("vid < 8")
+    cands = vecs.withColumnRenamed("vid", "cid")
+
+    def ivf_search():
+        build_ivf_index(cands, "cid", f"{tmp}/ivf", n_lists=4)
+        return ivf_index_search(
+            spark, f"{tmp}/ivf", probes, "vid", k=5, exclude_self=True
+        )
+
+    def pq_rerank():
+        books = train_pq_codebooks(cands, "vec", m=4, n_codes=8)
+        return pq_knn_join(
+            probes, pq_encode(cands, "cid", "vec", books), "vid", "cid",
+            books, k=5, candidates=cands, rerank=15, exclude_self=True,
+        )
+
+    def ivfpq():
+        build_ivfpq_index(cands, "cid", f"{tmp}/ivfpq", n_lists=4, m=4,
+                          n_codes=8)
+        return ivfpq_search(
+            spark, f"{tmp}/ivfpq", probes, "vid", k=5, exclude_self=True
+        )
+
     return {
         "screened_minhash": lambda: minhash_lsh_pairs(
             docs, "doc_id", "text", threshold=0.5, signature_screen=0.3
@@ -137,6 +191,15 @@ def _builds(spark) -> dict:
             docs, "doc_id", "text", threshold=0.6, candidates="lsh_ensemble"
         ),
         "image_dup_pairs": lambda: image_dup_pairs(_media(spark)),
+        "ivf_knn_join": lambda: ivf_knn_join(
+            probes, cands, "vid", "cid", k=5, n_lists=4, exclude_self=True
+        ),
+        "ivf_index_search": ivf_search,
+        "quantized_knn_join": lambda: quantized_knn_join(
+            probes, cands, "vid", "cid", k=5, exclude_self=True
+        ),
+        "pq_knn_join_rerank": pq_rerank,
+        "ivfpq_search": ivfpq,
     }
 
 
@@ -163,11 +226,11 @@ def dump(sf_dir: str, out: str, names: list[str]) -> None:
             got = sorted(tuple(r) for r in df.collect())
             f.write(f"## {title} rows\n" + "\n".join(map(repr, got)) + "\n")
 
-    with open(out, "w") as f:
+    with open(out, "w") as f, tempfile.TemporaryDirectory() as tmp:
         for name in names or list(QUERIES):
             section(f, f"query {name}",
                     lambda fn=QUERIES[name].fn: fn(spark, sf_dir))
-        for name, build in _builds(spark).items():
+        for name, build in _builds(spark, tmp).items():
             section(f, f"build {name}", build, rows=True)
 
 
