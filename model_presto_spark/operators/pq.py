@@ -59,10 +59,8 @@ from model_presto_spark.operators.knn import (
 def _train_books(
     X: np.ndarray, m: int, n_codes: int, iters: int, seed: int
 ) -> np.ndarray:
-    """Per-subspace codebooks of the sample matrix ``X`` -> ndarray
-    (m, n_codes, dim/m). Seeded k-means++ init + Lloyd's iterations;
-    empty clusters reseed to the farthest point, so all n_codes
-    entries stay live."""
+    """``train_pq_codebooks`` on a sample matrix ``X`` (raw vectors or
+    IVF residuals)."""
     n, dim = X.shape
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
