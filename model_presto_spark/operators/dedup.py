@@ -759,8 +759,9 @@ def dedup_corpus(
     **kwargs,
 ) -> DataFrame:
     """One-call end-to-end near-dedup: candidate pairs (``method`` in
-    'exact' | 'minhash' | 'ngram') -> transitive clusters (connected
-    components) -> keep the min-id representative of every cluster.
+    'minhash' | 'ngram') -> transitive clusters (connected components)
+    -> keep the min-id representative of every cluster. Exact dedup is
+    ``exact_dedup``.
 
     The composition a pipeline actually runs, wired from the
     individually-verified stages: pair generation is the bucketed
@@ -773,8 +774,6 @@ def dedup_corpus(
         keep_cluster_representatives,
     )
 
-    if method == "exact":
-        return exact_dedup(df, id_col, text_col)
     if method == "minhash":
         pairs = minhash_lsh_pairs(
             df, id_col, text_col, threshold=threshold,
@@ -786,7 +785,10 @@ def dedup_corpus(
             fast_hash=fast_hash, **kwargs,
         )
     else:
-        raise ValueError(f"unknown method {method!r}")
+        raise ValueError(
+            f"unknown method {method!r}: use 'minhash' or 'ngram' "
+            "(exact dedup is exact_dedup)"
+        )
     return keep_cluster_representatives(
         df, pairs.select("id_a", "id_b"), id_col
     )

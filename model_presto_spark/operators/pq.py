@@ -62,6 +62,8 @@ def _train_books(
     """``train_pq_codebooks`` on a sample matrix ``X`` (raw vectors or
     IVF residuals)."""
     n, dim = X.shape
+    if not 1 <= n_codes <= 128:  # codes are stored as int8
+        raise ValueError(f"n_codes must be in 1..128, got {n_codes}")
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m

@@ -24,14 +24,28 @@ columns, and pick join strategies across stage boundaries.
     clean = pipe.run(docs)          # lazy DataFrame
     funnel = pipe.report(docs)      # per-stage surviving counts
 
-Stage configs are validated eagerly (unknown ops / params raise at
-construction, not mid-job). ``report`` counts survivors after each
-prefix of the pipeline — the q67-style ingest funnel for any
-configuration.
+Each stage is a plain function ``_<op>(df, <params>)``: its signature
+is the stage's one parameter list (names and defaults), and the config
+is bound to it with ``functools.partial``. Validation happens in two
+places:
+
+- at construction, from the signature: an unknown op, an unknown
+  param, or a missing required param (one without a default) raises
+  ``ValueError`` before any Spark work;
+- when ``run`` (or ``report``) builds a stage, before that stage
+  starts any Spark job: the operator checks the values it owns, e.g.
+  near_dedup's ``method`` (``dedup_corpus`` raises ``ValueError``).
+
+near_dedup and gopher_gate forward to their operator only the
+keyword-only options the config sets, so the operator stays the one
+home of those defaults. ``report`` counts survivors after each prefix
+of the pipeline — the q67-style ingest funnel for any configuration.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -40,368 +54,218 @@ from pyspark.sql import functions as F
 from model_presto_spark.functions import text as T
 
 
-def _stage_normalize(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    col = cfg.get("text_col", "text")
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn(col, T.normalize_text(F.col(col)))
-
-    return apply
+def _keep_ids(df: DataFrame, keep: DataFrame, id_col: str) -> DataFrame:
+    """The rows of ``df`` whose id is in ``keep`` (one semi-join): the
+    full surviving rows of a filter stage whose operator returns ids."""
+    return df.join(keep.select(id_col), id_col, "left_semi")
 
 
-def _stage_scrub_pii(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    col = cfg.get("text_col", "text")
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn(col, T.scrub_pii(F.col(col)))
-
-    return apply
-
-
-def _stage_quality_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    col = cfg.get("text_col", "text")
-    min_tokens = cfg.get("min_tokens", 0)
-    max_tokens = cfg.get("max_tokens")
-    min_alpha = cfg.get("min_alpha")
-    min_stopword = cfg.get("min_stopword")
-
-    def apply(df: DataFrame) -> DataFrame:
-        toksed = df.withColumn("__toks", F.expr(T.tokens_sql(f"`{col}`")))
-        feats = {
-            k: F.expr(v)
-            for k, v in T.quality_features_sql(f"`{col}`", "__toks").items()
-        }
-        cond = feats["n_tokens"] >= min_tokens
-        if max_tokens is not None:
-            cond = cond & (feats["n_tokens"] <= max_tokens)
-        if min_alpha is not None:
-            cond = cond & (feats["alpha_ratio"] >= min_alpha)
-        if min_stopword is not None:
-            cond = cond & (feats["stopword_ratio"] >= min_stopword)
-        return toksed.where(cond).drop("__toks")
-
-    return apply
+def _replace_text(
+    df: DataFrame, cleaned: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """Transform stage: ``df`` with its text taken from ``cleaned`` (by
+    id); every other column is kept."""
+    cleaned = cleaned.select(id_col, F.col(text_col).alias("__clean"))
+    return (
+        df.drop(text_col)
+        .join(cleaned, id_col)
+        .withColumnRenamed("__clean", text_col)
+    )
 
 
-def _stage_lang_filter(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    keep = cfg["keep"]
-    lang_col = cfg.get("lang_col", "lang")
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.where(F.col(lang_col).isin(*keep))
-
-    return apply
-
-
-def _stage_exact_dedup(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dedup import exact_dedup
-
-        # exact_dedup returns (fingerprint, id, dup_count); the
-        # pipeline keeps full surviving rows via one semi-join
-        keep = exact_dedup(df, id_col, col).select(id_col)
-        return df.join(keep, id_col, "left_semi")
-
-    return apply
-
-
-def _stage_near_dedup(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    kwargs = {
-        k: v
-        for k, v in cfg.items()
-        if k in ("method", "threshold", "fast_hash")
+def _options(stage: Callable, args: dict) -> dict:
+    """The keyword-only options of a forwarding stage that its config
+    set (not None); the operator keeps its own defaults for the rest."""
+    return {
+        p.name: args[p.name]
+        for p in inspect.signature(stage).parameters.values()
+        if p.kind is p.KEYWORD_ONLY and args[p.name] is not None
     }
 
-    # dedup_corpus(method='exact') returns the fingerprint relation,
-    # not surviving rows — the pipeline's exact stage is 'exact_dedup'
-    if kwargs.get("method") not in (None, "minhash", "ngram"):
-        raise ValueError(
-            "near_dedup method must be 'minhash' or 'ngram'; "
-            "use the 'exact_dedup' stage for exact dedup"
-        )
 
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dedup import dedup_corpus
-
-        return dedup_corpus(df, id_col, col, **kwargs)
-
-    return apply
+def _normalize(df: DataFrame, text_col="text") -> DataFrame:
+    return df.withColumn(text_col, T.normalize_text(F.col(text_col)))
 
 
-def _stage_span_dedup_filter(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    k = cfg.get("k", 8)
-    cap = cfg.get("max_dup_fraction", 0.5)
-    fast = cfg.get("fast_hash", True)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dedup import span_dup_stats
-
-        stats = span_dup_stats(df, k, col, id_col, fast_hash=fast)
-        keep = stats.where(F.col("dup_fraction") <= cap).select(id_col)
-        return df.join(keep, id_col, "left_semi")
-
-    return apply
+def _scrub_pii(df: DataFrame, text_col="text") -> DataFrame:
+    return df.withColumn(text_col, T.scrub_pii(F.col(text_col)))
 
 
-def _stage_contamination_filter(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    bench = cfg["benchmark"]
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    n = cfg.get("n", 5)
-    min_overlap = cfg.get("min_overlap", 1)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.contamination import (
-            ngram_contamination,
-        )
-
-        hits = ngram_contamination(
-            df, bench, id_col, col, n=n, min_overlap=min_overlap
-        ).select(id_col)
-        return df.join(hits, id_col, "left_anti")
-
-    return apply
-
-
-def _stage_perplexity_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    cap = cfg["max_bits_per_token"]
-    min_count = cfg.get("min_count", 2)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.lm import perplexity_scores
-
-        scores = perplexity_scores(df, col, id_col, min_count=min_count)
-        keep = scores.where(F.col("bits_per_token") <= cap).select(id_col)
-        return df.join(keep, id_col, "left_semi")
-
-    return apply
-
-
-def _stage_span_remove(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    k = cfg.get("k", 8)
-    fast = cfg.get("fast_hash", True)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dedup import remove_dup_spans
-
-        cleaned = remove_dup_spans(df, k, col, id_col, fast_hash=fast).select(
-            id_col, F.col(col).alias("__clean")
-        )
-        # transform stage: replace the text, keep all other columns
-        return (
-            df.drop(col)
-            .join(cleaned, id_col)
-            .withColumnRenamed("__clean", col)
-        )
-
-    return apply
-
-
-def _stage_token_budget(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    source_col = cfg.get("source_col", "source")
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    budget = cfg["budget_tokens"]
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.splits import (
-            token_budget_truncate,
-        )
-
-        return token_budget_truncate(
-            df, source_col, id_col, F.size(F.expr(T.tokens_sql(f"`{col}`"))), budget,
-            cum_col="__cum",
-        ).drop("__cum")
-
-    return apply
-
-
-def _stage_domain_mix(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    source_col = cfg.get("source_col", "source")
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    budget = cfg["budget_tokens"]
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.mixing import apply_mix, mix_plan
-
-        plan = mix_plan(
-            df,
-            source_col,
-            weight=F.lit(1.0),
-            token_count=F.size(F.expr(T.tokens_sql(f"`{col}`"))),
-            budget_tokens=budget,
-        )
-        return apply_mix(df, plan, source_col, id_col)
-
-    return apply
-
-
-def _stage_line_boilerplate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    min_df = cfg.get("min_doc_freq", 5)
-    delimiter = cfg.get("delimiter", "\n")
-    width = cfg.get("width", 10)
-    fast = cfg.get("fast_hash", True)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.lines import remove_frequent_lines
-
-        cleaned = remove_frequent_lines(
-            df,
-            id_col,
-            col,
-            min_doc_freq=min_df,
-            delimiter=delimiter,
-            width=width,
-            fast_hash=fast,
-        ).select(id_col, F.col(col).alias("__clean"))
-        # transform stage: replace the text, keep all other columns
-        return (
-            df.drop(col).join(cleaned, id_col).withColumnRenamed("__clean", col)
-        )
-
-    return apply
-
-
-def _stage_semantic_dedup(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    vec_col = cfg.get("vec_col", "embedding")
-    threshold = cfg.get("threshold", 0.8)
-    dim = cfg.get("dim", 64)
-    planes = cfg.get("planes", 6)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dedup import semantic_dedup
-
-        flags = semantic_dedup(
-            df, id_col, vec_col, threshold=threshold, dim=dim, planes=planes
-        ).select(id_col, "is_semantic_dup")
-        return (
-            df.join(flags, id_col, "left")
-            .where(~F.coalesce(F.col("is_semantic_dup"), F.lit(False)))
-            .drop("is_semantic_dup")
-        )
-
-    return apply
-
-
-def _stage_dsir_select(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    target = cfg["target"]  # DataFrame (JSON configs pass "$name")
-    k = cfg["k"]
-    n_buckets = cfg.get("n_buckets", 1024)
-    seed = cfg.get("seed", 42)
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.dsir import dsir_sample
-
-        keep = dsir_sample(
-            df, target, k=k, id_col=id_col, text_col=col,
-            n_buckets=n_buckets, seed=seed, fast_hash=False,
-        ).select(id_col)
-        return df.join(keep, id_col, "left_semi")
-
-    return apply
-
-
-def _stage_gopher_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
-    id_col = cfg.get("id_col", "doc_id")
-    col = cfg.get("text_col", "text")
-    kwargs = {
-        k: cfg[k]
-        for k in (
-            "min_words", "max_words", "min_mean_word_len",
-            "max_mean_word_len", "max_symbol_ratio",
-            "min_alpha_word_frac", "min_stop_hits",
-            "max_top_2gram_frac", "max_dup_3gram_frac",
-        )
-        if k in cfg
+def _quality_gate(
+    df: DataFrame, text_col="text", min_tokens=0, max_tokens=None,
+    min_alpha=None, min_stopword=None,
+) -> DataFrame:
+    toksed = df.withColumn("__toks", F.expr(T.tokens_sql(f"`{text_col}`")))
+    feats = {
+        k: F.expr(v)
+        for k, v in T.quality_features_sql(f"`{text_col}`", "__toks").items()
     }
-
-    def apply(df: DataFrame) -> DataFrame:
-        from model_presto_spark.operators.quality import gopher_quality_flags
-
-        keep = (
-            gopher_quality_flags(df, col, id_col, **kwargs)
-            .where(F.col("gopher_pass"))
-            .select(id_col)
-        )
-        return df.join(keep, id_col, "left_semi")
-
-    return apply
+    cond = feats["n_tokens"] >= min_tokens
+    if max_tokens is not None:
+        cond = cond & (feats["n_tokens"] <= max_tokens)
+    if min_alpha is not None:
+        cond = cond & (feats["alpha_ratio"] >= min_alpha)
+    if min_stopword is not None:
+        cond = cond & (feats["stopword_ratio"] >= min_stopword)
+    return toksed.where(cond).drop("__toks")
 
 
-_STAGES: dict[str, tuple[Callable[[dict], Callable], set[str]]] = {
-    "normalize": (_stage_normalize, {"text_col"}),
-    "scrub_pii": (_stage_scrub_pii, {"text_col"}),
-    "quality_gate": (
-        _stage_quality_gate,
-        {"text_col", "min_tokens", "max_tokens", "min_alpha", "min_stopword"},
-    ),
-    "lang_filter": (_stage_lang_filter, {"keep", "lang_col"}),
-    "exact_dedup": (_stage_exact_dedup, {"id_col", "text_col"}),
-    "near_dedup": (
-        _stage_near_dedup,
-        {"id_col", "text_col", "method", "threshold", "fast_hash"},
-    ),
-    "span_dedup_filter": (
-        _stage_span_dedup_filter,
-        {"id_col", "text_col", "k", "max_dup_fraction", "fast_hash"},
-    ),
-    "contamination_filter": (
-        _stage_contamination_filter,
-        {"benchmark", "id_col", "text_col", "n", "min_overlap"},
-    ),
-    "perplexity_gate": (
-        _stage_perplexity_gate,
-        {"id_col", "text_col", "max_bits_per_token", "min_count"},
-    ),
-    "domain_mix": (
-        _stage_domain_mix,
-        {"source_col", "id_col", "text_col", "budget_tokens"},
-    ),
-    "span_remove": (
-        _stage_span_remove,
-        {"id_col", "text_col", "k", "fast_hash"},
-    ),
-    "token_budget": (
-        _stage_token_budget,
-        {"source_col", "id_col", "text_col", "budget_tokens"},
-    ),
-    "line_boilerplate": (
-        _stage_line_boilerplate,
-        {"id_col", "text_col", "min_doc_freq", "delimiter", "width",
-         "fast_hash"},
-    ),
-    "semantic_dedup": (
-        _stage_semantic_dedup,
-        {"id_col", "vec_col", "threshold", "dim", "planes"},
-    ),
-    "dsir_select": (
-        _stage_dsir_select,
-        {"id_col", "text_col", "target", "k", "n_buckets", "seed"},
-    ),
-    "gopher_gate": (
-        _stage_gopher_gate,
-        {"id_col", "text_col", "min_words", "max_words",
-         "min_mean_word_len", "max_mean_word_len", "max_symbol_ratio",
-         "min_alpha_word_frac", "min_stop_hits", "max_top_2gram_frac",
-         "max_dup_3gram_frac"},
-    ),
+def _lang_filter(df: DataFrame, keep, lang_col="lang") -> DataFrame:
+    return df.where(F.col(lang_col).isin(*keep))
+
+
+def _exact_dedup(df: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
+    from model_presto_spark.operators.dedup import exact_dedup
+
+    # exact_dedup returns (fingerprint, id, dup_count)
+    return _keep_ids(df, exact_dedup(df, id_col, text_col), id_col)
+
+
+def _near_dedup(
+    df: DataFrame, id_col="doc_id", text_col="text", *,
+    method=None, threshold=None, fast_hash=None,
+) -> DataFrame:
+    from model_presto_spark.operators.dedup import dedup_corpus
+
+    return dedup_corpus(df, id_col, text_col, **_options(_near_dedup, locals()))
+
+
+def _span_dedup_filter(
+    df: DataFrame, id_col="doc_id", text_col="text", k=8,
+    max_dup_fraction=0.5, fast_hash=True,
+) -> DataFrame:
+    from model_presto_spark.operators.dedup import span_dup_stats
+
+    stats = span_dup_stats(df, k, text_col, id_col, fast_hash=fast_hash)
+    keep = stats.where(F.col("dup_fraction") <= max_dup_fraction)
+    return _keep_ids(df, keep, id_col)
+
+
+def _contamination_filter(
+    df: DataFrame, benchmark, id_col="doc_id", text_col="text", n=5,
+    min_overlap=1,
+) -> DataFrame:
+    from model_presto_spark.operators.contamination import ngram_contamination
+
+    hits = ngram_contamination(
+        df, benchmark, id_col, text_col, n=n, min_overlap=min_overlap
+    ).select(id_col)
+    return df.join(hits, id_col, "left_anti")
+
+
+def _perplexity_gate(
+    df: DataFrame, max_bits_per_token, id_col="doc_id", text_col="text",
+    min_count=2,
+) -> DataFrame:
+    from model_presto_spark.operators.lm import perplexity_scores
+
+    scores = perplexity_scores(df, text_col, id_col, min_count=min_count)
+    keep = scores.where(F.col("bits_per_token") <= max_bits_per_token)
+    return _keep_ids(df, keep, id_col)
+
+
+def _span_remove(
+    df: DataFrame, id_col="doc_id", text_col="text", k=8, fast_hash=True
+) -> DataFrame:
+    from model_presto_spark.operators.dedup import remove_dup_spans
+
+    cleaned = remove_dup_spans(df, k, text_col, id_col, fast_hash=fast_hash)
+    return _replace_text(df, cleaned, id_col, text_col)
+
+
+def _token_budget(
+    df: DataFrame, budget_tokens, source_col="source", id_col="doc_id",
+    text_col="text",
+) -> DataFrame:
+    from model_presto_spark.operators.splits import token_budget_truncate
+
+    return token_budget_truncate(
+        df, source_col, id_col, F.size(F.expr(T.tokens_sql(f"`{text_col}`"))),
+        budget_tokens, cum_col="__cum",
+    ).drop("__cum")
+
+
+def _domain_mix(
+    df: DataFrame, budget_tokens, source_col="source", id_col="doc_id",
+    text_col="text",
+) -> DataFrame:
+    from model_presto_spark.operators.mixing import apply_mix, mix_plan
+
+    plan = mix_plan(
+        df,
+        source_col,
+        weight=F.lit(1.0),
+        token_count=F.size(F.expr(T.tokens_sql(f"`{text_col}`"))),
+        budget_tokens=budget_tokens,
+    )
+    return apply_mix(df, plan, source_col, id_col)
+
+
+def _line_boilerplate(
+    df: DataFrame, id_col="doc_id", text_col="text", min_doc_freq=5,
+    delimiter="\n", width=10, fast_hash=True,
+) -> DataFrame:
+    from model_presto_spark.operators.lines import remove_frequent_lines
+
+    cleaned = remove_frequent_lines(
+        df, id_col, text_col, min_doc_freq=min_doc_freq, delimiter=delimiter,
+        width=width, fast_hash=fast_hash,
+    )
+    return _replace_text(df, cleaned, id_col, text_col)
+
+
+def _semantic_dedup(
+    df: DataFrame, id_col="doc_id", vec_col="embedding", threshold=0.8,
+    dim=64, planes=6,
+) -> DataFrame:
+    from model_presto_spark.operators.dedup import semantic_dedup
+
+    flags = semantic_dedup(
+        df, id_col, vec_col, threshold=threshold, dim=dim, planes=planes
+    ).select(id_col, "is_semantic_dup")
+    return (
+        df.join(flags, id_col, "left")
+        .where(~F.coalesce(F.col("is_semantic_dup"), F.lit(False)))
+        .drop("is_semantic_dup")
+    )
+
+
+def _dsir_select(
+    df: DataFrame, target, k, id_col="doc_id", text_col="text",
+    n_buckets=1024, seed=42,
+) -> DataFrame:
+    from model_presto_spark.operators.dsir import dsir_sample
+
+    # target is a DataFrame (JSON configs pass "$name")
+    keep = dsir_sample(
+        df, target, k=k, id_col=id_col, text_col=text_col,
+        n_buckets=n_buckets, seed=seed, fast_hash=False,
+    )
+    return _keep_ids(df, keep, id_col)
+
+
+def _gopher_gate(
+    df: DataFrame, id_col="doc_id", text_col="text", *,
+    min_words=None, max_words=None, min_mean_word_len=None,
+    max_mean_word_len=None, max_symbol_ratio=None, min_alpha_word_frac=None,
+    min_stop_hits=None, max_top_2gram_frac=None, max_dup_3gram_frac=None,
+) -> DataFrame:
+    from model_presto_spark.operators.quality import gopher_quality_flags
+
+    flags = gopher_quality_flags(
+        df, text_col, id_col, **_options(_gopher_gate, locals())
+    )
+    return _keep_ids(df, flags.where(F.col("gopher_pass")), id_col)
+
+
+_STAGES: dict[str, Callable[..., DataFrame]] = {
+    stage.__name__[1:]: stage
+    for stage in (
+        _normalize, _scrub_pii, _quality_gate, _lang_filter, _exact_dedup,
+        _near_dedup, _span_dedup_filter, _contamination_filter,
+        _perplexity_gate, _domain_mix, _span_remove, _token_budget,
+        _line_boilerplate, _semantic_dedup, _dsir_select, _gopher_gate,
+    )
 }
 
 
@@ -423,14 +287,22 @@ class CorpusPipeline:
                     f"stage {i}: unknown op {op!r}; "
                     f"known: {sorted(_STAGES)}"
                 )
-            factory, allowed = _STAGES[op]
+            stage = _STAGES[op]
+            params = list(inspect.signature(stage).parameters.values())[1:]
+            allowed = {p.name for p in params}
             unknown = set(cfg) - allowed
             if unknown:
                 raise ValueError(
                     f"stage {i} ({op}): unknown params {sorted(unknown)}; "
                     f"allowed: {sorted(allowed)}"
                 )
-            self._built.append((op, factory(cfg)))
+            missing = {p.name for p in params if p.default is p.empty} - set(cfg)
+            if missing:
+                raise ValueError(
+                    f"stage {i} ({op}): missing required params "
+                    f"{sorted(missing)}"
+                )
+            self._built.append((op, functools.partial(stage, **cfg)))
 
     @classmethod
     def from_json(cls, text: str, **dataframes: DataFrame) -> "CorpusPipeline":

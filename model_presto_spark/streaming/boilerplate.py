@@ -35,14 +35,13 @@ streaming/incremental_dedup.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from model_presto_spark.functions.text import fingerprint60_sql
 from model_presto_spark.operators.lines import segment_by_delimiter, segment_by_width
+from model_presto_spark.streaming.incremental_dedup import _ledger_exists
 
 
 def _hashed_lines(
@@ -191,12 +190,3 @@ def incremental_boilerplate_ingest(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _ledger_exists(path: str) -> bool:
-    if not os.path.isdir(path):
-        return False
-    for _root, _dirs, files in os.walk(path):
-        if any(n.endswith(".parquet") for n in files):
-            return True
-    return False

@@ -11,7 +11,8 @@ that near-duplicate rows force at the rank boundary. The int8 fold is
 pinned to numpy integer math. The IVF and PQ searches, set so that
 they score every candidate exactly (every cell probed, a re-rank
 shortlist of all candidates), return ``knn_join``'s rows; the PQ
-paths keep ids in their input type.
+paths keep ids in their input type and refuse more codewords than
+their int8 codes can hold.
 """
 
 from __future__ import annotations
@@ -253,3 +254,17 @@ def test_pq_rerank_requires_candidates(spark, rand16):
     enc = pq_encode(cands, "cid", "vec", books)
     with pytest.raises(ValueError, match="candidates"):
         pq_knn_join(probes, enc, "vid", "cid", books, k=K, rerank=3 * K)
+
+
+def test_pq_refuses_codes_past_int8(spark):
+    """Codes are stored as tinyint: with more than 128 codewords a code
+    would wrap negative and index the wrong LUT entry. The one trainer
+    (``train_pq_codebooks`` and ``build_ivfpq_index`` both call it)
+    refuses, though 300 distinct vectors could fill 200 codewords."""
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [([float(x) for x in v],) for v in rng.normal(size=(300, 4))],
+        "vec ARRAY<DOUBLE>",
+    )
+    with pytest.raises(ValueError, match="n_codes"):
+        train_pq_codebooks(vecs, "vec", m=2, n_codes=200)

@@ -21,11 +21,16 @@ tables in ``SF_DIR`` and writes one section per plan:
   ``ivf_index_search`` after ``build_ivf_index``,
   ``quantized_knn_join``, ``pq_knn_join`` with re-rank,
   ``ivfpq_search`` after ``build_ivfpq_index``; the indexes go to a
-  temporary directory).
+  temporary directory), one one-stage ``CorpusPipeline`` per op
+  (``pipeline_<op>``, on a small fixed corpus) and the benchmark's
+  ``corpus_stages`` pipeline (``corpus_stages``, on a 500-document
+  corpus generated and written as the benchmark writes its own: 4 x
+  nproc part files).
 
 Plans are normalized so two runs of the same code compare equal:
 expression ids, lambda-variable names, ``_common_expr_N`` aliases,
-``plan_id`` tags and JVM object hashes are stripped. The session's
+``plan_id`` tags, JVM object hashes and file-index paths (the
+benchmark corpus lives in each checkout) are stripped. The session's
 cache is cleared before each build. ``diff`` prints every section that
 is missing from one file or differs between them, and exits 1 if any
 does.
@@ -55,6 +60,7 @@ _NORMALIZE = [
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@"),
+    (re.compile(r"(InMemoryFileIndex\(\d+ paths\))\[[^,]*,"), r"\1[...],"),
 ]
 
 
@@ -86,7 +92,7 @@ class CheckpointLog:
         DataFrame.localCheckpoint = local_checkpoint
 
 
-def _docs(spark):
+def _doc_rows() -> list[tuple[int, str]]:
     """Filler documents plus planted near-copies and contained slices."""
     words = [f"w{j}" for j in range(200)]
     rows = [
@@ -99,7 +105,11 @@ def _docs(spark):
         (102, " ".join(words[30:50])),
         (103, " ".join(words[70:110])),
     ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return rows
+
+
+def _docs(spark):
+    return spark.createDataFrame(_doc_rows(), "doc_id long, text string")
 
 
 def _media(spark):
@@ -133,6 +143,81 @@ def _vectors(spark):
         (i, [x + rng.gauss(0, 1) for x in centers[i % 4]]) for i in range(80)
     ]
     return spark.createDataFrame(rows, "vid long, vec array<double>")
+
+
+def _corpus(spark):
+    """``_doc_rows`` plus what the other pipeline stages read: newline
+    boilerplate on every third doc, PII, three languages, two sources
+    and 8-d embeddings (every fifth one a near-copy of the one before);
+    with a contamination benchmark and a DSIR target."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for i, (doc_id, text) in enumerate(_doc_rows()):
+        if i % 3 == 0:
+            text += "\nsubscribe to our newsletter"
+        if i % 7 == 0:
+            text = f"mail a.b{i}@example.com {text}"
+        vec = [rng.uniform(-1, 1) for _ in range(8)]
+        if i % 5 == 1:
+            vec = [x + 0.01 for x in rows[-1][4]]
+        rows.append((doc_id, text, ("en", "fr", "de")[i % 3],
+                     ("web", "news")[i % 2], vec))
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, "
+        "embedding array<double>",
+    )
+    words = " ".join(f"w{j}" for j in range(60, 80))
+    bench = spark.createDataFrame([(900, words)], "doc_id long, text string")
+    target = spark.createDataFrame(
+        [(901, " ".join(f"w{j}" for j in range(0, 200, 3)))],
+        "doc_id long, text string",
+    )
+    return docs, bench, target
+
+
+def _pipelines(spark) -> dict:
+    from model_presto_spark.io import load_table
+    from model_presto_spark.pipeline import CorpusPipeline
+    from perfbench import data
+    from perfbench.workloads import corpus_stages
+
+    docs, bench, target = _corpus(spark)
+    stages = {
+        "normalize": {},
+        "scrub_pii": {},
+        "quality_gate": {"min_tokens": 15, "min_alpha": 0.3},
+        "lang_filter": {"keep": ["en", "fr"]},
+        "exact_dedup": {},
+        "near_dedup": {"method": "minhash", "threshold": 0.5},
+        "span_dedup_filter": {"max_dup_fraction": 0.8},
+        "contamination_filter": {"benchmark": bench, "n": 5},
+        "perplexity_gate": {"max_bits_per_token": 7.2},
+        "span_remove": {},
+        "token_budget": {"budget_tokens": 200},
+        "domain_mix": {"budget_tokens": 300},
+        "line_boilerplate": {"min_doc_freq": 3},
+        "semantic_dedup": {"threshold": 0.9, "dim": 8, "planes": 4},
+        "dsir_select": {"target": target, "k": 10},
+        "gopher_gate": {"min_words": 10, "min_stop_hits": 0},
+    }
+    out = {
+        f"pipeline_{op}": (
+            lambda stage={"op": op, **cfg}: CorpusPipeline([stage]).run(docs)
+        )
+        for op, cfg in stages.items()
+    }
+
+    def corpus():
+        n = 500
+        cdir = data.corpus_dir(n, 4 * len(os.sched_getaffinity(0)), 0)
+        return CorpusPipeline(corpus_stages(n)).run(
+            load_table(spark, cdir, "documents")
+        )
+
+    out["corpus_stages"] = corpus
+    return out
 
 
 def _builds(spark, tmp: str) -> dict:
@@ -200,6 +285,7 @@ def _builds(spark, tmp: str) -> dict:
         ),
         "pq_knn_join_rerank": pq_rerank,
         "ivfpq_search": ivfpq,
+        **_pipelines(spark),
     }
 
 
