@@ -51,9 +51,39 @@ def bigrams(ts: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-# Mersenne prime 2^31-1: universal-hash modulus. (h % P) * (2j+1) stays
-# under 2^36, so the arithmetic never overflows ANSI bigint in any engine.
+# Mersenne prime 2^31-1: universal-hash modulus. With a, b < P,
+# (h % P) * a + b < P^2 < 2^62, so the MinHash seed arithmetic never
+# overflows ANSI bigint in any engine.
 HASH_P = 2_147_483_647
+_MASK64 = (1 << 64) - 1
+
+
+def _splitmix64(x: int) -> int:
+    """splitmix64's output mix of the integer ``x`` (64-bit result)."""
+    z = (x + 0x9E3779B97F4A7C15) & _MASK64
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _MASK64
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _MASK64
+    return z ^ (z >> 31)
+
+
+def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
+    """The MinHash seed family: seed j maps an element hash h to
+    ``((h % P) * a_j + b_j) % P`` with ``1 <= a_j < P`` and
+    ``0 <= b_j < P`` drawn from a splitmix64 mix of ``2j`` and
+    ``2j + 1``. The one coefficient source of both engines
+    (:func:`minhash_signature_sql` and the oracles' ``dd_minhash``).
+
+    Seed j's coefficients do not depend on ``num_hashes``, so a
+    shorter signature is a prefix of a longer one. Independent
+    random coefficients matter: a family of small related multipliers
+    keeps one element the minimum across neighbouring seeds, and an
+    LSH band then holds far fewer than ``rows_per_band`` independent
+    minima (Broder's estimator assumes independent permutations).
+    """
+    return [
+        (1 + _splitmix64(2 * j) % (HASH_P - 1), _splitmix64(2 * j + 1) % HASH_P)
+        for j in range(num_hashes)
+    ]
 
 
 def simhash60_from_hashes(hashes_sql: str) -> Column:
@@ -170,23 +200,27 @@ def minhash_signature_sql(hashes: str, num_hashes: int = 16) -> str:
     """MinHash signature from pre-hashed elements (see
     :func:`hash_array_sql`).
 
-    Per-seed hashes are derived arithmetically — ``((h % P) * (2j+1)
-    + 7919 j) % P`` — instead of re-hashing every shingle per seed,
-    so the md5 cost is O(|shingles|), not O(num_hashes · |shingles|).
-    The signature is O(num_hashes) per document regardless of size, so
-    the downstream LSH join shuffles only signatures, never documents.
+    Per-seed hashes are derived arithmetically — ``((h % P) * a_j +
+    b_j) % P`` with the coefficients of :func:`minhash_coefficients` —
+    instead of re-hashing every shingle per seed, so the md5 cost is
+    O(|shingles|), not O(num_hashes · |shingles|). The signature is
+    O(num_hashes) per document regardless of size, so the downstream
+    LSH join shuffles only signatures, never documents.
 
     Single-pass fold: the hash array sits in ``aggregate``'s *input*
     position (evaluated once per row no matter how Catalyst collapses
     projections); the fold maintains all ``num_hashes`` running minima
-    at once via ``zip_with``.
+    at once via ``zip_with`` against a literal coefficient array.
     """
+    coeffs = ", ".join(
+        f"named_struct('a', {a}L, 'b', {b}L)"
+        for a, b in minhash_coefficients(num_hashes)
+    )
     return (
         f"aggregate({hashes}, "
         f"array_repeat(CAST({HASH_P} AS BIGINT), {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, sequence(0, {num_hashes - 1}), "
-        f"(m, j) -> least(m, ((h % {HASH_P}) * (j * 2 + 1) + j * 7919) "
-        f"% {HASH_P})))"
+        f"(acc, h) -> zip_with(acc, array({coeffs}), "
+        f"(m, c) -> least(m, ((h % {HASH_P}) * c.a + c.b) % {HASH_P})))"
     )
 
 

@@ -225,11 +225,14 @@ def minhash_lsh_pairs(
     ``signature_screen="auto"`` (the default) makes the scale-safe
     screened path the DEFAULT at corpus scale: one ``df.count()``
     probe job decides — corpora of ``auto_min_docs`` or more get
-    ``screen = max(0, threshold - 0.25)`` (a 16-hash estimate screen
-    at that margin false-rejects ~0.3% of true J=0.8 pairs; see
-    below), smaller corpora keep the exact unscreened candidate
-    semantics, where the random band-collision flood is affordable.
-    Rationale: the flood grows with n² (measured s10→s30 stress
+    ``screen = max(0, threshold - 0.25)`` (with the pre-fix seed
+    family, a 16-hash estimate screen at that margin false-rejected
+    ~0.3% of true J=0.8 pairs; see below), smaller corpora keep the
+    exact unscreened candidate semantics, where the random
+    band-collision flood is affordable. ``dedup_corpus`` persists its
+    input, so there the count materializes the copy that the pair
+    generation and the keep join then read. Rationale: the flood grows
+    with n² (measured with the pre-fix seed family: s10→s30 stress
     exponent 1.401 unscreened vs 0.744 screened, recall 0.999), so a
     user calling the operator with defaults on a 150k-doc corpus must
     land on the sublinear path. Pass ``signature_screen=None``
@@ -242,16 +245,21 @@ def minhash_lsh_pairs(
     a candidate whose estimate falls below the screen. Why it exists:
     band collisions between RANDOM pairs scale with n² (at a
     background J≈0.2, 4x4 banding collides ~4·J⁴ of all pairs —
-    measured 5.9M candidates for 962 true pairs at 50k docs, 27.6M
-    at 150k), and without the screen every one of them shuffles
-    through dropDuplicates and two array-payload verify joins. With
+    measured with the pre-fix seed family: 5.9M candidates for 962
+    true pairs at 50k docs, 27.6M at 150k), and without the screen
+    every one of them shuffles through dropDuplicates and two
+    array-payload verify joins. With
     the screen the C(d,2) expansion still happens but as pure codegen
     CPU inside the bucket row (16 int comparisons per pair, no
     materialization): only survivors ever become rows. The trade is
     RECALL at the margin: a true pair at J=threshold can estimate low
     (Bin(num_hashes, J) tail — e.g. screen=threshold-0.25 with 16
-    hashes false-rejects ~0.3% of J=0.8 pairs); precision is
-    unaffected (survivors are still exactly verified).
+    hashes false-rejected ~0.3% of J=0.8 pairs with the pre-fix seed
+    family); precision is unaffected (survivors are still exactly
+    verified). The pre-fix family (seed j a small multiple 2j+1 of one
+    base hash) kept one element the minimum across neighbouring seeds;
+    ``functions.text.minhash_coefficients`` now draws independent
+    seeds, so band collisions and estimates follow Bin(num_hashes, J).
     tools/stress_bench.py measures the screened twin's recall against
     the unscreened pair set per round. Leave None where the oracle
     contract requires the exact candidate semantics (q32).
@@ -286,9 +294,9 @@ def minhash_lsh_pairs(
             )
         # One cheap count-only job — no text materialization, and at
         # corpus scale its cost is noise next to the n² candidate
-        # flood it prevents. The probe re-runs the upstream lineage;
-        # persist upstream when ``df`` is an expensive derived
-        # relation.
+        # flood it prevents. The probe re-runs the upstream lineage
+        # unless ``df`` is persisted (``dedup_corpus`` persists it, so
+        # there the count materializes the copy the pairs read).
         n_docs = df.count()
         if n_docs >= auto_min_docs:
             signature_screen = max(0.0, threshold - 0.25)
@@ -296,7 +304,8 @@ def minhash_lsh_pairs(
                 "minhash_lsh_pairs: auto routed %d docs to the "
                 "screened candidate path (screen=%.2f; ~0.3%% "
                 "false-negative screen on near-threshold+0.3 pairs "
-                "at 16 hashes). Pass signature_screen=None to pin "
+                "at 16 hashes, measured with the pre-fix seed "
+                "family). Pass signature_screen=None to pin "
                 "exact candidate semantics.",
                 n_docs,
                 signature_screen,
@@ -769,11 +778,17 @@ def dedup_corpus(
     pointer-jumping CC, and the keep is one join against the cluster
     relation. ``fast_hash`` defaults to the xxhash64 production path
     (flip off for md5 when cross-engine reproducibility of the hash
-    itself matters more than speed)."""
+    itself matters more than speed).
+
+    ``df`` is persisted once (``MEMORY_AND_DISK``, like the shingle-hash
+    table): the minhash auto-route count, the pair generation and the
+    keep join all read that one materialization instead of each
+    re-running ``df``'s lineage (in a pipeline: every earlier stage)."""
     from model_presto_spark.operators.graph import (
         keep_cluster_representatives,
     )
 
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     if method == "minhash":
         pairs = minhash_lsh_pairs(
             df, id_col, text_col, threshold=threshold,
@@ -1138,9 +1153,9 @@ def ngram_containment_pairs(
       t=0.6 a same-size pair (J≈0.43) collides with P≈1.0, a 3x
       size-skewed pair (J≈0.18) with P≈0.87 at 64x2 bands, and
       extreme doc-inside-doc (ρ→0) degrades further; pairs found
-      are scored exactly. MEASURED curve (STRESS_r12, planted
-      doc-inside-doc families): recall ≈ 0.98–1.0 at ρ≈0.33,
-      ≈ 0.40–0.44 at ρ≈0.1 — the lsh mode trades away exactly the
+      are scored exactly. MEASURED curve (STRESS_r12, pre-fix seed
+      family, planted doc-inside-doc families): recall ≈ 0.98–1.0 at
+      ρ≈0.33, ≈ 0.40–0.44 at ρ≈0.1 — the lsh mode trades away exactly the
       extreme containment case, so pin ``candidates="index"`` when
       hunting deep doc-inside-doc pairs regardless of corpus size.
       ``max_bucket_size`` caps bucket MEMBERS as in
@@ -1158,9 +1173,9 @@ def ngram_containment_pairs(
       collides with ≥ ~0.9 probability where single-banding lsh
       measured 0.40. The wide-gap bandings bottom out at r=1, whose
       random collisions flood ~n² on a saturating corpus (measured
-      unscreened s10→s30 exponent 1.35, STRESS_r13), so
-      ``ensemble_screen`` (default ``"auto"`` = threshold − 0.25)
-      estimates each potential pair's containment from the MinHash
+      unscreened s10→s30 exponent 1.35, STRESS_r13, pre-fix seed
+      family), so ``ensemble_screen`` (default ``"auto"`` =
+      threshold − 0.25) estimates each potential pair's containment from the MinHash
       signatures + exact gram counts INSIDE the pair expansion and
       drops the flood before it materializes — the same structural
       guard as ``minhash_lsh_pairs(signature_screen=...)``; per-gap

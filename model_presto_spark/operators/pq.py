@@ -71,7 +71,13 @@ def _train_books(
     books = np.empty((m, n_codes, dsub))
     for s in range(m):
         Xs = X[:, s * dsub : (s + 1) * dsub]
-        # k-means++ seeding
+        # k-means++ seeding picks n_codes distinct points
+        distinct = len(np.unique(Xs, axis=0))
+        if distinct < n_codes:
+            raise ValueError(
+                f"n_codes={n_codes} exceeds the {distinct} distinct "
+                f"vectors of subspace {s} in the training sample"
+            )
         cents = [Xs[rng.integers(n)]]
         for _ in range(n_codes - 1):
             d2 = np.min(

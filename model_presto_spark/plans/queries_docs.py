@@ -52,12 +52,14 @@ def dd_hash_array(strings: str) -> str:
 
 def dd_minhash(hashes: str, num_hashes: int = 16) -> str:
     """Arithmetic per-seed minima over pre-hashed elements (mirrors
-    functions.text.minhash_signature_sql — same universal-hash formula)."""
-    p = 2_147_483_647
+    functions.text.minhash_signature_sql: the same seed coefficients,
+    from functions.text.minhash_coefficients)."""
+    p = T.HASH_P
+    coeffs = ", ".join(f"[{a}, {b}]" for a, b in T.minhash_coefficients(num_hashes))
     return (
-        f"list_transform(generate_series(0, {num_hashes - 1}), "
-        f"j -> list_min(list_transform({hashes}, "
-        f"h -> ((h % {p}) * (j * 2 + 1) + j * 7919) % {p})))"
+        f"list_transform(CAST([{coeffs}] AS BIGINT[][]), "
+        f"c -> list_min(list_transform({hashes}, "
+        f"h -> ((h % {p}) * c[1] + c[2]) % {p})))"
     )
 
 

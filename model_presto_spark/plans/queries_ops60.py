@@ -124,13 +124,15 @@ def q494(spark: SparkSession, sf_dir: str) -> DataFrame:
     # config (bands) column: one candidate equi-join on (bands, band,
     # bucket) and one exact-verify pass over DISTINCT pairs, instead
     # of a per-config trio of joins + checkpoints (fewer jobs, ~10%
-    # fewer intersects). Measured floor at sf0.1 (~3.5-4 s steady
-    # after the round-7 spread fix below): the md5 shingle pass
-    # (~2.2 s, oracle parity) plus exactly-verifying the b=8
-    # config's candidate flood (412k pairs = 13% of all pairs at
-    # 2.5k docs, r=2 rows/band) — which is the sweep's point: it
-    # MEASURES the over-loose config's cost. Steady stage bisect:
-    # sh 2.2s / cand 0.5s / verify 0.8s / stats 1.2s.
+    # fewer intersects). Measured floor at sf0.1 with the pre-fix
+    # seed family (small related multipliers; see
+    # functions.text.minhash_coefficients), ~3.5-4 s steady after the
+    # round-7 spread fix below: the md5 shingle pass (~2.2 s, oracle
+    # parity) plus exactly-verifying the b=8 config's candidate flood
+    # (412k pairs = 13% of all pairs at 2.5k docs, r=2 rows/band) —
+    # which is the sweep's point: it MEASURES the over-loose config's
+    # cost. Steady stage bisect: sh 2.2s / cand 0.5s / verify 0.8s /
+    # stats 1.2s.
     banded = None
     for b in (2, 4, 8):
         r = 16 // b

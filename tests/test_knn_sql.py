@@ -268,3 +268,15 @@ def test_pq_refuses_codes_past_int8(spark):
     )
     with pytest.raises(ValueError, match="n_codes"):
         train_pq_codebooks(vecs, "vec", m=2, n_codes=200)
+
+
+def test_pq_refuses_fewer_distinct_vectors_than_codes(spark):
+    """k-means++ seeding needs n_codes distinct training vectors per
+    subspace. With fewer, the trainer raises an error naming n_codes and
+    the distinct count, not numpy's "probabilities do not sum to 1"."""
+    vecs = spark.createDataFrame(
+        [([float(i % 3), 1.0, 2.0, float(i % 3)],) for i in range(30)],
+        "vec ARRAY<DOUBLE>",
+    )
+    with pytest.raises(ValueError, match="n_codes=8 exceeds the 3 distinct"):
+        train_pq_codebooks(vecs, "vec", m=2, n_codes=8)

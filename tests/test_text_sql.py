@@ -8,7 +8,9 @@ so it is pinned to golden values. Rows cover the edge cases: an empty
 string, one character, unicode, mixed whitespace and repeated tokens.
 Equality is exact — hashes, signatures, band keys and similarity
 values, no tolerance. ``array_distinct`` keeps first-occurrence order
-and ``list_distinct`` does not, so distinct arrays compare sorted.
+and ``list_distinct`` does not, so distinct arrays compare sorted. The
+MinHash seed family is also checked for signature quality, on set
+pairs of known Jaccard.
 """
 
 from __future__ import annotations
@@ -16,7 +18,9 @@ from __future__ import annotations
 import itertools
 
 import duckdb
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from model_presto_spark.functions import text as T
 from model_presto_spark.operators.dedup import (
@@ -169,6 +173,56 @@ def test_signature_band_jaccard_twins(docs, duck):
         "FROM hs x, hs y"
     ).fetchall()
     assert got == {(a, b): v for a, b, v in want}
+
+
+def test_minhash_signature_estimates_jaccard(spark):
+    """Signature quality of the seed family, on set pairs of known
+    Jaccard J (union of 200 random 60-bit element hashes, 200 pairs per
+    J): the fraction of equal positions of two 16-hash signatures
+    estimates J without bias and with the binomial spread J(1-J)/16 of
+    16 independent minima, and no signature takes its first three
+    positions (the first LSH band's rows) from one element. A family of
+    related seeds (small multipliers of one base hash) fails the last
+    two: one element holds the minimum of neighbouring seeds."""
+    rng = np.random.default_rng(11)
+    union, n_pairs = 200, 200
+    rows = []
+    for target in (0.2, 0.5, 0.8):
+        shared = round(target * union)
+        a_end = shared + (union - shared) // 2
+        for _ in range(n_pairs):
+            h = rng.integers(0, 1 << 60, size=union).tolist()
+            rows.append((target, h[:a_end], h[a_end:] + h[:shared]))
+    # an element holds positions 0-2 of signature t iff its own 3-hash
+    # signature equals them (seed j does not depend on num_hashes)
+    one_elem = "CAST(exists({s}, x -> {sig} = slice({t}, 1, 3)) AS INT)".format
+    first3 = T.minhash_signature_sql("array(x)", 3)
+    pairs = spark.createDataFrame(
+        rows, "j DOUBLE, a ARRAY<BIGINT>, b ARRAY<BIGINT>"
+    ).selectExpr(
+        "j", "a", "b",
+        f"{T.minhash_signature_sql('a', 16)} AS sa",
+        f"{T.minhash_signature_sql('b', 16)} AS sb",
+    ).selectExpr(
+        "j",
+        f"{T.jaccard_sql('a', 'b')} AS exact",
+        "size(filter(zip_with(sa, sb, (x, y) -> x = y), e -> e)) / 16 AS est",
+        f"{one_elem(s='a', sig=first3, t='sa')}"
+        f" + {one_elem(s='b', sig=first3, t='sb')} AS one_elem",
+    )
+    stats = pairs.groupBy("j").agg(
+        F.avg("exact").alias("exact"),
+        F.avg("est").alias("est"),
+        F.variance("est").alias("var"),
+        F.sum("one_elem").alias("one_elem"),
+    ).collect()
+    assert sorted(r["j"] for r in stats) == [0.2, 0.5, 0.8]
+    for r in stats:
+        j = r["j"]
+        assert r["exact"] == pytest.approx(j)
+        assert abs(r["est"] - j) < 0.05, (j, r["est"])
+        assert r["var"] < 1.3 * j * (1 - j) / 16, (j, r["var"])
+        assert r["one_elem"] == 0, (j, r["one_elem"])
 
 
 def test_lang_score_and_quality_twins(docs, duck):

@@ -19,9 +19,11 @@ Usage:
 
 Each target is built twice and the second build is reported, so
 first-touch work (file listing, schema inference) stays out of the
-counts. ``--corpus`` builds one ``CorpusPipeline.run()`` over the
-benchmark's generated 5k-document corpus in 4 x nproc part files;
-``--chain N`` runs ``connected_components`` on an N-edge path graph
+counts. The session's cache is cleared between the two builds: a
+relation the first build persisted would otherwise serve the second
+from memory and hide the jobs that fill it. ``--corpus`` builds one
+``CorpusPipeline.run()`` over the benchmark's generated 5k-document
+corpus in 4 x nproc part files; ``--chain N`` runs ``connected_components`` on an N-edge path graph
 with zero-padded string ids. Prints one JSON object per target: the
 total and the jobs per call site.
 """
@@ -137,6 +139,7 @@ def main() -> None:
         }
     for name, build in targets.items():
         build()
+        spark.catalog.clearCache()
         print(json.dumps({name: probe.measure(build)}))
 
 
