@@ -1503,7 +1503,7 @@ def semantic_dedup(
     default clusterer: random-hyperplane LSH buckets (md5-derived
     literal weights, engine-reproducible; pass ``assignments`` =
     (id, bucket) to use a trained quantizer instead, e.g. the IVF
-    KMeans cells from operators/knn.build_ivf_index, which is the
+    k-means cells from operators/knn.build_ivf_index, which is the
     paper-faithful production path).
 
     Per bucket: centroid = elementwise mean; each member scores

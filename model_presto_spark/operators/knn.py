@@ -15,14 +15,17 @@ Spark-first design:
   (``ann_lsh_join``), IVF (``ivf_knn_join``, ``ivf_index_search``),
   int8 (``quantized_knn_join``) and PQ (``operators.pq``) — scores its
   candidates its own way into (probe, candidate, score) rows and ends
-  in the one ``_top_k`` window; the IVF paths share one coarse
-  quantizer (``_coarse_cells``), one centroid table
-  (``_write_centroids``/``_read_centroids``) and one nearest-cell step
-  (``_nearest_cells``, itself a ``_top_k`` over centroids).
+  in the one ``_top_k`` window; the IVF paths share one on-disk layout
+  (``_write_cells``, ``_write_centroids``/``_read_centroids``) and one
+  nearest-cell step (``_nearest_cells``, a ``_top_k`` over centroids)
+  that places every built, appended and probed vector.
+- One trainer: ``_kmeans`` (k-means++, then Lloyd's) on a driver sample
+  fits the IVF coarse quantizer and, per subspace, the PQ codebooks.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +37,9 @@ from model_presto_spark.functions.vectors import (
 )
 
 _METRICS = ("sqeuclidean", "cosine", "dot")
+_TRAIN_ROWS_PER_CELL = 256  # coarse training sample per centroid (FAISS's)
+_LLOYD_ITERS = 20
+_BLOCK_FLOATS = 1 << 20  # one Lloyd distance block: at most 8 MB
 
 
 def _qt(name: str) -> str:
@@ -56,53 +62,92 @@ def _distance_sql(qv: str, cv: str, metric: str) -> str:
 
 
 def _top_k(
-    scored: DataFrame,
-    k: int,
-    probe_id: str,
-    cand_id: str,
-    order: str = "__dist ASC",
-    value: str = "__dist AS dist",
+    scored: DataFrame, k: int, probe_id: str, cand_id: str,
+    order: str = "__dist ASC", value: str = "__dist AS dist",
 ) -> DataFrame:
     """Each probe's first ``k`` rows of a scored (__pid, __cid, ...)
     frame by ``order``, ties broken by ascending candidate id:
     (probe_id, cand_id, value, rank)."""
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY __pid "
-            f"ORDER BY {order}, __cid ASC) AS rank",
+    return scored.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY __pid ORDER BY {order}, __cid ASC) AS rank",
+    ).where(f"rank <= {int(k)}").selectExpr(
+        f"__pid AS {_qt(probe_id)}", f"__cid AS {_qt(cand_id)}", value, "rank"
+    )
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's nearest centroid (ties to the lower index) and its
+    squared distance, in the GEMM form ‖x‖² − 2x·cᵀ + ‖c‖² over row
+    blocks of at most ``_BLOCK_FLOATS`` distances."""
+    cn = (C**2).sum(1)
+    step = max(1, _BLOCK_FLOATS // len(C))
+    assign = np.empty(len(X), dtype=np.intp)
+    d2 = np.empty(len(X))
+    for i in range(0, len(X), step):
+        B = X[i : i + step]
+        D = (B**2).sum(1)[:, None] - 2.0 * (B @ C.T) + cn
+        assign[i : i + len(B)] = D.argmin(1)
+        d2[i : i + len(B)] = np.maximum(D.min(1), 0.0)
+    return assign, d2
+
+
+def _kmeans(
+    X: np.ndarray, k: int, iters: int, rng: np.random.Generator, name: str
+) -> np.ndarray:
+    """(n, d) driver sample -> (k, d) centroids: seeded k-means++, then
+    ``iters`` Lloyd's steps; an empty cluster reseeds to the point
+    farthest from its centroid. k-means++ needs ``k`` (``name`` in the
+    error) distinct rows."""
+    n, distinct = len(X), len(np.unique(X, axis=0))
+    if distinct < k:
+        raise ValueError(
+            f"{name}={k} exceeds the {distinct} distinct vectors in the training sample"
         )
-        .where(f"rank <= {int(k)}")
-        .selectExpr(
-            f"__pid AS {_qt(probe_id)}",
-            f"__cid AS {_qt(cand_id)}",
-            value,
-            "rank",
-        )
+    C = np.empty((k, X.shape[1]))
+    C[0] = X[rng.integers(n)]
+    d2 = ((X - C[0]) ** 2).sum(-1)  # running min over the seeds so far
+    for j in range(1, k):
+        C[j] = X[rng.choice(n, p=d2 / max(d2.sum(), 1e-12))]
+        d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(-1))
+    for _ in range(iters):
+        assign, d2 = _nearest(X, C)
+        counts = np.bincount(assign, minlength=k)
+        live = counts > 0
+        sums = np.zeros_like(C)
+        np.add.at(sums, assign, X)
+        C[live] = sums[live] / counts[live, None]
+        empty = np.flatnonzero(~live)
+        C[empty] = X[np.argsort(-d2, kind="stable")[: len(empty)]]
+    return C
+
+
+def _sample(df: DataFrame, vec_col: str, n: int) -> np.ndarray:
+    """The first ``n`` vectors of ``df``, in input order, on the driver."""
+    rows = df.select(vec_col).limit(n).collect()
+    return np.asarray([r[0] for r in rows], dtype=np.float64)
+
+
+def _assign_cells(df: DataFrame, id_col: str, vec_col: str, cents) -> DataFrame:
+    """(cid, cvec, cell): each vector in its nearest cell."""
+    return _nearest_cells(df, id_col, vec_col, cents, 1).selectExpr(
+        "__pid AS cid", "__pvec AS cvec", "cell"
     )
 
 
 def _coarse_cells(
-    candidates: DataFrame, cand_id: str, cand_vec: str, n_lists: int, seed: int
+    candidates: DataFrame, cand_id: str, cand_vec: str, n_lists: int, seed: int,
+    X: np.ndarray | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Fit the KMeans coarse quantizer and assign every candidate its
-    cell: ((cid, cvec, cell) frame, [(cell, centroid)]). Assignment is
-    the model's own ``transform``, whose distance computation breaks
-    near-ties its own way."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cvec = F.col(cand_vec).cast("array<double>")
-    cands = candidates.select(
-        F.col(cand_id).alias("cid"), cvec.alias("cvec"),
-        array_to_vector(cvec).alias("__feat"),
-    )
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__feat", predictionCol="cell")
-    model = km.fit(cands.select("__feat"))
-    cents = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return model.transform(cands).select("cid", "cvec", "cell"), cents
+    """Fit the coarse quantizer on the first ``_TRAIN_ROWS_PER_CELL`` ×
+    n_lists rows of the driver sample ``X`` (pulled here if not given)
+    and assign every candidate its cell: ((cid, cvec, cell) frame,
+    [(cell, centroid)])."""
+    n = _TRAIN_ROWS_PER_CELL * n_lists
+    X = _sample(candidates, cand_vec, n) if X is None else X[:n]
+    C = _kmeans(X, n_lists, _LLOYD_ITERS, np.random.default_rng(seed), "n_lists")
+    cents = [(i, c.tolist()) for i, c in enumerate(C)]
+    return _assign_cells(candidates, cand_id, cand_vec, cents), cents
 
 
 def _centroid_frame(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
@@ -115,6 +160,10 @@ def _write_centroids(spark, path: str, cents: list[tuple[int, list[float]]]) -> 
     )
 
 
+def _write_cells(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    df.write.partitionBy("cell").mode(mode).parquet(f"{path}/cells")
+
+
 def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
     return [
         (int(r.cell), [float(x) for x in r.centroid])
@@ -122,13 +171,7 @@ def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
     ]
 
 
-def _nearest_cells(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cents: list[tuple[int, list[float]]],
-    n: int,
-) -> DataFrame:
+def _nearest_cells(df: DataFrame, id_col: str, vec_col: str, cents, n: int) -> DataFrame:
     """(__pid, cell, __pvec) for each row's ``n`` nearest cells: a top-k
     by squared L2 over the broadcast centroid table (centroids are
     tiny), ties to the lower cell id."""
@@ -138,12 +181,22 @@ def _nearest_cells(
     )
     table = F.broadcast(_centroid_frame(df.sparkSession, cents))
     scored = rows.crossJoin(table).selectExpr(
-        "__pid",
-        "__pvec",
-        "cell AS __cid",
+        "__pid", "__pvec", "cell AS __cid",
         f"{_distance_sql('__pvec', 'centroid', 'sqeuclidean')} AS __dist",
     )
     return _top_k(scored, n, "__pid", "cell", value="__pvec").drop("rank")
+
+
+def _cell_top_k(pairs: DataFrame, k, probe_id, cand_id, metric, exclude_self):
+    """Top-k over (__pid, __pvec, cid, cvec) pairs that share a probed
+    cell, each (probe, candidate) pair scored once."""
+    if exclude_self:
+        pairs = pairs.where("__pid != cid")
+    scored = pairs.selectExpr(
+        "__pid", "cid AS __cid",
+        f"{_distance_sql('__pvec', 'cvec', metric)} AS __dist",
+    ).dropDuplicates(["__pid", "__cid"])
+    return _top_k(scored, k, probe_id, cand_id)
 
 
 def knn_join(
@@ -206,7 +259,7 @@ def ivf_knn_join(
     exclude_self: bool = False,
     seed: int = 42,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate kNN: a KMeans coarse quantizer
+    """IVF (inverted-file) approximate kNN: a k-means coarse quantizer
     partitions candidates into ``n_lists`` cells; each probe scores
     only the ``n_probe`` nearest cells' members.
 
@@ -214,7 +267,8 @@ def ivf_knn_join(
     hyperplane-LSH recall is insufficient: candidate lists are a
     *partitioned* layout (shuffle once on cell id, reusable across
     queries), and per-probe work drops from O(N) to O(N·n_probe/
-    n_lists). Training samples the candidate set; assignment and the
+    n_lists). Training reads the first ``_TRAIN_ROWS_PER_CELL`` ×
+    n_lists candidates to the driver; assignment and the
     cell-restricted scoring are plain joins + window — the pattern of
     every IVF system, expressed relationally.
     """
@@ -223,14 +277,7 @@ def ivf_knn_join(
 
     # score only same-cell pairs (equi-join on cell id)
     pairs = probe_cells.join(indexed, "cell")
-    if exclude_self:
-        pairs = pairs.where("__pid != cid")
-    scored = pairs.selectExpr(
-        "__pid",
-        "cid AS __cid",
-        f"{_distance_sql('__pvec', 'cvec', metric)} AS __dist",
-    ).dropDuplicates(["__pid", "__cid"])
-    return _top_k(scored, k, probe_id, cand_id)
+    return _cell_top_k(pairs, k, probe_id, cand_id, metric, exclude_self)
 
 
 def knn_classify(
@@ -253,15 +300,8 @@ def knn_classify(
     highest vote count, then smallest label.
     """
     nn = knn_join(
-        probes,
-        candidates,
-        probe_id=probe_id,
-        cand_id=cand_id,
-        probe_vec=probe_vec,
-        cand_vec=cand_vec,
-        k=k,
-        metric=metric,
-        exclude_self=exclude_self,
+        probes, candidates, probe_id=probe_id, cand_id=cand_id, probe_vec=probe_vec,
+        cand_vec=cand_vec, k=k, metric=metric, exclude_self=exclude_self,
     )
     labeled = nn.join(
         candidates.selectExpr(_qt(cand_id), f"{_qt(label_col)} AS __lbl"),
@@ -383,19 +423,20 @@ def build_ivf_index(
     n_lists: int = 16,
     seed: int = 42,
 ) -> None:
-    """Persist an IVF index: KMeans centroids + a CELL-PARTITIONED
+    """Persist an IVF index: k-means centroids + a CELL-PARTITIONED
     candidate layout (``path/centroids`` + ``path/cells/cell=N/``).
 
-    Build once, probe many: the expensive parts (quantizer fit, the
-    one shuffle that co-locates each cell) happen here; every later
+    Build once, probe many: the expensive parts (quantizer fit on a
+    bounded driver sample, the nearest-cell step and the shuffle that
+    co-locates each cell) happen here; every later
     ``ivf_index_search`` reads only its probes' n_probe cells —
     dynamic partition pruning turns cell selection into skipped I/O,
     so a search touches ~n_probe/n_lists of the index bytes. This is
     the on-disk shape every IVF system uses, expressed as a hive
-    layout.
+    layout. Ids are keys: rows that share an id are stored once.
     """
     indexed, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed)
-    indexed.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
+    _write_cells(indexed, path)
     _write_centroids(candidates.sparkSession, path, cents)
 
 
@@ -425,23 +466,14 @@ def ivf_index_search(
 
     cells = spark.read.parquet(f"{path}/cells")
     pairs = cells.join(F.broadcast(probe_cells), "cell")
-    if exclude_self:
-        pairs = pairs.where("__pid != cid")
-    scored = pairs.selectExpr(
-        "__pid",
-        "cid AS __cid",
-        f"{_distance_sql('__pvec', 'cvec', metric)} AS __dist",
-    ).dropDuplicates(["__pid", "__cid"])
-    return _top_k(scored, k, probe_id, "cid")
+    return _cell_top_k(pairs, k, probe_id, "cid", metric, exclude_self)
 
 
 def _max_abs(df: DataFrame, vec_col: str) -> float:
     """Scalar global max-|element| of a vector column (one agg job)."""
-    vec = F.col(vec_col).cast("array<double>")
-    m = df.select(
-        F.max(
-            F.aggregate(vec, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x)))
-        ).alias("m")
+    m = df.selectExpr(
+        f"max(aggregate(CAST({_qt(vec_col)} AS ARRAY<DOUBLE>), 0.0D, "
+        "(a, x) -> greatest(a, abs(x)))) AS m"
     ).collect()[0]["m"]
     return float(m or 0.0)
 
@@ -510,21 +542,15 @@ def quantized_knn_join(
 
 
 def ivf_index_append(
-    spark,
-    path: str,
-    candidates: DataFrame,
-    cand_id: str,
-    cand_vec: str = "vec",
+    spark, path: str, candidates: DataFrame, cand_id: str, cand_vec: str = "vec"
 ) -> None:
     """Incrementally add vectors to a persisted IVF index WITHOUT
     rebuilding: new vectors assign to the EXISTING centroids
-    (broadcast argmin — no KMeans refit) and append into their cell
-    partitions. The maintenance path a continuously-ingesting corpus
+    (the build's nearest-cell step — no refit) and append into their
+    cell partitions. The maintenance path a continuously-ingesting corpus
     needs; quantizer drift is bounded by how stationary the
     embedding distribution is — rebuild with build_ivf_index when
     drift (e.g. psi_drift on distances) says so. Searches see the
     appended vectors immediately (same layout, same pruning)."""
-    assigned = _nearest_cells(
-        candidates, cand_id, cand_vec, _read_centroids(spark, path), 1
-    ).selectExpr("__pid AS cid", "__pvec AS cvec", "cell")
-    assigned.write.partitionBy("cell").mode("append").parquet(f"{path}/cells")
+    cents = _read_centroids(spark, path)
+    _write_cells(_assign_cells(candidates, cand_id, cand_vec, cents), path, "append")

@@ -14,12 +14,12 @@ through a shuffle: the codes relation is ~1% of the float relation.
 
 Spark mapping — one numpy core, used on the driver and in the
 executors' mapInPandas passes alike:
-- ``_train_books``: seeded k-means++/Lloyd's codebooks on a
-  driver-side sample (bounded, standard practice — production PQ
-  systems train on 10^4-10^5 samples regardless of corpus size) of
-  raw vectors (``train_pq_codebooks``) or IVF residuals
-  (``build_ivfpq_index``); the books ride to executors inside the
-  task closure (a few KB);
+- ``_train_books``: one ``knn._kmeans`` per subspace (the trainer of
+  the IVF coarse quantizer too) on a driver-side sample (bounded,
+  standard practice — production PQ systems train on 10^4-10^5
+  samples regardless of corpus size) of raw vectors
+  (``train_pq_codebooks``) or IVF residuals (``build_ivfpq_index``);
+  the books ride to executors inside the task closure (a few KB);
 - ``_encode``: argmin over n_codes per subspace, numpy-batched
   (``pq_encode``, the residual encode of ``build_ivfpq_index``);
 - ``_luts``: one m x n_codes table of exact subspace distances per
@@ -49,54 +49,34 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.functions.vectors import sq_euclidean_sql
 from model_presto_spark.operators.knn import (
+    _LLOYD_ITERS,
+    _TRAIN_ROWS_PER_CELL,
     _coarse_cells,
+    _kmeans,
+    _nearest,
+    _nearest_cells,
     _read_centroids,
+    _sample,
     _top_k,
+    _write_cells,
     _write_centroids,
 )
 
 
-def _train_books(
-    X: np.ndarray, m: int, n_codes: int, iters: int, seed: int
-) -> np.ndarray:
+def _train_books(X: np.ndarray, m: int, n_codes: int, iters: int, seed: int) -> np.ndarray:
     """``train_pq_codebooks`` on a sample matrix ``X`` (raw vectors or
     IVF residuals)."""
-    n, dim = X.shape
+    dim = X.shape[1]
     if not 1 <= n_codes <= 128:  # codes are stored as int8
         raise ValueError(f"n_codes must be in 1..128, got {n_codes}")
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
     rng = np.random.default_rng(seed)
-    books = np.empty((m, n_codes, dsub))
-    for s in range(m):
-        Xs = X[:, s * dsub : (s + 1) * dsub]
-        # k-means++ seeding picks n_codes distinct points
-        distinct = len(np.unique(Xs, axis=0))
-        if distinct < n_codes:
-            raise ValueError(
-                f"n_codes={n_codes} exceeds the {distinct} distinct "
-                f"vectors of subspace {s} in the training sample"
-            )
-        cents = [Xs[rng.integers(n)]]
-        for _ in range(n_codes - 1):
-            d2 = np.min(
-                ((Xs[:, None, :] - np.asarray(cents)[None]) ** 2).sum(-1), axis=1
-            )
-            probs = d2 / max(d2.sum(), 1e-12)
-            cents.append(Xs[rng.choice(n, p=probs)])
-        C = np.asarray(cents)
-        for _ in range(iters):
-            assign = ((Xs[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
-            for c in range(n_codes):
-                mask = assign == c
-                if mask.any():
-                    C[c] = Xs[mask].mean(0)
-                else:  # reseed empty cluster to the farthest point
-                    far = ((Xs - C[assign]) ** 2).sum(-1).argmax()
-                    C[c] = Xs[far]
-        books[s] = C
-    return books
+    return np.stack([
+        _kmeans(X[:, s * dsub : (s + 1) * dsub], n_codes, iters, rng, "n_codes")
+        for s in range(m)
+    ])
 
 
 def _luts(P: np.ndarray, books: np.ndarray) -> np.ndarray:
@@ -158,9 +138,7 @@ def train_pq_codebooks(
     a huge corpus). Seeded k-means++ init + Lloyd's iterations;
     empty clusters reseed to the farthest point, so all n_codes
     entries stay live."""
-    rows = df.select(vec_col).limit(sample_limit).collect()
-    X = np.asarray([r[0] for r in rows], dtype=np.float64)
-    return _train_books(X, m, n_codes, iters, seed)
+    return _train_books(_sample(df, vec_col, sample_limit), m, n_codes, iters, seed)
 
 
 def pq_encode(
@@ -267,25 +245,29 @@ def build_ivfpq_index(
     seed: int = 42,
     sample_limit: int = 20000,
 ) -> None:
-    """Persist the FAISS-style IVF-PQ composite: KMeans coarse cells
+    """Persist the FAISS-style IVF-PQ composite: k-means coarse cells
     as a hive-partitioned layout (``path/cells/cell=N``) storing ONLY
     ``(cid, codes)`` — m bytes per vector — plus ``path/centroids``
     and ``path/codebooks``. PQ encodes the RESIDUAL ``x -
     centroid[cell]`` (classic IVFADC: residuals are centered, so the
     same codebook budget buys far finer resolution than coding raw
-    vectors).
+    vectors). One driver sample, the first max(sample_limit,
+    ``_TRAIN_ROWS_PER_CELL`` × n_lists) candidates, trains both
+    quantizers.
 
     Index bytes ~ n_vectors * (8 + m): a 100 TB float corpus becomes
     a ~1 TB index that still answers top-k with exact-shape ADC."""
     spark = candidates.sparkSession
-    assigned, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed)
+    X = _sample(
+        candidates, cand_vec, max(sample_limit, _TRAIN_ROWS_PER_CELL * n_lists)
+    )
+    assigned, cents = _coarse_cells(candidates, cand_id, cand_vec, n_lists, seed, X)
     C = np.asarray([c for _, c in cents])  # row = cell id
-    # residuals are computed in numpy inside the sample pull and the
-    # encode pass (never a per-row Python UDF)
-    books_src = assigned.limit(sample_limit).collect()
-    X = np.asarray([r["cvec"] for r in books_src], dtype=np.float64)
-    R = X - C[[r["cell"] for r in books_src]]
-    books = _train_books(R, m, n_codes, iters=20, seed=seed)
+    # residuals are numpy (never a per-row Python UDF); a training row's
+    # cell is k-means' own argmin (a near tie leaves an equally short
+    # residual), every stored vector's is _nearest_cells'
+    X = X[:sample_limit]
+    books = _train_books(X - C[_nearest(X, C)[0]], m, n_codes, _LLOYD_ITERS, seed)
 
     def enc(it):
         for pdf in it:
@@ -299,19 +281,11 @@ def build_ivfpq_index(
             })
 
     cid_t = dict(assigned.dtypes)["cid"]
-    encoded = assigned.mapInPandas(
-        enc, f"cid {cid_t}, cell int, codes array<tinyint>"
-    )
-    encoded.write.partitionBy("cell").mode("overwrite").parquet(
-        f"{path}/cells"
-    )
+    schema = f"cid {cid_t}, cell int, codes array<tinyint>"
+    _write_cells(assigned.mapInPandas(enc, schema), path)
     _write_centroids(spark, path, cents)
     spark.createDataFrame(
-        [
-            (s, j, books[s][j].tolist())
-            for s in range(m)
-            for j in range(n_codes)
-        ],
+        [(s, j, books[s][j].tolist()) for s in range(m) for j in range(n_codes)],
         "s int, code int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
 
@@ -327,13 +301,15 @@ def ivfpq_search(
     exclude_self: bool = False,
 ) -> DataFrame:
     """Top-k against a persisted IVF-PQ index: probes assign to their
-    ``n_probe`` nearest cells driver-side (centroids are tiny), the
+    ``n_probe`` nearest cells (``knn._nearest_cells``, the rule every
+    IVF build, append and search uses) and collect to the driver, the
     cells scan is plan-time pruned with a literal ``cell IN (...)``
     partition filter (only probed cell directories are read at all),
     and scoring is residual-space ADC — per (probe, cell) one
     m x n_codes LUT, m byte-lookups per candidate. Output
     (probe_id, cid, dist, rank)."""
-    cents = dict(_read_centroids(spark, path))
+    cents = _read_centroids(spark, path)
+    C = dict(cents)
     book_rows = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["s"] for r in book_rows)
     n_codes = 1 + max(r["code"] for r in book_rows)
@@ -342,17 +318,13 @@ def ivfpq_search(
     for r in book_rows:
         books[r["s"], r["code"]] = r["centroid"]
 
-    probe_rows = probes.select(probe_id, probe_vec).collect()
-    # per probe: n_probe nearest cells + one residual LUT per cell
-    cell_ids = sorted(cents)
-    C = np.asarray([cents[c] for c in cell_ids])
+    # per (probe, probed cell): one residual LUT
     by_cell: dict[int, list] = {}
-    for pid, vec in probe_rows:
-        p = np.asarray(vec, dtype=np.float64)
-        for j in np.argsort(((C - p) ** 2).sum(-1))[:n_probe]:
-            by_cell.setdefault(cell_ids[j], []).append(
-                (pid, _luts((p - C[j])[None], books)[0])
-            )
+    for pid, cell, vec in _nearest_cells(
+        probes, probe_id, probe_vec, cents, n_probe
+    ).collect():
+        r = np.asarray(vec) - np.asarray(C[cell])
+        by_cell.setdefault(cell, []).append((pid, _luts(r[None], books)[0]))
 
     cells = spark.read.parquet(f"{path}/cells").where(
         F.col("cell").isin(sorted(by_cell))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -193,6 +194,19 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     e = {(r.probe_id, r.cand_id) for r in exact.collect()}
     recall = len(g & e) / len(e)
     assert recall > 0.9
+
+
+def test_ivf_refuses_fewer_distinct_vectors_than_lists(spark, tmp_path):
+    """k-means++ seeds n_lists distinct vectors: with fewer in the
+    training sample the build raises, naming n_lists and the distinct
+    count, instead of writing fewer cells than asked for."""
+    from model_presto_spark.operators.knn import build_ivf_index
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(30)], "cid bigint, vec array<double>"
+    )
+    with pytest.raises(ValueError, match="n_lists=4 exceeds the 3 distinct"):
+        build_ivf_index(df, "cid", str(tmp_path / "ivf"), n_lists=4)
 
 
 def test_quantized_knn_recall(spark):

@@ -258,3 +258,26 @@ def test_one_definition_per_expression():
         defs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
         twins += [f"{path.name}:{d}" for d in defs if f"{d}_sql" in defs]
     assert not twins, twins
+
+
+def test_vector_family_imports_no_spark_ml():
+    """The kNN family trains its quantizers with one numpy k-means
+    (``knn._kmeans``): ``operators/knn.py`` and ``operators/pq.py``
+    import nothing from ``pyspark.ml``."""
+    import ast
+    import pathlib
+
+    import model_presto_spark.operators as pkg
+
+    found = []
+    for name in ("knn.py", "pq.py"):
+        tree = ast.parse((pathlib.Path(pkg.__file__).parent / name).read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            found += [f"{name}:{m}" for m in mods if m.split(".")[:2] == ["pyspark", "ml"]]
+    assert not found, found

@@ -134,3 +134,38 @@ def test_ivfpq_index_search(spark, vec_data, tmp_path):
         spark.read.parquet(f"{path}/cells").select("cell").distinct().count()
         == 5
     )
+
+
+def _kmeans_reference(X, k, iters, seed):
+    """Loop k-means: k-means++ recomputing every point's distance to
+    all seeds so far, then Lloyd's on the full (n, k, d) difference
+    array with one mean per cluster."""
+    n = len(X)
+    rng = np.random.default_rng(seed)
+    cents = [X[rng.integers(n)]]
+    for _ in range(k - 1):
+        d2 = ((X[:, None, :] - np.asarray(cents)[None]) ** 2).sum(-1).min(1)
+        cents.append(X[rng.choice(n, p=d2 / max(d2.sum(), 1e-12))])
+    C = np.asarray(cents)
+    for _ in range(iters):
+        assign = ((X[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
+        for c in range(k):
+            C[c] = X[assign == c].mean(0)
+    return C
+
+
+def test_kmeans_matches_loop_reference(monkeypatch):
+    """The one k-means core (``knn._kmeans``) seeds bit-identically to
+    the loop reference, and its blocked GEMM-form Lloyd's steps (forced
+    here to blocks of a few rows) land on the same centroids up to
+    float64 rounding of the reordered sums."""
+    from model_presto_spark.operators import knn
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(0, 10, size=(6, 8))
+    X = np.concatenate([c + rng.normal(0, 1, (50, 8)) for c in centers])
+    monkeypatch.setattr(knn, "_BLOCK_FLOATS", 40)
+    seeds = knn._kmeans(X, 6, 0, np.random.default_rng(3), "k")
+    assert np.array_equal(seeds, _kmeans_reference(X, 6, 0, 3))
+    got = knn._kmeans(X, 6, 20, np.random.default_rng(3), "k")
+    np.testing.assert_allclose(got, _kmeans_reference(X, 6, 20, 3), rtol=0, atol=1e-12)
