@@ -419,10 +419,9 @@ def _rare_first_docs(
     # document frequency via ONE shuffle on the gram hash; keep only
     # pair-eligible grams (df=1 can never be shared, df>max_doc_freq
     # is the stop-gram cutoff)
-    wg = Window.partitionBy("gram")
-    elig = posting.withColumn("df", F.count(F.lit(1)).over(wg)).where(
-        f"df >= 2 AND df <= {int(max_doc_freq)}"
-    )
+    elig = posting.selectExpr(
+        "id", "gram", "count(1) OVER (PARTITION BY gram) AS df"
+    ).where(f"df >= 2 AND df <= {int(max_doc_freq)}")
     edoc = (
         elig.groupBy("id")
         .agg(F.expr("sort_array(collect_list(struct(df, gram))) AS eg"))
@@ -442,6 +441,33 @@ def _required_overlap_sql(threshold: float) -> str:
     return (
         f"CAST(FLOOR(CAST({float(threshold)!r} AS DOUBLE) * "
         f"CAST(n_grams AS DOUBLE) - CAST(1e-09 AS DOUBLE)) AS INT) + 1"
+    )
+
+
+def _prefix_postings(edoc: DataFrame, threshold: float | None) -> DataFrame:
+    """The postings both prefix-filter joins read: (id, n, req, e, i,
+    gram), one row per gram ``gram`` at 0-based position ``i`` of a
+    doc's rare-first eligible grams, with the doc's total count ``n``,
+    its required overlap ``req`` at ``threshold`` and its eligible
+    count ``e``. With a threshold only the prefix, the first
+    e - req + 1 grams (none when e < req), is posted: a pair sharing
+    >= req of the doc's grams shares one of them, so it shares the
+    MINIMAL one inside the prefix (the PPJoin lemma). With
+    ``threshold=None`` every eligible gram is posted and ``req`` is
+    left out."""
+    if threshold is None:
+        return edoc.selectExpr(
+            "id", "n_grams AS n", "size(eg) AS e", "posexplode(eg) AS (i, gram)"
+        )
+    # _required_overlap_sql is a sum: parenthesized inside the length
+    req = _required_overlap_sql(threshold)
+    return edoc.selectExpr(
+        "id",
+        "n_grams AS n",
+        f"{req} AS req",
+        "size(eg) AS e",
+        f"posexplode(slice(eg, 1, greatest(size(eg) - ({req}) + 1, 0)))"
+        " AS (i, gram)",
     )
 
 
@@ -548,9 +574,7 @@ def ngram_jaccard_pairs(
             # (_band_candidates)
             spread(buckets)
             .selectExpr(f"explode_outer({_pairs_within_sql('ids')}) AS pr")
-            .groupBy(
-                F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b")
-            )
+            .groupBy(F.expr("pr.id_a AS id_a"), F.expr("pr.id_b AS id_b"))
             .agg(F.expr("count(1) AS n_common"))
         )
         sa = sizes.toDF("id_a", "n_a")
@@ -567,40 +591,25 @@ def ngram_jaccard_pairs(
             .where(f"jaccard_sim >= CAST({threshold!r} AS DOUBLE)")
         )
     edoc = _rare_first_docs(posting, sizes, max_doc_freq)
-    req = F.expr(_required_overlap_sql(threshold))
-    pre_len = F.size("eg") - req + 1
-    pre = edoc.select(
-        F.col("id").alias("id_x"),
-        F.col("n_grams").alias("n_x"),
-        req.alias("req_x"),
-        F.size("eg").alias("e_x"),
-        F.posexplode(
-            F.slice(F.col("eg"), 1, F.greatest(pre_len, F.lit(0)))
-        ).alias("i_x", "gram"),
-    )
-    a = pre.select(
-        F.col("id_x").alias("id_a"), F.col("n_x").alias("n_a_"),
-        F.col("req_x").alias("req_a"), F.col("e_x").alias("e_a"),
-        F.col("i_x").alias("i_a"), "gram",
-    )
-    b = pre.select(
-        F.col("id_x").alias("id_b"), F.col("n_x").alias("n_b_"),
-        F.col("req_x").alias("req_b"), F.col("e_x").alias("e_b"),
-        F.col("i_x").alias("i_b"), "gram",
+    pre = _prefix_postings(edoc, threshold)
+    a, b = (
+        pre.selectExpr(
+            f"id AS id_{s}", f"n AS n_{s}_", f"req AS req_{s}", f"e AS e_{s}",
+            f"i AS i_{s}", "gram",
+        )
+        for s in "ab"
     )
     cand = (
         a.join(b, "gram")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
+        .where(
+            "id_a < id_b"
             # size compatibility: J <= min/max, so t*n_a <= n_b and
             # t*n_b <= n_a for any qualifying pair
-            & (F.col("n_b_") >= F.col("req_a"))
-            & (F.col("n_a_") >= F.col("req_b"))
+            " AND n_b_ >= req_a AND n_a_ >= req_b"
             # positional: at the minimal-shared-gram event every
             # shared gram sits at position >= i on each side, and the
             # pair needs >= max(req_a, req_b) shared grams
-            & (F.col("e_a") - F.col("i_a") >= F.col("req_b"))
-            & (F.col("e_b") - F.col("i_b") >= F.col("req_a"))
+            " AND e_a - i_a >= req_b AND e_b - i_b >= req_a"
         )
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -1006,12 +1015,10 @@ def containment_auto_route(
     count). The probe re-runs the upstream lineage — persist upstream
     when ``df`` is an expensive derived relation.
     """
-    toks = F.expr(f"size({tokens_sql(text_col)})")
-    gcnt = toks - n + 1
-    probe = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.when(toks >= n, gcnt)).alias("lo"),
-        F.max(F.when(toks >= n, gcnt)).alias("hi"),
+    toks = f"size({tokens_sql(text_col)})"
+    gcnt = f"CASE WHEN {toks} >= {int(n)} THEN {toks} - {int(n)} + 1 END"
+    probe = df.selectExpr(
+        "count(1) AS n", f"min({gcnt}) AS lo", f"max({gcnt}) AS hi"
     ).first()
     n_docs, lo, hi = probe["n"], probe["lo"], probe["hi"]
     ratio = (lo / hi) if lo and hi else 1.0
@@ -1231,8 +1238,6 @@ def ngram_containment_pairs(
             screen=ensemble_screen,
         )
         return _containment_verify(cand, edoc, threshold)
-    req = F.expr(_required_overlap_sql(threshold))
-    pre_len = F.size("eg") - req + 1
     # Candidate generation with positional filtering (PPJoin's second
     # filter, adapted to containment): every qualifying pair has a
     # generation event at its FIRST shared gram in global order, and
@@ -1243,34 +1248,21 @@ def ngram_containment_pairs(
     # lever that matters in a dense/uniform-df corpus where prefix
     # filtering alone barely discriminates: the joined row count is
     # unchanged but the dedup shuffle downstream shrinks ~an order
-    # of magnitude. The smaller-side orientation (n_a <= n_b) is
+    # of magnitude. The smaller-side orientation (n_p <= n_f) is
     # likewise safe: the lemma is applied with the smaller doc as
-    # the prefix side, and size ties survive in both orientations.
-    pref = edoc.select(
-        F.col("id").alias("id_p"),
-        F.col("n_grams").alias("n_p"),
-        req.alias("req_p"),
-        F.size("eg").alias("e_p"),
-        F.posexplode(
-            F.slice(F.col("eg"), 1, F.greatest(pre_len, F.lit(0)))
-        ).alias("i", "gram"),
+    # the prefix side (prefix ⋈ all grams), and size ties survive in
+    # both orientations.
+    pref = _prefix_postings(edoc, threshold).selectExpr(
+        "id AS id_p", "n AS n_p", "req AS req_p", "i", "gram"
     )
-    full = edoc.select(
-        F.col("id").alias("id_f"),
-        F.col("n_grams").alias("n_f"),
-        F.size("eg").alias("e_f"),
-        F.posexplode("eg").alias("j", "gram"),
+    full = _prefix_postings(edoc, None).selectExpr(
+        "id AS id_f", "n AS n_f", "e AS e_f", "i AS j", "gram"
     )
     cand = (
         pref.join(full, "gram")
-        .filter(
-            (F.col("id_p") != F.col("id_f"))
-            & (F.col("n_p") <= F.col("n_f"))
-            & (F.col("e_f") - F.col("j") >= F.col("req_p"))
-        )
-        .select(
-            F.least("id_p", "id_f").alias("id_a"),
-            F.greatest("id_p", "id_f").alias("id_b"),
+        .where("id_p != id_f AND n_p <= n_f AND e_f - j >= req_p")
+        .selectExpr(
+            "least(id_p, id_f) AS id_a", "greatest(id_p, id_f) AS id_b"
         )
         .dropDuplicates(["id_a", "id_b"])
     )

@@ -16,8 +16,9 @@ tables in ``SF_DIR`` and writes one section per plan:
 - ``build <name>`` and ``build <name> rows``: the builds no query
   runs, on fixed small inputs, with their sorted result rows, so a
   plan that moves can be shown to keep its rows: the dedup candidate
-  builds (screened minhash, containment ``lsh`` and ``lsh_ensemble``,
-  ``image_dup_pairs``) and the vector searches (``ivf_knn_join``,
+  builds (screened minhash, n-gram Jaccard ``prefix`` with the default
+  stop-gram cutoff, containment ``index``, ``lsh`` and
+  ``lsh_ensemble``, ``image_dup_pairs``) and the vector searches (``ivf_knn_join``,
   ``ivf_index_search`` after ``build_ivf_index``,
   ``quantized_knn_join``, ``pq_knn_join`` with re-rank,
   ``ivfpq_search`` after ``build_ivfpq_index``; the indexes go to a
@@ -225,6 +226,7 @@ def _builds(spark, tmp: str) -> dict:
     from model_presto_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_containment_pairs,
+        ngram_jaccard_pairs,
     )
     from model_presto_spark.operators.knn import (
         build_ivf_index,
@@ -268,6 +270,12 @@ def _builds(spark, tmp: str) -> dict:
     return {
         "screened_minhash": lambda: minhash_lsh_pairs(
             docs, "doc_id", "text", threshold=0.5, signature_screen=0.3
+        ),
+        "ngram_jaccard_prefix": lambda: ngram_jaccard_pairs(
+            docs, "doc_id", "text", threshold=0.6, candidates="prefix"
+        ),
+        "containment_index": lambda: ngram_containment_pairs(
+            docs, "doc_id", "text", threshold=0.6, candidates="index"
         ),
         "containment_lsh": lambda: ngram_containment_pairs(
             docs, "doc_id", "text", threshold=0.6, candidates="lsh"
