@@ -247,6 +247,18 @@ def pagerank(
     return ranks
 
 
+def _simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph of ``edges``: each edge once as
+    (a, b) with a < b, self-loops dropped."""
+    return (
+        edges.selectExpr(
+            f"least(`{src}`, `{dst}`) AS a", f"greatest(`{src}`, `{dst}`) AS b"
+        )
+        .where("a != b")
+        .distinct()
+    )
+
+
 def triangle_stats(
     edges: DataFrame,
     src: str = "src",
@@ -276,14 +288,7 @@ def triangle_stats(
     One row: (n_nodes, n_edges, n_wedges, n_triangles,
     global_clustering = 3*triangles/wedges).
     """
-    a = F.least(F.col(src), F.col(dst)).alias("a")
-    b = F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = (
-        edges.select(a, b)
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -364,14 +369,7 @@ def adamic_adar(
     Output: (u, v, common_neighbors, aa_score) for pairs with at
     least ``min_common`` shared neighbors, excluding existing edges.
     """
-    a = F.least(F.col(src), F.col(dst)).alias("a")
-    b = F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = (
-        edges.select(a, b)
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("w"), F.col("b").alias("n"))
@@ -522,13 +520,7 @@ def label_propagation(
     components this is NOT (labels stabilize on local majorities,
     splitting dense regions into communities).
     """
-    a = F.least(F.col(src), F.col(dst)).alias("a")
-    b = F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = (
-        edges.select(a, b)
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _simple_edges(edges, src, dst)
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("u"), F.col("b").alias("v")).localCheckpoint(
@@ -573,14 +565,7 @@ def kcore_peel(
     Output: (node, degree, in_core) — degree within the peeled
     subgraph (0 if peeled out).
     """
-    a = F.least(F.col(src), F.col(dst)).alias("a")
-    b = F.greatest(F.col(src), F.col(dst)).alias("b")
-    e = (
-        edges.select(a, b)
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint(eager=True)
     all_nodes = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
