@@ -62,14 +62,6 @@ UTM_FALSE_EASTING = 500_000.0
 UTM_FALSE_NORTHING_SOUTH = 10_000_000.0
 
 
-def _atanh(x: Column) -> Column:
-    return F.log((1.0 + x) / (1.0 - x)) / 2.0
-
-
-def _asinh(x: Column) -> Column:
-    return F.log(x + F.sqrt(x * x + 1.0))
-
-
 def latlon_to_unit_sphere(lat: Column, lon: Column) -> Column:
     """(lat, lon) degrees -> [x, y, z] on the unit sphere
     (presto.py:299-309 cartesian encoding)."""
@@ -107,64 +99,18 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
     return 2.0 * F.lit(WGS84_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-def transverse_mercator(
-    lat: Column,
-    lon: Column,
-    lon0_deg: Column,
-    k0: float = UTM_K0,
-    false_easting: float = UTM_FALSE_EASTING,
-    false_northing: float = 0.0,
-) -> Column:
-    """Ellipsoidal transverse Mercator forward projection as a
-    struct(easting, northing) — general F22 path (the reference
-    reprojects to arbitrary UTM/TM CRSs through pyproj,
-    src/common.py:32-49, treesat_eval.py:115-117; here it is the
-    closed-form Krüger series in pure column arithmetic, ~1e-9 m vs
-    the exact projection, valid within the usual |dlon| <= ~30°).
+def transverse_mercator_sql(lat: str, lon: str, lon0: str) -> tuple[str, str]:
+    """Ellipsoidal transverse Mercator forward projection about the
+    central meridian ``lon0`` (degrees) at the UTM scale ``UTM_K0`` and
+    false easting, as two SQL strings (easting, northing) with no
+    false northing — the general F22 path (the reference reprojects
+    to arbitrary UTM/TM CRSs through pyproj, src/common.py:32-49,
+    treesat_eval.py:115-117; here it is the closed-form Krüger
+    series, ~1e-9 m vs the exact projection, valid within the usual
+    |dlon| <= ~30°). Literals are rendered with ``repr`` and a ``D``
+    suffix so nothing parses as DECIMAL. ``lat``/``lon``/``lon0`` are
+    SQL fragments (column names or expressions).
     """
-    phi = F.radians(lat)
-    lam = F.radians(lon - lon0_deg)
-    sphi = F.sin(phi)
-    t = F.sinh(_atanh(sphi) - _E * _atanh(F.lit(_E) * sphi))
-    xi_p = F.atan2(t, F.cos(lam))
-    eta_p = _asinh(F.sin(lam) / F.sqrt(t * t + F.cos(lam) * F.cos(lam)))
-    xi = xi_p
-    eta = eta_p
-    for j, a in enumerate(_ALPHA, start=1):
-        xi = xi + F.lit(a) * F.sin(2.0 * j * xi_p) * F.cosh(2.0 * j * eta_p)
-        eta = eta + F.lit(a) * F.cos(2.0 * j * xi_p) * F.sinh(2.0 * j * eta_p)
-    easting = F.lit(false_easting) + F.lit(k0 * _A_BAR) * eta
-    northing = F.lit(false_northing) + F.lit(k0 * _A_BAR) * xi
-    return F.struct(easting.alias("easting"), northing.alias("northing"))
-
-
-def utm_zone(lon: Column) -> Column:
-    """Standard UTM zone number (1..60) for a longitude."""
-    return (F.floor((lon + 180.0) / 6.0) % 60 + 1).cast("int")
-
-
-def utm_forward_sql(lat: str, lon: str) -> str:
-    """(lat, lon) -> struct(zone, northern, easting, northing) in the
-    point's own UTM zone (southern hemisphere gets the 10,000 km false
-    northing, the EPSG:327xx convention), as ONE SQL string for
-    ``F.expr``.
-
-    Built as SQL because the Krüger series through the Column API
-    costs ~1,459 py4j round-trips (~0.4 ms apiece — ~0.6 s of driver
-    time per plan build, measured on q56); the SQL string is one
-    round-trip plus a JVM-side parse.  Every operation and operand
-    order mirrors ``utm_zone``/``transverse_mercator`` exactly
-    (literals rendered with ``repr`` and a ``D`` suffix so nothing
-    parses as DECIMAL), so the computed doubles are bit-identical —
-    pinned by tests/test_utm.py::test_utm_forward_sql_bit_identical.
-    The SQL is textually large (subexpressions inline where a Column
-    tree would share node instances), but Catalyst analysis walks a
-    shared Column DAG per path anyway — the analyzed cost is the same
-    shape. ``lat``/``lon`` are SQL fragments (column names or
-    expressions).
-    """
-    zone = f"CAST(FLOOR((({lon}) + 180.0D) / 6.0D) % 60 + 1 AS INT)"
-    lon0 = f"(CAST({zone} AS DOUBLE) * 6.0D - 183.0D)"
     phi = f"radians({lat})"
     lam = f"radians(({lon}) - {lon0})"
     sphi = f"sin({phi})"
@@ -184,7 +130,27 @@ def utm_forward_sql(lat: str, lon: str) -> str:
         eta = f"({eta} + {a!r}D * cos({c}D * {xi_p}) * sinh({c}D * {eta_p}))"
     scale = f"{UTM_K0 * _A_BAR!r}D"
     easting = f"({UTM_FALSE_EASTING!r}D + {scale} * {eta})"
-    northing0 = f"(0.0D + {scale} * {xi})"
+    northing = f"(0.0D + {scale} * {xi})"  # false northing 0 m
+    return easting, northing
+
+
+def utm_forward_sql(lat: str, lon: str) -> str:
+    """(lat, lon) -> struct(zone, northern, easting, northing) in the
+    point's own UTM zone (zone n's central meridian is 6n - 183°;
+    southern hemisphere gets the 10,000 km false northing, the
+    EPSG:327xx convention), as ONE SQL string for ``F.expr``.
+
+    Built as SQL because the Krüger series through the Column API
+    costs ~1,459 py4j round-trips (~0.4 ms apiece — ~0.6 s of driver
+    time per plan build, measured on q56); the SQL string is one
+    round-trip plus a JVM-side parse. The SQL is textually large
+    (subexpressions inline where a Column tree would share node
+    instances), but Catalyst analysis walks a shared Column DAG per
+    path anyway — the analyzed cost is the same shape.
+    """
+    zone = f"CAST(FLOOR((({lon}) + 180.0D) / 6.0D) % 60 + 1 AS INT)"
+    lon0 = f"(CAST({zone} AS DOUBLE) * 6.0D - 183.0D)"
+    easting, northing0 = transverse_mercator_sql(lat, lon, lon0)
     northern = f"(({lat}) >= 0.0D)"
     northing = (
         f"(CASE WHEN {northern} THEN {northing0} "

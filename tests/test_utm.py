@@ -61,21 +61,26 @@ def grid():
     return [(la, lo) for la in lats for lo in lons_off]
 
 
-def test_forward_matches_snyder(spark, grid):
-    from model_presto_spark.functions.geo import transverse_mercator
+def _utm(spark, points):
+    """utm_forward_sql (the projection q56 runs) over (lat, lon) rows."""
+    from model_presto_spark.functions.geo import utm_forward_sql
 
+    df = spark.createDataFrame(points, "lat double, lon double")
+    return df.selectExpr(
+        "lat", "lon", f"{utm_forward_sql('lat', 'lon')} AS u"
+    ).collect()
+
+
+def test_forward_matches_snyder(spark, grid):
     lon0 = 9.0  # zone 32 central meridian
-    df = spark.createDataFrame(
-        [(la, lon0 + off) for la, off in grid], "lat double, lon double"
-    )
-    en = transverse_mercator(F.col("lat"), F.col("lon"), F.lit(lon0))
-    rows = df.select("lat", "lon", en.alias("en")).collect()
-    for r in rows:
+    for r in _utm(spark, [(la, lon0 + off) for la, off in grid]):
+        assert r.u.zone == 32
         x, y = snyder_tm(r.lat, r.lon, lon0)
         # Snyder's own truncation is the bottleneck (~mm near the CM,
         # ~cm at 3°); Krüger is orders tighter.
-        assert r.en.easting == pytest.approx(float(x), abs=0.02)
-        assert r.en.northing == pytest.approx(float(y), abs=0.02)
+        south = 0.0 if r.u.northern else 10_000_000.0
+        assert r.u.easting == pytest.approx(float(x), abs=0.02)
+        assert r.u.northing - south == pytest.approx(float(y), abs=0.02)
 
 
 def test_utm_forward_inverse_roundtrip(spark, grid):
@@ -118,20 +123,11 @@ def test_utm_zone_and_false_northing(spark):
 
 def test_known_coordinate_sanity(spark):
     """Equator/CM anchor points with exactly known UTM values."""
-    from model_presto_spark.functions.geo import transverse_mercator
-
-    df = spark.createDataFrame([(0.0, 9.0)], "lat double, lon double")
-    en = df.select(
-        transverse_mercator(F.col("lat"), F.col("lon"), F.lit(9.0)).alias("en")
-    ).collect()[0].en
-    assert en.easting == pytest.approx(500000.0, abs=1e-6)
-    assert en.northing == pytest.approx(0.0, abs=1e-6)
+    on_cm, off_cm = (r.u for r in _utm(spark, [(0.0, 9.0), (0.0, 10.0)]))
+    assert on_cm.easting == pytest.approx(500000.0, abs=1e-6)
+    assert on_cm.northing == pytest.approx(0.0, abs=1e-6)
     # one degree of longitude at the equator ~ 111.32 km * k0
-    df2 = spark.createDataFrame([(0.0, 10.0)], "lat double, lon double")
-    en2 = df2.select(
-        transverse_mercator(F.col("lat"), F.col("lon"), F.lit(9.0)).alias("en")
-    ).collect()[0].en
-    assert en2.easting - 500000.0 == pytest.approx(111320.0 * K0, rel=2e-3)
+    assert off_cm.easting - 500000.0 == pytest.approx(111320.0 * K0, rel=2e-3)
 
 
 def test_polygon_centroid_golden(spark):
@@ -185,50 +181,3 @@ def test_polygon_centroid_orientation_invariant(spark):
     ]
     assert got[0] == (pytest.approx(2.0), pytest.approx(1.0))
     assert got[1] == (pytest.approx(2.0), pytest.approx(1.0))
-
-
-def _utm_forward_columns(lat, lon):
-    """Column-API reference for utm_forward_sql, composed from the
-    library's utm_zone and transverse_mercator."""
-    from model_presto_spark.functions.geo import (
-        UTM_FALSE_NORTHING_SOUTH,
-        transverse_mercator,
-        utm_zone,
-    )
-
-    zone = utm_zone(lon)
-    en = transverse_mercator(lat, lon, (zone.cast("double") * 6.0) - 183.0)
-    northern = lat >= 0.0
-    northing = F.when(northern, en["northing"]).otherwise(
-        en["northing"] + UTM_FALSE_NORTHING_SOUTH
-    )
-    return F.struct(
-        zone.alias("zone"),
-        northern.alias("northern"),
-        en["easting"].alias("easting"),
-        northing.alias("northing"),
-    )
-
-
-def test_utm_forward_sql_bit_identical(spark):
-    """The SQL-string UTM projection (one py4j round-trip per plan
-    build) must compute the EXACT same doubles as the Column-API
-    composition of utm_zone and transverse_mercator — same ops, same
-    operand order, D-suffixed literals."""
-    from model_presto_spark.functions.geo import utm_forward_sql
-
-    pts = [
-        (float(la), float(lo))
-        for la in range(-80, 85, 7)
-        for lo in range(-180, 180, 23)
-    ]
-    df = spark.createDataFrame(pts, "lat double, lon double")
-    both = df.select(
-        _utm_forward_columns(F.col("lat"), F.col("lon")).alias("a"),
-        F.expr(utm_forward_sql("lat", "lon")).alias("b"),
-    ).collect()
-    for r in both:
-        assert r.a.zone == r.b.zone
-        assert r.a.northern == r.b.northern
-        assert r.a.easting == r.b.easting  # bit-exact, no tolerance
-        assert r.a.northing == r.b.northing
