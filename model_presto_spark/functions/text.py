@@ -179,10 +179,16 @@ def char_shingles_sql(lowered: str, k: int = 5, distinct: bool = True) -> str:
 def word_ngrams_sql(toks: str, n: int = 3) -> str:
     """Distinct word n-grams (space-joined) from a materialized tokens
     column (same inlining caveat as :func:`char_shingles_sql`: pass an
-    attribute, not an inline tokens expression)."""
+    attribute, not an inline tokens expression). A document shorter
+    than ``n`` tokens is one gram; a zero-token (or NULL) document has
+    none: the start positions are cut to the token count, as the
+    DuckDB oracles' ``list_distinct`` drops their one NULL gram. The
+    ``greatest(.., 0)`` keeps a NULL array's size (-1 outside ANSI
+    mode) a valid slice length."""
     return (
         f"array_distinct(transform("
-        f"sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
+        f"slice(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
+        f"1, greatest(size({toks}), 0)), "
         f"i -> concat_ws(' ', slice({toks}, i, {n}))))"
     )
 

@@ -53,8 +53,9 @@ def ngram_contamination(
     # adds a size(...)>0 pre-filter under a plain explode that
     # re-evaluates the whole tokenize->ngram expression tree per row
     # (with the tokens sub-expression inlined PER GRAM inside the
-    # lambda — O(len^2); measured 5x on q60). The gram arrays here are
-    # never empty (word_ngrams_sql pads to >=1), so outer is identical.
+    # lambda — O(len^2); measured 5x on q60). A zero-token document's
+    # empty gram array becomes one NULL gram here, which the inner
+    # equi-join on gram below never matches, so outer is identical.
     bench_gram_set = (
         benchmark.select(F.expr(tokens_sql(text_col)).alias("__toks"))
         .select(F.explode_outer(F.expr(word_ngrams_sql("__toks", n))).alias("gram"))

@@ -178,12 +178,13 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"array_distinct({hash_array_sql(word_ngrams_sql('toks', 3))})"
         ).alias("grams"),
     )
-    # explode_outer: grams is non-empty by construction (word_ngrams
-    # emits >= 1 gram) and plain explode's inferred size()>0 filter
-    # would re-evaluate the whole hash pipeline per row
+    # explode_outer + IS NOT NULL, not explode: plain explode's
+    # inferred size()>0 filter would re-evaluate the whole hash
+    # pipeline per row; a zero-token doc's empty array gives one NULL
+    # gram, dropped here (it has no grams, as in the oracle)
     posting = g.select(
         "doc_id", "source", F.explode_outer("grams").alias("gram")
-    )
+    ).where("gram IS NOT NULL")
     # partition-wide window min instead of a groupBy + join-back: the
     # posting relation (and its md5 gram hashing) is scanned ONCE —
     # one shuffle on the gram hash, then one on the doc key

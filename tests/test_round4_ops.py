@@ -299,6 +299,35 @@ def test_ngram_jaccard_prefix_filter_matches_bruteforce(spark):
             assert got == brute(t, 40), f"threshold {t} mode {mode}"
 
 
+def test_zero_token_docs_have_no_ngrams(spark):
+    """Whitespace-only documents have no word n-grams, so they pair with
+    nothing (as in the q34 oracle, and as jaccard_sql scores two empty
+    sets 0.0): only the two copies of the real text pair up, and the
+    n-gram dedup keeps every empty document."""
+    from model_presto_spark.operators.dedup import (
+        dedup_corpus,
+        ngram_containment_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, text), (4, "\t\n"), (5, text)],
+        "doc_id bigint, text string",
+    )
+    for t in (0.3, 0.8):  # the bucket and the prefix generator
+        got = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=t)
+        assert [tuple(r) for r in got.collect()] == [(3, 5, 1.0)], t
+    got = ngram_containment_pairs(
+        docs, "doc_id", "text", threshold=0.8, candidates="index"
+    )
+    assert [(r.id_a, r.id_b, r.containment) for r in got.collect()] == [
+        (3, 5, 1.0)
+    ]
+    kept = dedup_corpus(docs, "doc_id", "text", method="ngram")
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4]
+
+
 def test_containment_lsh_mode_recall_and_exact_scores(spark):
     """candidates='lsh' must score found pairs identically to the
     exact mode (precision is exact; only recall may differ)."""
