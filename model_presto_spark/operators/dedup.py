@@ -17,10 +17,13 @@ defined once as SQL text:
   every (id_a < id_b) pair of a bucket, or the consecutive chain for
   a mega-bucket, with optional struct fields and a per-pair
   predicate. Each caller keeps its own cap rule.
-- **n-gram index** (``_ngram_index``, ``_rare_first_docs``): hashed
-  distinct grams, sizes and postings; per-doc eligible grams in
-  global rare-first order for the prefix-filter generators, whose
-  candidates share one exact verify join (``_verify_join``).
+- **n-gram index** (``_ngram_index``, ``_rare_first_docs``,
+  ``_prefix_postings``): hashed distinct grams, sizes and postings;
+  per-doc eligible grams in global rare-first order; and one prefix
+  postings relation that both PPJoin lemmas read (Jaccard: prefix ⋈
+  prefix, containment: prefix ⋈ all grams), whose candidates share
+  one exact verify join (``_verify_join``). A zero-token document
+  has no grams, so it pairs with nothing.
 
 No generator enumerates O(n²) pairs: candidates come from bucket or
 posting co-membership and are verified exactly, so precision never
