@@ -300,10 +300,12 @@ def test_ngram_jaccard_prefix_filter_matches_bruteforce(spark):
 
 
 def test_zero_token_docs_have_no_ngrams(spark):
-    """Whitespace-only documents have no word n-grams, so they pair with
-    nothing (as in the q34 oracle, and as jaccard_sql scores two empty
-    sets 0.0): only the two copies of the real text pair up, and the
-    n-gram dedup keeps every empty document."""
+    """Whitespace-only and NULL documents have no word n-grams, so they
+    pair with nothing (as in the q34 oracle, and as jaccard_sql scores
+    two empty sets 0.0): only the two copies of the real text pair up,
+    and the n-gram dedup keeps every empty document. Outside ANSI mode,
+    where size(NULL) is -1, a NULL document has no grams either."""
+    from model_presto_spark.functions.text import tokens_sql, word_ngrams_sql
     from model_presto_spark.operators.dedup import (
         dedup_corpus,
         ngram_containment_pairs,
@@ -312,9 +314,20 @@ def test_zero_token_docs_have_no_ngrams(spark):
 
     text = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, text), (4, "\t\n"), (5, text)],
+        [(1, ""), (2, "   "), (3, text), (4, "\t\n"), (5, text), (6, None)],
         "doc_id bigint, text string",
     )
+    toks = docs.selectExpr("doc_id", f"{tokens_sql('text')} AS toks")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    for mode in ("true", "false"):
+        spark.conf.set("spark.sql.ansi.enabled", mode)
+        try:
+            grams = toks.selectExpr("doc_id", f"{word_ngrams_sql('toks')} AS g")
+            assert {r.doc_id: len(r.g) for r in grams.collect()} == {
+                1: 0, 2: 0, 3: 7, 4: 0, 5: 7, 6: 0
+            }, mode
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
     for t in (0.3, 0.8):  # the bucket and the prefix generator
         got = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=t)
         assert [tuple(r) for r in got.collect()] == [(3, 5, 1.0)], t
@@ -325,7 +338,7 @@ def test_zero_token_docs_have_no_ngrams(spark):
         (3, 5, 1.0)
     ]
     kept = dedup_corpus(docs, "doc_id", "text", method="ngram")
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4]
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4, 6]
 
 
 def test_containment_lsh_mode_recall_and_exact_scores(spark):
