@@ -18,8 +18,8 @@ tables in ``SF_DIR`` and writes one section per plan:
   plan that moves can be shown to keep its rows: the dedup candidate
   builds (screened minhash, n-gram Jaccard ``prefix`` with the default
   stop-gram cutoff, containment ``index``, ``lsh`` and
-  ``lsh_ensemble``, ``image_dup_pairs``) and the vector searches (``ivf_knn_join``,
-  ``ivf_index_search`` after ``build_ivf_index``,
+  ``lsh_ensemble``, ``image_dup_pairs``) and the vector searches
+  (``ivf_knn_join``, ``ivf_index_search`` after ``build_ivf_index``,
   ``quantized_knn_join``, ``pq_knn_join`` with re-rank,
   ``ivfpq_search`` after ``build_ivfpq_index``; the indexes go to a
   temporary directory), one one-stage ``CorpusPipeline`` per op
