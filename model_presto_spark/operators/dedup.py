@@ -836,6 +836,12 @@ def dedup_corpus(
 # point; the suffix-array of the original paper is replaced by the
 # equivalent fixed-k window-hash formulation, which distributes as
 # plain groupBy/join.
+#
+# Span dedup, winnowing and line boilerplate (operators/lines.py, one
+# fingerprint per line) share one repeated-unit core: a per-hash
+# frequency (``_unit_freq``) and per-document stats (``_repeat_stats``).
+# ``window_hashes`` emits only real windows; the core's left join from
+# the docs accounts for the documents without any.
 # ---------------------------------------------------------------------------
 
 
@@ -850,25 +856,75 @@ def window_hashes(
 
     ``fast_hash=True`` switches to native xxhash64 (production path);
     the md5 default replays bit-for-bit in the DuckDB oracle.
-    Documents shorter than ``k`` tokens contribute a single null-hash
-    row (``explode_outer`` over an empty sequence) so callers can
-    left-account them; every aggregate here counts ``whash`` and so
-    ignores those rows.
+    Documents shorter than ``k`` tokens have no window and no row.
     """
     # spread first: the per-window md5 below (one hash per token
     # position) is the dominant CPU of every winnowing/span-dedup
     # caller and must not inherit the scan's single partition
     toksed = spread(docs).selectExpr(id_col, f"{tokens_sql(text_col)} AS toks")
-    n = F.size("toks")
-    idx = F.when(
-        n >= k, F.sequence(F.lit(1), n - k + 1)
-    ).otherwise(F.array().cast("array<int>"))
-    win = toksed.select(
-        id_col, "toks", F.explode_outer(idx).alias("i")
+    # Short docs are dropped by an explicit filter so the explode can
+    # be _outer (as in lines.segment_by_width): after it the
+    # window-start sequence is never empty.
+    win = toksed.where(f"size(toks) >= {k}").selectExpr(
+        id_col, "toks", f"explode_outer(sequence(1, size(toks) - {k} + 1)) AS i"
     )
     wtext = f"array_join(slice(toks, i, {k}), ' ')"
     h = h60_fast_sql(wtext) if fast_hash else h60_sql(wtext)
-    return win.selectExpr(id_col, "i", f"CASE WHEN i IS NOT NULL THEN {h} END AS whash")
+    return win.selectExpr(id_col, "i", f"{h} AS whash")
+
+
+def _unit_freq(per_doc: DataFrame, key: str, freq: str) -> DataFrame:
+    """``per_doc`` (one row per document and unit hash ``key``, with
+    the unit's count ``cnt`` in the document) joined to the unit's
+    corpus frequency ``freq``: ``count(1)`` counts the documents that
+    hold the unit, ``sum(cnt)`` its occurrences."""
+    # per_doc feeds the frequency aggregate AND the join back; without
+    # a persist the tokenize+hash pass over the corpus runs twice
+    per_doc = per_doc.persist(StorageLevel.MEMORY_AND_DISK)
+    glob = per_doc.groupBy(key).agg(F.expr(f"{freq} AS freq"))
+    return per_doc.join(glob, key)  # both sides hash-partitioned on key
+
+
+def _repeat_stats(
+    docs: DataFrame,
+    units: DataFrame,
+    id_col: str,
+    key: str,
+    freq: str,
+    min_freq: int,
+    names: tuple[str, str, str],
+) -> DataFrame:
+    """Per-document repeated-unit statistics: ``units`` holds one
+    (id_col, key) row per unit occurrence, and a unit repeats when its
+    corpus frequency ``freq`` (see ``_unit_freq``) is at least
+    ``min_freq``. Returns (id_col, total, repeated, fraction) under
+    ``names`` for every document of ``docs``; one without units gets
+    0, 0 and 0.0."""
+    # per-doc unit counts: the explode's shuffle does map-side partial
+    # aggregation, so unit instances never cross the wire
+    per_doc = units.groupBy(id_col, key).agg(F.count(F.lit(1)).alias("cnt"))
+    total, repeated, fraction = names
+    stats = (
+        _unit_freq(per_doc, key, freq)
+        .groupBy(id_col)
+        .agg(
+            F.sum("cnt").alias(total),
+            F.sum(
+                F.when(F.col("freq") >= min_freq, F.col("cnt")).otherwise(0)
+            ).alias(repeated),
+        )
+    )
+    out = docs.select(id_col).join(stats, id_col, "left")
+    n = F.coalesce(F.col(total), F.lit(0)).cast("bigint")
+    r = F.coalesce(F.col(repeated), F.lit(0)).cast("bigint")
+    return out.select(
+        id_col,
+        n.alias(total),
+        r.alias(repeated),
+        F.when(n > 0, r.cast("double") / n.cast("double"))
+        .otherwise(F.lit(0.0))
+        .alias(fraction),
+    )
 
 
 def span_dup_stats(
@@ -888,35 +944,9 @@ def span_dup_stats(
     windows and fraction 0.0.
     """
     w = window_hashes(docs, k, text_col, id_col, fast_hash)
-    # per-doc window-type counts: the explode's shuffle does map-side
-    # partial aggregation, so window instances never cross the wire
-    pc = w.where(F.col("whash").isNotNull()).groupBy(id_col, "whash").agg(
-        F.count("*").alias("cnt")
-    )
-    # pc feeds two branches (global totals + the join back); without a
-    # persist the tokenize+hash pass over the corpus runs twice
-    pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
-    glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
-    d = (
-        pc.join(glob, "whash")  # both sides hash-partitioned on whash
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").alias("n_windows"),
-            F.sum(F.when(F.col("total") > 1, F.col("cnt")).otherwise(0)).alias(
-                "dup_windows"
-            ),
-        )
-    )
-    out = docs.select(id_col).join(d, id_col, "left")
-    nw = F.coalesce(F.col("n_windows"), F.lit(0)).cast("bigint")
-    dw = F.coalesce(F.col("dup_windows"), F.lit(0)).cast("bigint")
-    return out.select(
-        id_col,
-        nw.alias("n_windows"),
-        dw.alias("dup_windows"),
-        F.when(nw > 0, dw.cast("double") / nw.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("dup_fraction"),
+    return _repeat_stats(
+        docs, w, id_col, "whash", "sum(cnt)", 2,
+        ("n_windows", "dup_windows", "dup_fraction"),
     )
 
 
@@ -941,15 +971,12 @@ def remove_dup_spans(
     Output: (id, text_col clean text, n_tokens_kept, n_tokens).
     """
     w = window_hashes(docs, k, text_col, id_col, fast_hash)
-    pc = w.where(F.col("whash").isNotNull()).groupBy(id_col, "whash").agg(
+    pc = w.groupBy(id_col, "whash").agg(
         F.count("*").alias("cnt"), F.collect_list("i").alias("starts")
     )
-    # two consumers (totals + dup-start extraction) — see span_dup_stats
-    pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
-    glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
     dup_starts = (
-        pc.join(glob, "whash")
-        .where(F.col("total") > 1)
+        _unit_freq(pc, "whash", "sum(cnt)")
+        .where(F.col("freq") >= 2)
         .select(id_col, F.explode("starts").alias("s"))
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list("s")).alias("dup_starts"))
@@ -1218,6 +1245,9 @@ def ngram_containment_pairs(
         )
     grams, sizes, posting = _ngram_index(df, id_col, text_col, n, fast_hash)
     edoc = _rare_first_docs(posting, sizes, max_doc_freq)
+    # A doc without grams has the all-sentinel MinHash signature, so in
+    # either LSH generator it would band-collide with every other one.
+    grams = grams.where("size(grams) > 0")
     if candidates == "lsh":
         sig = grams.selectExpr(
             "id", f"{minhash_signature_sql('grams', num_hashes)} AS sig"
@@ -1318,7 +1348,8 @@ def _containment_ensemble_candidates(
     containment over SIZE-SKEWED corpora — the LSH Ensemble idea
     (Zhu, Nargesian, Miller, VLDB 2016: partition sets by size, tune
     the MinHash banding per partition to the Jaccard the containment
-    threshold implies there), recast as one all-pairs DataFrame plan:
+    threshold implies there), recast as one all-pairs DataFrame plan
+    over ``grams`` (id, grams) of the docs that have grams:
 
     - docs land in log2(|grams|) size buckets (bkt);
     - every bucket gap g <= max_gap gets a banding (b_g, r_g) from
@@ -1376,7 +1407,7 @@ def _containment_ensemble_candidates(
     families: dict[tuple[int, int], list[int]] = {}
     for g, b, r in plan:
         families.setdefault((b, r), []).append(g)
-    sig = grams.where("size(grams) > 0").selectExpr(
+    sig = grams.selectExpr(
         "id",
         "CAST(FLOOR(log2(CAST(size(grams) AS DOUBLE)) + CAST(1e-12 AS DOUBLE)) "
         "AS INT) AS bkt",
@@ -1595,9 +1626,7 @@ def winnow_fingerprints(
 
     Output: (id, pos, whash) — the selected fingerprints.
     """
-    wh = window_hashes(docs, k, text_col, id_col, fast_hash).where(
-        F.col("whash").isNotNull()
-    )
+    wh = window_hashes(docs, k, text_col, id_col, fast_hash)
     # ONE shuffle by doc id: the doc length and the per-start sliding
     # min both come from windows over the same partitioning. This
     # replaces the previous start-set explode + (id, start) groupBy,
@@ -1638,38 +1667,15 @@ def winnow_shared_stats(
 ) -> DataFrame:
     """Per-document winnowing statistics: how many fingerprints were
     selected and how many of them also occur in another document —
-    the MOSS similarity signal. Same two-aggregation shape as
-    span_dup_stats, but over the ~2/(w+1)-density selected set.
+    the MOSS similarity signal. The stats core of span_dup_stats, but
+    over the ~2/(w+1)-density selected set and counting documents.
 
     Output: (id, n_fp, shared_fp, shared_fraction) for every doc.
     """
     fp = winnow_fingerprints(docs, k, w, text_col, id_col, fast_hash)
-    per_doc = fp.groupBy(id_col, "whash").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    glob = per_doc.groupBy("whash").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    stats = (
-        per_doc.join(glob, "whash")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").alias("n_fp"),
-            F.sum(
-                F.when(F.col("n_docs") > 1, F.col("cnt")).otherwise(0)
-            ).alias("shared_fp"),
-        )
-    )
-    out = docs.select(id_col).join(stats, id_col, "left")
-    nf = F.coalesce(F.col("n_fp"), F.lit(0)).cast("bigint")
-    sf = F.coalesce(F.col("shared_fp"), F.lit(0)).cast("bigint")
-    return out.select(
-        id_col,
-        nf.alias("n_fp"),
-        sf.alias("shared_fp"),
-        F.when(nf > 0, sf.cast("double") / nf.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("shared_fraction"),
+    return _repeat_stats(
+        docs, fp, id_col, "whash", "count(1)", 2,
+        ("n_fp", "shared_fp", "shared_fraction"),
     )
 
 

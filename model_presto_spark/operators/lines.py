@@ -18,17 +18,23 @@ sub-record cleaning is the corpus-scale generalization):
   (delimiter-free text, e.g. the driver's synthetic documents).
 - Each line is normalized (lowercase, collapse whitespace) and
   reduced to a 60-bit hash (functions/text.fingerprint60_sql) — only
-  8-byte keys ever shuffle, never line text.
+  8-byte keys ever shuffle, never line text. ``_hashed_lines`` is the
+  one segment-and-fingerprint step, shared with the streaming
+  scrubber (streaming/boilerplate.py), so each line is hashed once.
 - Document frequency per line hash = COUNT(DISTINCT doc) — computed
   as two cascaded aggregations (exact, map-side combinable), not
   ``countDistinct`` over raw rows.
 - A line is boilerplate iff its doc frequency >= ``min_doc_freq``.
 
-Scale shape: the posting-list pattern (same as span_dup_stats /
-operators/lm.py) — one explode of hashes, two groupBys on 8-byte
-keys, one co-located join back. Never O(n^2); hot lines (the whole
-point: some lines appear in thousands of docs) aggregate, they do
-not join-explode.
+Scale shape: the posting-list pattern — one explode of hashes, two
+groupBys on 8-byte keys, one co-located join back. Never O(n^2); hot
+lines (the whole point: some lines appear in thousands of docs)
+aggregate, they do not join-explode. ``line_dedup_stats`` is the
+repeated-unit stats core of span dedup and winnowing
+(operators/dedup._repeat_stats) over line hashes, counting documents;
+``remove_frequent_lines`` and the streaming scrubber rebuild the kept
+lines with one ordered rebuild (``_kept_lines``). Every input
+document comes back, one without lines as empty text.
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from model_presto_spark.functions.text import fingerprint60_sql, tokens_sql
+from model_presto_spark.operators.dedup import _repeat_stats
 
 
 def segment_by_delimiter(
@@ -91,20 +98,62 @@ def segment_by_width(
     )
 
 
-def line_doc_freq(
-    lines: DataFrame, id_col: str = "doc_id", fast_hash: bool = False
+def _hashed_lines(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    delimiter: str | None,
+    width: int,
+    fast_hash: bool,
 ) -> DataFrame:
-    """(lhash, doc_freq): distinct-document count per normalized line.
+    """(id, line_no, line, lhash): each non-blank line with its
+    fingerprint — cut on ``delimiter``, or into ``width``-token
+    windows when it is None. The one place a line is hashed."""
+    lines = (
+        segment_by_delimiter(docs, id_col, text_col, delimiter)
+        if delimiter is not None
+        else segment_by_width(docs, id_col, text_col, width)
+    )
+    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
+    return lines.select(id_col, "line_no", "line", h.alias("lhash"))
+
+
+def line_doc_freq(hashed: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(lhash, doc_freq): distinct-document count per line hash of the
+    (id, lhash) rows ``hashed``.
 
     Exact COUNT(DISTINCT doc) via two cascaded aggregations — the
     first (lhash, id) groupBy collapses within-doc repeats map-side,
     so the second sees one row per (line, doc) pair.
     """
-    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
-    per_doc = lines.select(F.col(id_col).alias("id"), h.alias("lhash")).groupBy(
-        "lhash", "id"
-    ).agg(F.count(F.lit(1)).alias("_c"))
+    per_doc = hashed.groupBy("lhash", id_col).agg(F.count(F.lit(1)).alias("_c"))
     return per_doc.groupBy("lhash").agg(F.count(F.lit(1)).alias("doc_freq"))
+
+
+def _kept_lines(
+    hashed: DataFrame, boiler: DataFrame, id_col: str, delimiter: str | None
+) -> DataFrame:
+    """(id, __kept, n_lines_kept, n_lines) per document with lines: its
+    lines whose hash is not in ``boiler`` (lhash), rejoined in line
+    order by the separator the segmentation cut on — one join against
+    the (small) boilerplate set and one groupBy(id), order restored by
+    array_sort on (line_no, line) structs."""
+    cut = boiler.select("lhash", F.lit(True).alias("__cut"))
+    # a cut line is a NULL struct, which collect_list and count skip
+    seg = F.when(F.col("__cut").isNull(), F.struct("line_no", "line"))
+    sep = "\n" if delimiter is not None else " "
+    return (
+        hashed.join(cut, "lhash", "left")
+        .groupBy(id_col)
+        .agg(
+            F.array_join(
+                F.transform(F.array_sort(F.collect_list(seg)), lambda s: s["line"]),
+                sep,
+            ).alias("__kept"),
+            F.count(seg).alias("n_lines_kept"),
+            F.count(F.lit(1)).alias("n_lines"),
+        )
+    )
 
 
 def line_dedup_stats(
@@ -124,38 +173,10 @@ def line_dedup_stats(
     ``width``-token segmentation. Every input document appears in the
     output (zero lines => fraction 0.0).
     """
-    lines = (
-        segment_by_delimiter(docs, id_col, text_col, delimiter)
-        if delimiter is not None
-        else segment_by_width(docs, id_col, text_col, width)
-    )
-    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
-    hashed = lines.select(F.col(id_col).alias("id"), h.alias("lhash"))
-    # feeds the doc-freq aggregate AND the join back — persist so the
-    # tokenize+hash pass over the corpus runs once
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    per_doc = hashed.groupBy("lhash", "id").agg(F.count(F.lit(1)).alias("cnt"))
-    df_freq = per_doc.groupBy("lhash").agg(F.count(F.lit(1)).alias("doc_freq"))
-    stats = (
-        per_doc.join(df_freq, "lhash")  # both sides partitioned on lhash
-        .groupBy("id")
-        .agg(
-            F.sum("cnt").alias("n_lines"),
-            F.sum(
-                F.when(F.col("doc_freq") >= min_doc_freq, F.col("cnt")).otherwise(0)
-            ).alias("boiler_lines"),
-        )
-    )
-    out = docs.select(F.col(id_col).alias("id")).join(stats, "id", "left")
-    nl = F.coalesce(F.col("n_lines"), F.lit(0)).cast("bigint")
-    bl = F.coalesce(F.col("boiler_lines"), F.lit(0)).cast("bigint")
-    return out.select(
-        F.col("id").alias(id_col),
-        nl.alias("n_lines"),
-        bl.alias("boiler_lines"),
-        F.when(nl > 0, bl.cast("double") / nl.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("boiler_fraction"),
+    hashed = _hashed_lines(docs, id_col, text_col, delimiter, width, fast_hash)
+    return _repeat_stats(
+        docs, hashed, id_col, "lhash", "count(1)", min_doc_freq,
+        ("n_lines", "boiler_lines", "boiler_fraction"),
     )
 
 
@@ -170,48 +191,22 @@ def remove_frequent_lines(
 ) -> DataFrame:
     """Rebuild each document without its boilerplate lines.
 
-    Output: (id, <text_col> cleaned, n_lines_kept, n_lines). Line
-    order is preserved via line_no; the reassembly join is keyed on
-    (id) with the boilerplate decision carried per line — one
-    doc-freq aggregate, one hash-keyed join, one groupBy(id) with
-    order restored by array_sort on (line_no, line) structs.
+    Output: (id, <text_col> cleaned, n_lines_kept, n_lines) for every
+    input document; one without a non-blank line gets "" and 0/0.
     """
-    lines = (
-        segment_by_delimiter(docs, id_col, text_col, delimiter)
-        if delimiter is not None
-        else segment_by_width(docs, id_col, text_col, width)
-    )
-    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
-    hashed = lines.select(
-        F.col(id_col).alias("id"), "line_no", "line", h.alias("lhash")
+    # hashed feeds the doc-freq aggregate AND the join back — persist
+    # so the segment+hash pass over the corpus runs once
+    hashed = _hashed_lines(
+        docs, id_col, text_col, delimiter, width, fast_hash
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    df_freq = line_doc_freq(
-        hashed.select(F.col("id").alias(id_col), "line"), id_col, fast_hash
-    )
-    kept = (
-        hashed.join(df_freq, "lhash")
-        .where(F.col("doc_freq") < min_doc_freq)
-        .groupBy("id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("line_no", "line"))
-            ).alias("segs"),
-            F.count(F.lit(1)).alias("n_lines_kept"),
-        )
-    )
-    totals = hashed.groupBy("id").agg(F.count(F.lit(1)).alias("n_lines"))
-    sep = "\n" if delimiter is not None else " "
-    out = totals.join(kept, "id", "left")
+    boiler = line_doc_freq(hashed, id_col).where(F.col("doc_freq") >= min_doc_freq)
+    kept = _kept_lines(hashed, boiler, id_col, delimiter)
+    out = docs.select(id_col).join(kept, id_col, "left")
     return out.select(
-        F.col("id").alias(id_col),
-        F.coalesce(
-            F.array_join(
-                F.transform(F.col("segs"), lambda s: s["line"]), sep
-            ),
-            F.lit(""),
-        ).alias(text_col),
-        F.coalesce(F.col("n_lines_kept"), F.lit(0)).cast("bigint").alias(
-            "n_lines_kept"
+        id_col,
+        F.coalesce(F.col("__kept"), F.lit("")).alias(text_col),
+        *(
+            F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(c)
+            for c in ("n_lines_kept", "n_lines")
         ),
-        F.col("n_lines").cast("bigint").alias("n_lines"),
     )

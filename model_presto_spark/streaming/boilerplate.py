@@ -10,12 +10,13 @@ line-frequency ledger of per-batch (lhash, doc_freq) DELTAS
 (8-byte hashes, partitioned by ingest batch, merge-on-read via one
 SUM groupBy) and each micro-batch:
 
-1. segments + hashes the arrivals' lines (same normalization as
-   the batch operator),
-2. folds the arrivals' own line doc-frequencies with the ledger's
-   running totals,
+1. segments + hashes the arrivals' lines with the batch operator's
+   own step (``lines._hashed_lines``, one fingerprint per line),
+2. folds the arrivals' own line doc-frequencies (``line_doc_freq``)
+   with the ledger's running totals,
 3. drops lines whose CUMULATIVE doc frequency has reached
-   ``min_doc_freq`` from the arriving documents,
+   ``min_doc_freq`` from the arriving documents, rebuilt in line
+   order by the batch operator's ``_kept_lines``,
 4. writes scrubbed docs to the corpus sink and the batch's
    frequency deltas to the ledger.
 
@@ -39,28 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from model_presto_spark.functions.text import fingerprint60_sql
-from model_presto_spark.operators.lines import segment_by_delimiter, segment_by_width
+from model_presto_spark.operators.lines import (
+    _hashed_lines,
+    _kept_lines,
+    line_doc_freq,
+)
 from model_presto_spark.streaming.incremental_dedup import _ledger_exists
-
-
-def _hashed_lines(
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    delimiter: str | None,
-    width: int,
-    fast_hash: bool,
-) -> DataFrame:
-    lines = (
-        segment_by_delimiter(batch, id_col, text_col, delimiter)
-        if delimiter is not None
-        else segment_by_width(batch, id_col, text_col, width)
-    )
-    h = F.expr(fingerprint60_sql("line", fast=fast_hash))
-    return lines.select(
-        F.col(id_col).alias("id"), "line_no", "line", h.alias("lhash")
-    )
 
 
 def scrub_batch_against_ledger(
@@ -82,7 +67,7 @@ def scrub_batch_against_ledger(
     survives with empty text (rows are never dropped here — that is
     a separate quality gate's decision).
     """
-    # hashed feeds three branches (deltas, the anti-join, the doc
+    # hashed feeds three branches (deltas, the boilerplate join, the doc
     # rebuild); eager localCheckpoint materializes the segment+hash
     # pass once WITHOUT a persist whose lifecycle would outlive the
     # micro-batch (blocks free with the RDD, no unpersist handle
@@ -90,12 +75,7 @@ def scrub_batch_against_ledger(
     hashed = _hashed_lines(
         batch, id_col, text_col, delimiter, width, fast_hash
     ).localCheckpoint(eager=True)
-    deltas = (
-        hashed.groupBy("lhash", "id")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy("lhash")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-    )
+    deltas = line_doc_freq(hashed, id_col)
     if ledger_df is not None:
         prior = ledger_df.groupBy("lhash").agg(
             F.sum("doc_freq").alias("prior_freq")
@@ -110,31 +90,12 @@ def scrub_batch_against_ledger(
         running = deltas.select(
             "lhash", F.col("doc_freq").alias("running_freq")
         )
-    boiler = running.where(F.col("running_freq") >= min_doc_freq).select(
-        "lhash"
-    )
-    kept = (
-        hashed.join(boiler, "lhash", "left_anti")
-        .groupBy("id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("line_no", "line"))).alias(
-                "segs"
-            )
-        )
-    )
-    sep = "\n" if delimiter is not None else " "
-    rebuilt = kept.select(
-        F.col("id").alias(id_col),
-        F.array_join(
-            F.transform(F.col("segs"), lambda s: s["line"]), sep
-        ).alias("__scrubbed"),
-    )
+    boiler = running.where(F.col("running_freq") >= min_doc_freq)
+    kept = _kept_lines(hashed, boiler, id_col, delimiter)
     scrubbed = (
-        batch.join(rebuilt, id_col, "left")
-        .withColumn(
-            text_col, F.coalesce(F.col("__scrubbed"), F.lit(""))
-        )
-        .drop("__scrubbed")
+        batch.join(kept.select(id_col, "__kept"), id_col, "left")
+        .withColumn(text_col, F.coalesce(F.col("__kept"), F.lit("")))
+        .drop("__kept")
     )
     return scrubbed, deltas
 

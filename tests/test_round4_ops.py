@@ -63,12 +63,15 @@ def test_line_dedup_normalization_and_within_doc_repeats(spark):
 
 def test_remove_frequent_lines_preserves_order(spark):
     from model_presto_spark.operators.lines import remove_frequent_lines
+    from model_presto_spark.pipeline import CorpusPipeline
 
     docs = spark.createDataFrame(
         [
             (1, "keep one\nboiler line\nkeep two"),
             (2, "boiler line\nother body"),
             (3, "boiler line\nthird text"),
+            (4, "\n   \n"),
+            (5, ""),
         ],
         "doc_id bigint, text string",
     )
@@ -79,6 +82,14 @@ def test_remove_frequent_lines_preserves_order(spark):
     assert out[1]["text"] == "keep one\nkeep two"
     assert out[1]["n_lines_kept"] == 2 and out[1]["n_lines"] == 3
     assert out[2]["text"] == "other body"
+    # a doc without a non-blank line comes back empty, not dropped,
+    # from the operator and from the pipeline stage
+    for i in (4, 5):
+        assert tuple(out[i])[1:] == ("", 0, 0), i
+    stage = CorpusPipeline([{"op": "line_boilerplate", "min_doc_freq": 3}])
+    assert sorted(r["doc_id"] for r in stage.run(docs).collect()) == [
+        1, 2, 3, 4, 5
+    ]
     # all lines boilerplate => empty doc, not a dropped row
     only_boiler = spark.createDataFrame(
         [(1, "x\nx"), (2, "x"), (3, "x")], "doc_id bigint, text string"
@@ -88,6 +99,27 @@ def test_remove_frequent_lines_preserves_order(spark):
         for r in remove_frequent_lines(only_boiler, min_doc_freq=3).collect()
     }
     assert rows[1]["text"] == "" and rows[1]["n_lines_kept"] == 0
+
+
+def test_remove_frequent_lines_hashes_each_line_once(spark):
+    """One fingerprint projection in the plan: the doc-frequency
+    aggregate reads the persisted line hashes instead of hashing the
+    line text a second time."""
+    import re
+
+    from model_presto_spark.operators.lines import remove_frequent_lines
+
+    docs = spark.createDataFrame(
+        [(1, "a\nb"), (2, "a")], "doc_id bigint, text string"
+    )
+    plan = remove_frequent_lines(docs)._jdf.queryExecution().optimizedPlan()
+    # the cached plan prints once per reference: count distinct nodes
+    hashes = {
+        re.sub(r"#\d+L?|^[\s:+*()\d-]+", "", line)
+        for line in plan.toString().splitlines()
+        if "xxhash64(" in line
+    }
+    assert len(hashes) == 1, hashes
 
 
 def test_segment_by_width_covers_all_tokens(spark):
@@ -339,6 +371,34 @@ def test_zero_token_docs_have_no_ngrams(spark):
     ]
     kept = dedup_corpus(docs, "doc_id", "text", method="ngram")
     assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4, 6]
+
+
+def test_containment_lsh_candidates_skip_empty_docs(spark, monkeypatch):
+    """A doc without grams has the all-sentinel MinHash signature and
+    would share every band with every other such doc: neither LSH
+    generator may put one in a candidate pair."""
+    from model_presto_spark.operators import dedup
+
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, text), (4, "\t\n"), (5, text)],
+        "doc_id bigint, text string",
+    )
+    seen = []
+    band = dedup._band_candidates
+
+    def spy(*a, **kw):
+        seen.append(band(*a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(dedup, "_band_candidates", spy)
+    for mode in ("lsh", "lsh_ensemble"):
+        got = dedup.ngram_containment_pairs(
+            docs, "doc_id", "text", threshold=0.8, candidates=mode
+        )
+        assert [(r.id_a, r.id_b) for r in got.collect()] == [(3, 5)], mode
+    (cand,) = seen  # the lsh generator's band stage
+    assert sorted(tuple(r) for r in cand.collect()) == [(3, 5)]
 
 
 def test_containment_lsh_mode_recall_and_exact_scores(spark):

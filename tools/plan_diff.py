@@ -22,7 +22,10 @@ tables in ``SF_DIR`` and writes one section per plan:
   (``ivf_knn_join``, ``ivf_index_search`` after ``build_ivf_index``,
   ``quantized_knn_join``, ``pq_knn_join`` with re-rank,
   ``ivfpq_search`` after ``build_ivfpq_index``; the indexes go to a
-  temporary directory), one one-stage ``CorpusPipeline`` per op
+  temporary directory), the streaming boilerplate core
+  (``scrub_batch_against_ledger``'s scrubbed documents without a
+  ledger and against a small fixed ledger, and its frequency deltas)
+  on the pipeline corpus, one one-stage ``CorpusPipeline`` per op
   (``pipeline_<op>``, on a small fixed corpus) and the benchmark's
   ``corpus_stages`` pipeline (``corpus_stages``, on a 500-document
   corpus generated and written as the benchmark writes its own: 4 x
@@ -221,6 +224,30 @@ def _pipelines(spark) -> dict:
     return out
 
 
+def _scrubs(spark) -> dict:
+    from model_presto_spark.functions.text import fingerprint60_sql
+    from model_presto_spark.streaming.boilerplate import (
+        scrub_batch_against_ledger,
+    )
+
+    batch = _corpus(spark)[0].select("doc_id", "text")
+    ledger = spark.createDataFrame(
+        [("subscribe to our newsletter", 2), ("w0 w1 w2", 9)],
+        "line string, doc_freq long",
+    ).selectExpr(f"{fingerprint60_sql('line', fast=True)} AS lhash", "doc_freq")
+
+    def scrub(ledger_df, part):
+        return lambda: scrub_batch_against_ledger(
+            batch, ledger_df, min_doc_freq=16
+        )[part]
+
+    return {
+        "scrub_batch_against_ledger": scrub(None, 0),
+        "scrub_batch_against_ledger_ledger": scrub(ledger, 0),
+        "scrub_batch_against_ledger_deltas": scrub(None, 1),
+    }
+
+
 def _builds(spark, tmp: str) -> dict:
     from model_presto_spark.multimodal.dedup import image_dup_pairs
     from model_presto_spark.operators.dedup import (
@@ -293,6 +320,7 @@ def _builds(spark, tmp: str) -> dict:
         ),
         "pq_knn_join_rerank": pq_rerank,
         "ivfpq_search": ivfpq,
+        **_scrubs(spark),
         **_pipelines(spark),
     }
 
